@@ -8,13 +8,15 @@ Both are backed by ``disq_original_spark.queries.QUERIES``.
 
 from __future__ import annotations
 
+import json
 import sys
 from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+_REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(_REPO))
 
 from disq_original_spark.cache import release_persists  # noqa: E402
 from disq_original_spark.queries import QUERIES  # noqa: E402
@@ -41,105 +43,43 @@ def _released(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 # The driver's CORRECTNESS harness records rows for the first 50 names in
-# queries()' iteration order each round (observed rounds 1 and 2).  queries()
-# therefore returns a dict whose iteration order front-loads the names that
-# most need a fresh driver row, so the bounded checker covers every operator
-# across a rolling window of rounds.  All registered queries are always
-# present — only the ordering is prioritized.
-#
-# Round-13 rotation (VERDICT r12 task #1; composition verified with
-# `tools/simulate_driver_window.py --freshness` over CORRECTNESS_r01-r12):
-#   (a) the 19 r9-witnessed entries FIRST — at the 4-round cycle bound
-#       exactly as rounds 11/12's deferral chain promised; missing any
-#       of them breaks the freshness ledger.  Two carry this round's
-#       scheduled exact-integer conversions, landing in the SAME round
-#       they re-witness (zero orphaned witnesses): p02's
-#       `round(kept/n, 4)` → half-up e4 integer division (the t09
-#       idiom) and t11's `round(sum/(n·2^32), 6)` → SIGNED half-up e6
-#       on a DECIMAL(38,0) intermediate.  q53/q54 also changed this
-#       round (part-slice broadcast hints dropped — plan-only,
-#       value-identical, proven by the full sf0.1 mirror);
-#   (b) q32 (r10-witnessed) converts one round EARLY with them — its
-#       `round(percentile/100, 2)` became the histogram-exact integer
-#       interpolation — so it must take its fresh witness now;
-#   (c) 30 of the 46 remaining r10-witnessed queries, sorted, with
-#       three exclusions and one swap: d08/d11/p09 are EXCLUDED (their
-#       float→integer conversions are scheduled for round 14 — they
-#       convert in the round they re-witness, SCALE.md), and q57/q58
-#       are swapped IN ahead of q25/q29 because their part-slice
-#       broadcast hints were dropped this round (value-identical, but
-#       changed queries re-witness in the round they change).
-#       The 16 r10 leftovers (d08/d11/p09/q25/q29/q41/q42/q43/q44/q56/
-#       st01/st04/st05/st06/st07/st08) land in round 14 at their bound
-#       with 34 of the 50 r11s; the 16 r11 leftovers in round 15 with
-#       34 of the 50 r12s; the 16 r12 leftovers in round 16 with 34 of
-#       this round's 50 re-entering the cycle (16 r13 then remain for
-#       round 17, inside their bound).  Every deferral stays within
-#       the 4-round cycle and the registry is 166 ≤ 200 = 4×50
-#       capacity, so the bound holds.
-# 19 + 1 + 30 = exactly 50.  Post-r13 histogram: nothing older than r10.
-_PRIORITY = [
-    # --- (a) r9-due, cycle bound (p02 + t11 also convert this round;
-    #     q53/q54 dropped their part-slice hints this round) ---
-    "p02_stratified_sample",
-    "q20_intersect",
-    "q21_except",
-    "q26_json_access",
-    "q27_explode",
-    "q28_exists_subquery",
-    "q51_tpch_q13",
-    "q52_tpch_q22",
-    "q53_tpch_q17",
-    "q54_tpch_q20",
-    "q55_tpch_q15",
-    "s01_knn_bruteforce",
-    "s02_ann_bucketed",
-    "s04_kmeans_update",
-    "st09_late_data_drop",
-    "t08_gopher_repetition",
-    "t10_unigram_surprisal",
-    "t11_quality_classifier",
-    "t12_filter_funnel",
-    # --- (b) q32 converts one round early: fresh witness now ---
-    "q32_percentiles",
-    # --- (c) r10 block: first 28 sorted minus the r14-scheduled
-    #     d08/d11/p09, plus the hint-dropped q57/q58 over q25/q29 ---
-    "d03_minhash_lsh",
-    "d04_ngram_jaccard",
-    "d06_simhash",
-    "d07_dup_clusters",
-    "d12_keep_best",
-    "d13_lsh_bucket_audit",
-    "d14_lsh_estimate_audit",
-    "g04_vcf_variant_stats",
-    "g07_typed_variant_stats",
-    "g09_mark_duplicates",
-    "g16_interval_merge",
-    "g17_interval_subtract",
-    "g18_interval_closest",
-    "g23_bcf_stats",
-    "g25_gff_gene_model",
-    "g26_variant_annotation",
-    "m04_phash_neardup",
-    "m05_audio_frames",
-    "m06_scene_cuts",
-    "p07_deterministic_shuffle",
-    "p08_domain_cap",
-    "p10_corpus_pipeline_v2",
-    "p11_zorder_layout",
-    "p12_leakage_safe_split",
-    "q12_approx_distinct",
-    "q22_string_functions",
-    "q23_date_functions",
-    "q24_math",
-    "q57_tpch_q19",
-    "q58_tpch_q8",
-]
+# queries()' iteration order each round (observed rounds 1 and 2), so the
+# order decides which queries get a fresh witness.  Queries whose executed
+# plan changed since the last committed round lead (they must re-witness in
+# the round they change); every other query follows oldest green witness
+# first, ties by name, so the rotation cannot go stale.  All registered
+# queries are always present — only the ordering is prioritized.
+_CHANGED = ["d04_ngram_jaccard", "d15_containment_neardup", "d07_dup_clusters"]
+
+
+def green_witnesses() -> dict[str, int]:
+    """Latest green-witness round per query, from the committed
+    CORRECTNESS_r*.json files (queries never witnessed green are absent).
+    A witness counts only if rows+schema+hash all matched with no error (a
+    red row proves the driver RAN the query, not that the result was
+    right).  ``hash_match`` must be PRESENT and true: a rows-only driver row
+    (the weaker oracle-less check) is not a hash witness — ADVICE r7."""
+    latest: dict[str, int] = {}
+    for f in sorted(_REPO.glob("CORRECTNESS_r*.json")):
+        rnum = int(f.stem.rsplit("_r", 1)[1])
+        for q, row in json.loads(f.read_text()).items():
+            green = (
+                row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match", False)
+                and not row.get("err")
+            )
+            if green:
+                latest[q] = max(latest.get(q, 0), rnum)
+    return latest
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    ordered = [n for n in _PRIORITY if n in QUERIES]
-    ordered += [n for n in sorted(QUERIES) if n not in set(_PRIORITY)]
+    latest = green_witnesses()
+    ordered = [n for n in _CHANGED if n in QUERIES]
+    ordered += sorted(
+        (n for n in QUERIES if n not in _CHANGED), key=lambda n: (latest.get(n, 0), n)
+    )
     return {name: _released(name) for name in ordered}
 
 

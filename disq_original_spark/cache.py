@@ -1,9 +1,9 @@
-"""Session cache hygiene: every ``.persist()`` a query builder takes goes
-through :func:`track_persist`, and harness layers (``__spark_entry__``,
+"""Session cache hygiene: every materialization point a query builder takes
+goes through :func:`materialize`, and harness layers (``__spark_entry__``,
 ``bench.py``, tests) call :func:`release_persists` once a build's results
 have been drained.
 
-Why this exists (VERDICT r4): builders persist shared subtrees (MinHash
+Why this exists (VERDICT r4): builders materialize shared subtrees (MinHash
 signatures, shingle hashes, pHash tables) that are reused several times
 WITHIN one query plan — correct and cheap — but nothing ever released them.
 Over a 145-query driver sweep or a long bench session the stale blocks
@@ -12,18 +12,16 @@ previously-run query gets a flattering time (d03 timed 0.36x its honest
 cost because d14's warm-pass cache was still resident).  At 100 TB scale
 the same leak evicts useful blocks and spills working sets.
 
-The contract is deliberately harness-level, not builder-level: a persist
-must stay alive until the RESULT of the build is drained (builders return
-unexecuted DataFrames), so only the caller that runs the action knows when
-release is safe.  Unpersisting is always correctness-neutral — Spark
-recomputes the subtree from lineage — so releasing "too early" can only
-cost time, never rows.
+The contract is deliberately harness-level, not builder-level: a
+materialized frame must stay alive until the RESULT of the build is drained
+(builders return unexecuted DataFrames), so only the caller that runs the
+action knows when release is safe.
 
-Lazy ``localCheckpoint`` frames (:func:`lineage_cut`) are tracked the same
-way (r14, ADVICE r13): their backing RDD blocks live in executor storage
-outside the SQL cache, so ``clearCache()`` never frees them and GC-based
-cleanup is nondeterministic — :func:`release_persists` unpersists the
-checkpointed RDDs explicitly so a long sweep cannot accumulate them.
+One registry holds every frame this module creates — persists and lazy
+``localCheckpoint`` frames alike.  A checkpoint's backing RDD blocks live in
+executor storage outside the SQL cache, so ``clearCache()`` never frees
+them and GC-based cleanup is nondeterministic; :func:`release_persists`
+unpersists them explicitly so a long sweep cannot accumulate them.
 """
 
 from __future__ import annotations
@@ -36,171 +34,110 @@ from .tables import small_input_threshold
 
 _LOG = logging.getLogger(__name__)
 
-_TRACKED: list[tuple[DataFrame, bool]] = []
-_CHECKPOINTED: list[DataFrame] = []
+# (frame, mode) in registration order; mode is "persist", "eager" or
+# "checkpoint"
+_TRACKED: list[tuple[DataFrame, str]] = []
 
 
-def track_persist(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK, Spark's default) and register it so
-    :func:`release_persists` can unpersist it after the build is drained.
+def materialize(df: DataFrame, source_bytes: int, eager: bool = False) -> DataFrame:
+    """Materialization point for a subtree referenced several times within
+    one plan, picking the mechanism by the size of the subtree's SOURCE
+    input (r13 session-5 measurement):
 
-    ``eager=True`` additionally MATERIALIZES the cache (one ``count()``)
-    before returning.  Choose it for SLIM frames with CONCURRENT consumers:
-    a persist dedupes sequential reuse only — the two map stages of a
-    self-join are submitted together, so both sides of an unmaterialized
-    cache evaluate the full subtree before either populates it (measured
-    at sf0.1: d04 −16%, d14/d03 −8% with eager).  Leave the default
-    (lazy) for fat frames whose first consumer pipelines the cache fill
-    into useful work — eagerly materializing dupmark's full-row read cache
-    cost g09 +0.3-1.0 s because the decode pass stopped fusing with its
-    consumer.  Timing stays honest either way: bench.py and the driver
-    time build+drain together."""
+    - AT OR ABOVE the small-input gate, or ``source_bytes < 0`` (size
+      unknown, e.g. an operator handed a frame it cannot stat — fail safe
+      toward scale): a tracked persist (MEMORY_AND_DISK, Spark's default).
+      Fault-tolerant and recomputable from lineage — the production posture
+      for corpus-sized shared passes.  A ``localCheckpoint`` stores blocks
+      on executor-local storage with lineage truncated, so on a real
+      cluster losing one executor after materialization makes the query
+      unrecoverable; at 100 TB executor churn is routine.
+
+      ``eager=True`` additionally MATERIALIZES the persist (one
+      ``count()``) before returning.  Choose it for SLIM frames with
+      CONCURRENT consumers: a persist dedupes sequential reuse only — the
+      two map stages of a self-join are submitted together, so both sides
+      of an unmaterialized cache evaluate the full subtree before either
+      populates it (measured at sf0.1: d04 −16%, d14/d03 −8% with eager).
+      Leave the default (lazy) for fat frames whose first consumer
+      pipelines the cache fill into useful work — eagerly materializing
+      dupmark's full-row read cache cost g09 +0.3-1.0 s because the decode
+      pass stopped fusing with its consumer.
+
+    - BELOW the gate: a tracked lazy ``localCheckpoint``
+      (:func:`lineage_cut`).  With a small input a persist measurably LOSES
+      to recompute — its separate barrier job and the InMemoryRelation
+      statistics wall that join planning cannot see through cost more than
+      the duplicated work (r13, d04 median 2.53 s persisted vs 1.49 s
+      recomputed) — yet bare recompute re-evaluates the subtree per
+      reference (d14's bench plan ran SIXTEEN MapInPandas corpus passes).
+      The lazy checkpoint keeps the single evaluation without either cost.
+      ``eager`` does NOT apply on this branch: the first downstream job
+      fills the checkpoint, so concurrent first consumers may each evaluate
+      the subtree once more — time, never rows.
+
+    The gate is ``SPARK_GRAFT_SMALL_INPUT_BYTES`` (default 256 MiB), read
+    through ``tables.small_input_threshold`` so a deployment tunes ONE
+    number for where latency-dominated ends and throughput-dominated
+    begins.
+    """
+    if 0 <= source_bytes < small_input_threshold():
+        return lineage_cut(df)
     df = df.persist()
     # register BEFORE materializing: if count() dies mid-build (executor
     # failure, missing fixture) the partially-cached frame must still be
     # releasable, or the sweep-long storage leak this module exists to
     # prevent comes back through the error path (r6 review finding)
-    _TRACKED.append((df, eager))
+    _TRACKED.append((df, "eager" if eager else "persist"))
     if eager:
         df.count()
     return df
 
 
-def persist_if_material(
-    df: DataFrame, source_bytes: int, eager: bool = False
-) -> DataFrame:
-    """Scale-gated :func:`track_persist`: persist only when the subtree's
-    SOURCE input is big enough that recomputing it for every downstream
-    reference would dominate.
-
-    Below ``SPARK_GRAFT_PERSIST_MIN_BYTES`` (default 256 MiB) the frame is
-    returned UNPERSISTED: with a small input the duplicated subtree
-    evaluations run as independent parallel stages that fill otherwise-idle
-    cores (wall time tracks the critical path, not task-time), while the
-    persist adds a materialization barrier and an InMemoryRelation
-    statistics wall that join planning cannot see through — measured r13 at
-    sf0.1, interleaved min/median of 5: d04 2.21/2.53 s with its eager
-    persist vs 1.36/1.49 s without; d14 4.50/5.21 vs 3.80/5.17
-    (OPTIMIZATION_r13.md).  Above the threshold the cluster is saturated by
-    the real pass — re-shingling a 100 TB corpus once per reference is the
-    cost that matters — and the persist is the established d14 scale
-    posture, unchanged.
-
-    ``source_bytes < 0`` means "size unknown" (e.g. a non-local store the
-    caller did not stat): persist — fail safe in the direction of scale.
-    The threshold is the shared small-input crossover knob
-    (``SPARK_GRAFT_SMALL_INPUT_BYTES``, read through ONE helper —
-    ``tables.small_input_threshold`` — shared with ``tables.small_input``
-    and :func:`share_subtree`) so a deployment tunes ONE number for where
-    latency-dominated ends and throughput-dominated begins.
-    """
-    if 0 <= source_bytes < small_input_threshold():
-        return df
-    return track_persist(df, eager=eager)
-
-
-def share_subtree(df: DataFrame, source_bytes: int, eager: bool = False) -> DataFrame:
-    """Materialization point for a subtree referenced several times within
-    one plan, picking the mechanism by scale (r13 session-5 measurement):
-
-    - ABOVE the small-input gate: a tracked persist
-      (:func:`persist_if_material` behavior) — fault-tolerant and
-      recomputable from lineage, the established production posture for
-      corpus-sized shared passes.  This is also why EVERY query-path
-      materialization point must route through here rather than calling
-      :func:`lineage_cut` bare (r14, VERDICT r13 #1): ``localCheckpoint``
-      stores blocks on executor-local storage with lineage truncated, so on
-      a real cluster losing one executor after materialization makes the
-      query unrecoverable — acceptable at bench scale where there is one
-      process, wrong at 100 TB where executor churn is routine.
-    - BELOW the gate: a lazy ``localCheckpoint`` (:func:`lineage_cut`).
-      Returning the frame UNMATERIALIZED (the old below-gate behavior) left
-      every reference re-evaluating the whole subtree — d14's bench plan ran
-      SIXTEEN MapInPandas corpus passes; the lazy checkpoint keeps the
-      single-evaluation property without the persist's separate barrier job
-      or InMemoryRelation statistics wall.
-
-    The gate is the same knob as :func:`persist_if_material`
-    (``SPARK_GRAFT_SMALL_INPUT_BYTES``, read through
-    ``tables.small_input_threshold``); ``source_bytes < 0`` means unknown
-    size and fails safe toward the persist.  Plan-contract tests reach the
-    production shape by zeroing the gate and the bare recompute shape via
-    ``SPARK_GRAFT_NO_LCKPT=1``.
-    """
-    if 0 <= source_bytes < small_input_threshold():
-        return lineage_cut(df)
-    return track_persist(df, eager=eager)
-
-
 def lineage_cut(df: DataFrame) -> DataFrame:
-    """Lazy ``localCheckpoint`` — the r13-measured materialization point for
-    two recompute-duplication shapes where a persist measurably LOSES:
+    """Tracked lazy ``localCheckpoint`` at every scale: the first downstream
+    job materializes it (no separate barrier job), it is not wrapped in an
+    InMemoryRelation, and lineage restarts at it.
 
-    - a global ``orderBy`` above an expensive (Python) stage: the range
-      sampler re-runs the child subtree, so the stage evaluates twice
-      (sampling pass + sort pass) — s07 1.278/1.975 -> 0.862/1.568 s,
-      d05 1.422/1.704 -> 1.207/1.296, p01 1.473/1.595 -> 0.940/1.239
-      (interleaved min/med of 6, sf0.1);
-    - a slim frame whose subtree is referenced many times downstream
-      (s09's seed graph: six s07-subtree copies -> one).
-
-    Unlike ``persist``, the lazy checkpoint is materialized BY the first
-    downstream job (no separate barrier job) and is not wrapped in an
-    InMemoryRelation whose statistics wall blinds downstream join
-    planning; unlike recompute, the subtree runs once.  The checkpointed
-    frames are slim decision outputs (edge lists, pair lists, packed
-    rows), so the storage is O(result), never O(corpus) — the right trade
-    at every scale.  Correctness-neutral: same rows, recomputed from the
-    same deterministic plan.
-
-    ``SPARK_GRAFT_NO_LCKPT=1`` returns ``df`` unchanged — the
-    plan-contract tests use it to pin the full production plan SHAPE that
-    the checkpoint otherwise hides behind a ``Scan ExistingRDD``.
-
-    Query builders must not call this bare: route through
-    :func:`share_subtree` so production-scale runs get the fault-tolerant
-    persist instead of a truncated-lineage local checkpoint (pinned by
-    ``tests/test_cache_hygiene.py::test_no_bare_lineage_cut_in_query_paths``).
-    The checkpointed frame is registered so :func:`release_persists` can
-    free its executor-storage blocks deterministically.
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_LCKPT") == "1":
-        return df
+    Query builders must not call this directly — :func:`materialize` gives
+    them the recoverable persist at scale.  The one sanctioned caller is
+    ``operators/graph.py``'s connected-components loop, where per-round
+    lineage truncation is part of the algorithm (plan growth is exponential
+    in rounds without it) and the frames are slim two-long edge lists
+    (pinned by ``tests/test_cache_hygiene.py``)."""
     cdf = df.localCheckpoint(eager=False)
-    _CHECKPOINTED.append(cdf)
+    _TRACKED.append((cdf, "checkpoint"))
     return cdf
 
 
 def release_persists() -> int:
-    """Unpersist every tracked DataFrame (non-blocking), free every tracked
-    lazy checkpoint's backing RDD blocks, and clear both registries.
-    Returns how many frames were released.  Safe to call at any time:
-    unpersist never changes results, only whether subtrees recompute (and a
-    released checkpoint frame is simply never read again — builders are
-    rebuilt fresh per run)."""
-    n = len(_TRACKED) + len(_CHECKPOINTED)
-    for df, _eager in _TRACKED:
+    """Unpersist every tracked persist (non-blocking), free every tracked
+    checkpoint's backing RDD blocks, and clear the registry.  Returns how
+    many frames were released.
+
+    Call it only once the build's results have been drained, and never
+    drain a released frame again: a released persist recomputes from
+    lineage (same rows, more time), but a released checkpoint has no
+    lineage to recompute from, so re-reading it fails.  Harnesses
+    therefore rebuild per run (``__spark_entry__.queries()`` wrappers,
+    ``bench.py``, ``perfbench``)."""
+    n = len(_TRACKED)
+    for df, mode in _TRACKED:
         try:
-            df.unpersist()
+            if mode == "checkpoint":
+                # a localCheckpoint's blocks live on the backing RDD,
+                # reachable via the LogicalRDD plan node — outside the SQL
+                # cache, so neither unpersist() nor clearCache() frees them
+                df._jdf.queryExecution().logical().rdd().unpersist(False)
+            else:
+                df.unpersist()
         except Exception as exc:
             # Expected only when the owning session is already stopped
             # (teardown race in tests/bench) — but never swallow silently:
             # a genuinely wrong tracked object must leave a trace (ADVICE r5).
-            _LOG.warning("release_persists: unpersist failed (%s: %s)",
-                         type(exc).__name__, exc)
+            _LOG.warning("release_persists: %s release failed (%s: %s)",
+                         mode, type(exc).__name__, exc)
     _TRACKED.clear()
-    for cdf in _CHECKPOINTED:
-        try:
-            # a localCheckpoint's blocks live on the backing RDD, reachable
-            # via the LogicalRDD plan node — outside the SQL cache, so
-            # neither unpersist() nor clearCache() would free them
-            cdf._jdf.queryExecution().logical().rdd().unpersist(False)
-        except Exception as exc:
-            _LOG.warning("release_persists: checkpoint unpersist failed (%s: %s)",
-                         type(exc).__name__, exc)
-    _CHECKPOINTED.clear()
     return n
 
 
@@ -208,9 +145,10 @@ def tracked_count() -> int:
     return len(_TRACKED)
 
 
-def tracked_info() -> list[tuple[DataFrame, bool]]:
-    """(frame, eager) for every live tracked persist, in registration
-    order — the probe surface for the persist-POLICY contract tests (the
-    eager/lazy split is a measured decision, VERDICT r6 directive #2; a
-    refactor must not silently flip a frame's eagerness)."""
+def tracked_info() -> list[tuple[DataFrame, str]]:
+    """(frame, mode) for every registered frame, in registration order;
+    mode is "persist", "eager" or "checkpoint" — the probe surface for the
+    materialization-POLICY contract tests (the eager/lazy split is a
+    measured decision, VERDICT r6 directive #2; a refactor must not
+    silently flip a frame's eagerness or branch)."""
     return list(_TRACKED)

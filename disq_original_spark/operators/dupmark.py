@@ -43,7 +43,7 @@ full shuffle is the floor any repartition-based marker pays.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
-from ..cache import share_subtree, track_persist
+from ..cache import materialize
 from pyspark.sql import functions as F
 
 from ..sources.headers import SamHeader
@@ -253,10 +253,11 @@ def mark_duplicates(reads: DataFrame, header: SamHeader) -> DataFrame:
     cache each one re-runs the source decode — the dominant cost for a
     Python-decoded BAM scan.  The cache is the slim projection only
     (~60 bytes/read, spillable), the same trade MarkDuplicatesSpark makes
-    by caching its ReadsKey RDD.  Cache lifetime: a lazy builder cannot
-    unpersist after itself, so the frame is registered with
-    cache.track_persist and released by the harness (bench.py /
-    __spark_entry__) once the build's results are drained."""
+    by caching its ReadsKey RDD.  The source size is unknown here, so
+    ``cache.materialize`` is called with -1 and always takes the persist.
+    Cache lifetime: a lazy builder cannot unpersist after itself, so the
+    frame is registered with the cache module and released by the harness
+    (bench.py / __spark_entry__) once the build's results are drained."""
     flag = F.col("flag")
     mapped_primary = _mapped_primary()
     is_pair_end = (
@@ -267,7 +268,7 @@ def mark_duplicates(reads: DataFrame, header: SamHeader) -> DataFrame:
     is_fragment = mapped_primary & (
         (flag.bitwiseAND(_PAIRED) == 0) | (flag.bitwiseAND(_MATE_UNMAPPED) != 0)
     )
-    sig = track_persist(_dup_sig(reads, header))
+    sig = materialize(_dup_sig(reads, header), -1)
     marks = _dup_marks(sig)
     joined = reads.join(marks, F.col("qname") == F.col("m_qname"), "left")
     is_dup = mapped_primary & (
@@ -316,7 +317,7 @@ def duplicate_flags(
     (each conjoins it), so the outer ``mapped_primary AND`` of the full
     form is implied and the per-branch predicates are evaluated on the
     identical per-row values the full join would see."""
-    # share_subtree (r13 session 5): the slim signature frame has FOUR
+    # materialize (r13 session 5): the slim signature frame has FOUR
     # concurrent consumers here (pair assembly, pair-end signatures,
     # fragment ranking, and the verdict join's left side), so the lazy
     # persist's cold-cache race re-ran the Python BAM decode per branch at
@@ -324,7 +325,7 @@ def duplicate_flags(
     # (interleaved A/B at sf0.1, all 6 rounds faster: 1.828/2.000 ->
     # 1.357/1.727 s min/med); above it (or with source_bytes unknown, the
     # default) the tracked-persist posture is unchanged.
-    sig = share_subtree(_dup_sig(reads, header), source_bytes)
+    sig = materialize(_dup_sig(reads, header), source_bytes)
     marks = _dup_marks(sig)
     joined = sig.join(marks, F.col("qname") == F.col("m_qname"), "left")
     is_dup = (

@@ -15,12 +15,15 @@ Scale shape: the edge list stays in its canonical (big, small) direction,
 every shuffle carries exactly two longs, each round lazily
 localCheckpoints so lineage stays flat at one job per round, and the only
 driver-side value is the per-round (count, xor-hash) edge-set fingerprint
-— never the labels.
+— never the labels.  The checkpoints go through ``cache.lineage_cut`` so
+the harness's ``release_persists()`` frees their blocks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..cache import lineage_cut
 
 
 def connected_components(
@@ -41,14 +44,13 @@ def connected_components(
     # separate eager-checkpoint job first — one less driver round-trip, same
     # work, same storage (d07 interleaved A/B at sf0.1, two runs of 6:
     # min 3.68/3.32 eager vs 3.08/3.15 lazy; medians within noise).
-    edges = (
+    edges = lineage_cut(
         pairs.select(
             F.greatest(F.col(a), F.col(b)).alias("u"),
             F.least(F.col(a), F.col(b)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
     def sig(df: DataFrame) -> tuple:
@@ -85,14 +87,13 @@ def connected_components(
         # small-star: edges already point big -> small, so N(u) here are the
         # strictly-smaller neighbors; connect them (and u) to their min m
         sm = large.withColumn("m", F.min("v").over(w))
-        small = (
+        # lazy checkpoint: the sig() action below materializes it, so a
+        # round costs ONE job while lineage still resets every round
+        small = lineage_cut(
             sm.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(sm.select("u", F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            # lazy checkpoint: the sig() action below materializes it, so a
-            # round costs ONE job while lineage still resets every round
-            .localCheckpoint(eager=False)
         )
         cur = sig(small)
         edges = small

@@ -19,7 +19,7 @@ job the genomics indexes do).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from ..cache import track_persist
+from ..cache import materialize
 from pyspark.sql import functions as F
 
 
@@ -331,8 +331,9 @@ def subtract_intervals(
     # persist: the between-gaps window, the tail-gap aggregate and the
     # no-b anti join all consume the merged islands — without it the
     # merge's shuffle+window re-executes per branch.  Islands are ≤ |b|
-    # slim rows, so the cache is bounded by the smaller input.
-    bm = track_persist(merge_intervals(b, contig=contig, start=start, end=end))
+    # slim rows, so the cache is bounded by the smaller input.  The source
+    # size is unknown here (-1), so it always takes the persist.
+    bm = materialize(merge_intervals(b, contig=contig, start=start, end=end), -1)
     w = Window.partitionBy(contig).orderBy("merged_start")
     prev_end = F.lag("merged_end").over(w)
     between = bm.select(

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import persist_if_material, share_subtree
+from ..cache import materialize
 from ..tables import load_table, load_wide, table_bytes
 from .registry import query
 
@@ -88,7 +88,6 @@ _N_BANDS = 4  # bands of 2 hashes each
 # 8 minhash functions from 2 md5s per shingle: each md5's 32 hex chars slice
 # into 4×8-char (32-bit) hashes; lexicographic min of fixed-width hex ==
 # numeric min.  Explode-once + partial-agg min keeps the shuffle tiny.
-_SALTS = ("a", "b")
 _SLICES = [(s, 1 + 8 * i) for s in range(2) for i in range(4)]  # (salt_idx, hexpos)
 
 _SIG_AGG_SQL = ", ".join(
@@ -128,12 +127,8 @@ def _doc_signatures(spark: SparkSession, sf: str) -> DataFrame:
     encoding entirely and take the 8 per-slice minimums as ONE numpy
     column-min over the packed digest matrix instead of 8 Python
     comparisons per shingle."""
-    import os
-
-    hex_mode = os.environ.get("SPARK_GRAFT_SIG_HEX") == "1"  # TEMP A/B switch
-    kind = "string" if hex_mode else "binary"
     schema = "doc_id long, " + ", ".join(
-        f"mh{j} {kind}" for j in range(len(_SLICES))
+        f"mh{j} binary" for j in range(len(_SLICES))
     )
 
     def gen(batches):
@@ -151,21 +146,6 @@ def _doc_signatures(spark: SparkSession, sf: str) -> DataFrame:
                     # NULL text: the oracle keeps a NULL-signature row whose
                     # NULL band_key can never join; omitting the doc gives
                     # the identical pair set.
-                    continue
-                if hex_mode:
-                    mins: list[str | None] = [None] * len(_SLICES)
-                    for s in sh:
-                        hexes = [
-                            md5(f"{salt}:{s}".encode()).hexdigest()
-                            for salt in _SALTS
-                        ]
-                        for j, (si, p) in enumerate(_SLICES):
-                            piece = hexes[si][p - 1 : p + 7]
-                            if mins[j] is None or piece < mins[j]:
-                                mins[j] = piece
-                    out["doc_id"].append(doc_id)
-                    for j in range(len(_SLICES)):
-                        out[f"mh{j}"].append(mins[j])
                     continue
                 # one (n_shingles x 8) big-endian uint32 matrix: row = the
                 # two 16-byte digests of one shingle, columns = the 8
@@ -208,13 +188,9 @@ def _band_rows(sig: DataFrame) -> DataFrame:
     green — at 100 TB this exchange carries 4 rows per corpus document.
     The mh slots arrive binary from _doc_signatures, so the key is a
     plain concat."""
-    import os
-
-    unhex_needed = os.environ.get("SPARK_GRAFT_SIG_HEX") == "1"  # TEMP A/B
 
     def key(b: int) -> F.Column:
-        c = F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-        return F.unhex(c) if unhex_needed else c
+        return F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
 
     band_structs = F.array(
         *[
@@ -359,14 +335,11 @@ def d04(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") <= _DF_CAP)
         # (hash, ≤cap ids); feeds counts AND pairs — concurrent consumers,
-        # so materialize eagerly (cache.py r6) — but only when the corpus
-        # is big enough that re-shingling it per consumer would dominate;
-        # at bench scale the persist barrier measurably LOSES (r13:
-        # 2.53 s -> 1.49 s median without it, cache.persist_if_material)
+        # so the persist above the gate is eager (cache.py r6); at bench
+        # scale a persist barrier measurably LOSES (r13: 2.53 s -> 1.49 s
+        # median without it) and the lazy checkpoint is taken instead
         .transform(
-            lambda d: persist_if_material(
-                d, table_bytes(sf, "documents"), eager=True
-            )
+            lambda d: materialize(d, table_bytes(sf, "documents"), eager=True)
         )
     )
     cnt = (
@@ -446,14 +419,11 @@ def d05(spark: SparkSession, sf: str) -> DataFrame:
     # r13 interleaved A/B (min/med of 6, sf0.1): 1.422/1.704 s ->
     # 1.207/1.296 s, faster in all six rounds.  The materialized frame is
     # the thresholded pair list — tiny next to the gram pass at any scale.
-    # share_subtree, not a bare lineage_cut (r14): above the gate the
-    # tracked persist keeps the run recoverable from lineage on executor
-    # loss; below it the lazy localCheckpoint is the measured r13 shape.
     return (
         e.repartition("label")
         .groupBy("label")
         .applyInPandas(block_pairs, "a_id long, b_id long, cos_sim double")
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "embeddings")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "embeddings")))
         .orderBy("a_id", "b_id")
     )
 
@@ -530,9 +500,8 @@ def d06(spark: SparkSession, sf: str) -> DataFrame:
         .mapInPandas(gen, "doc_id long, simhash string")
         # materialize before the sort: no shuffle below it, so without a
         # materialization point the whole Python tokenize+md5 pass runs
-        # twice (range sampler + sort).  share_subtree (r14): recoverable
-        # persist above the gate, lazy localCheckpoint below it.
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        # twice (range sampler + sort)
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("doc_id")
     )
 
@@ -788,11 +757,12 @@ def d09(spark: SparkSession, sf: str) -> DataFrame:
     # probe) — without a materialization point the MapInPandas corpus pass
     # evaluates once per branch; the materialized frame holds the slim
     # ~70 B/doc signature rows instead (r13 session 5, the §10/§11 lens).
-    # share_subtree, eager (r14, ADVICE r13): above the gate the tracked
-    # persist is fault-tolerant, and eager because the two band branches
-    # are CONCURRENT first consumers that would race a lazy cold cache
-    # (the m04/g09 defect); below the gate the lazy checkpoint as before.
-    sig = share_subtree(
+    # eager because the two band branches are CONCURRENT first consumers
+    # that would race a lazy cold cache (the m04/g09 defect).  eager applies
+    # to the persist above the gate only: below it the lazy checkpoint is
+    # filled by the first job, so both branches may still run the pass —
+    # time, never rows.
+    sig = materialize(
         _doc_signatures(spark, sf), table_bytes(sf, "documents"), eager=True
     )
     bands = _band_rows(sig)
@@ -929,9 +899,8 @@ def d10(spark: SparkSession, sf: str) -> DataFrame:
             "vec_id long, cluster_id long, max_sim_prev double, is_dropped boolean",
         )
         # materialize the slim verdict rows so the sort's range sampler
-        # cannot re-run the per-cluster gram pass; share_subtree (r14):
-        # recoverable persist above the gate, lazy checkpoint below
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "embeddings")))
+        # cannot re-run the per-cluster gram pass
+        .transform(lambda d: materialize(d, table_bytes(sf, "embeddings")))
         .orderBy("vec_id")
     )
 
@@ -1161,12 +1130,10 @@ _EST_SQL = " + ".join(
 def d14(spark: SparkSession, sf: str) -> DataFrame:
     # one signature pass shared three ways (pair generation + both sides of
     # the estimate join), one shingle-hash pass shared three ways (per-doc
-    # counts + both sides of the intersection).  share_subtree picks the
-    # mechanism by scale: persist above the gate (the d04 production
-    # posture), lazy localCheckpoint below it — without ANY materialization
-    # point the bench plan re-ran the MapInPandas corpus pass SIXTEEN times
-    # across the branches (r13 session 5; see cache.share_subtree)
-    sig = share_subtree(
+    # counts + both sides of the intersection) — without ANY
+    # materialization point the bench plan re-ran the MapInPandas corpus
+    # pass SIXTEEN times across the branches (r13 session 5)
+    sig = materialize(
         _doc_signatures(spark, sf), table_bytes(sf, "documents"), eager=True
     )
     inv = (
@@ -1182,7 +1149,7 @@ def d14(spark: SparkSession, sf: str) -> DataFrame:
         # both sides of the estimate join and the intersection probe read
         # pairs concurrently — eager (cache.py r6), mechanism by scale (r13)
         .transform(
-            lambda d: share_subtree(d, table_bytes(sf, "documents"), eager=True)
+            lambda d: materialize(d, table_bytes(sf, "documents"), eager=True)
         )
     )
     # ship ONE 32-byte binary signature per join side instead of eight
@@ -1195,11 +1162,7 @@ def d14(spark: SparkSession, sf: str) -> DataFrame:
     # auto-broadcasts so no sig exchange exists to shrink; at 100 TB the
     # pairs frame outgrows the broadcast cap and both sig sides shuffle
     # by doc id, which is where the 4x key cut pays.
-    import os
-
     sig_bin = F.concat(*[F.col(f"mh{j}") for j in range(len(_SLICES))])
-    if os.environ.get("SPARK_GRAFT_SIG_HEX") == "1":  # TEMP A/B switch
-        sig_bin = F.unhex(sig_bin)
     sa = sig.select(F.col("doc_id").alias("a_id"), sig_bin.alias("abin"))
     sb = sig.select(F.col("doc_id").alias("b_id"), sig_bin.alias("bbin"))
     est_expr = sum(
@@ -1213,7 +1176,7 @@ def d14(spark: SparkSession, sf: str) -> DataFrame:
         .join(sb, "b_id")
         .select("a_id", "b_id", est_expr.alias("est_slots"))
     )
-    hashes = share_subtree(
+    hashes = materialize(
         _doc_shingle_hashes(spark, sf), table_bytes(sf, "documents"), eager=True
     )
     cnt = hashes.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1296,11 +1259,9 @@ def d15(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") <= _DF_CAP)
         # feeds counts AND pairs — concurrent consumers, eager (cache.py
-        # r6), scale-gated like d04's (r13)
+        # r6), materialized like d04's
         .transform(
-            lambda d: persist_if_material(
-                d, table_bytes(sf, "documents"), eager=True
-            )
+            lambda d: materialize(d, table_bytes(sf, "documents"), eager=True)
         )
     )
     cnt = (

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from ..cache import share_subtree
+from ..cache import materialize
 from ..tables import load_table, path_bytes
 from .registry import query
 
@@ -420,10 +420,8 @@ def g07(spark: SparkSession, sf: str) -> DataFrame:
     # Python VCF decode pass runs twice (one MapInPandas per branch), and a
     # LAZY persist still runs it twice at drain because the join's
     # broadcast-prep future races the other branch on the cold cache (the
-    # m04/g09 defect, r13 session 6).  share_subtree keeps the tracked
-    # persist above the small-input gate (unknown size fails safe there)
-    # and swaps in a lazy localCheckpoint below it
-    v = share_subtree(VcfSource().read(spark, path), path_bytes(path))
+    # m04/g09 defect, r13 session 6)
+    v = materialize(VcfSource().read(spark, path), path_bytes(path))
     info = promote_info(v, hdr)
     site = info.groupBy("contig").agg(
         F.count(F.lit(1)).alias("n_sites"),
@@ -590,7 +588,7 @@ def g09(spark: SparkSession, sf: str) -> DataFrame:
     # BAM is Python-decoded exactly ONCE (r13; the full mark_duplicates
     # contract re-scans the source to re-attach columns never read here).
     # source_bytes drives the signature frame's materialization mechanism
-    # (persist above the gate, lazy checkpoint below — cache.share_subtree)
+    # (persist above the gate, lazy checkpoint below — cache.materialize)
     marked = duplicate_flags(reads, header, source_bytes=path_bytes(path))
     return (
         marked.groupBy(F.coalesce("rname", F.lit("*")).alias("contig"))
@@ -897,9 +895,7 @@ def g14(spark: SparkSession, sf: str) -> DataFrame:
         count_eq("1").alias("ac"),
         (F.size(alleles) - count_eq(".")).cast("long").alias("an"),
     ).transform(
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        lambda d: share_subtree(d, path_bytes(path))
+        lambda d: materialize(d, path_bytes(path))
     ).orderBy("contig", "pos", "allele_idx")
 
 
@@ -1222,9 +1218,7 @@ def g19(spark: SparkSession, sf: str) -> DataFrame:
         nn.cast("long").alias("n_count"),
         F.round(gc / n_len, 4).alias("gc_frac"),
     ).transform(
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        lambda d: share_subtree(d, path_bytes(f"{_FIXTURES}/valid.fasta"))
+        lambda d: materialize(d, path_bytes(f"{_FIXTURES}/valid.fasta"))
     ).orderBy("contig", "w_start")
 
 
@@ -1360,9 +1354,7 @@ def g21(spark: SparkSession, sf: str) -> DataFrame:
         obs_exp.alias("obs_exp"),
         ((gc_pct > 0.5) & (obs_exp > 0.6)).alias("is_island"),
     ).transform(
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        lambda d: share_subtree(d, path_bytes(f"{_FIXTURES}/valid.fasta"))
+        lambda d: materialize(d, path_bytes(f"{_FIXTURES}/valid.fasta"))
     ).orderBy("contig", "w_start")
 
 

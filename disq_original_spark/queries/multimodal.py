@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import share_subtree
+from ..cache import materialize
 from ..operators.mediacontainers import (
     _Y4M_FIXED,
     WAV_HEADER_SIZE,
@@ -96,9 +96,7 @@ def m01(spark: SparkSession, sf: str) -> DataFrame:
     media = documents_as_media(load_table(spark, sf, "documents"))
     return (
         media.select("media_id", "kind", F.octet_length("data").cast("long").alias("n_bytes"))
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("media_id")
     )
 
@@ -163,11 +161,9 @@ def m01(spark: SparkSession, sf: str) -> DataFrame:
 )
 def m02(spark: SparkSession, sf: str) -> DataFrame:
     media = documents_as_media(load_table(spark, sf, "documents"))
-    # share_subtree (r14): recoverable persist above the gate, the
-    # measured lazy localCheckpoint below it
     return (
         extract_features(media)
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("media_id")
     )
 
@@ -201,9 +197,7 @@ def m03(spark: SparkSession, sf: str) -> DataFrame:
             "n_bytes",
             F.md5("frame_data").alias("frame_digest"),
         )
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("media_id", "frame_idx")
     )
 
@@ -242,11 +236,9 @@ def m03(spark: SparkSession, sf: str) -> DataFrame:
 )
 def m05(spark: SparkSession, sf: str) -> DataFrame:
     media = documents_as_media(load_table(spark, sf, "documents"))
-    # share_subtree (r14): recoverable persist above the gate, the
-    # measured lazy localCheckpoint below it
     return (
         audio_frames(media)
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("media_id", "frame_idx")
     )
 
@@ -359,16 +351,16 @@ def m04(spark: SparkSession, sf: str) -> DataFrame:
     # hashes — without a materialization point the Arrow decode pass runs
     # three times (one mapInPandas subtree per plan branch).  5 ints/row,
     # so the materialized frame is ~1000× smaller than the payloads it
-    # replaces.  share_subtree (r13 session 5): above the gate the lazy
-    # persist (unchanged production posture); below it a lazy
-    # localCheckpoint — the LAZY persist's three concurrent consumers all
-    # raced the cold cache (three full decode scans per drain, visible as
-    # three concurrent source stages in the stage table), while the
-    # checkpoint materializes the decode exactly once at build.
+    # replaces.  Above the gate materialize takes the lazy persist (the
+    # unchanged production posture); below it a lazy localCheckpoint —
+    # the LAZY persist's three concurrent consumers all raced the cold
+    # cache (three full decode scans per drain, visible as three
+    # concurrent source stages in the stage table), while the checkpoint
+    # materializes the decode exactly once at build.
     # Interleaved A/B (min/med, sf0.1): lazy persist 1.156/1.328 vs
-    # share 1.069/1.180 s, faster in all 6 rounds; at 8 cores
+    # checkpoint 1.069/1.180 s, faster in all 6 rounds; at 8 cores
     # 1.028/1.345 vs 0.930/1.180 (4 of 5 rounds).
-    hashes = share_subtree(perceptual_hash(corpus), table_bytes(sf, "documents"))
+    hashes = materialize(perceptual_hash(corpus), table_bytes(sf, "documents"))
     band_structs = F.array(
         *[
             F.struct(F.lit(b).alias("band_idx"), F.col(f"b{b}").alias("band_val"))

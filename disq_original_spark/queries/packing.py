@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import share_subtree
+from ..cache import materialize
 from ..functions import tokens
 from ..tables import load_table, load_wide, table_bytes
 from .registry import QUERIES, query
@@ -125,9 +125,7 @@ def p01(spark: SparkSession, sf: str) -> DataFrame:
         # half-away-from-zero on positive values (Python's round() is
         # half-to-even and disagrees at e.g. 232/256 = 0.90625).
         .withColumn("fill", F.round(F.col("seq_tokens") / float(_CAPACITY), 4))
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("bucket", "seq_idx")
     )
 
@@ -580,10 +578,8 @@ def p06(spark: SparkSession, sf: str) -> DataFrame:
     # full-corpus tokenize + md5 pass (the dominant cost) runs twice, and
     # a LAZY persist still runs it twice at bench scale because the
     # ratios broadcast's prep future races the scoring branch on the cold
-    # cache (the m04/g09 defect, r13 session 6).  share_subtree keeps the
-    # tracked persist above the small-input gate and swaps in a lazy
-    # localCheckpoint below it
-    feats = share_subtree(td.select(
+    # cache (the m04/g09 defect, r13 session 6)
+    feats = materialize(td.select(
         "doc_id", "lang", F.explode(F.concat(unigrams, bigrams)).alias("b")
     ), table_bytes(sf, "documents"))
     hist = feats.groupBy("b").agg(

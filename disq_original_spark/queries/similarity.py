@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import share_subtree
+from ..cache import materialize
 from ..functions import cosine_similarity
 from ..tables import load_table, table_bytes
 from .registry import query
@@ -827,9 +827,7 @@ def s07(spark: SparkSession, sf: str) -> DataFrame:
         b.repartition("bucket")
         .groupBy("bucket")
         .applyInPandas(bucket_topk, "src long, dst long, cos_sim double, rank int")
-        # share_subtree (r14): recoverable persist above the gate, the
-        # measured lazy localCheckpoint below it
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "embeddings")))
+        .transform(lambda d: materialize(d, table_bytes(sf, "embeddings")))
         .orderBy("src", "rank")
     )
 
@@ -970,18 +968,19 @@ def s09(spark: SparkSession, sf: str) -> DataFrame:
     # evaluation of the corpus-pass seed graph instead of ~6, stored as
     # O(edges) longs; recomputability of the truncated lineage is not
     # needed for a within-query intermediate.
-    # share_subtree (r14): the seed graph has several CONCURRENT consumers
-    # downstream (both und branches, both join sides), so above the gate an
-    # EAGER tracked persist both keeps fault tolerance and avoids the
-    # lazy-persist cold-cache race; below the gate the lazy localCheckpoint
-    # is the measured r13 shape.
+    # The seed graph has several CONCURRENT consumers downstream (both und
+    # branches, both join sides), so the persist above the gate is EAGER to
+    # avoid the lazy-persist cold-cache race.  eager does not apply to the
+    # lazy localCheckpoint below the gate: the first downstream job fills
+    # it, so concurrent first consumers may still each evaluate the subtree
+    # — time, never rows.
     g = (
         s07(spark, sf)
         .select("src", "dst")
         .unionByName(rnd)
         .distinct()
         .transform(
-            lambda d: share_subtree(d, table_bytes(sf, "embeddings"), eager=True)
+            lambda d: materialize(d, table_bytes(sf, "embeddings"), eager=True)
         )
     )
     und = g.unionByName(

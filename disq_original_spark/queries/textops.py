@@ -16,7 +16,7 @@ from ..functions import (
     stopword_count,
     tokens,
 )
-from ..cache import share_subtree
+from ..cache import materialize
 from ..tables import load_table, load_wide, small_input, table_bytes
 from .registry import query
 
@@ -257,9 +257,8 @@ def t06(spark: SparkSession, sf: str) -> DataFrame:
         d.select("doc_id", "text")
         .mapInPandas(gen, "doc_id long, n_fp int, fp_digest string")
         # materialize: shuffle-free below the sort — one winnowing pass,
-        # not two.  share_subtree (r14): recoverable persist above the
-        # gate, lazy localCheckpoint below (the measured r13 shape).
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        # not two
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("doc_id")
     )
 
@@ -456,9 +455,8 @@ def t08(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("gopher_pass"),
         )
         # materialize: shuffle-free below the sort — one Counter pass, not
-        # two.  share_subtree (r14): recoverable persist above the gate,
-        # lazy localCheckpoint below (the measured r13 shape).
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        # two
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("doc_id")
     )
 
@@ -1348,8 +1346,6 @@ def _t17_topk(texts: DataFrame, k: int, cap: int) -> DataFrame:
     sketch cap.  ``texts`` needs one non-null ``text`` column."""
     from pyspark.sql import Window
 
-    from ..cache import track_persist
-
     tok = (
         texts.select(F.explode(tokens("text")).alias("token"))
         .filter(F.col("token") != "")
@@ -1358,13 +1354,15 @@ def _t17_topk(texts: DataFrame, k: int, cap: int) -> DataFrame:
     # count (NULL-token sentinel row per partition) — persisted because
     # two branches (threshold + candidates) read it; the aggregate is at
     # most cap×partitions + partitions rows, trivially memory-resident.
+    # The source size is unknown here (-1), so it always takes the persist.
     # The worker gets ENGINE-lowered text so candidate tokenization and
     # the exact recount share one case mapping on any executor locale.
-    grouped = track_persist(
+    grouped = materialize(
         texts.select(F.lower(F.col("text")).alias("text"))
         .mapInPandas(_t17_candidates(cap), "token string, weight long")
         .groupBy("token")
-        .agg(F.sum("weight").alias("residual"))
+        .agg(F.sum("weight").alias("residual")),
+        -1,
     )
     # N (total token count) and the candidate count collect as DRIVER
     # SCALARS — two 1-row jobs over the persisted MG aggregate, the same
@@ -1535,9 +1533,8 @@ def t18(spark: SparkSession, sf: str) -> DataFrame:
         )
         # materialize: the split+explode+md5 chain is shuffle-free below the
         # sort, so the range sampler re-ran all of it; the materialized rows
-        # are exactly what the sort exchange ships anyway.  share_subtree
-        # (r14): recoverable persist above the gate, lazy checkpoint below.
-        .transform(lambda d: share_subtree(d, table_bytes(sf, "documents")))
+        # are exactly what the sort exchange ships anyway
+        .transform(lambda d: materialize(d, table_bytes(sf, "documents")))
         .orderBy("doc_id", "chunk_id")
     )
 

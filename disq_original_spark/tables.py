@@ -71,8 +71,8 @@ def small_input_threshold() -> int:
     """The shared latency-vs-throughput crossover knob, in bytes
     (``SPARK_GRAFT_SMALL_INPUT_BYTES``, default 256 MiB).  ONE reader for
     the gate every scale-dependent decision keys on (``small_input``,
-    ``cache.persist_if_material``, ``cache.share_subtree``) so the knob's
-    name and default can never silently diverge between callers."""
+    ``cache.materialize``) so the knob's name and default can never
+    silently diverge between callers."""
     import os
 
     return int(

@@ -1,22 +1,29 @@
-"""Cache hygiene (VERDICT r4 directive #1): every ``.persist()`` a query
+"""Cache hygiene (VERDICT r4 directive #1): every materialization a query
 builder takes is registered with ``disq_original_spark.cache`` and released
-by the harness once the build's results are drained — no persisted blocks
-survive a build+drain+release cycle, so a long session (the driver's
-139-query sweep, a bench run) never accumulates stale cached subtrees and
-no query's timing is flattered by another query's resident cache."""
+by the harness once the build's results are drained — no persisted or
+checkpointed blocks survive a build+drain+release cycle, so a long session
+(the driver's 139-query sweep, a bench run) never accumulates stale cached
+subtrees and no query's timing is flattered by another query's resident
+cache."""
 
 from __future__ import annotations
 
 import pytest
 
-from disq_original_spark.cache import release_persists, tracked_count, tracked_info
+from disq_original_spark.cache import (
+    materialize,
+    release_persists,
+    tracked_count,
+    tracked_info,
+)
 from disq_original_spark.queries import QUERIES
 
-# Every query whose build path calls track_persist (directly or through
-# operators): MinHash-LSH family, dupmark, interval-merge subtract, pHash,
-# token features, the cached VCF decode.
+# Queries whose build path materializes (directly or through operators):
+# MinHash-LSH family, connected components' per-round checkpoints, dupmark,
+# interval-merge subtract, pHash, token features, the cached VCF decode.
 PERSISTING = [
     "d04_ngram_jaccard",
+    "d07_dup_clusters",
     "d14_lsh_estimate_audit",
     "g07_typed_variant_stats",
     "g09_mark_duplicates",
@@ -33,8 +40,8 @@ def _persistent_rdd_count(spark) -> int:
 
 @pytest.fixture(autouse=True)
 def _clean_slate(spark, monkeypatch):
-    # r13: corpus persists are scale-gated (cache.persist_if_material) and
-    # the test SFs sit far below the default 256 MiB threshold — zero the
+    # r13: corpus persists are scale-gated (cache.materialize) and the
+    # test SFs sit far below the default 256 MiB threshold — zero the
     # threshold so these tests keep exercising the persist machinery the
     # way a production-scale run would take it.
     monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
@@ -45,19 +52,27 @@ def _clean_slate(spark, monkeypatch):
     spark.catalog.clearCache()
 
 
-def test_scale_gated_persists_skip_small_corpus(spark, sf_dir, monkeypatch):
-    """At the DEFAULT threshold a bench-scale corpus registers NO persists
-    for the scale-gated sites: below the crossover the materialization
-    barrier measurably dominates the recompute it saves (r13, d04
-    2.53 s -> 1.49 s median).  The policy knob, not the persist machinery,
-    is what changes with scale."""
+def _cached_partitions(spark) -> int:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.numCachedPartitions() for i in infos)
+
+
+def test_scale_gated_materialization_small_corpus(spark, sf_dir, monkeypatch):
+    """At the DEFAULT threshold a bench-scale corpus takes the lazy
+    checkpoint, not the persist: below the crossover a persist barrier
+    measurably dominates the recompute it saves (r13, d04 2.53 s -> 1.49 s
+    median), and ``eager`` does not apply to the checkpoint, so nothing is
+    materialized before the drain.  At a zeroed gate the same site is one
+    eager persist, materialized at build."""
     monkeypatch.delenv("SPARK_GRAFT_SMALL_INPUT_BYTES", raising=False)
     QUERIES["d04_ngram_jaccard"].build(spark, sf_dir)
-    assert tracked_count() == 0
+    assert [mode for _df, mode in tracked_info()] == ["checkpoint"]
+    assert _cached_partitions(spark) == 0
     release_persists()
     monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
     QUERIES["d04_ngram_jaccard"].build(spark, sf_dir)
-    assert tracked_count() == 1  # threshold back at 0: persist registered
+    assert [mode for _df, mode in tracked_info()] == ["eager"]
+    assert _cached_partitions(spark) > 0
 
 
 @pytest.mark.parametrize("name", PERSISTING)
@@ -91,15 +106,14 @@ EAGER_POLICY = {
 @pytest.mark.parametrize("name", sorted(EAGER_POLICY))
 def test_persist_eagerness_policy(spark, sf_dir, name):
     QUERIES[name].build(spark, sf_dir)  # build only — no drain
-    flags = [eager for _df, eager in tracked_info()]
+    flags = [mode == "eager" for _df, mode in tracked_info()]
     assert flags == EAGER_POLICY[name], (
         f"{name}: persist eagerness flipped — measured policy is "
         f"{EAGER_POLICY[name]}, build registered {flags}"
     )
     # behavior, not just the flag: an eager build has cached partitions
     # materialized BEFORE any drain; a fully-lazy build has none yet
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    cached = sum(i.numCachedPartitions() for i in infos)
+    cached = _cached_partitions(spark)
     if any(EAGER_POLICY[name]):
         assert cached > 0, f"{name}: eager persist did not materialize at build"
     else:
@@ -135,41 +149,76 @@ def test_entry_contract_releases_previous_build(spark):
     assert tracked_count() == 0
 
 
-def test_no_bare_lineage_cut_in_query_paths():
-    """VERDICT r13 #1: a bare ``lineage_cut`` (localCheckpoint) in a query
-    path trades fault tolerance away at EVERY scale — on a real cluster,
-    losing one executor after materialization makes the query
-    unrecoverable (lineage is truncated).  Every query-path
-    materialization point must route through ``cache.share_subtree`` so
-    production-scale runs (above the small-input gate) get a recoverable
-    tracked persist.  The one sanctioned direct ``localCheckpoint`` user
-    is operators/graph.py's connected-components loop, where per-round
-    lineage truncation is the algorithm's documented requirement (plan
-    growth is exponential in rounds without it)."""
+def _query_path_modules():
     import ast
     import pathlib
 
     import disq_original_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    offenders: list[str] = []
     for sub in ("queries", "operators", "streaming"):
         for f in sorted((root / sub).glob("*.py")):
-            tree = ast.parse(f.read_text())
-            for node in ast.walk(tree):
-                if isinstance(node, ast.Name) and node.id == "lineage_cut":
-                    offenders.append(f"{sub}/{f.name}:{node.lineno} lineage_cut")
-                if (
-                    isinstance(node, ast.Attribute)
-                    and node.attr == "localCheckpoint"
-                    and f.name != "graph.py"
-                ):
-                    offenders.append(f"{sub}/{f.name}:{node.lineno} localCheckpoint")
+            yield f"{sub}/{f.name}", ast.parse(f.read_text())
+
+
+def test_no_env_reads_in_query_paths():
+    """Query builders and operators take no environment switches: a knob
+    read at build time forks the code path per process, and a dual path no
+    deployment sets goes untested.  The knobs live in cache.py, tables.py
+    and session.py."""
+    import ast
+
+    offenders: list[str] = []
+    for where, tree in _query_path_modules():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv"):
+                offenders.append(f"{where}:{node.lineno} {node.attr}")
+            if isinstance(node, ast.ImportFrom) and node.module == "os" and any(
+                a.name in ("environ", "getenv") for a in node.names
+            ):
+                offenders.append(f"{where}:{node.lineno} from os import")
+    assert offenders == [], offenders
+
+
+def test_no_raw_materialization_in_query_paths():
+    """VERDICT r13 #1: every query-path materialization point goes through
+    ``cache.materialize``, so production-scale runs (above the small-input
+    gate) get a recoverable tracked persist and every frame is released by
+    ``release_persists`` — a raw ``persist``/``cache`` is never released,
+    and a raw ``localCheckpoint``/``checkpoint`` truncates lineage at every
+    scale (on a real cluster, losing one executor after materialization
+    makes the query unrecoverable).  ``lineage_cut`` is the one
+    scale-independent primitive, and only operators/graph.py's connected
+    components loop may call it: per-round lineage truncation is the
+    algorithm's documented requirement (plan growth is exponential in
+    rounds without it)."""
+    import ast
+
+    raw = ("persist", "cache", "localCheckpoint", "checkpoint")
+    offenders: list[str] = []
+    for where, tree in _query_path_modules():
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in raw
+            ):
+                offenders.append(f"{where}:{node.lineno} .{node.func.attr}()")
+            named = (
+                (isinstance(node, ast.Name) and node.id == "lineage_cut")
+                or (isinstance(node, ast.Attribute) and node.attr == "lineage_cut")
+                or (
+                    isinstance(node, ast.ImportFrom)
+                    and any(a.name == "lineage_cut" for a in node.names)
+                )
+            )
+            if named and where != "operators/graph.py":
+                offenders.append(f"{where}:{node.lineno} lineage_cut")
     assert offenders == [], offenders
 
 
 def test_release_frees_checkpoint_blocks(spark, sf_dir, monkeypatch):
-    """Below the gate share_subtree lazily localCheckpoints; those blocks
+    """Below the gate materialize lazily localCheckpoints; those blocks
     live OUTSIDE the SQL cache, so release_persists must free them
     explicitly (ADVICE r13) — a long sweep must not accumulate
     checkpointed RDDs until GC happens to run."""
@@ -181,3 +230,21 @@ def test_release_frees_checkpoint_blocks(spark, sf_dir, monkeypatch):
     assert _persistent_rdd_count(spark) == 0, (
         "checkpointed RDD blocks survived release_persists"
     )
+
+
+def test_eager_persist_registers_before_materializing(spark):
+    """A failing eager materialization must still leave the frame
+    releasable (r6 review finding: append-after-count leaked the persist
+    on the error path)."""
+    import pyspark.sql.functions as F
+
+    df = spark.range(4).select(
+        F.when(F.col("id") < 99, F.col("id"))
+        .otherwise(F.raise_error(F.lit("boom")))
+        .alias("id"),
+        F.assert_true(F.col("id") < 2, F.lit("boom")).alias("chk"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        materialize(df, -1, eager=True)  # unknown size: the persist branch
+    assert tracked_count() == 1  # registered despite the failed count()
+    assert release_persists() == 1

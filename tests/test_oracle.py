@@ -199,9 +199,9 @@ def test_witness_freshness_gate():
     query whose latest green driver witness is older than one full
     rotation cycle (ceil(registry/50) rounds — the best a 50-slot driver
     window can do) and which also sits outside the current window — the
-    machine-checked form of the rotation rule _PRIORITY used to encode
-    as comment arithmetic (VERDICT r6 directive #6).  This fails exactly
-    when a future round's _PRIORITY goes stale."""
+    machine-checked form of the rotation rule queries() derives from the
+    committed witnesses (VERDICT r6 directive #6).  This fails exactly
+    when that ordering goes stale."""
     import importlib.util
     from pathlib import Path
 

@@ -179,11 +179,11 @@ def test_t05_t06_single_scan_no_shuffle(spark, sf_dir, monkeypatch):
     """BPE token counting and winnowing fingerprints are narrow map-side
     projections: nothing but the deterministic final ORDER BY — plus the
     small-file widening repartition from load_wide, which vanishes once the
-    scan splits naturally at scale — may shuffle.  Pinned with the r13
-    lineage cut disabled so the full production shape is visible."""
+    scan splits naturally at scale — may shuffle.  Pinned at a zeroed
+    small-input gate so the production (persist) shape is visible."""
     from disq_original_spark.plans import simple_plan
 
-    monkeypatch.setenv("SPARK_GRAFT_NO_LCKPT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
     for name in ("t05_bpe_tokens", "t06_winnow_fingerprint"):
         plan = simple_plan(QUERIES[name].build(spark, sf_dir))
         assert plan.count("Exchange") <= 2, name
@@ -246,11 +246,12 @@ def test_s04_partial_aggregation_on_dims(spark, sf_dir):
 
 def test_p01_single_shuffle_on_bucket(spark, sf_dir, monkeypatch):
     """Packing is one hash shuffle on the bucket key feeding applyInPandas;
-    no other exchange before the (tiny) final sort.  The default build cuts
-    lineage before the sort (cache.lineage_cut, r13) which hides the shape
-    behind a Scan ExistingRDD — pin the production shape with the
-    checkpoint disabled, and the default shape's checkpoint separately."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_LCKPT", "1")
+    no other exchange before the (tiny) final sort.  The default build at
+    this size checkpoints before the sort (cache.materialize, r13) which
+    hides the shape behind a Scan ExistingRDD — pin the production shape at
+    a zeroed small-input gate, and the default shape's checkpoint
+    separately."""
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
     plan = formatted_plan(QUERIES["p01_sequence_packing"].build(spark, sf_dir))
     # one hash exchange (the groupBy); the only other is the final orderBy's
     # range partitioning
@@ -259,7 +260,7 @@ def test_p01_single_shuffle_on_bucket(spark, sf_dir, monkeypatch):
     assert "FlatMapGroupsInPandas" in plan
     # default shape: the range sampler reads the checkpointed pack output
     # instead of re-running the Python stage
-    monkeypatch.delenv("SPARK_GRAFT_NO_LCKPT")
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_INPUT_BYTES")
     plan = formatted_plan(QUERIES["p01_sequence_packing"].build(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
     assert plan.count("rangepartitioning") == 1
@@ -405,16 +406,16 @@ def test_p11_single_data_shuffle_and_broadcast_stats(spark, sf_dir):
 def test_m05_pure_mapside_expansion(spark, sf_dir, monkeypatch):
     """Audio framing must be one Arrow pass over the scan: no join, no
     aggregate, no exchange except the final orderBy's range partitioning.
-    Pinned with the r13 lineage cut disabled (the cut hides the pass
-    behind a Scan ExistingRDD); the default shape's checkpoint is pinned
-    separately."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_LCKPT", "1")
+    Pinned at a zeroed small-input gate (the default build's checkpoint
+    hides the pass behind a Scan ExistingRDD); the default shape's
+    checkpoint is pinned separately."""
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
     plan = formatted_plan(QUERIES["m05_audio_frames"].build(spark, sf_dir))
     tree = plan.split("\n\n")[0]
     assert tree.count("MapInPandas") == 1
     assert "Join" not in tree and "HashAggregate" not in tree
     assert tree.count("Exchange") == 1
-    monkeypatch.delenv("SPARK_GRAFT_NO_LCKPT")
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_INPUT_BYTES")
     plan = formatted_plan(QUERIES["m05_audio_frames"].build(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
 
@@ -439,18 +440,18 @@ def test_s07_knn_graph_single_bucket_exchange(spark, sf_dir, monkeypatch):
     """kNN-graph: scoring + ranking fuse into ONE per-bucket numpy pass
     (applyInPandas) — exactly one grouped-map node, no join, no window,
     one bucket hash exchange before the driver-facing sort.  Production
-    shape pinned with the r13 lineage cut disabled; the default build
-    additionally checkpoints the edge output so the sort's range sampler
-    does not re-run the Python pass."""
+    shape pinned at a zeroed small-input gate; the default build instead
+    checkpoints the edge output so the sort's range sampler does not re-run
+    the Python pass."""
     import re
 
-    monkeypatch.setenv("SPARK_GRAFT_NO_LCKPT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
     plan = formatted_plan(QUERIES["s07_knn_graph"].build(spark, sf_dir))
     tree = plan.split("\n\n")[0]
     assert tree.count("FlatMapGroupsInPandas") == 1
     assert "Join" not in tree and "Window" not in tree
     assert len(re.findall(r"hashpartitioning\(bucket", plan)) == 1
-    monkeypatch.delenv("SPARK_GRAFT_NO_LCKPT")
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_INPUT_BYTES")
     plan = formatted_plan(QUERIES["s07_knn_graph"].build(spark, sf_dir))
     assert "Scan ExistingRDD" in plan
 
@@ -666,7 +667,7 @@ def test_d14_reuses_persisted_subtrees(spark, sf_dir, monkeypatch):
     """The estimate audit must read its signature and shingle-hash frames
     from cache (InMemoryTableScan), not re-run the Arrow shingling per
     branch — the corpus would otherwise be re-shingled ~5x.  r13: the
-    persists are scale-gated (cache.persist_if_material) and the test SF
+    persists are scale-gated (cache.materialize) and the test SF
     sits below the default threshold, so pin the PRODUCTION-scale plan by
     zeroing the gate."""
     monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")

@@ -850,31 +850,6 @@ def test_top_level_nosz_with_external_size():
     assert blk(5, nosz, len(data)) == data
 
 
-def test_eager_persist_registers_before_materializing(spark):
-    """A failing eager materialization must still leave the frame
-    releasable (r6 review finding: append-after-count leaked the persist
-    on the error path)."""
-    import pyspark.sql.functions as F2
-
-    from disq_original_spark.cache import (
-        release_persists,
-        track_persist,
-        tracked_count,
-    )
-
-    release_persists()
-    df = spark.range(4).select(
-        F2.when(F2.col("id") < 99, F2.col("id"))
-        .otherwise(F2.raise_error(F2.lit("boom")))
-        .alias("id"),
-        F2.assert_true(F2.col("id") < 2, F2.lit("boom")).alias("chk"),
-    )
-    with pytest.raises(Exception, match="boom"):
-        track_persist(df, eager=True)
-    assert tracked_count() == 1  # registered despite the failed count()
-    assert release_persists() == 1
-
-
 def test_rle_encode_long_runs_take_uint7_fallback():
     """Runs with extras >= 0x80 must leave the bulk single-byte metadata
     path and emit true uint7 varints, in literal order, mixed with short

@@ -3,8 +3,9 @@
     python tools/capture_plans.py <out_subdir> [name ...]
 
 With no names, captures every HEADLINE entry from bench.py.  Each query's
-plan goes to plans/<out_subdir>/<name>.txt.  Driver-only: plans are built
-and formatted, nothing is executed.
+plan goes to plans/<out_subdir>/<name>.txt under the repository root, a
+git-ignored output directory: dumps are for diffing, not for the tree.
+Driver-only: plans are built and formatted, nothing is executed.
 """
 
 from __future__ import annotations

@@ -31,31 +31,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def freshness() -> int:
-    """Latest green-witness round per registered query, from the committed
-    CORRECTNESS_r*.json files.  A witness counts only if rows+schema+hash
-    all matched with no error (a red row proves the driver RAN the query,
-    not that the result was right).  ``hash_match`` must be PRESENT and
-    true: a rows-only driver row (the weaker oracle-less check) is not a
-    hash witness, matching the rotation policy's notion — ADVICE r7 —
-    so a never-hash-witnessed query can never be reported fresh."""
+    """Latest green-witness round per registered query (the fold is
+    ``__spark_entry__.green_witnesses``, the same one queries() orders
+    by), the round histogram and the current window's staleness."""
     import __spark_entry__ as se
 
-    repo = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    max_round = 0
-    for f in sorted(repo.glob("CORRECTNESS_r*.json")):
-        rnum = int(f.stem.rsplit("_r", 1)[1])
-        max_round = max(max_round, rnum)
-        for q, row in json.loads(f.read_text()).items():
-            green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match", False)
-                and not row.get("err")
-            )
-            if green:
-                latest[q] = max(latest.get(q, 0), rnum)
-
+    latest = se.green_witnesses()
+    max_round = max(latest.values(), default=0)
     window = list(se.queries())[:50]
     registry = list(se.queries())
     hist: dict[int, int] = {}
