@@ -95,9 +95,12 @@ def materialize(df: DataFrame, source_bytes: int, eager: bool = False) -> DataFr
 
 
 def lineage_cut(df: DataFrame) -> DataFrame:
-    """Tracked lazy ``localCheckpoint`` at every scale: the first downstream
-    job materializes it (no separate barrier job), it is not wrapped in an
-    InMemoryRelation, and lineage restarts at it.
+    """Tracked lazy ``localCheckpoint`` at every scale: it is not wrapped in
+    an InMemoryRelation and lineage restarts at it.  Lazy is not free under
+    AQE: the call plans the frame adaptively, which runs every exchange
+    (shuffle or broadcast) of its subtree on the spot, one job each — 3 for
+    a connected-components round; only the final stage waits for the first
+    downstream job.
 
     Query builders must not call this directly — :func:`materialize` gives
     them the recoverable persist at scale.  The one sanctioned caller is

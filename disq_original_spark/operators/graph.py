@@ -12,18 +12,75 @@ No counterpart in the reference (tomwhite/disq-original has no graph
 operators); this backs the dedup pipeline's cluster-assignment step (d07).
 
 Scale shape: the edge list stays in its canonical (big, small) direction,
-every shuffle carries exactly two longs, each round lazily
-localCheckpoints so lineage stays flat at one job per round, and the only
-driver-side value is the per-round (count, xor-hash) edge-set fingerprint
-— never the labels.  The checkpoints go through ``cache.lineage_cut`` so
-the harness's ``release_persists()`` frees their blocks.
+every shuffle carries exactly two longs, and each round ends in a
+``cache.lineage_cut`` so lineage stays flat (the checkpoints are tracked,
+so the harness's ``release_persists()`` frees their blocks).  The stop test
+is exact — the edge set is final once it is a star forest — and rides the
+round's own dedup exchange (``_FLAGGED``), so it adds no shuffle: its only
+job is an ``isEmpty`` over the flagged checkpoint, and the only driver-side
+value is that one row, never the labels.  The cut is not free: under AQE,
+``localCheckpoint(eager=False)`` runs the round's three shuffle stages at
+call time, so a round is about 4 jobs.  At small scale the driver, not the
+jobs, sets the pace, so a round is one SQL statement: built column by
+column through the DataFrame API it takes ~600 py4j calls, as one
+statement ~60.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..cache import lineage_cut
+
+# Dedups the big -> small edges (u, v) of `rows` and sets `bad` on every
+# out-edge of a node that breaks the star-forest shape: the leaf u of two
+# distinct edges, or a leaf that is also a center.  Rows (c, NULL) are
+# probes marking c as a center; every edge target needs one.  One exchange
+# (hash on u): the window plans it and the DISTINCT after it needs none.
+_FLAGGED = """
+    SELECT DISTINCT u, v, bad FROM (
+      SELECT u, v, min(v) OVER w < max(v) OVER w OR max(v IS NULL) OVER w AS bad
+      FROM rows WINDOW w AS (PARTITION BY u))
+    WHERE v IS NOT NULL"""
+
+# One large-star + small-star round over {edges}.  large-star: over
+# SYMMETRIC neighborhoods N(u), connect every strictly-larger neighbor v > u
+# to m = min(N(u) ∪ {u}) — a window over the partition key, ONE exchange per
+# star instead of groupBy+join's two; duplicates are tolerated (small-star's
+# window-min and the final DISTINCT absorb them).  small-star: edges already
+# point big -> small, so N(u) here are the strictly-smaller neighbors;
+# connect them (and u) to their min m.  Every new edge points at some
+# group's m, so one probe per group (`heads`, local: sm is hashed on u)
+# marks all the centers for the stop test.  A center gets one probe per
+# group of its leaves, no more rows than large-star's window gathers there.
+_ROUND = """
+    WITH sym AS (SELECT u, v FROM {edges} UNION ALL SELECT v, u FROM {edges}),
+    large AS (
+      SELECT v AS u, m AS v FROM (
+        SELECT u, v, least(u, min(v) OVER (PARTITION BY u)) AS m FROM sym)
+      WHERE v > u),
+    sm AS (SELECT u, v, min(v) OVER (PARTITION BY u) AS m FROM large),
+    heads AS (SELECT DISTINCT u, m FROM sm),
+    rows AS (
+      SELECT v AS u, m AS v FROM sm WHERE v != m
+      UNION ALL SELECT u, m FROM heads
+      UNION ALL SELECT m, NULL FROM heads)""" + _FLAGGED
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the big -> small edge set ``(u, v)`` is a forest of stars:
+    every node is the leaf ``u`` of at most one edge and no leaf is also a
+    center ``v``.  Large-star/small-star keeps every component connected,
+    so such a forest has one star per component, centered on its minimum."""
+    return (
+        edges.sparkSession.sql(
+            "WITH rows AS (SELECT u, v FROM {edges}"
+            " UNION ALL SELECT v, NULL FROM {edges})" + _FLAGGED,
+            edges=edges,
+        )
+        .where("bad")
+        .isEmpty()
+    )
 
 
 def connected_components(
@@ -34,16 +91,11 @@ def connected_components(
 
     Returns ``(labels, rounds)`` where labels has columns (node, label) and
     ``rounds`` is the number of large-star+small-star rounds executed.
-    Raises RuntimeError if ``max_iters`` rounds do not reach the star-graph
-    fixed point — loud, never a silent unconverged result (O(log n) bound
-    means hitting 30 implies a bug or an adversarial input, not bad luck).
+    Raises RuntimeError if ``max_iters`` rounds do not reach a star forest
+    — loud, never a silent unconverged result (O(log n) bound means hitting
+    30 implies a bug or an adversarial input, not bad luck).
     """
-    # canonical direction big -> small; self-loops dropped.  The checkpoint
-    # is LAZY: the sig() fingerprint job right below materializes it, so the
-    # candidate-pair pipeline runs inside that job instead of paying a
-    # separate eager-checkpoint job first — one less driver round-trip, same
-    # work, same storage (d07 interleaved A/B at sf0.1, two runs of 6:
-    # min 3.68/3.32 eager vs 3.08/3.15 lazy; medians within noise).
+    # canonical direction big -> small; self-loops dropped
     edges = lineage_cut(
         pairs.select(
             F.greatest(F.col(a), F.col(b)).alias("u"),
@@ -52,83 +104,21 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-
-    def sig(df: DataFrame) -> tuple:
-        # one-job set fingerprint over the (already materialized, distinct)
-        # edge set: count + xxhash64 bit_xor (xor never overflows under
-        # ANSI mode and is exact on a duplicate-free set).  Fixed-point
-        # detection by fingerprint equality — a false positive needs a
-        # 64-bit collision between consecutive rounds (~2^-64); the
-        # oracle-matched labels and the convergence tests pin the behavior.
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
-
-    prev = sig(edges)
-    w = Window.partitionBy("u")
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # large-star: over SYMMETRIC neighborhoods N(u), connect every
-        # strictly-larger neighbor v > u to m = min(N(u) ∪ {u}).  The
-        # neighborhood min is a window over the partition key — ONE exchange
-        # per star instead of groupBy+join's two; duplicates are tolerated
-        # (small-star's window-min and the final distinct absorb them)
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    for rounds in range(1, max_iters + 1):
+        edges = lineage_cut(
+            pairs.sparkSession.sql(_ROUND, edges=edges.select("u", "v"))
         )
-        large = (
-            sym.withColumn("m", F.least(F.col("u"), F.min("v").over(w)))
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # small-star: edges already point big -> small, so N(u) here are the
-        # strictly-smaller neighbors; connect them (and u) to their min m
-        sm = large.withColumn("m", F.min("v").over(w))
-        # lazy checkpoint: the sig() action below materializes it, so a
-        # round costs ONE job while lineage still resets every round
-        small = lineage_cut(
-            sm.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(sm.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        cur = sig(small)
-        edges = small
-        if cur == prev:
+        if edges.where("bad").isEmpty():
             break
-        prev = cur
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
             "(O(log n) expected); refusing to return unconverged labels"
         )
-    # Airtight convergence check: fingerprint equality alone would return
-    # wrong labels on a ~2^-64 hash collision between consecutive rounds.
-    # A star graph has disjoint leaf/center sets, so assert directly that no
-    # node appears both as a leaf (u) and a center (v) — one slim semi-join
-    # + limit(1), cost bounded by a single extra job on two long columns.
-    if (
-        edges.join(
-            edges.select(F.col("v").alias("u")).distinct(), "u", "left_semi"
-        )
-        .limit(1)
-        .count()
-        > 0
-    ):
-        raise RuntimeError(
-            "connected_components fingerprint claimed convergence but the "
-            "edge set is not a star graph (a leaf is also a center); "
-            "refusing to return unconverged labels"
-        )
-    # stars: every non-root is a leaf (u, root); roots appear only as v
+    # star forest: every non-root is the leaf of exactly one (u, root) edge
+    # and no root is a leaf, so the roots are exactly the centers
     leaves = edges.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    roots = (
-        edges.select(F.col("v").alias("node"))
-        .distinct()
-        .join(leaves.select("node"), "node", "left_anti")
-        .withColumn("label", F.col("node"))
+    roots = edges.select(F.col("v").alias("node")).distinct().withColumn(
+        "label", F.col("node")
     )
     return leaves.unionByName(roots), rounds

@@ -22,8 +22,11 @@ Scale design notes (the whole point of these):
   in for an IVF/LSH bucket id at scale).
 - **Cluster assignment** (d07): connected components over the LSH candidate
   graph by alternating large-star/small-star (operators/graph.py) — O(log n)
-  rounds, two slim two-column shuffles each, edges checkpointed so lineage
-  stays flat, loud failure instead of silently-unconverged labels.
+  rounds, each one SQL statement with three slim two-column shuffles (two
+  window mins, one dedup that also flags star-forest violations), edges
+  checkpointed so lineage stays flat (under AQE each checkpoint runs those
+  3 shuffle jobs at call time), an exact stop test that is one isEmpty job
+  per round, loud failure instead of silently-unconverged labels.
 
 Every query has a DuckDB oracle computing the *identical* deterministic
 expression (seeded md5 minhash uses lexicographic-min over fixed-width hex,
@@ -586,8 +589,8 @@ _PAIRS_SQL = f"""sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM document
     doc="Duplicate-cluster assignment: connected components over the "
     "MinHash-LSH candidate graph via alternating large-star/small-star "
     "(Kiveris et al. 2014, operators/graph.py) — O(log n) rounds instead "
-    "of the O(component diameter) of min-label propagation, two slim "
-    "two-long-column shuffles per round, loud RuntimeError if the round "
+    "of the O(component diameter) of min-label propagation, stopping "
+    "exactly once the edges form a star forest, loud RuntimeError if the round "
     "cap is ever hit (never silently-unconverged labels).  The "
     "canonical-document-selection step of a dedup pipeline; oracle is a "
     "recursive-CTE transitive closure.",

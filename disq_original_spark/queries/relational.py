@@ -1033,8 +1033,8 @@ def q35(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "q36_tpch_q5",
     """SELECT n_name,
-              round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                                  AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue
+              CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                                  AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
        FROM customer
        JOIN orders ON c_custkey = o_custkey
        JOIN lineitem ON l_orderkey = o_orderkey
@@ -1048,7 +1048,10 @@ def q35(spark: SparkSession, sf: str) -> DataFrame:
     "join graph cyclic — the classic join-reordering stress).  Catalyst + "
     "AQE pick the order; nation/region/supplier broadcast; the only big "
     "shuffle is lineitem⋈orders.  DECIMAL sum for cross-engine exactness "
-    "(per-nation groups sum ~1e4 doubles — float rounding WOULD differ).",
+    "(per-nation groups sum ~1e4 doubles — float rounding WOULD differ), "
+    "rounded to cents while still DECIMAL: a sum ending in exactly half a "
+    "cent has no exact double, and rounding after the cast split the "
+    "engines (both round a DECIMAL half away from zero).",
 )
 def q36(spark: SparkSession, sf: str) -> DataFrame:
     c = _t(spark, sf, "customer")
@@ -1073,8 +1076,8 @@ def q36(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.round(
                 F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                      .cast("decimal(18,4)")).cast("double"), 2
-            ).alias("revenue")
+                      .cast("decimal(18,4)")), 2
+            ).cast("double").alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), "n_name")
     )

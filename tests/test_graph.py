@@ -1,15 +1,18 @@
 """Alternating large-star/small-star connected components (operators/graph):
 exact labels vs a union-find oracle, O(log n) round count on a deliberately
-chained path graph (the case that kills min-label propagation), and the
-loud-failure contract when the round cap is hit."""
+chained path graph (the case that kills min-label propagation), the
+star-forest stop test, the loud-failure contract when the round cap is hit,
+and the job count of one clique run."""
 
 from __future__ import annotations
 
+import itertools
 import random
 
 import pytest
 
-from disq_original_spark.operators.graph import connected_components
+from disq_original_spark.cache import release_persists
+from disq_original_spark.operators.graph import _is_star_forest, connected_components
 
 
 def _union_find_labels(pairs):
@@ -73,3 +76,50 @@ def test_unconverged_raises_loud(spark):
         connected_components(
             spark.createDataFrame(pairs, "a_id long, b_id long"), max_iters=1
         )[0].collect()
+
+
+def _edges(spark, uv):
+    return spark.createDataFrame(uv, "u long, v long")
+
+
+def test_star_forest_predicate(spark):
+    assert _is_star_forest(_edges(spark, []))
+    assert _is_star_forest(_edges(spark, [(2, 1), (3, 1)]))
+    # a leaf with two centers
+    assert not _is_star_forest(_edges(spark, [(3, 1), (3, 2)]))
+    # a leaf that is also a center
+    assert not _is_star_forest(_edges(spark, [(2, 1), (3, 2)]))
+
+
+# K6 on 0..5 plus a disjoint K4 on 10..13
+_CLIQUES = list(itertools.combinations(range(6), 2)) + list(
+    itertools.combinations(range(10, 14), 2)
+)
+
+
+def test_clique_converges_in_one_round(spark):
+    """One round turns a clique into a star on its minimum; the stop test
+    sees that at once instead of spending a second, no-op round."""
+    got, rounds = _run(spark, _CLIQUES)
+    assert rounds == 1
+    assert got == {**{i: 0 for i in range(6)}, **{i: 10 for i in range(10, 14)}}
+
+
+def test_clique_job_count(spark):
+    """Plan-drift guard: connected_components plus the labels collect() on
+    the clique graph.  Under AQE each lineage cut runs its shuffle stages at
+    call time, so the count is the input's cut (1), one round's cut (3), the
+    stop test's isEmpty (1) and the collect (2); a second round, an extra
+    convergence job or a stop test that shuffles again shows up here."""
+    sc = spark.sparkContext
+    group = "test_clique_job_count"
+    df = spark.createDataFrame(_CLIQUES, "a_id long, b_id long")
+    sc.setJobGroup(group, group)
+    try:
+        labels, _rounds = connected_components(df)
+        labels.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_persists()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == 7, jobs

@@ -330,3 +330,45 @@ def test_q68_emits_labels_on_empty_input(spark, sf_dir, tmp_path):
     con.close()
     assert len(spark_pdf) == 3 and len(oracle_pdf) == 3
     assert_frames_match(spark_pdf, oracle_pdf, "q68_empty_input")
+
+
+def test_q36_half_cent_revenue_matches_oracle(spark, sf_dir, tmp_path):
+    """A nation's DECIMAL revenue ending in exactly half a cent (33423.0750)
+    has no exact double: rounding after the double cast went up in Spark
+    (.08) and down in DuckDB (.07).  q36 now rounds the DECIMAL sum to
+    cents first, so both engines give 33423.08.  One hand-built row per
+    table, with the real schemas."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    defaults = {pa.string(): "x", pa.timestamp("us"): datetime.datetime(1996, 6, 1)}
+    rows = {
+        "region": {"r_regionkey": 2, "r_name": "ASIA"},
+        "nation": {"n_nationkey": 18, "n_name": "CHINA", "n_regionkey": 2},
+        "supplier": {"s_suppkey": 7, "s_nationkey": 18},
+        "customer": {"c_custkey": 5, "c_nationkey": 18},
+        "orders": {"o_orderkey": 3, "o_custkey": 5},
+        "lineitem": {"l_orderkey": 3, "l_suppkey": 7,
+                     "l_extendedprice": 33423.075, "l_discount": 0.0},
+    }
+    con = duckdb.connect()
+    for t, row in rows.items():
+        schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
+        table = pa.table(
+            {f.name: pa.array([row.get(f.name, defaults.get(f.type, 0))], type=f.type)
+             for f in schema},
+            schema=schema,
+        )
+        pq.write_table(table, str(tmp_path / f"{t}.parquet"))
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    q = QUERIES["q36_tpch_q5"]
+    spark_pdf = q.build(spark, str(tmp_path)).toPandas()
+    oracle_pdf = con.sql(q.oracle).fetchdf()
+    con.close()
+    assert spark_pdf["revenue"].tolist() == [33423.08]
+    assert oracle_pdf["revenue"].tolist() == [33423.08]
