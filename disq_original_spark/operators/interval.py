@@ -18,9 +18,11 @@ job the genomics indexes do).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from ..cache import materialize
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..cache import materialize
 
 
 def overlaps(
@@ -172,13 +174,60 @@ def interval_join(
     return ab.join(bb, cond).drop("_bin")
 
 
+_INTERVALS_SCHEMA = StructType(
+    [
+        StructField("contig", StringType()),
+        StructField("start", LongType()),
+        StructField("end", LongType()),
+    ]
+)
+
+
+def collect_intervals(intervals: DataFrame) -> list[tuple[str, int, int]]:
+    """The one action an indexed source runs on a caller's (contig, start,
+    end) interval frame: its rows as tuples, for index planning and, through
+    :func:`intervals_frame`, for the residual filter."""
+    return [
+        (r["contig"], int(r["start"]), int(r["end"]))
+        for r in intervals.select("contig", "start", "end").collect()
+    ]
+
+
+def intervals_frame(spark: SparkSession, rows: list[tuple[str, int, int]]) -> DataFrame:
+    """A JVM-local (contig string, start long, end long) frame of already
+    collected interval rows, for the residual filter.
+
+    A caller's ``createDataFrame(list)`` frame is a Python RDD: every action
+    that reads it, the residual's broadcast included, re-runs Python tasks
+    over it.  This frame ships the rows once as an Arrow table, so reading
+    it starts no Python worker.  A ``pyarrow.Table`` takes Spark's Arrow
+    path whatever ``spark.sql.execution.arrow.pyspark.enabled`` says; a
+    pandas frame would not on a session that leaves it off."""
+    import pyarrow as pa
+
+    contigs, starts, ends = zip(*rows) if rows else ((), (), ())
+    table = pa.table(
+        {
+            "contig": pa.array(contigs, pa.string()),
+            "start": pa.array(starts, pa.int64()),
+            "end": pa.array(ends, pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, _INTERVALS_SCHEMA)
+
+
 def residual_traversal(
     reads: DataFrame, intervals: DataFrame | None, include_unplaced: bool
 ) -> DataFrame:
     """Shared residual-selection step of every reads source (BAM/SAM/CRAM
     and the storage facade): interval overlap filter over placed reads,
     optionally unioned with unplaced-unmapped records — the reference's
-    `TraversalOverlapDetector` semantics in one place."""
+    `TraversalOverlapDetector` semantics in one place.
+
+    The indexed sources (BAM, CRAM) pass an :func:`intervals_frame` of the
+    rows they collected for index planning, not the caller's frame, so the
+    caller's frame is evaluated once per read; SAM, which has no index to
+    plan, passes the caller's frame."""
     # runtime import: sources.sam imports this module at load time
     from ..sources.sam import (
         FLAG_UNMAPPED,
@@ -222,7 +271,9 @@ def residual_variant_overlap(variants: DataFrame, intervals: DataFrame) -> DataF
     """Exact interval-overlap residual for a VARIANTS frame: span each
     record to [pos, variant_end(info, pos, ref)] and keep overlaps with any
     interval — the one exact-match contract shared by VcfSource.read and
-    BcfSource.read (so the two sources cannot drift)."""
+    BcfSource.read (so the two sources cannot drift).  Both pass an
+    :func:`intervals_frame` of the rows they already collected for index
+    planning, so the caller's interval frame is evaluated once per read."""
     from ..sources.vcf import VARIANTS_COLUMNS, variant_end
 
     spanned = variants.withColumn(

@@ -987,8 +987,8 @@ def q34(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "q35_tpch_q3",
     """SELECT l_orderkey,
-              round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                                  AS DECIMAL(18,4))) AS DOUBLE), 2) AS revenue,
+              CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                                  AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
               strftime(o_orderdate, '%Y-%m-%d') AS odate
        FROM customer
        JOIN orders ON c_custkey = o_custkey
@@ -1003,7 +1003,9 @@ def q34(spark: SparkSession, sf: str) -> DataFrame:
     "the filtered customer side broadcasts; revenue sums in DECIMAL so the "
     "result is bit-identical across engines (double addition is "
     "order-dependent and a 32-way partial agg sums in a different order "
-    "than the oracle).  Top-10 is TakeOrderedAndProject — no global sort.",
+    "than the oracle), rounded to cents while still DECIMAL, as q36 does "
+    "(a half-cent sum has no exact double).  Top-10 is "
+    "TakeOrderedAndProject — no global sort.",
 )
 def q35(spark: SparkSession, sf: str) -> DataFrame:
     c = _t(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -1016,8 +1018,8 @@ def q35(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.round(
                 F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount")))
-                      .cast("decimal(18,4)")).cast("double"), 2
-            ).alias("revenue")
+                      .cast("decimal(18,4)")), 2
+            ).cast("double").alias("revenue")
         )
         .select(
             "l_orderkey",

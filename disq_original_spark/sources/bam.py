@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.interval import interval_filter
+from ..operators.interval import collect_intervals, intervals_frame, residual_traversal
 from .bam_codec import (
     BamRecordGuesser,
     MAX_READ_SIZE,
@@ -76,6 +76,7 @@ from .sam import (
     validate_columns,
     with_alignment_span,
 )
+from .tabix import clip_ranges
 
 READS_SCHEMA = StructType(
     [
@@ -385,10 +386,8 @@ def records_for_split(
     if bai_ranges is None:
         yield from _read_records_in_chunk(path, vstart, vend, ref_names, fs, fields=fields)
         return
-    for u, v in bai_ranges:
-        lo, hi = max(u, vstart), min(v, vend)
-        if lo < hi:
-            yield from _read_records_in_chunk(path, lo, hi, ref_names, fs, fields=fields)
+    for lo, hi in clip_ranges(vstart, vend, bai_ranges):
+        yield from _read_records_in_chunk(path, lo, hi, ref_names, fs, fields=fields)
 
 
 def _decode_splits_arrow(
@@ -456,19 +455,16 @@ class BamSource:
         header, refs, first_voffset0 = read_bam_header(files[0])
         ref_names = [r[0] for r in refs]
         n_ref = len(refs)
-        # Collect the (tiny) interval list once, not once per input file.
-        iv_rows = (
-            intervals.select("contig", "start", "end").collect()
-            if intervals is not None and not include_unplaced
-            else None
-        )
+        # Collect the (tiny) interval list once — not once per input file,
+        # and not again for the residual filter, which gets these rows
+        iv_rows = collect_intervals(intervals) if intervals is not None else None
         ivs = None
-        if iv_rows is not None:
+        if iv_rows is not None and not include_unplaced:
+            # .bai pushdown: unplaced reads sit outside every bin, so
+            # include_unplaced scans the whole file
             name_to_id = {nm: i for i, nm in enumerate(ref_names)}
             ivs = [
-                (name_to_id[r["contig"]], int(r["start"]), int(r["end"]))
-                for r in iv_rows
-                if r["contig"] in name_to_id
+                (name_to_id[c], s, e) for c, s, e in iv_rows if c in name_to_id
             ]
         metas = _collect_file_metadata(spark, files, fs, use_sbi, ivs)
         # queryname-sorted input: enforce the pair-integrity guarantee
@@ -496,9 +492,8 @@ class BamSource:
                 internal |= {"flag", "rname", "pos", "cigar"}
             fields = frozenset(internal)
         reads = _decode_splits_arrow(spark, split_rows, file_params, fields)
-        from ..operators.interval import residual_traversal
-
-        out = residual_traversal(reads, intervals, include_unplaced)
+        iv_frame = intervals_frame(spark, iv_rows) if iv_rows is not None else None
+        out = residual_traversal(reads, iv_frame, include_unplaced)
         if columns is not None:
             out = out.select(*schema_ordered(READS_COLUMNS, columns))
         return out

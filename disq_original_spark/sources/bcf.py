@@ -989,12 +989,9 @@ class BcfSource:
             # residual overlap filter: index-chunk pruning alone returns a
             # candidate SUPERSET; the shared residual_variant_overlap is the
             # same exact-match contract VcfSource.read applies
-            from ..operators.interval import residual_variant_overlap
+            from ..operators.interval import intervals_frame, residual_variant_overlap
 
-            iv_df = spark.createDataFrame(
-                list(intervals), "contig string, start long, end long"
-            )
-            df = residual_variant_overlap(df, iv_df)
+            df = residual_variant_overlap(df, intervals_frame(spark, list(intervals)))
         if columns is not None:
             df = df.select(*schema_ordered(VARIANTS_COLUMNS, columns))
         return df

@@ -133,12 +133,15 @@ def find_next_block(fh: BinaryIO, start: int, end: int, *, chunk: int = 1 << 20)
     scan_pos = start
     while scan_pos < end and scan_pos < file_len:
         fh.seek(scan_pos)
-        # Overlap by a block header so headers straddling chunk edges are seen.
-        buf = fh.read(min(chunk + HEADER_SIZE + 64, file_len - scan_pos))
-        limit = min(len(buf), chunk)
+        # Overlap by a block header so headers straddling chunk edges are
+        # seen; a short range reads about its own length, not a whole chunk
+        step = min(chunk, end - scan_pos)
+        buf = fh.read(min(step + HEADER_SIZE + 64, file_len - scan_pos))
+        limit = min(len(buf), step)
         i = 0
         while i < limit and scan_pos + i < end:
-            j = buf.find(BGZF_MAGIC, i, limit)
+            # a match must START below limit; its bytes may run past it
+            j = buf.find(BGZF_MAGIC, i, limit + len(BGZF_MAGIC) - 1)
             if j < 0:
                 break
             parsed = _parse_block_at(buf, j)

@@ -381,6 +381,11 @@ class CramSource:
         largest) is never DECOMPRESSED at all; pruning 'seq' also skips
         the reference-based reconstruction.  Internal needs (interval
         residual spans) are decoded transparently and dropped."""
+        from ..operators.interval import (
+            collect_intervals,
+            intervals_frame,
+            residual_traversal,
+        )
         from .bam import READS_SCHEMA
         from .cram_codec import IndexedFasta, decode_container, read_cram_meta_file
         from .fsio import collect_metadata, list_data_files
@@ -398,14 +403,7 @@ class CramSource:
 
         fs = get_fs(str(path))
         files = list_data_files(fs, str(path))
-        iv_rows = (
-            [
-                (r["contig"], int(r["start"]), int(r["end"]))
-                for r in intervals.select("contig", "start", "end").collect()
-            ]
-            if intervals is not None
-            else None
-        )
+        iv_rows = collect_intervals(intervals) if intervals is not None else None
 
         def meta_for(f: str):
             """(file, flen, ((start, end), ...), first_container_offset)."""
@@ -523,9 +521,8 @@ class CramSource:
             spark, ranges, decode_range, out_cols, out_schema
         )
         if intervals is not None or include_unplaced:
-            from ..operators.interval import residual_traversal
-
-            df = residual_traversal(df, intervals, include_unplaced)
+            iv_frame = intervals_frame(spark, iv_rows) if iv_rows is not None else None
+            df = residual_traversal(df, iv_frame, include_unplaced)
         if columns is not None:
             df = df.select(*schema_ordered(READS_COLUMNS, columns))
         return df

@@ -6,7 +6,9 @@ consulting the Tabix/Tribble index at ``getSplits`` time
 `vcf/VcfSource.java:143-168`).  This module is the Spark-side equivalent:
 ``file_ranges_for_intervals`` maps query intervals to compressed-byte ranges
 via the index's R-tree bins, and the VCF source drops byte-range splits that
-intersect none of them — partition pruning, before any task launches.
+intersect none of them — partition pruning, before any task launches.  It
+also goes one step past the reference: ``clip_ranges`` cuts the ranges to
+each surviving split, and the task decodes only those, not its whole split.
 
 Format: SAM/tabix spec §5 (the .tbi layout is the BAI layout plus column
 metadata); the file is itself BGZF-compressed.
@@ -107,17 +109,18 @@ def file_ranges_for_intervals(
     return merge_ranges(raw)
 
 
-def prune_splits(
-    splits: list[tuple[int, int]], ranges: list[tuple[int, int]]
+def clip_ranges(
+    lo: int, hi: int, ranges: list[tuple[int, int]]
 ) -> list[tuple[int, int]]:
-    """Keep only byte-range splits intersecting at least one index range —
-    the reference's split-level (not record-level) pruning."""
-    if not ranges:
-        return []
+    """The parts of sorted, disjoint ``ranges`` inside ``[lo, hi)`` — what a
+    split owning ``[lo, hi)`` decodes of an index's ranges.  Works on any
+    offset space (BAI virtual offsets, tabix/Tribble byte offsets); the
+    output is sorted and disjoint because the input is."""
     out = []
-    for s, e in splits:
-        if any(s < re and rs < e for rs, re in ranges):
-            out.append((s, e))
+    for u, v in ranges:
+        a, b = max(u, lo), min(v, hi)
+        if a < b:
+            out.append((a, b))
     return out
 
 

@@ -212,6 +212,7 @@ def text_ranges_for_intervals(
 
 
 _CHUNK = 1 << 20
+_MIN_CHUNK = 1 << 16
 
 
 def _iter_raw_lines(fh, chunk: int = _CHUNK):
@@ -248,7 +249,10 @@ def iter_text_lines_in_range(fh, start: int, end: int):
         fh.seek(0)
         pos = 0
     skip_first = start > 0
-    for raw in _iter_raw_lines(fh):
+    # a small range (one index block) reads about its own size, not a
+    # whole chunk; the loop reads on past ``end`` to finish a line either way
+    chunk = min(_CHUNK, max(end - start, _MIN_CHUNK))
+    for raw in _iter_raw_lines(fh, chunk):
         line_start = pos
         pos += len(raw)
         if skip_first:

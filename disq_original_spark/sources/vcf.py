@@ -25,6 +25,11 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.interval import (
+    collect_intervals,
+    intervals_frame,
+    residual_variant_overlap,
+)
 from .fsio import fs_basename, fs_join, fs_open, get_fs, list_data_files
 from .headers import read_vcf_header_text, vcf_sample_names
 from .merger import merge_parts
@@ -155,6 +160,8 @@ def variant_end(info: Column, pos: Column, ref: Column) -> Column:
 # copies of the literal could drift and silently route reads to the wrong
 # scan path.
 _DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
+# one maximal BGZF block: index ranges closer than this are read as one
+_SEEK_GAP = 64 * 1024
 
 
 class VcfSource:
@@ -177,6 +184,16 @@ class VcfSource:
         split_size: int = _DEFAULT_SPLIT_SIZE,
         stringency: str = "lenient",
     ) -> DataFrame:
+        """``intervals`` (a (contig, start, end) frame, 1-based inclusive)
+        returns the records overlapping any interval.  The frame is
+        collected once; its rows plan the index reads and, as a JVM-local
+        frame (``operators.interval.intervals_frame``), drive the exact
+        residual overlap filter.  With a ``.tbi``/``.csi`` (BGZF) or a
+        Tribble ``.idx`` (plain text) beside a file, splits no index range
+        reaches get no task, and each remaining task decodes only the index
+        ranges inside its split — past the reference's split-only pruning
+        (`vcf/VcfSource.java:143-168`), where the surviving split decodes
+        in full."""
         from .bgzf import is_bgzf
 
         header_text = read_vcf_header_text(path)
@@ -184,16 +201,11 @@ class VcfSource:
 
         with fs_open(_first(path)) as fh:
             bgzf = is_bgzf(fh)
-        ivs = None
-        if intervals is not None:
-            ivs = [
-                (r["contig"], int(r["start"]), int(r["end"]))
-                for r in intervals.select("contig", "start", "end").collect()
-            ]
+        ivs = collect_intervals(intervals) if intervals is not None else None
         if bgzf:
-            # tabix split pruning: with intervals + a .tbi, drop byte-range
-            # splits the index proves contain no overlapping record
-            # (reference `vcf/VcfSource.java:143-168`)
+            # tabix pushdown: with intervals + a .tbi, drop byte-range
+            # splits the index proves contain no overlapping record and
+            # seek the index chunks inside the others
             lines = _read_bgzf_lines(spark, path, split_size, ivs=ivs)
         else:
             fs = get_fs(str(path))
@@ -215,8 +227,9 @@ class VcfSource:
                 # not our knob).
                 lines = spark.read.text(files)
             else:
-                # Plain text: per-file byte-range splits, pruned per file by
-                # that file's Tribble `.idx` when intervals are given
+                # Plain text: per-file byte-range splits, pruned (and
+                # seeked) per file by that file's Tribble `.idx` when
+                # intervals are given
                 # (reference picks the index per format: tabix for .bgz/.gz,
                 # Tribble for .vcf — `vcf/VcfSource.java:143-168`,
                 # `tribble/TribbleIndexIntervalFilteringTextInputFormat.java:33-67`).
@@ -232,11 +245,9 @@ class VcfSource:
         ).isNull()
         body = apply_stringency(body, malformed, stringency)
         variants = parse_vcf_lines(body, samples)
-        if intervals is None:
+        if ivs is None:
             return variants
-        from ..operators.interval import residual_variant_overlap
-
-        return residual_variant_overlap(variants, intervals)
+        return residual_variant_overlap(variants, intervals_frame(spark, ivs))
 
 
 def _first(path: str):
@@ -257,8 +268,11 @@ def _read_bgzf_lines(
     ranges); each task re-opens the file locally — at cluster scale `path`
     is on a shared store and the open goes through the cluster filesystem.
     With ``ivs`` (interval list), each file's own tabix ``.tbi`` (or
-    tabix-flavored ``.csi``) prunes that file's splits — per-file, so a
-    sharded directory with per-shard indexes prunes every shard; for many
+    tabix-flavored ``.csi``) maps the intervals to compressed byte ranges:
+    splits none of them reaches get no task, and each other task inflates
+    only the BGZF blocks of the ranges inside its split (``_split_tasks``),
+    where the reference decodes a surviving split whole.  Per-file, so a
+    sharded directory with per-shard indexes seeks in every shard; for many
     files the size+index metadata collection runs as a Spark job, keeping
     driver planning O(1) (same policy as BamSource)."""
     from pyspark.sql.types import StringType, StructField, StructType
@@ -340,37 +354,64 @@ def _read_bgzf_lines(
             )
         return (f, flen, franges)
 
-    ranges: list[tuple[str, int, int]] = []
-    for f, flen, franges in collect_metadata(spark, files, meta_for):
-        fr = [(s, min(s + split_size, flen)) for s in range(0, flen, split_size)]
-        if franges is not None:
-            from .tabix import prune_splits
-
-            fr = prune_splits(fr, franges)
-        ranges.extend((f, s, e) for s, e in fr)
-    if not ranges:
-        ranges = [(files[0], 0, 0)]
+    tasks = _split_tasks(collect_metadata(spark, files, meta_for), split_size)
 
     def read_range(task):
         from .bgzf import iter_lines_in_range
         from .fsio import open_prefetched
 
-        f, s, e = task
+        f, parts = task
         # readahead on remote filesystems: the block decode loop is strictly
         # sequential, so the next 4 MB downloads while this one inflates
         with open_prefetched(fs, f) as fh:
-            for line in iter_lines_in_range(fh, s, e):
-                yield {"value": line.decode("utf-8", "replace")}
+            for s, e in parts:
+                for line in iter_lines_in_range(fh, s, e):
+                    yield {"value": line.decode("utf-8", "replace")}
 
     from .arrow_xfer import rows_to_dataframe
 
     return rows_to_dataframe(
         spark,
-        ranges,
+        tasks,
         read_range,
         ["value"],
         StructType([StructField("value", StringType())]),
     )
+
+
+def _split_tasks(
+    metas: list[tuple[str, int, list[tuple[int, int]] | None]], split_size: int
+) -> list[tuple[str, list[tuple[int, int]]]]:
+    """One task per ``split_size`` byte-range split of each file: ``(file,
+    parts)``, where ``parts`` is the whole split, or with an index
+    (``franges`` not None) the index ranges clipped to the split.  Splits
+    no index range reaches get no task.  Each split still owns the lines
+    starting in it, so the clipped parts of all splits tile the index
+    ranges exactly once.
+
+    Parts less than ``_SEEK_GAP`` apart are read as one: each part start
+    reads up to that much beyond its own bytes (a BGZF part probes the
+    block before it; a text part reads at least a 64 KiB chunk), so
+    seeking past a smaller gap would read more than decoding it.  A task
+    thus never reads much more than its whole split, however many
+    intervals it serves."""
+    from .tabix import clip_ranges
+
+    tasks = []
+    for f, flen, franges in metas:
+        for s in range(0, flen, split_size):
+            e = min(s + split_size, flen)
+            parts = [(s, e)] if franges is None else clip_ranges(s, e, franges)
+            if not parts:
+                continue
+            merged = [parts[0]]
+            for u, v in parts[1:]:
+                if u - merged[-1][1] < _SEEK_GAP:
+                    merged[-1] = (merged[-1][0], v)
+                else:
+                    merged.append((u, v))
+            tasks.append((f, merged))
+    return tasks
 
 
 def _native_text_ok(fs, split_size: int) -> bool:
@@ -392,14 +433,14 @@ def _read_text_lines(
     ivs: list[tuple[str, int, int]] | None,
 ) -> DataFrame:
     """Plain-text analog of ``_read_bgzf_lines``: per-file byte-range splits
-    planned driver-side (as a Spark job for many files), each file's splits
-    pruned by that file's own Tribble ``.idx`` raw byte ranges when ``ivs``
-    is given, each task yielding the lines it owns
-    (``tribble.iter_text_lines_in_range``)."""
+    planned driver-side (as a Spark job for many files); with ``ivs``, each
+    file's own Tribble ``.idx`` raw byte ranges prune its splits and clip
+    each remaining task to the ranges inside its split, so a task reads
+    only the index blocks it owns, not its whole split
+    (``tribble.iter_text_lines_in_range`` per range)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from .fsio import collect_metadata
-    from .tabix import prune_splits
 
     fs = get_fs(files[0])
 
@@ -432,28 +473,22 @@ def _read_text_lines(
         # happens downstream either way); same scheme/split_size guard as
         # the caller's fallback
         return spark.read.text(files)
-    ranges: list[tuple[str, int, int]] = []
-    for f, flen, franges in metas:
-        fr = [(s, min(s + split_size, flen)) for s in range(0, flen, split_size)]
-        if franges is not None:
-            fr = prune_splits(fr, franges)
-        ranges.extend((f, s, e) for s, e in fr)
-    if not ranges:
-        ranges = [(files[0], 0, 0)]
+    tasks = _split_tasks(metas, split_size)
 
     def read_range(task):
         from .tribble import iter_text_lines_in_range
 
-        p, s, e = task
+        p, parts = task
         with fs.open_input(p) as fh:
-            for line in iter_text_lines_in_range(fh, s, e):
-                yield {"value": line.decode("utf-8", "replace")}
+            for s, e in parts:
+                for line in iter_text_lines_in_range(fh, s, e):
+                    yield {"value": line.decode("utf-8", "replace")}
 
     from .arrow_xfer import rows_to_dataframe
 
     return rows_to_dataframe(
         spark,
-        ranges,
+        tasks,
         read_range,
         ["value"],
         StructType([StructField("value", StringType())]),

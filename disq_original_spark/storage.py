@@ -179,14 +179,10 @@ class VariantsStorage:
         genotype block); VCF is a native text scan where Catalyst prunes,
         so the request becomes a plain projection there."""
         if self._is_bcf(path):
+            from .operators.interval import collect_intervals
             from .sources.bcf import BcfSource
 
-            ivs = None
-            if intervals is not None:
-                ivs = [
-                    (r["contig"], int(r["start"]), int(r["end"]))
-                    for r in intervals.select("contig", "start", "end").collect()
-                ]
+            ivs = collect_intervals(intervals) if intervals is not None else None
             # BcfSource.read applies the residual overlap filter itself —
             # same exact-match contract as VcfSource.read(intervals=...)
             return BcfSource().read(self.spark, path, intervals=ivs, columns=columns)

@@ -372,3 +372,41 @@ def test_q36_half_cent_revenue_matches_oracle(spark, sf_dir, tmp_path):
     con.close()
     assert spark_pdf["revenue"].tolist() == [33423.08]
     assert oracle_pdf["revenue"].tolist() == [33423.08]
+
+
+def test_q35_half_cent_revenue_matches_oracle(spark, sf_dir, tmp_path):
+    """q35's twin of the q36 half-cent case: one BUILDING-segment order
+    whose one line item sums to exactly 33423.0750.  q35 rounds the
+    DECIMAL sum to cents before the double cast, so both engines give
+    33423.08.  One hand-built row per table, with the real schemas."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    defaults = {pa.string(): "x", pa.timestamp("us"): datetime.datetime(1996, 6, 1)}
+    rows = {
+        "customer": {"c_custkey": 5, "c_mktsegment": "BUILDING"},
+        "orders": {"o_orderkey": 3, "o_custkey": 5},
+        "lineitem": {"l_orderkey": 3, "l_extendedprice": 33423.075, "l_discount": 0.0,
+                     "l_shipdate": datetime.datetime(1998, 8, 1)},
+    }
+    con = duckdb.connect()
+    for t, row in rows.items():
+        schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
+        table = pa.table(
+            {f.name: pa.array([row.get(f.name, defaults.get(f.type, 0))], type=f.type)
+             for f in schema},
+            schema=schema,
+        )
+        pq.write_table(table, str(tmp_path / f"{t}.parquet"))
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    q = QUERIES["q35_tpch_q3"]
+    spark_pdf = q.build(spark, str(tmp_path)).toPandas()
+    oracle_pdf = con.sql(q.oracle).fetchdf()
+    con.close()
+    assert spark_pdf["revenue"].tolist() == [33423.08]
+    assert oracle_pdf["revenue"].tolist() == [33423.08]

@@ -115,12 +115,8 @@ def test_roundtrip_bgzf(spark, tmp_path):
 def test_tabix_split_pruning_partition_counts(spark):
     """BASELINE.md row: HiSeq.10000.vcf.bgz at 128 KB splits -> 4 partitions;
     with interval chr1:2,700,000-2,800,000 the tabix index prunes to 1."""
-    from disq_original_spark.sources.tabix import (
-        file_ranges_for_intervals,
-        parse_tabix,
-        prune_splits,
-    )
-    from disq_original_spark.sources.vcf import _read_bgzf_lines
+    from disq_original_spark.sources.tabix import file_ranges_for_intervals, parse_tabix
+    from disq_original_spark.sources.vcf import _read_bgzf_lines, _split_tasks
 
     full = _read_bgzf_lines(spark, HISEQ, 128 * 1024)
     assert full.rdd.getNumPartitions() == 4
@@ -128,9 +124,9 @@ def test_tabix_split_pruning_partition_counts(spark):
     ranges = file_ranges_for_intervals(idx, [("chr1", 2_700_000, 2_800_000)])
     import os
 
-    flen = os.path.getsize(HISEQ)
-    splits = [(s, min(s + 128 * 1024, flen)) for s in range(0, flen, 128 * 1024)]
-    assert len(prune_splits(splits, ranges)) == 1
+    # splits no index range reaches get no task
+    tasks = _split_tasks([(HISEQ, os.path.getsize(HISEQ), ranges)], 128 * 1024)
+    assert len(tasks) == 1
 
 
 def test_tabix_pruned_read_matches_filtered_full_read(spark):
@@ -257,20 +253,20 @@ def test_tribble_split_pruning_partition_counts(spark, plain_hiseq):
     a strict subset of the byte-range splits."""
     import os
 
-    from disq_original_spark.sources.tabix import prune_splits
     from disq_original_spark.sources.tribble import (
         parse_tribble,
         text_ranges_for_intervals,
     )
+    from disq_original_spark.sources.vcf import _split_tasks
 
     idx = parse_tribble(plain_hiseq + ".idx")
     ranges = text_ranges_for_intervals(idx, [("chr1", 2_700_000, 2_800_000)])
     assert ranges
     flen = os.path.getsize(plain_hiseq)
     split = 256 * 1024
-    splits = [(s, min(s + split, flen)) for s in range(0, flen, split)]
-    kept = prune_splits(splits, ranges)
-    assert 0 < len(kept) < len(splits)
+    # splits no index range reaches get no task
+    kept = _split_tasks([(plain_hiseq, flen, ranges)], split)
+    assert 0 < len(kept) < len(range(0, flen, split))
 
 
 def test_tribble_pruned_read_matches_filtered_full_read(spark, plain_hiseq):
