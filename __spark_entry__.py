@@ -49,7 +49,7 @@ def _released(name: str) -> Callable[[SparkSession, str], DataFrame]:
 # the round they change); every other query follows oldest green witness
 # first, ties by name, so the rotation cannot go stale.  All registered
 # queries are always present — only the ordering is prioritized.
-_CHANGED = ["g13_region_depth", "q35_tpch_q3"]
+_CHANGED = ["g23_bcf_stats"]
 
 
 def green_witnesses() -> dict[str, int]:

@@ -60,31 +60,3 @@ def rows_to_dataframe(
     )
     return idx.mapInPandas(gen, schema)
 
-
-def foreach_partition_arrow(df: DataFrame, fn: Callable[[int, Iterator[dict]], None]) -> None:
-    """Run ``fn(partition_id, row_dict_iterator)`` once per partition with
-    rows delivered as Arrow batches — the write-side twin of
-    ``rows_to_dataframe`` (``foreachPartition`` pickles every row).  MapType
-    cells may arrive as lists of (key, value) pairs depending on the Arrow
-    conversion; callers normalize."""
-
-    def gen(batches) -> Iterator:
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-
-        def rows() -> Iterator[dict]:
-            for pdf in batches:
-                # astype(object) + where(notna, None): a null in an integer
-                # column would otherwise promote the whole pandas column to
-                # float64 and deliver NaN (and 100 → 100.0) to the writer's
-                # struct.pack.  Object dtype keeps ints as ints, None as None.
-                yield from (
-                    pdf.astype(object).where(pdf.notna(), None).to_dict("records")
-                )
-
-        fn(pid, rows())
-        yield pd.DataFrame({"pid": [pid]})
-
-    df.mapInPandas(gen, "pid int").write.format("noop").mode("overwrite").save()

@@ -21,10 +21,9 @@ import struct
 from dataclasses import dataclass
 from pathlib import Path
 
-from .tabix import reg2bins
+from .tabix import IndexAccumulator
 
 BAI_MAGIC = b"BAI\x01"
-_LINEAR_SHIFT = 14  # 16 kb windows
 
 
 @dataclass
@@ -84,101 +83,18 @@ def voffset_ranges_for_intervals(
     return merge_ranges(raw)
 
 
-class BaiAccumulator:
-    """Streaming BAI builder: feed records in file order, dump at the end.
-
-    Also the executor half of write-time index creation: each part's
-    accumulator records *part-relative* voffsets (``to_meta``), and the
-    driver replays them shifted by the part's byte offset
-    (``merge_rebased``) — the same extend-adjacent-chunk rule in both
-    paths makes the write-time index byte-identical to a post-hoc
-    ``create_bai`` over the merged file."""
-
-    def __init__(self, n_ref: int):
-        from .bam_codec import reg2bin
-
-        self._reg2bin = reg2bin
-        self.bins: list[dict[int, list[list[int]]]] = [dict() for _ in range(n_ref)]
-        self.linear: list[dict[int, int]] = [dict() for _ in range(n_ref)]
-        self.n_no_coor = 0
-
-    def add(self, ref_id: int, pos0: int, end0: int, v: int, v_end: int) -> None:
-        """One record: 0-based [pos0, end0) span, [v, v_end) voffsets."""
-        if ref_id < 0 or pos0 < 0:
-            self.n_no_coor += 1
-            return
-        self._add_chunk(self.bins[ref_id], self._reg2bin(pos0, end0), v, v_end)
-        linear = self.linear[ref_id]
-        for w in range(pos0 >> _LINEAR_SHIFT, ((end0 - 1) >> _LINEAR_SHIFT) + 1):
-            if w not in linear or v < linear[w]:
-                linear[w] = v
-
-    @staticmethod
-    def _add_chunk(ref_bins: dict[int, list[list[int]]], b: int, u: int, v: int) -> None:
-        chunks = ref_bins.setdefault(b, [])
-        if chunks and chunks[-1][1] == u:
-            chunks[-1][1] = v  # extend adjacent chunk
-        else:
-            chunks.append([u, v])
-
-    def to_meta(self) -> dict:
-        """JSON-serializable part sidecar."""
-        return {
-            "bins": [{str(b): c for b, c in r.items()} for r in self.bins],
-            "linear": [{str(w): v for w, v in r.items()} for r in self.linear],
-            "no_coor": self.n_no_coor,
-        }
-
-    def merge_rebased(self, meta: dict, base: int) -> None:
-        """Fold one part's sidecar in, shifting its part-relative voffsets
-        to file-absolute (+``base`` bytes on the coffset half).  Parts must
-        arrive in file order so cross-part adjacent chunks merge exactly as
-        a sequential scan would."""
-        for ref_id, r in enumerate(meta["bins"]):
-            for b, chunks in r.items():
-                for u, v in chunks:
-                    self._add_chunk(
-                        self.bins[ref_id], int(b), rebase_voffset(u, base), rebase_voffset(v, base)
-                    )
-        for ref_id, r in enumerate(meta["linear"]):
-            linear = self.linear[ref_id]
-            for w_s, v in r.items():
-                w, v = int(w_s), rebase_voffset(v, base)
-                if w not in linear or v < linear[w]:
-                    linear[w] = v
-        self.n_no_coor += meta["no_coor"]
+class BaiAccumulator(IndexAccumulator):
+    """Streaming BAI builder (``IndexAccumulator`` core, BAM binning): feed
+    records in file order, dump at the end; the sink folds its parts'
+    metadata instead (``fold``)."""
 
     def dump(self) -> bytes:
-        out = bytearray(BAI_MAGIC)
-        out += struct.pack("<i", len(self.bins))
-        for r in range(len(self.bins)):
-            out += struct.pack("<i", len(self.bins[r]))
-            for b in sorted(self.bins[r]):
-                chunks = self.bins[r][b]
-                out += struct.pack("<Ii", b, len(chunks))
-                for u, v in chunks:
-                    out += struct.pack("<QQ", u, v)
-            lin = self.linear[r]
-            n_intv = (max(lin) + 1) if lin else 0
-            out += struct.pack("<i", n_intv)
-            prev = 0
-            for w in range(n_intv):
-                # windows with no record inherit the previous offset (lower bound)
-                val = lin.get(w)
-                if val is None:
-                    val = prev
-                else:
-                    prev = val
-                out += struct.pack("<Q", val)
-        out += struct.pack("<Q", self.n_no_coor)
-        return bytes(out)
-
-
-def rebase_voffset(voff: int, base_bytes: int) -> int:
-    """Part-relative virtual offset → file-absolute, for a part that starts
-    ``base_bytes`` into the merged file (parts are whole block sequences, so
-    only the coffset half shifts)."""
-    return ((voff >> 16) + base_bytes) << 16 | (voff & 0xFFFF)
+        return (
+            BAI_MAGIC
+            + struct.pack("<i", len(self.bins))
+            + self._dump_refs()
+            + struct.pack("<Q", self.n_no_coor)
+        )
 
 
 def iter_bam_record_spans(bam_path: str | Path):

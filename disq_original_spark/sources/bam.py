@@ -8,8 +8,9 @@ task maps its range to a record-aligned virtual-offset chunk — via the SBI
 — then decodes records with the pure-Python codec.  Chunks tile exactly:
 a record belongs to the split whose byte range contains its BGZF block start.
 
-Write: executors encode BGZF parts without terminator; driver writes the
-header block + EOF block and concatenates (reference `bam/BamSink.java:27-70`).
+Write: executors encode BGZF parts without terminator; the shared commit
+(``merger``) adds the header block + EOF block and concatenates (reference
+`bam/BamSink.java:27-70`).
 
 Scale note: per-record decode is Python, embarrassingly parallel across
 chunks; rows reach the JVM as columnar Arrow batches (`arrow_xfer`), which
@@ -23,7 +24,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import struct
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,19 +49,17 @@ from .bgzf import (
     EMPTY_GZIP_BLOCK,
     BgzfBlock,
     BgzfReader,
-    BgzfWriter,
-    compress_block,
+    compress_blocks,
     decompress_block,
     find_next_block,
     make_virtual_offset,
     read_block_header,
+    write_bgzf_part,
 )
 from .fsio import (
     METADATA_JOB_THRESHOLD,
     FileSystem,
     collect_metadata,
-    fs_basename,
-    fs_join,
     fs_open,
     fs_size,
     fs_write_bytes,
@@ -69,7 +67,7 @@ from .fsio import (
     list_data_files,
 )
 from .headers import SamHeader, read_bam_header
-from .merger import merge_parts
+from .merger import PartFormat, commit, commit_sharded, part_bases
 from .sam import (
     READS_COLUMNS,
     schema_ordered,
@@ -612,20 +610,20 @@ def _norm_attrs(row: dict) -> dict:
 
 
 class BamSink:
-    """Write a reads DataFrame as a single BAM file (headerless BGZF parts +
-    driver header + EOF terminator + concat).
+    """Write a reads DataFrame as a single BAM file, or as a directory of
+    complete BAM shards, through the shared commit (``merger``): BGZF
+    record parts, a header block and the EOF block.
 
     ``write_sbi`` / ``write_bai`` create the indexes *at write time* — the
     reference can only do this for ``.sbi`` (its README marks ``.bai``
     writing ✗, `README.md:121-131`), and a post-hoc build would re-read
-    the whole output serially on the driver.  Here each executor records
-    part-relative index metadata while encoding its part (a few KB
-    sidecar); the driver rebases virtual offsets by each part's byte
-    offset during the merge and writes the index without touching the
-    data again.  The ``.bai`` is byte-identical to a sequential post-hoc
-    build; ``.sbi`` entry spacing restarts per part (every entry is still
-    a true record start, entries are ≤ granularity apart — exactly what
-    split planning needs)."""
+    the whole output serially on the driver.  Each part returns its
+    part-relative index metadata with the job result; the commit rebases it
+    by the part's byte offset without touching the data again.  The
+    ``.bai`` is byte-identical to a sequential post-hoc build; ``.sbi``
+    entry spacing restarts per part (every entry is still a true record
+    start, entries are ≤ granularity apart — exactly what split planning
+    needs)."""
 
     def write(
         self,
@@ -637,117 +635,7 @@ class BamSink:
         write_bai: bool = False,
         sbi_granularity: int = 4096,
     ) -> None:
-        from .bai import BaiAccumulator, rebase_voffset
-        from .bam_codec import cigar_ref_length, reg2bin
-
-        refs = header.contigs
-        ref_index = {name: i for i, (name, _len) in enumerate(refs)}
-        n_ref = len(refs)
-        temp_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-        fs = get_fs(path)
-        fs.mkdirs(temp_dir)
-        index_on = write_sbi or write_bai
-
-        def write_partition(pid, rows):
-            import json as _json
-            import uuid as _uuid
-
-            tmp = fs_join(temp_dir, f".tmp-{_uuid.uuid4().hex}")
-            wrote = False
-            acc = BaiAccumulator(n_ref) if index_on else None
-            offsets: list[int] = []
-            n = 0
-            last = None  # (ref_id, pos0, end0, provisional v_end) of final record
-            with fs.open_output(tmp) as fh, BgzfWriter(fh, write_terminator=False) as w:
-                for row in rows:
-                    wrote = True
-                    row = _norm_attrs(row)
-                    rec = encode_record(row, ref_index)
-                    if not index_on:
-                        w.write(rec)
-                        continue
-                    v = w.tell_virtual()
-                    if n % sbi_granularity == 0:
-                        offsets.append(v)
-                    n += 1
-                    w.write(rec)
-                    v_end = w.tell_virtual()
-                    rname = row["rname"]
-                    ref_id = ref_index.get(rname, -1) if rname else -1
-                    pos0 = (row["pos"] or 0) - 1
-                    end0 = (
-                        pos0 + max(1, cigar_ref_length(row["cigar"] or "*"))
-                        if ref_id >= 0 and pos0 >= 0
-                        else 0
-                    )
-                    acc.add(ref_id, pos0, end0, v, v_end)
-                    last = (ref_id, pos0, end0, v_end)
-            if not wrote:
-                fs.delete(tmp)
-                return
-            name = f"part-{pid:05d}"
-            fs.rename(tmp, fs_join(temp_dir, name))
-            if index_on:
-                # The close() flush turned the pending buffer into the
-                # part's final block; normalize the final record's chunk
-                # end to start-of-next-block, matching what a sequential
-                # reader (BgzfReader.tell_virtual) reports there.
-                csize = w.compressed_bytes
-                true_end = csize << 16
-                if last is not None:
-                    ref_id, pos0, end0, prov = last
-                    if ref_id >= 0 and pos0 >= 0 and prov != true_end:
-                        chunks = acc.bins[ref_id][reg2bin(pos0, end0)]
-                        if chunks[-1][1] == prov:
-                            chunks[-1][1] = true_end
-                meta = {"n": n, "offsets": offsets, "csize": csize, **acc.to_meta()}
-                with fs.open_output(fs_join(temp_dir, f".idx-{name}.json")) as mh:
-                    mh.write(_json.dumps(meta).encode())
-
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(df, write_partition)
-
-        header_bam = encode_bam_header(header.text, refs)
-        header_block = b"".join(
-            compress_block(header_bam[i : i + 60000]) for i in range(0, len(header_bam), 60000)
-        )
-        index_meta: list[dict] | None = None
-        if index_on:
-            import json
-
-            from .merger import list_parts
-
-            index_meta = []
-            for p in sorted(list_parts(temp_dir)):
-                with fs.open_input(fs_join(temp_dir, f".idx-{fs_basename(p)}.json")) as mh:
-                    index_meta.append(json.loads(mh.read().decode()))
-        merge_parts(temp_dir, path, header=header_block, terminator=EMPTY_GZIP_BLOCK)
-        if not index_on:
-            return
-        base = len(header_block)
-        sbi_offsets: list[int] = []
-        total_records = 0
-        bai_acc = BaiAccumulator(n_ref)
-        for meta in index_meta:
-            if write_sbi:
-                sbi_offsets.extend(rebase_voffset(o, base) for o in meta["offsets"])
-            if write_bai:
-                bai_acc.merge_rebased(meta, base)
-            total_records += meta["n"]
-            base += meta["csize"]
-        if write_sbi:
-            idx = SbiIndex(
-                file_length=base + len(EMPTY_GZIP_BLOCK),
-                md5=b"\x00" * 16,
-                uuid=b"\x00" * 16,
-                total_records=total_records,
-                granularity=sbi_granularity,
-                offsets=tuple(sbi_offsets) + (base << 16,),
-            )
-            fs_write_bytes(path + ".sbi", idx.dump())
-        if write_bai:
-            fs_write_bytes(path + ".bai", bai_acc.dump())
+        commit(df, path, _bam_format(header, write_sbi, write_bai, sbi_granularity))
 
     def write_sharded(
         self,
@@ -763,12 +651,9 @@ class BamSink:
         the directory reads back as one input via ``BamSource.read``.
 
         ``write_index=True`` writes each shard's ``.sbi`` + ``.bai`` beside
-        it, entirely executor-side: a shard is a complete file, so its
-        accumulator offsets rebase by the header length locally — no driver
-        merge step at all, unlike the single-file sink.  Directory reads
-        pick the per-file indexes up for chunking and interval pushdown,
-        so this is the scale shape: index creation cost is O(shard) per
-        executor, O(0) on the driver.
+        it on the executor, so index creation costs O(shard) per executor
+        and nothing on the driver; directory reads pick the per-file indexes
+        up for chunking and interval pushdown.
 
         Precondition (the same one ``samtools index`` places on its input):
         rows must be position-sorted within each partition — e.g.
@@ -776,86 +661,65 @@ class BamSink:
         linear index's fill-forward semantics assume voffsets grow with
         position per reference; a ``.bai`` built over interleaved
         positions can prune incorrectly."""
-        refs = header.contigs
-        n_ref = len(refs)
-        ref_index = {name: i for i, (name, _len) in enumerate(refs)}
-        header_bam = encode_bam_header(header.text, refs)
-        header_block = b"".join(
-            compress_block(header_bam[i : i + 60000]) for i in range(0, len(header_bam), 60000)
-        )
-        fs = get_fs(path)
-        fs.delete(path, recursive=True)
-        fs.mkdirs(path)
+        commit_sharded(df, path, _bam_format(header, write_index, write_index, sbi_granularity))
 
-        def write_partition(pid, rows):
-            import uuid as _uuid
 
-            from .bai import BaiAccumulator, rebase_voffset
-            from .bam_codec import SbiIndex, cigar_ref_length, reg2bin
+def _bam_format(header: SamHeader, write_sbi: bool, write_bai: bool, granularity: int) -> PartFormat:
+    from .bai import BaiAccumulator
+    from .bam_codec import cigar_ref_length
+    from .tabix import rebase_voffset
 
-            hb = len(header_block)
-            acc = BaiAccumulator(n_ref) if write_index else None
-            offsets: list[int] = []
-            n = 0
-            last = None
-            wrote = False
-            tmp = fs_join(path, f".tmp-{_uuid.uuid4().hex}")
-            with fs.open_output(tmp) as fh:
-                fh.write(header_block)
-                with BgzfWriter(fh, write_terminator=True) as w:
-                    for row in rows:
-                        wrote = True
-                        row = _norm_attrs(row)
-                        rec = encode_record(row, ref_index)
-                        if not write_index:
-                            w.write(rec)
-                            continue
-                        v = rebase_voffset(w.tell_virtual(), hb)
-                        if n % sbi_granularity == 0:
-                            offsets.append(v)
-                        n += 1
-                        w.write(rec)
-                        v_end = rebase_voffset(w.tell_virtual(), hb)
-                        rname = row["rname"]
-                        ref_id = ref_index.get(rname, -1) if rname else -1
-                        pos0 = (row["pos"] or 0) - 1
-                        end0 = (
-                            pos0 + max(1, cigar_ref_length(row["cigar"] or "*"))
-                            if ref_id >= 0 and pos0 >= 0
-                            else 0
-                        )
-                        acc.add(ref_id, pos0, end0, v, v_end)
-                        last = (ref_id, pos0, end0, v_end)
-            if not wrote:
-                fs.delete(tmp)
-                return
-            name = f"part-{pid:05d}.bam"
-            fs.rename(tmp, fs_join(path, name))
-            if not write_index:
-                return
-            csize = hb + w.compressed_bytes  # terminator excluded by writer
-            true_end = csize << 16
-            if last is not None:
-                ref_id, pos0, end0, prov = last
-                if ref_id >= 0 and pos0 >= 0 and prov != true_end:
-                    chunks = acc.bins[ref_id][reg2bin(pos0, end0)]
-                    if chunks[-1][1] == prov:
-                        chunks[-1][1] = true_end
-            shard = fs_join(path, name)
-            fs_write_bytes(shard + ".bai", acc.dump())
-            idx = SbiIndex(
-                file_length=csize + len(EMPTY_GZIP_BLOCK),
+    refs = header.contigs
+    ref_index = {name: i for i, (name, _len) in enumerate(refs)}
+
+    def record(row: dict) -> bytes:
+        return encode_record(_norm_attrs(row), ref_index)
+
+    def encode(rows, fh) -> dict | None:
+        if not (write_sbi or write_bai):
+            write_bgzf_part(fh, rows, record)
+            return None
+        acc = BaiAccumulator(len(refs))
+        offsets: list[int] = []  # every granularity-th record start (.sbi)
+        n = 0
+
+        def add(row: dict, v: int, v_end: int) -> None:
+            nonlocal n
+            if n % granularity == 0:
+                offsets.append(v)
+            n += 1
+            rname = row["rname"]
+            pos0 = (row["pos"] or 0) - 1
+            end0 = pos0 + max(1, cigar_ref_length(row["cigar"] or "*"))
+            acc.add(ref_index.get(rname, -1), pos0, end0, v, v_end)
+
+        csize = write_bgzf_part(fh, rows, record, add)
+        acc.finish(csize)
+        return {"csize": csize, "n": n, "offsets": offsets, **acc.to_meta()}
+
+    def index(metas: list[dict], base: int, path: str) -> None:
+        if write_bai:
+            fs_write_bytes(path + ".bai", BaiAccumulator(len(refs)).fold(metas, base).dump())
+        if write_sbi:
+            offsets = [rebase_voffset(o, b) for m, b in part_bases(metas, base) for o in m["offsets"]]
+            end = base + sum(m["csize"] for m in metas)
+            sbi = SbiIndex(
+                file_length=end + len(EMPTY_GZIP_BLOCK),
                 md5=b"\x00" * 16,
                 uuid=b"\x00" * 16,
-                total_records=n,
-                granularity=sbi_granularity,
-                offsets=tuple(offsets) + (csize << 16,),
+                total_records=sum(m["n"] for m in metas),
+                granularity=granularity,
+                offsets=tuple(offsets) + (end << 16,),
             )
-            fs_write_bytes(shard + ".sbi", idx.dump())
+            fs_write_bytes(path + ".sbi", sbi.dump())
 
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(df, write_partition)
+    return PartFormat(
+        header=compress_blocks(encode_bam_header(header.text, refs)),
+        encode=encode,
+        terminator=EMPTY_GZIP_BLOCK,
+        index=index if write_sbi or write_bai else None,
+        ext=".bam",
+    )
 
 
 def create_sbi(bam_path: str, granularity: int = 4096) -> str:

@@ -36,8 +36,8 @@ via the shortest float32-unique representation so every value the text
 parser produced survives bit-for-bit.
 
 Reads are splittable WHEN a ``.csi`` sits beside the file (the sink
-writes one at write time with ``write_index=True``, folding part-local
-sidecars exactly like the .bai/.tbi/.crai paths): the index's chunk list
+writes one at write time with ``write_index=True``, folding the parts'
+index metadata exactly like the .bai/.tbi/.crai paths): the index's chunk list
 supplies record-aligned virtual-offset ranges grouped into tasks, and
 interval queries prune to overlapping chunks before any decompression.
 Without an index a file is one task — BCF records carry no in-stream
@@ -47,7 +47,6 @@ boundary marker.  Directory inputs additionally fan out per shard.
 from __future__ import annotations
 
 import struct
-import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +54,7 @@ from pyspark.sql.types import StructType
 
 from .fsio import get_fs
 from .headers import read_vcf_header_text  # noqa: F401  (re-exported convenience)
+from .merger import PartFormat, commit, commit_sharded
 
 MAGIC = b"BCF\x02\x02"
 
@@ -1039,9 +1039,9 @@ def _variants_schema():
 
 
 class BcfSink:
-    """variants DataFrame → single BCF file: per-partition encoded +
-    BGZF-compressed parts (terminator-less), driver header block, EOF block
-    — the repo's standard distributed single-file commit."""
+    """variants DataFrame → single BCF file, or a directory of complete BCF
+    shards, through the shared commit (``merger``): per-partition encoded +
+    BGZF-compressed record parts, header blocks, EOF block."""
 
     def write(
         self,
@@ -1052,115 +1052,13 @@ class BcfSink:
         write_index: bool = False,
     ) -> None:
         """``write_index=True`` additionally creates ``path + '.csi'`` AT
-        WRITE TIME: each part accumulates its features' bins/linear windows
-        with part-relative virtual offsets (a small JSON sidecar), and the
-        driver folds the sidecars with the same rebase arithmetic as the
-        ``.bai``/``.tbi``/``.crai`` write paths — no re-read of the
-        output."""
-        from .bgzf import EMPTY_GZIP_BLOCK, compress_block
-        from .merger import merge_parts
+        WRITE TIME: each part returns its features' bins/linear windows
+        with part-relative virtual offsets, folded with the same rebase
+        arithmetic as the ``.bai``/``.tbi``/``.crai`` write paths — no
+        re-read of the output."""
+        commit(df, path, _bcf_format(header_text, write_index))
 
-        ctx = BcfContext(header_text)
-        fs = get_fs(path)
-        temp_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-        fs.mkdirs(temp_dir)
-
-        def write_partition(pid, rows):
-            import json as _json
-            import uuid as _uuid
-
-            from .bgzf import BgzfWriter
-            from .csi import CsiAccumulator
-
-            tmp = f"{temp_dir}/.tmp-{_uuid.uuid4().hex}"
-            wrote = False
-            acc = CsiAccumulator(len(ctx.contigs)) if write_index else None
-            last = None  # (rid, bin, provisional v_end)
-            with fs.open_output(tmp) as fh, BgzfWriter(fh, write_terminator=False) as w:
-                for row in rows:
-                    wrote = True
-                    rec = encode_record(row, ctx)
-                    if acc is None:
-                        w.write(rec)
-                        continue
-                    v = w.tell_virtual()
-                    w.write(rec)
-                    v_end = w.tell_virtual()
-                    rid = ctx.contig_idx[row["contig"]]
-                    pos0 = int(row["pos"]) - 1
-                    info = _as_map(row.get("info"))
-                    try:
-                        end0 = int(info["END"]) if "END" in info else pos0 + len(
-                            row["ref"]
-                        )
-                    except (TypeError, ValueError):
-                        end0 = pos0 + len(row["ref"])
-                    b = acc._reg2bin(pos0, max(pos0 + 1, end0))
-                    acc.add(rid, pos0, end0, v, v_end)
-                    last = (rid, b, v_end)
-            if not wrote:
-                fs.delete(tmp)
-                return
-            fs.rename(tmp, f"{temp_dir}/part-{pid:05d}")
-            if acc is not None:
-                # normalize the final chunk end to start-of-next-block
-                csize = w.compressed_bytes
-                true_end = csize << 16
-                if last is not None and last[2] != true_end:
-                    chunks = acc.bins[last[0]][last[1]]
-                    if chunks[-1][1] == last[2]:
-                        chunks[-1][1] = true_end
-                meta = {"csize": csize, **acc.to_meta()}
-                with fs.open_output(
-                    f"{temp_dir}/.idx-part-{pid:05d}.json"
-                ) as mh:
-                    mh.write(_json.dumps(meta).encode())
-
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(df, write_partition)
-
-        htext = ctx.header_text.encode() + b"\x00"
-        payload = MAGIC + struct.pack("<I", len(htext)) + htext
-        header_block = b"".join(
-            compress_block(payload[i : i + 60000])
-            for i in range(0, len(payload), 60000)
-        )
-        index_meta: list[dict] = []
-        if write_index:
-            import json
-
-            from .fsio import fs_basename, fs_join
-            from .merger import list_parts
-
-            for p in sorted(list_parts(temp_dir)):
-                with fs.open_input(
-                    fs_join(temp_dir, f".idx-{fs_basename(p)}.json")
-                ) as mh:
-                    index_meta.append(json.loads(mh.read().decode()))
-        merge_parts(temp_dir, path, header=header_block, terminator=EMPTY_GZIP_BLOCK)
-        if write_index:
-            from .csi import CsiAccumulator
-            from .fsio import fs_write_bytes
-
-            acc = CsiAccumulator(len(ctx.contigs))
-            base = len(header_block)
-            for meta in index_meta:
-                acc.merge_rebased(meta, base)
-                base += meta["csize"]
-            fs_write_bytes(path + ".csi", acc.dump())
-
-
-class BcfShardedSink:
-    """One complete BCF per partition in directory ``path`` — the
-    directory-of-parts scale layout every other sink here offers.  Each
-    shard is a full BCF (header + records + EOF block) written entirely
-    executor-side; ``write_index=True`` adds the shard's ``.csi`` beside
-    it (no driver merge — a shard IS a complete file).  Precondition for
-    indexing, as for bcftools index: rows position-sorted within each
-    partition (``df.sortWithinPartitions("contig", "pos")``)."""
-
-    def write(
+    def write_sharded(
         self,
         df: DataFrame,
         header_text: str,
@@ -1168,54 +1066,51 @@ class BcfShardedSink:
         *,
         write_index: bool = False,
     ) -> None:
-        from .fsio import fs_join
+        """One complete BCF (header + records + EOF block) per partition in
+        directory ``path``; ``write_index=True`` adds the shard's ``.csi``
+        beside it.  Precondition for indexing, as for bcftools index: rows
+        position-sorted within each partition
+        (``df.sortWithinPartitions("contig", "pos")``)."""
+        commit_sharded(df, path, _bcf_format(header_text, write_index))
 
-        ctx = BcfContext(header_text)
-        fs = get_fs(path)
-        fs.delete(path, recursive=True)
-        fs.mkdirs(path)
-        htext = ctx.header_text.encode() + b"\x00"
-        preamble = MAGIC + struct.pack("<I", len(htext)) + htext
 
-        def write_partition(pid, rows):
-            import uuid as _uuid
+def _bcf_format(header_text: str, write_index: bool) -> PartFormat:
+    from .bgzf import EMPTY_GZIP_BLOCK, compress_blocks, write_bgzf_part
+    from .csi import CsiAccumulator
+    from .fsio import fs_write_bytes
 
-            from .bgzf import BgzfWriter
-            from .csi import CsiAccumulator
+    ctx = BcfContext(header_text)
 
-            tmp = fs_join(path, f".tmp-{_uuid.uuid4().hex}")
-            wrote = False
-            acc = CsiAccumulator(len(ctx.contigs)) if write_index else None
-            with fs.open_output(tmp) as fh, BgzfWriter(fh, write_terminator=True) as w:
-                w.write(preamble)
-                for row in rows:
-                    wrote = True
-                    rec = encode_record(row, ctx)
-                    if acc is None:
-                        w.write(rec)
-                        continue
-                    v = w.tell_virtual()
-                    w.write(rec)
-                    v_end = w.tell_virtual()
-                    info = _as_map(row.get("info"))
-                    pos0 = int(row["pos"]) - 1
-                    try:
-                        end0 = int(info["END"]) if "END" in info else pos0 + len(
-                            row["ref"]
-                        )
-                    except (TypeError, ValueError):
-                        end0 = pos0 + len(row["ref"])
-                    acc.add(ctx.contig_idx[row["contig"]], pos0, end0, v, v_end)
-            if not wrote:
-                fs.delete(tmp)
-                return
-            name = fs_join(path, f"part-{pid:05d}.bcf")
-            fs.rename(tmp, name)
-            if acc is not None:
-                from .fsio import fs_write_bytes
+    def record(row: dict) -> bytes:
+        return encode_record(row, ctx)
 
-                fs_write_bytes(name + ".csi", acc.dump())
+    def encode(rows, fh) -> dict | None:
+        if not write_index:
+            write_bgzf_part(fh, rows, record)
+            return None
+        acc = CsiAccumulator(len(ctx.contigs))
 
-        from .arrow_xfer import foreach_partition_arrow
+        def add(row: dict, v: int, v_end: int) -> None:
+            pos0 = int(row["pos"]) - 1
+            info = _as_map(row.get("info"))
+            try:
+                end0 = int(info["END"]) if "END" in info else pos0 + len(row["ref"])
+            except (TypeError, ValueError):
+                end0 = pos0 + len(row["ref"])
+            acc.add(ctx.contig_idx[row["contig"]], pos0, end0, v, v_end)
 
-        foreach_partition_arrow(df, write_partition)
+        csize = write_bgzf_part(fh, rows, record, add)
+        acc.finish(csize)
+        return {"csize": csize, **acc.to_meta()}
+
+    def index(metas: list[dict], base: int, path: str) -> None:
+        fs_write_bytes(path + ".csi", CsiAccumulator(len(ctx.contigs)).fold(metas, base).dump())
+
+    htext = ctx.header_text.encode() + b"\x00"
+    return PartFormat(
+        header=compress_blocks(MAGIC + struct.pack("<I", len(htext)) + htext),
+        encode=encode,
+        terminator=EMPTY_GZIP_BLOCK,
+        index=index if write_index else None,
+        ext=".bcf",
+    )

@@ -82,7 +82,7 @@ def write_bed(df: DataFrame, path: str) -> None:
     0-based half-open and writes parallel text parts merged through the
     shared part-concat machinery (so it lands on any fsio scheme, with the
     scheme's concat fast path when available)."""
-    from .merger import merge_parts
+    from .merger import commit, text_format
 
     cols = [
         F.col("contig"),
@@ -96,6 +96,4 @@ def write_bed(df: DataFrame, path: str) -> None:
             # score putting the strand in the score slot)
             cols.append(F.coalesce(F.col(opt).cast("string"), F.lit(".")))
     line = F.concat_ws("\t", *cols)
-    temp_dir = str(path) + ".parts"
-    df.select(line.alias("value")).write.mode("overwrite").text(temp_dir)
-    merge_parts(temp_dir, path)
+    commit(df.select(line.alias("value")), path, text_format())

@@ -238,6 +238,28 @@ def compress_block(data: bytes, level: int = 6) -> bytes:
     return header + cdata + footer
 
 
+def compress_blocks(data: bytes) -> bytes:
+    """``data`` as standalone BGZF blocks of 60000-byte payloads: how a
+    header or an index file is compressed, in blocks of its own."""
+    return b"".join(compress_block(bytes(data[i : i + 60000])) for i in range(0, len(data), 60000))
+
+
+def write_bgzf_part(fh: BinaryIO, rows, record, index=None) -> int:
+    """Write ``record(row)`` for each row to ``fh`` as a terminator-less
+    BGZF part; ``index(row, v, v_end)`` sees each record's part-relative
+    virtual offsets.  Returns the part's compressed size."""
+    with BgzfWriter(fh, write_terminator=False) as w:
+        for row in rows:
+            rec = record(row)
+            if index is None:
+                w.write(rec)
+                continue
+            v = w.tell_virtual()
+            w.write(rec)
+            index(row, v, w.tell_virtual())
+    return w.compressed_bytes
+
+
 class BgzfWriter:
     """Streaming BGZF writer.  ``write_terminator=False`` produces a
     concatenation-closed part file (the single-file-commit trick:

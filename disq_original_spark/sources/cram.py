@@ -27,7 +27,8 @@ from typing import BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .fsio import fs_exists, fs_join, fs_open, fs_size, get_fs
+from .fsio import fs_exists, fs_open, fs_size, fs_write_bytes, get_fs
+from .merger import PartFormat, commit, commit_sharded, part_bases
 
 CRAM_MAGIC = b"CRAM"
 FILE_DEFINITION_SIZE = 26
@@ -529,11 +530,12 @@ class CramSource:
 
 
 class CramSink:
-    """Write a reads DataFrame as a single CRAM file: each partition encodes
-    one container (headerless part), the driver writes the file definition +
-    SAM-header container and the spec EOF container, then concatenates —
-    the reference's write-parallel-then-concat plan (`cram/CramSink.java:31-86`)
-    with a from-scratch encoder instead of htsjdk."""
+    """Write a reads DataFrame as a single CRAM file, or as a directory of
+    complete CRAM shards, through the shared commit (``merger``): each
+    partition encodes one container, framed by the file definition +
+    SAM-header container and the spec EOF container — the reference's
+    write-parallel-then-concat plan (`cram/CramSink.java:31-86`) with a
+    from-scratch encoder instead of htsjdk."""
 
     def write(
         self,
@@ -546,90 +548,11 @@ class CramSink:
         write_index: bool = False,
     ) -> None:
         """``write_index=True`` additionally creates ``path + ".crai"`` at
-        write time: executors record each container's CRAI entries (computed
-        from the rows they are encoding — no decode needed) plus the slice
-        landmark/size in small sidecars; the driver offsets them by the
-        merge layout.  The reference cannot write any index (README.md)."""
-        import uuid
-
-        from pyspark.sql import functions as F
-
-        from .cram_codec import IndexedFasta
-        from .cram_writer import (
-            encode_container,
-            encode_file_header_container,
-            eof_container,
-            file_definition,
-        )
-        from .merger import list_parts, merge_parts
-
-        major, minor = version
-
-        from .headers import header_ref_and_rg_names
-
-        ref_names, rg_ids = header_ref_and_rg_names(header_text)
-
-        temp_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-        fs = get_fs(path)
-        fs.mkdirs(temp_dir)
-
-        def write_partition(pid, rows_iter, _refs=ref_names, _rgs=rg_ids, _ref=reference_path):
-            from .bam import _norm_attrs
-
-            rows = [_norm_attrs(r) for r in rows_iter]
-            if not rows:
-                return
-            fasta = IndexedFasta(_ref) if _ref else None
-            data = encode_container(rows, _refs, _rgs, fasta, major, minor)
-            tmp = fs_join(temp_dir, f".tmp-{uuid.uuid4().hex}")
-            with fs.open_output(tmp) as fh:
-                fh.write(data)
-            name = f"part-{pid:05d}"
-            fs.rename(tmp, fs_join(temp_dir, name))
-            if write_index:
-                import json as _json
-
-                from .cram_codec import Buf, read_container_header
-
-                hdr = read_container_header(Buf(data), 0, major)
-                ref_index = {n: i for i, n in enumerate(_refs)}
-                meta = {
-                    "csize": len(data),
-                    "landmark": hdr.landmarks[0],
-                    "slice_size": hdr.length - hdr.landmarks[0],
-                    "entries": crai_entries_for_reads(rows, ref_index),
-                }
-                with fs.open_output(fs_join(temp_dir, f".idx-{name}.json")) as mh:
-                    mh.write(_json.dumps(meta).encode())
-
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(df, write_partition)
-        header = file_definition(major=major, minor=minor) + encode_file_header_container(
-            header_text, major
-        )
-        index_meta: list[dict] = []
-        if write_index:
-            import json
-
-            from .fsio import fs_basename
-
-            for p in sorted(list_parts(temp_dir)):
-                with fs.open_input(fs_join(temp_dir, f".idx-{fs_basename(p)}.json")) as mh:
-                    index_meta.append(json.loads(mh.read().decode()))
-        merge_parts(temp_dir, path, header=header, terminator=eof_container(major))
-        if write_index:
-            from .fsio import fs_write_bytes
-
-            lines: list[tuple[int, int, int, int, int, int]] = []
-            offset = len(header)
-            for meta in index_meta:
-                for sid, start, span in meta["entries"]:
-                    lines.append(
-                        (sid, start, span, offset, meta["landmark"], meta["slice_size"])
-                    )
-                offset += meta["csize"]
-            fs_write_bytes(path + ".crai", _crai_dump(lines))
+        write time: each part returns its container's CRAI entries (computed
+        from the rows it encodes — no decode needed) and slice landmark/size,
+        offset by the merge layout.  The reference cannot write any index
+        (README.md)."""
+        commit(df, path, _cram_format(header_text, reference_path, version, write_index))
 
     def write_sharded(
         self,
@@ -645,72 +568,56 @@ class CramSink:
         container + EOF) per partition in directory ``path`` (reference
         `sam/AnySamSinkMultiple.java:31-74`, which covers CRAM via
         ``CRAMContainerStreamWriter``); the directory reads back as one
-        input via ``CramSource.read``.
+        input via ``CramSource.read``.  ``write_index=True`` writes each
+        shard's ``.crai`` beside it on the executor."""
+        commit_sharded(df, path, _cram_format(header_text, reference_path, version, write_index))
 
-        ``write_index=True`` writes each shard's ``.crai`` beside it,
-        entirely executor-side — a shard is a complete file, so its index
-        offsets are just the shard's own header length; no driver merge.
-        Empty partitions produce no shard (matching the other sharded
-        sinks)."""
 
-        from .cram_codec import IndexedFasta
-        from .cram_writer import (
-            encode_container,
-            encode_file_header_container,
-            eof_container,
-            file_definition,
-        )
-        from .headers import header_ref_and_rg_names
+def _cram_format(
+    header_text: str, reference_path: str | None, version: tuple[int, int], write_index: bool
+) -> PartFormat:
+    from .cram_writer import (
+        encode_container,
+        encode_file_header_container,
+        eof_container,
+        file_definition,
+    )
+    from .headers import header_ref_and_rg_names
 
-        major, minor = version
-        ref_names, rg_ids = header_ref_and_rg_names(header_text)
-        prefix = file_definition(major=major, minor=minor) + encode_file_header_container(
-            header_text, major
-        )
-        terminator = eof_container(major)
-        fs = get_fs(path)
-        fs.delete(path, recursive=True)
-        fs.mkdirs(path)
+    major, minor = version
+    ref_names, rg_ids = header_ref_and_rg_names(header_text)
 
-        def write_partition(
-            pid, rows_iter, _refs=ref_names, _rgs=rg_ids, _ref=reference_path
-        ):
-            import uuid as _uuid
+    def encode(rows_iter, fh) -> dict | None:
+        from .bam import _norm_attrs
+        from .cram_codec import Buf, IndexedFasta, read_container_header
 
-            from .bam import _norm_attrs
+        rows = [_norm_attrs(r) for r in rows_iter]
+        fasta = IndexedFasta(reference_path) if reference_path else None
+        data = encode_container(rows, ref_names, rg_ids, fasta, major, minor)
+        fh.write(data)
+        if not write_index:
+            return None
+        hdr = read_container_header(Buf(data), 0, major)
+        return {
+            "csize": len(data),
+            "landmark": hdr.landmarks[0],
+            "slice_size": hdr.length - hdr.landmarks[0],
+            "entries": crai_entries_for_reads(rows, {n: i for i, n in enumerate(ref_names)}),
+        }
 
-            rows = [_norm_attrs(r) for r in rows_iter]
-            if not rows:
-                return
-            fasta = IndexedFasta(_ref) if _ref else None
-            data = encode_container(rows, _refs, _rgs, fasta, major, minor)
-            tmp = fs_join(path, f".tmp-{_uuid.uuid4().hex}")
-            with fs.open_output(tmp) as fh:
-                fh.write(prefix)
-                fh.write(data)
-                fh.write(terminator)
-            name = f"part-{pid:05d}.cram"
-            shard = fs_join(path, name)
-            fs.rename(tmp, shard)
-            if write_index:
-                from .cram_codec import Buf, read_container_header
-                from .fsio import fs_write_bytes
+    def index(metas: list[dict], base: int, path: str) -> None:
+        lines = [
+            (sid, start, span, offset, m["landmark"], m["slice_size"])
+            for m, offset in part_bases(metas, base)
+            for sid, start, span in m["entries"]
+        ]
+        fs_write_bytes(path + ".crai", _crai_dump(lines))
 
-                hdr = read_container_header(Buf(data), 0, major)
-                ref_index = {n: i for i, n in enumerate(_refs)}
-                lines = [
-                    (
-                        sid,
-                        start,
-                        span,
-                        len(prefix),
-                        hdr.landmarks[0],
-                        hdr.length - hdr.landmarks[0],
-                    )
-                    for sid, start, span in crai_entries_for_reads(rows, ref_index)
-                ]
-                fs_write_bytes(shard + ".crai", _crai_dump(lines))
-
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(df, write_partition)
+    return PartFormat(
+        header=file_definition(major=major, minor=minor)
+        + encode_file_header_container(header_text, major),
+        encode=encode,
+        terminator=eof_container(major),
+        index=index if write_index else None,
+        ext=".cram",
+    )

@@ -137,7 +137,8 @@ def encode_block(
     method: int, ctype: int, cid: int, data: bytes, major: int = 2, rans_order: int = 0
 ) -> bytes:
     if method == 1:
-        payload = gzip.compress(data, 6)
+        # mtime=0: the same rows encode to the same bytes at any time
+        payload = gzip.compress(data, 6, mtime=0)
     elif method == 4:
         from .rans4x8 import compress as rans_compress
 

@@ -25,6 +25,8 @@ import struct
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from .tabix import IndexAccumulator
+
 CSI_MAGIC = b"CSI\x01"
 
 
@@ -190,26 +192,23 @@ def file_ranges_for_intervals(
     return merge_ranges(raw)
 
 
-class CsiAccumulator:
-    """Streaming CSI builder (the :class:`bai.BaiAccumulator` shape with
-    parameterized binning and folded loffsets).  Used by the post-hoc
-    builders below; feed features in file order, then ``dump``.
+class CsiAccumulator(IndexAccumulator):
+    """Streaming CSI builder: the ``IndexAccumulator`` core with
+    parameterized binning and loffsets folded into the bins.
 
-    ``loffset`` construction: a classic linear index over ``min_shift``-
-    sized leaf windows is kept during the feed (min start-voffset of any
-    feature OVERLAPPING the window — spanning features lower every window
-    they cross, exactly like the BAI linear index), and each bin's loffset
-    is the fill-forward linear value at the bin's first leaf window.  Every
+    ``loffset`` construction: the core's linear index over ``min_shift``-
+    sized leaf windows holds the min start-voffset of any feature
+    OVERLAPPING the window (spanning features lower every window they
+    cross, exactly like the BAI linear index), and each bin's loffset is
+    the fill-forward linear value at the bin's first leaf window.  Every
     stored loffset is therefore ≤ the true first-overlap offset, so query
     clamping can only be weaker than optimal, never incorrect."""
 
     def __init__(self, n_ref: int, min_shift: int = 14, depth: int = 5):
+        super().__init__(n_ref)
         self.min_shift = min_shift
         self.depth = depth
         self._leaf0 = bin_limit(min_shift, depth - 1) if depth else 0
-        self.bins: list[dict[int, list[list[int]]]] = [dict() for _ in range(n_ref)]
-        self.linear: list[dict[int, int]] = [dict() for _ in range(n_ref)]
-        self.n_no_coor = 0
 
     def _reg2bin(self, beg: int, end: int) -> int:
         end -= 1
@@ -222,22 +221,6 @@ class CsiAccumulator:
             t = (t - 1) >> 3 if t else 0
         return 0
 
-    def add(self, ref_id: int, pos0: int, end0: int, v: int, v_end: int) -> None:
-        if ref_id < 0 or pos0 < 0:
-            self.n_no_coor += 1
-            return
-        end0 = max(pos0 + 1, end0)
-        b = self._reg2bin(pos0, end0)
-        chunks = self.bins[ref_id].setdefault(b, [])
-        if chunks and chunks[-1][1] == v:
-            chunks[-1][1] = v_end
-        else:
-            chunks.append([v, v_end])
-        linear = self.linear[ref_id]
-        for w in range(pos0 >> self.min_shift, ((end0 - 1) >> self.min_shift) + 1):
-            if w not in linear or v < linear[w]:
-                linear[w] = v
-
     def _first_leaf_window(self, b: int) -> int:
         """Index of the first ``min_shift`` leaf window a bin covers."""
         level, t = 0, 0
@@ -246,70 +229,30 @@ class CsiAccumulator:
             level += 1
         return (b - t) << (3 * (self.depth - level))
 
-    def to_meta(self) -> dict:
-        """Part-local state for write-time distributed index creation
-        (the TabixAccumulator sidecar shape): voffsets are part-relative,
-        ref ids are global (the BCF header contig dictionary), so the
-        driver folds sidecars with :meth:`merge_rebased`."""
-        return {
-            "n_ref": len(self.bins),
-            "bins": [{str(b): c for b, c in r.items()} for r in self.bins],
-            "linear": [{str(w): v for w, v in r.items()} for r in self.linear],
-            "n_no_coor": self.n_no_coor,
-        }
-
-    def merge_rebased(self, meta: dict, base: int) -> None:
-        from .bai import rebase_voffset
-
-        for r in range(meta["n_ref"]):
-            dest_bins = self.bins[r]
-            for b_s, chunks in meta["bins"][r].items():
-                dest = dest_bins.setdefault(int(b_s), [])
-                for u, v in chunks:
-                    u, v = rebase_voffset(u, base), rebase_voffset(v, base)
-                    if dest and dest[-1][1] == u:
-                        dest[-1][1] = v
-                    else:
-                        dest.append([u, v])
-            linear = self.linear[r]
-            for w_s, v in meta["linear"][r].items():
-                w, v = int(w_s), rebase_voffset(v, base)
-                if w not in linear or v < linear[w]:
-                    linear[w] = v
-        self.n_no_coor += meta.get("n_no_coor", 0)
-
     def dump(self, aux: bytes = b"") -> bytes:
-        from .bgzf import EMPTY_GZIP_BLOCK, compress_block
+        import bisect
+
+        from .bgzf import EMPTY_GZIP_BLOCK, compress_blocks
 
         payload = bytearray(CSI_MAGIC)
         payload += struct.pack("<3i", self.min_shift, self.depth, len(aux))
         payload += aux
         payload += struct.pack("<i", len(self.bins))
-        for r in range(len(self.bins)):
-            linear = self.linear[r]
+        for bins, linear in zip(self.bins, self.linear):
             windows = sorted(linear)
 
             def loffset(b: int) -> int:
-                w0 = self._first_leaf_window(b)
-                if w0 in linear:
-                    return linear[w0]
-                # fill-forward: nearest previous populated window
-                import bisect
-
-                i = bisect.bisect_left(windows, w0) - 1
+                # fill-forward: the nearest populated window at or before
+                # the bin's first leaf window
+                i = bisect.bisect_right(windows, self._first_leaf_window(b)) - 1
                 return linear[windows[i]] if i >= 0 else 0
 
-            payload += struct.pack("<i", len(self.bins[r]))
-            for b in sorted(self.bins[r]):
-                chunks = self.bins[r][b]
-                payload += struct.pack("<IQi", b, loffset(b), len(chunks))
-                for u, v in chunks:
+            payload += struct.pack("<i", len(bins))
+            for b in sorted(bins):
+                payload += struct.pack("<IQi", b, loffset(b), len(bins[b]))
+                for u, v in bins[b]:
                     payload += struct.pack("<QQ", u, v)
-        out = b"".join(
-            compress_block(bytes(payload[i : i + 60000]))
-            for i in range(0, len(payload), 60000)
-        )
-        return out + EMPTY_GZIP_BLOCK
+        return compress_blocks(payload) + EMPTY_GZIP_BLOCK
 
 
 def tabix_aux(names: list[str], fmt: int = 2, col_seq: int = 1, col_beg: int = 2,

@@ -34,7 +34,6 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from .bam import READS_SCHEMA, _expand_files, records_for_split
-from .bam_codec import SbiIndex
 from .fsio import get_fs
 from .headers import read_bam_header
 from .sam import READS_COLUMNS
@@ -159,9 +158,8 @@ class BamDataSourceReader(DataSourceReader):
         self.fs = get_fs(self.path)
 
     def partitions(self):
-        from .bam import LAZY_FIRST_VOFFSET
+        from .bam import LAZY_FIRST_VOFFSET, _collect_file_metadata
 
-        parts: list[BamInputPartition] = []
         fs = self.fs
         files = _expand_files(self.path, fs)
         # one driver header read (same-header directory contract,
@@ -177,28 +175,13 @@ class BamDataSourceReader(DataSourceReader):
                 for c, s, e in self.intervals
                 if c in name_to_id
             ]
-        for i, f in enumerate(files):
-            flen = fs.size(f)
-            sbi_path = f + ".sbi"
-            sbi = (
-                SbiIndex.load(sbi_path)
-                if self.use_sbi and fs.exists(sbi_path)
-                else None
-            )
-            offsets = tuple(sbi.offsets) if sbi else None
-            bai_ranges = None
-            if ivs is not None and fs.exists(f + ".bai"):
-                from .bai import parse_bai, voffset_ranges_for_intervals
-
-                bai_ranges = tuple(
-                    voffset_ranges_for_intervals(parse_bai(f + ".bai"), ivs)
-                )
-            elif ivs is not None and fs.exists(f + ".csi"):
-                # CSI fallback (contigs >2^29 bp) — same as BamSource.read
-                from .csi import parse_csi
-                from .csi import voffset_ranges_for_intervals as csi_ranges
-
-                bai_ranges = tuple(csi_ranges(parse_csi(f + ".csi"), ivs))
+        # BamSource's planner, run serially: the planning worker has no
+        # SparkSession.  It refuses a stale .bai/.csi/.sbi.
+        metas = _collect_file_metadata(None, files, fs, self.use_sbi, ivs, job_threshold=len(files) + 1)
+        parts: list[BamInputPartition] = []
+        for i, (f, flen, sbi_offsets, bai_ranges) in enumerate(metas):
+            if bai_ranges is not None and not bai_ranges:
+                continue  # no index range meets the intervals: nothing to read
             first_voffset = first_voffset0 if i == 0 else LAZY_FIRST_VOFFSET
             for s in range(0, flen, self.split_size):
                 parts.append(
@@ -209,13 +192,15 @@ class BamDataSourceReader(DataSourceReader):
                         ref_names,
                         len(refs),
                         first_voffset,
-                        offsets,
-                        bai_ranges,
+                        sbi_offsets,
+                        None if bai_ranges is None else tuple(bai_ranges),
                     )
                 )
         return parts
 
-    def read(self, partition: BamInputPartition):
+    def read(self, partition: BamInputPartition | None):
+        if partition is None:
+            return  # Spark's single call for an empty plan
         yield from _arrow_batches(
             records_for_split(
                 partition.path,
@@ -225,7 +210,7 @@ class BamDataSourceReader(DataSourceReader):
                 partition.n_ref,
                 partition.first_voffset,
                 partition.sbi_offsets,
-                list(partition.bai_ranges) if partition.bai_ranges else None,
+                None if partition.bai_ranges is None else list(partition.bai_ranges),
                 fs=self.fs,
                 group_by_qname=self.group_by_qname,
                 # group ownership needs the name even when pruned away

@@ -29,14 +29,12 @@ source's plain-gzip path).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .fsio import get_fs
-from .merger import merge_parts
+from .merger import commit, text_format
 
 FASTQ_COLUMNS = ["name", "seq", "plus", "qual"]
 
@@ -220,9 +218,7 @@ class FastqSink:
     commit (the repo's standard headerless single-file commit path)."""
 
     def write(self, df: DataFrame, path: str) -> None:
-        tmp = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-        df.select(to_fastq_line().alias("value")).write.mode("overwrite").text(tmp)
-        merge_parts(tmp, path)
+        commit(df.select(to_fastq_line().alias("value")), path, text_format())
 
 
 def pair_up(r1: DataFrame, r2: DataFrame) -> DataFrame:

@@ -198,7 +198,7 @@ def write_gff(df: DataFrame, path: str, sequence_regions=None) -> None:
     value like ``a;b`` round-trips instead of silently reparsing as two
     attributes; NULL attribute values raise (they have no faithful
     on-disk form and array_join would silently drop them)."""
-    from .merger import merge_parts
+    from .merger import commit, text_format
 
     # fail-loud on NULL mandatory fields: concat_ws silently SKIPS NULL
     # arguments, which would emit a column-shifted (corrupt) line instead
@@ -260,6 +260,4 @@ def write_gff(df: DataFrame, path: str, sequence_regions=None) -> None:
     header = "##gff-version 3\n"
     for seqid, rstart, rend in sequence_regions or ():
         header += f"##sequence-region {seqid} {rstart} {rend}\n"
-    temp_dir = str(path) + ".parts"
-    df.select(line.alias("value")).write.mode("overwrite").text(temp_dir)
-    merge_parts(temp_dir, path, header=header.encode())
+    commit(df.select(line.alias("value")), path, text_format(header.encode()))

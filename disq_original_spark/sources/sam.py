@@ -5,8 +5,8 @@ Source: ``spark.read.text`` (splittable, locality-aware, handles dirs and
 (split / element_at / map_from_entries — zero Python UDFs, whole plan stays
 in Tungsten codegen).  Reference parity: `sam/SamSource.java:24-88`.
 
-Sink: native reverse expression → ``write.text`` part files → driver-side
-single-file commit (header + parts concat).  Reference parity:
+Sink: native reverse expression → ``write.text`` part files → the shared
+single-file commit (``merger``: header + parts concat).  Reference parity:
 `sam/SamSink.java:23-47`.
 
 Reads schema (SURVEY §1.3): qname flag rname pos mapq cigar rnext pnext tlen
@@ -16,15 +16,13 @@ map tag → "TYPE:VALUE" preserving order, so write(read(x)) is lossless.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import map_from_entries_last_wins
 from ..operators.interval import interval_filter
 from .headers import SamHeader, read_sam_header_text
-from .merger import merge_parts
+from .merger import PartFormat, commit, commit_sharded, text_format
 
 READS_COLUMNS = [
     "qname",
@@ -252,38 +250,15 @@ def to_sam_line(df: DataFrame) -> Column:
 class SamSink:
     """Write a reads DataFrame to a single SAM file (write-parallel-then-
     concat, reference `sam/SamSink.java:23-47`) or a sharded directory
-    (one complete SAM per partition, `sam/AnySamSinkMultiple.java:31-74`)."""
+    (one complete SAM per partition, `sam/AnySamSinkMultiple.java:31-74`),
+    through the shared commit (``merger``)."""
 
     def write(self, df: DataFrame, header: SamHeader, path: str) -> None:
-        temp_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
-        df.select(to_sam_line(df).alias("value")).write.mode("overwrite").text(temp_dir)
-        merge_parts(temp_dir, path, header=header.text.encode())
+        commit(df.select(to_sam_line(df).alias("value")), path, _sam_format(header))
 
     def write_sharded(self, df: DataFrame, header: SamHeader, path: str) -> None:
-        from .fsio import fs_join, get_fs
+        commit_sharded(df.select(to_sam_line(df).alias("value")), path, _sam_format(header))
 
-        header_text = header.text
-        fs = get_fs(path)
 
-        def write_partition(pid, rows):
-            import uuid as _uuid
-
-            tmp = fs_join(path, f".tmp-{_uuid.uuid4().hex}")
-            wrote = False
-            with fs.open_output(tmp) as fh:
-                fh.write(header_text.encode())
-                for row in rows:  # stream: never materialize the partition
-                    wrote = True
-                    fh.write((row["value"] + "\n").encode())
-            if not wrote:
-                fs.delete(tmp)
-                return
-            fs.rename(tmp, fs_join(path, f"part-{pid:05d}.sam"))
-
-        fs.delete(path, recursive=True)
-        fs.mkdirs(path)
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(
-            df.select(to_sam_line(df).alias("value")), write_partition
-        )
+def _sam_format(header: SamHeader) -> PartFormat:
+    return text_format(header.text.encode(), ext=".sam")

@@ -22,6 +22,8 @@ import struct
 from dataclasses import dataclass
 from pathlib import Path
 
+from .bam_codec import reg2bin
+
 TBI_MAGIC = b"TBI\x01"
 
 
@@ -157,28 +159,125 @@ def merge_ranges(raw: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return merged
 
 
-_LINEAR_SHIFT = 14  # 16 kb windows, same as BAI
+def rebase_voffset(voff: int, base_bytes: int) -> int:
+    """Part-relative virtual offset → file-absolute, for a part that starts
+    ``base_bytes`` into the merged file (parts are whole block sequences, so
+    only the coffset half shifts)."""
+    return ((voff >> 16) + base_bytes) << 16 | (voff & 0xFFFF)
 
 
-class TabixAccumulator:
+class IndexAccumulator:
+    """Streaming core of the BAI, tabix and CSI builders: per-reference bin
+    chunks and a linear index of ``2^min_shift``-wide windows.
+
+    Feed records in file order and ``dump``; or, at write time, run one per
+    part with part-relative voffsets, end it with ``finish(csize)``, ship
+    ``to_meta()`` and fold the parts in file order with ``merge_rebased``.
+    Both paths extend an adjacent chunk the same way, so the write-time
+    index is byte-identical to a sequential build over the merged file.
+    Subclasses supply their binning (``_reg2bin``) and their ``dump``."""
+
+    min_shift = 14  # 16 kb linear windows, as in BAI and tabix
+    _reg2bin = staticmethod(reg2bin)
+
+    def __init__(self, n_ref: int = 0):
+        self.bins: list[dict[int, list[list[int]]]] = [{} for _ in range(n_ref)]
+        self.linear: list[dict[int, int]] = [{} for _ in range(n_ref)]
+        self.n_no_coor = 0
+        self._last: tuple[int, int, int] | None = None  # (ref, bin, v_end) of the last record
+
+    def add(self, ref_id: int, pos0: int, end0: int, v: int, v_end: int) -> None:
+        """One record: 0-based [pos0, end0) span, [v, v_end) voffsets; a
+        record without a position is only counted."""
+        self._last = None
+        if ref_id < 0 or pos0 < 0:
+            self.n_no_coor += 1
+            return
+        end0 = max(pos0 + 1, end0)
+        b = self._reg2bin(pos0, end0)
+        self._add_chunk(ref_id, b, v, v_end)
+        self._last = (ref_id, b, v_end)
+        self._add_linear(ref_id, range(pos0 >> self.min_shift, ((end0 - 1) >> self.min_shift) + 1), v)
+
+    def _add_chunk(self, ref_id: int, b: int, u: int, v: int) -> None:
+        chunks = self.bins[ref_id].setdefault(b, [])
+        if chunks and chunks[-1][1] == u:
+            chunks[-1][1] = v  # extend adjacent chunk
+        else:
+            chunks.append([u, v])
+
+    def _add_linear(self, ref_id: int, windows, v: int) -> None:
+        linear = self.linear[ref_id]
+        for w in windows:
+            if w not in linear or v < linear[w]:
+                linear[w] = v
+
+    def finish(self, csize: int) -> None:
+        """End a part of ``csize`` compressed bytes.  The writer placed the
+        last record's end inside the block its close() flushed; a
+        sequential reader (``BgzfReader.tell_virtual``) reports it as the
+        start of the next block, so the chunk ends there."""
+        if self._last is not None:
+            ref_id, b, v_end = self._last
+            chunk = self.bins[ref_id][b][-1]
+            if chunk[1] == v_end:
+                chunk[1] = csize << 16
+
+    def to_meta(self) -> dict:
+        return {"bins": self.bins, "linear": self.linear, "no_coor": self.n_no_coor}
+
+    def _meta_refs(self, meta: dict) -> list[int]:
+        """This index's reference ids for ``meta``'s references."""
+        return list(range(len(meta["bins"])))
+
+    def merge_rebased(self, meta: dict, base: int) -> None:
+        """Fold one part in, shifting its voffsets by ``base`` bytes.  Parts
+        must arrive in file order, so that chunks adjacent across a part
+        boundary merge as a sequential scan would merge them."""
+        for ref_id, bins, linear in zip(self._meta_refs(meta), meta["bins"], meta["linear"]):
+            for b, chunks in bins.items():
+                for u, v in chunks:
+                    self._add_chunk(ref_id, b, rebase_voffset(u, base), rebase_voffset(v, base))
+            for w, v in linear.items():
+                self._add_linear(ref_id, (w,), rebase_voffset(v, base))
+        self.n_no_coor += meta["no_coor"]
+
+    def fold(self, metas: list[dict], base: int) -> IndexAccumulator:
+        """Merge parts in file order, the first ``base`` bytes into the file."""
+        from .merger import part_bases
+
+        for meta, b in part_bases(metas, base):
+            self.merge_rebased(meta, b)
+        return self
+
+    def _dump_refs(self) -> bytes:
+        """The per-reference bins and linear index of the BAI/tabix layout."""
+        out = bytearray()
+        for bins, lin in zip(self.bins, self.linear):
+            out += struct.pack("<i", len(bins))
+            for b in sorted(bins):
+                out += struct.pack("<Ii", b, len(bins[b]))
+                for u, v in bins[b]:
+                    out += struct.pack("<QQ", u, v)
+            n_intv = (max(lin) + 1) if lin else 0
+            out += struct.pack("<i", n_intv)
+            prev = 0
+            for w in range(n_intv):
+                # windows with no record inherit the previous offset (lower bound)
+                prev = lin.get(w, prev)
+                out += struct.pack("<Q", prev)
+        return bytes(out)
+
+
+class TabixAccumulator(IndexAccumulator):
     """Streaming .tbi builder for the VCF preset (fmt=2: seq col 1, beg col
     2, end from the REF allele), keyed by chromosome name in order of first
-    appearance.
-
-    Mirrors ``bai.BaiAccumulator``'s two roles: feed features in file order
-    and ``dump()``, or run one per executor part (part-relative voffsets,
-    ``to_meta``) and fold the sidecars driver-side with ``merge_rebased``
-    during the single-file merge — write-time index creation with no
-    re-read of the output."""
+    appearance."""
 
     def __init__(self):
-        from .bam_codec import reg2bin
-
-        self._reg2bin = reg2bin
+        super().__init__()
         self.names: list[str] = []
         self._idx: dict[str, int] = {}
-        self.bins: list[dict[int, list[list[int]]]] = []
-        self.linear: list[dict[int, int]] = []
 
     def _ref(self, name: str) -> int:
         i = self._idx.get(name)
@@ -192,76 +291,26 @@ class TabixAccumulator:
 
     def add(self, name: str, beg0: int, end0: int, v: int, v_end: int) -> None:
         """One feature: 0-based half-open [beg0, end0), [v, v_end) voffsets."""
-        r = self._ref(name)
-        chunks = self.bins[r].setdefault(self._reg2bin(beg0, end0), [])
-        if chunks and chunks[-1][1] == v:
-            chunks[-1][1] = v_end
-        else:
-            chunks.append([v, v_end])
-        linear = self.linear[r]
-        for w in range(beg0 >> _LINEAR_SHIFT, ((end0 - 1) >> _LINEAR_SHIFT) + 1):
-            if w not in linear or v < linear[w]:
-                linear[w] = v
+        super().add(self._ref(name), beg0, end0, v, v_end)
 
     def to_meta(self) -> dict:
-        return {
-            "names": self.names,
-            "bins": [{str(b): c for b, c in r.items()} for r in self.bins],
-            "linear": [{str(w): v for w, v in r.items()} for r in self.linear],
-        }
+        return {"names": self.names, **super().to_meta()}
 
-    def merge_rebased(self, meta: dict, base: int) -> None:
-        from .bai import rebase_voffset
-
-        for local_i, name in enumerate(meta["names"]):
-            g = self._ref(name)
-            for b, chunks in meta["bins"][local_i].items():
-                dest = self.bins[g].setdefault(int(b), [])
-                for u, v in chunks:
-                    u, v = rebase_voffset(u, base), rebase_voffset(v, base)
-                    if dest and dest[-1][1] == u:
-                        dest[-1][1] = v
-                    else:
-                        dest.append([u, v])
-            linear = self.linear[g]
-            for w_s, v in meta["linear"][local_i].items():
-                w, v = int(w_s), rebase_voffset(v, base)
-                if w not in linear or v < linear[w]:
-                    linear[w] = v
+    def _meta_refs(self, meta: dict) -> list[int]:
+        return [self._ref(name) for name in meta["names"]]
 
     def dump(self) -> bytes:
         """Serialize + BGZF-compress (.tbi files are themselves BGZF)."""
-        from .bgzf import EMPTY_GZIP_BLOCK, compress_block
+        from .bgzf import EMPTY_GZIP_BLOCK, compress_blocks
 
-        payload = bytearray(TBI_MAGIC)
         names_blob = b"".join(n.encode() + b"\x00" for n in self.names)
-        payload += struct.pack(
-            "<8i", len(self.names), 2, 1, 2, 0, ord("#"), 0, len(names_blob)
+        payload = (
+            TBI_MAGIC
+            + struct.pack("<8i", len(self.names), 2, 1, 2, 0, ord("#"), 0, len(names_blob))
+            + names_blob
+            + self._dump_refs()
         )
-        payload += names_blob
-        for r in range(len(self.names)):
-            payload += struct.pack("<i", len(self.bins[r]))
-            for b in sorted(self.bins[r]):
-                chunks = self.bins[r][b]
-                payload += struct.pack("<Ii", b, len(chunks))
-                for u, v in chunks:
-                    payload += struct.pack("<QQ", u, v)
-            lin = self.linear[r]
-            n_intv = (max(lin) + 1) if lin else 0
-            payload += struct.pack("<i", n_intv)
-            prev = 0
-            for w in range(n_intv):
-                val = lin.get(w)
-                if val is None:
-                    val = prev
-                else:
-                    prev = val
-                payload += struct.pack("<Q", val)
-        out = b"".join(
-            compress_block(bytes(payload[i : i + 60000]))
-            for i in range(0, len(payload), 60000)
-        )
-        return out + EMPTY_GZIP_BLOCK
+        return compress_blocks(payload) + EMPTY_GZIP_BLOCK
 
 
 def _iter_bgzf_lines_with_voffsets(fh):

@@ -20,8 +20,6 @@ genotypes.  Conventions: ``id``/``qual`` NULL for '.'; ``filters`` NULL for
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,9 +28,9 @@ from ..operators.interval import (
     intervals_frame,
     residual_variant_overlap,
 )
-from .fsio import fs_basename, fs_join, fs_open, get_fs, list_data_files
+from .fsio import fs_basename, fs_open, fs_write_bytes, get_fs, list_data_files
 from .headers import read_vcf_header_text, vcf_sample_names
-from .merger import merge_parts
+from .merger import PartFormat, commit, commit_sharded, text_format
 
 VARIANTS_COLUMNS = ["contig", "pos", "id", "ref", "alts", "qual", "filters", "info", "genotypes"]
 
@@ -561,9 +559,10 @@ def to_vcf_line(sample_names: list[str]) -> Column:
 
 
 class VcfSink:
-    """Write a variants DataFrame to a single VCF — plain text or BGZF
-    (.bgz) with terminator-less parts + driver header + EOF block
-    (reference `vcf/VcfSink.java:23-69`)."""
+    """Write a variants DataFrame to a single VCF, or to a directory of
+    complete VCF shards, through the shared commit (``merger``) — plain
+    text, or BGZF (.bgz) with terminator-less parts + header blocks + EOF
+    block (reference `vcf/VcfSink.java:23-69`)."""
 
     def write(
         self,
@@ -574,99 +573,8 @@ class VcfSink:
         *,
         write_index: bool = False,
     ) -> None:
-        samples = sample_names if sample_names is not None else vcf_sample_names(header_text)
-        lines = df.select(to_vcf_line(samples).alias("value"))
-        temp_dir = f"{path}.parts-{uuid.uuid4().hex[:8]}"
         compressed = path.endswith((".bgz", ".gz"))
-        if not compressed:
-            lines.write.mode("overwrite").text(temp_dir)
-            merge_parts(temp_dir, path, header=header_text.encode())
-            if write_index:
-                # Plain text gets the Tribble .idx, like the reference's
-                # per-format index choice on the read side.  The Spark
-                # native text writer offers no per-part hook, so this one
-                # is a driver-side pass over the (text) output.
-                from .tribble import create_tribble_index
-
-                create_tribble_index(path)
-            return
-
-        fs = get_fs(path)
-        fs.mkdirs(temp_dir)
-
-        def write_partition(pid, rows):
-            import json as _json
-            import uuid as _uuid
-
-            from .bgzf import BgzfWriter
-            from .tabix import TabixAccumulator, vcf_feature_span
-
-            tmp = fs_join(temp_dir, f".tmp-{_uuid.uuid4().hex}")
-            wrote = False
-            acc = TabixAccumulator() if write_index else None
-            last = None  # (name, beg0, end0, provisional v_end)
-            with fs.open_output(tmp) as fh, BgzfWriter(fh, write_terminator=False) as w:
-                for row in rows:
-                    wrote = True
-                    line = row["value"]
-                    if not write_index:
-                        w.write(line.encode() + b"\n")
-                        continue
-                    v = w.tell_virtual()
-                    w.write(line.encode() + b"\n")
-                    v_end = w.tell_virtual()
-                    cname, beg0, end0 = vcf_feature_span(line)
-                    acc.add(cname, beg0, end0, v, v_end)
-                    last = (cname, beg0, end0, v_end)
-            if not wrote:
-                fs.delete(tmp)
-                return
-            name = f"part-{pid:05d}"
-            fs.rename(tmp, fs_join(temp_dir, name))
-            if write_index:
-                # normalize the final feature's chunk end to the part's
-                # start-of-next-block (see BamSink.write)
-                csize = w.compressed_bytes
-                true_end = csize << 16
-                if last is not None and last[3] != true_end:
-                    cname, beg0, end0, prov = last
-                    chunks = acc.bins[acc._idx[cname]][acc._reg2bin(beg0, end0)]
-                    if chunks[-1][1] == prov:
-                        chunks[-1][1] = true_end
-                meta = {"csize": csize, **acc.to_meta()}
-                with fs.open_output(fs_join(temp_dir, f".idx-{name}.json")) as mh:
-                    mh.write(_json.dumps(meta).encode())
-
-        from .arrow_xfer import foreach_partition_arrow
-
-        foreach_partition_arrow(lines, write_partition)
-
-        from .bgzf import EMPTY_GZIP_BLOCK, compress_block
-
-        header_block = b"".join(
-            compress_block(header_text.encode()[i : i + 60000])
-            for i in range(0, len(header_text.encode()), 60000)
-        )
-        index_meta: list[dict] = []
-        if write_index:
-            import json
-
-            from .merger import list_parts
-
-            for p in sorted(list_parts(temp_dir)):
-                with fs.open_input(fs_join(temp_dir, f".idx-{fs_basename(p)}.json")) as mh:
-                    index_meta.append(json.loads(mh.read().decode()))
-        merge_parts(temp_dir, path, header=header_block, terminator=EMPTY_GZIP_BLOCK)
-        if write_index:
-            from .fsio import fs_write_bytes
-            from .tabix import TabixAccumulator
-
-            acc = TabixAccumulator()
-            base = len(header_block)
-            for meta in index_meta:
-                acc.merge_rebased(meta, base)
-                base += meta["csize"]
-            fs_write_bytes(path + ".tbi", acc.dump())
+        commit(_vcf_lines(df, header_text, sample_names), path, _vcf_format(header_text, compressed, write_index))
 
     def write_sharded(
         self,
@@ -679,76 +587,59 @@ class VcfSink:
     ) -> None:
         """One complete VCF per partition in directory ``path`` (reference
         `vcf/VcfSinkMultiple.java:12-45`); BGZF-compressed when the directory
-        name ends in .bgz/.gz (e.g. out.vcf.bgz.sharded).
+        name contains .bgz/.gz (e.g. out.vcf.bgz.sharded).
 
-        ``write_index=True`` writes each shard's index beside it, entirely
-        executor-side (a shard is a complete file — no driver merge): tabix
-        ``.tbi`` inline for BGZF shards; Tribble ``.idx`` for plain-text
-        shards via a local second pass over the just-written shard.
-        Precondition (as for ``tabix``/``samtools`` themselves): rows must
-        be position-sorted within each partition, e.g.
-        ``df.sortWithinPartitions("contig", "pos")``."""
-        samples = sample_names if sample_names is not None else vcf_sample_names(header_text)
-        lines = df.select(to_vcf_line(samples).alias("value"))
+        ``write_index=True`` writes each shard's index beside it on the
+        executor: tabix ``.tbi`` for BGZF shards, Tribble ``.idx`` for
+        plain-text shards.  Precondition (as for ``tabix``/``samtools``
+        themselves): rows must be position-sorted within each partition,
+        e.g. ``df.sortWithinPartitions("contig", "pos")``."""
         compressed = ".bgz" in fs_basename(path) or ".gz" in fs_basename(path)
-        fs = get_fs(path)
-        fs.delete(path, recursive=True)
-        fs.mkdirs(path)
+        commit_sharded(
+            _vcf_lines(df, header_text, sample_names), path, _vcf_format(header_text, compressed, write_index)
+        )
 
-        def write_partition(pid, rows):
-            import uuid as _uuid
 
-            from .bgzf import BgzfWriter
-            from .tabix import TabixAccumulator, vcf_feature_span
+def _vcf_lines(df: DataFrame, header_text: str, sample_names: list[str] | None) -> DataFrame:
+    samples = sample_names if sample_names is not None else vcf_sample_names(header_text)
+    return df.select(to_vcf_line(samples).alias("value"))
 
-            wrote = False
-            tmp = fs_join(path, f".tmp-{_uuid.uuid4().hex}")
-            acc = TabixAccumulator() if (write_index and compressed) else None
-            last = None
-            if compressed:
-                with fs.open_output(tmp) as fh, BgzfWriter(fh, write_terminator=True) as w:
-                    w.write(header_text.encode())
-                    for row in rows:
-                        wrote = True
-                        line = row["value"]
-                        if acc is None:
-                            w.write(line.encode() + b"\n")
-                            continue
-                        v = w.tell_virtual()
-                        w.write(line.encode() + b"\n")
-                        v_end = w.tell_virtual()
-                        cname, beg0, end0 = vcf_feature_span(line)
-                        acc.add(cname, beg0, end0, v, v_end)
-                        last = (cname, beg0, end0, v_end)
-            else:
-                with fs.open_output(tmp) as fh:
-                    fh.write(header_text.encode())
-                    for row in rows:
-                        wrote = True
-                        fh.write(row["value"].encode() + b"\n")
-            if not wrote:
-                fs.delete(tmp)
-                return
-            ext = ".vcf.bgz" if compressed else ".vcf"
-            shard = fs_join(path, f"part-{pid:05d}{ext}")
-            fs.rename(tmp, shard)
-            if not write_index:
-                return
-            if compressed:
-                from .fsio import fs_write_bytes
 
-                true_end = w.compressed_bytes << 16
-                if last is not None and last[3] != true_end:
-                    cname, beg0, end0, prov = last
-                    chunks = acc.bins[acc._idx[cname]][acc._reg2bin(beg0, end0)]
-                    if chunks[-1][1] == prov:
-                        chunks[-1][1] = true_end
-                fs_write_bytes(shard + ".tbi", acc.dump())
-            else:
-                from .tribble import create_tribble_index
+def _tribble_index(_metas: list, _base: int, path: str) -> None:
+    # plain text gets the Tribble .idx, like the reference's per-format
+    # index choice on the read side: a pass over the committed text file
+    from .tribble import create_tribble_index
 
-                create_tribble_index(shard)
+    create_tribble_index(path)
 
-        from .arrow_xfer import foreach_partition_arrow
 
-        foreach_partition_arrow(lines, write_partition)
+def _vcf_format(header_text: str, compressed: bool, write_index: bool) -> PartFormat:
+    if not compressed:
+        return text_format(header_text.encode(), index=_tribble_index if write_index else None, ext=".vcf")
+    from .bgzf import EMPTY_GZIP_BLOCK, compress_blocks, write_bgzf_part
+    from .tabix import TabixAccumulator, vcf_feature_span
+
+    def line(row: dict) -> bytes:
+        return row["value"].encode() + b"\n"
+
+    def encode(rows, fh) -> dict | None:
+        if not write_index:
+            write_bgzf_part(fh, rows, line)
+            return None
+        acc = TabixAccumulator()
+        csize = write_bgzf_part(
+            fh, rows, line, lambda row, v, v_end: acc.add(*vcf_feature_span(row["value"]), v, v_end)
+        )
+        acc.finish(csize)
+        return {"csize": csize, **acc.to_meta()}
+
+    def index(metas: list[dict], base: int, path: str) -> None:
+        fs_write_bytes(path + ".tbi", TabixAccumulator().fold(metas, base).dump())
+
+    return PartFormat(
+        header=compress_blocks(header_text.encode()),
+        encode=encode,
+        terminator=EMPTY_GZIP_BLOCK,
+        index=index if write_index else None,
+        ext=".vcf.bgz",
+    )

@@ -206,16 +206,9 @@ class VariantsStorage:
         if self._is_bcf(path):
             from .sources.bcf import BcfSink
 
-            if path.endswith(".sharded"):
-                from .sources.bcf import BcfShardedSink
-
-                BcfShardedSink().write(
-                    df, header_text, path, write_index=write_index
-                )
-                return
-            BcfSink().write(df, header_text, path, write_index=write_index)
-            return
-        sink = VcfSink()
+            sink = BcfSink()
+        else:
+            sink = VcfSink()
         if path.endswith(".sharded"):
             sink.write_sharded(df, header_text, path, write_index=write_index)
         else:

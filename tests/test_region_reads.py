@@ -22,11 +22,8 @@ from collections import Counter
 from pathlib import Path
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from disq_original_spark.sources.bam import READS_SCHEMA, BamSink
 from disq_original_spark.sources.bcf import _variants_schema
@@ -34,68 +31,25 @@ from disq_original_spark.sources.headers import SamHeader
 from disq_original_spark.sources.tabix import clip_ranges, merge_ranges
 from disq_original_spark.storage import ReadsStorage, VariantsStorage
 
-TWINS = Path(__file__).resolve().parent.parent / "fixtures" / "oracle"
+from .twins import (
+    CRAM_HEADER,
+    cram_reads,
+    frame,
+    reads_header,
+    reads_rows,
+    seeded_fasta,
+    sorted_reads,
+    variants,
+)
+
 SPLITS = (16 * 1024, 64 * 1024, None)  # None: the source's default
 N_WINDOWS = 20
 _CIGAR_OP = re.compile(r"(\d+)([MIDNSHP=X])")
 IV_SCHEMA = "contig string, start long, end long"
 
 
-def _twin(name: str):
-    return pq.read_table(TWINS / f"{name}.parquet").to_pandas()
-
-
 def _ref_len(cigar: str) -> int:
     return sum(int(n) for n, op in _CIGAR_OP.findall(cigar or "") if op in "MDN=X")
-
-
-def _frame(spark, rows: list[tuple], schema):
-    """A JVM-local frame of ``rows`` built through Arrow: the sinks' several
-    passes over it start no Python task to re-verify the rows."""
-    arrow = to_arrow_schema(schema)
-    cols = zip(*rows)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema)
-
-
-def _reads_rows(reads) -> list[tuple]:
-    cols = [f.name for f in READS_SCHEMA.fields if f.name != "attributes"]
-    return [(*row, {}) for row in reads[cols].itertuples(index=False)]
-
-
-def _variants():
-    """(variants rows, header text) from ``vcf_hiseq`` + the
-    NA12878 genotypes of ``vcf_hiseq_gt``."""
-    v = _twin("vcf_hiseq")
-    gt = _twin("vcf_hiseq_gt")
-    gt = gt[gt["sample"] == "NA12878"].drop_duplicates(["contig", "pos"])
-    v = v.merge(gt[["contig", "pos", "gt"]], on=["contig", "pos"], how="left")
-    v["gt"] = v["gt"].fillna("./.")
-    rows = [
-        (
-            c, int(p), None, ref, list(alts), None if q != q else float(q), list(fl),
-            {"DP": str(int(dp)), **({"DB": ""} if db else {})},
-            [("NA12878", g, {"GT": g})],
-        )
-        for c, p, ref, alts, q, fl, dp, db, g in zip(
-            v["contig"], v["pos"], v["ref"], v["alts"], v["qual"], v["filters"],
-            v["info_dp"], v["info_db"], v["gt"],
-        )
-    ]
-    filters = sorted({f for fl in v["filters"] for f in fl})
-    header = "\n".join(
-        ["##fileformat=VCFv4.2", "##contig=<ID=chr1,length=249250621>"]
-        + [
-            '##INFO=<ID=DP,Number=1,Type=Integer,Description="Depth">',
-            '##INFO=<ID=DB,Number=0,Type=Flag,Description="dbSNP">',
-            '##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">',
-        ]
-        + [f'##FILTER=<ID={f},Description="{f}">' for f in filters]
-        + ["#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tNA12878"]
-    ) + "\n"
-    return rows, header
 
 
 @pytest.fixture(scope="module")
@@ -103,48 +57,35 @@ def inputs(spark, tmp_path_factory):
     """BAM + .bai, BGZF VCF + .tbi, plain VCF + .idx, BCF + .csi,
     and a CRAM + .crai over a small FASTA, all written by the repo's sinks."""
     d = tmp_path_factory.mktemp("region")
-    reads = _twin("bam_1_reads").sort_values(["pos", "qname", "flag"], kind="stable")
-    contigs = _twin("bam_1_contigs").sort_values("rank")
-    header = SamHeader.parse(
-        "@HD\tVN:1.6\tSO:coordinate\n"
-        + "".join(f"@SQ\tSN:{c}\tLN:{n}\n" for c, n in zip(contigs["contig"], contigs["length"]))
-    )
+    reads = sorted_reads()
+    header = reads_header()
     paths = {"bam": str(d / "r.bam"), "bam_sbi": str(d / "r_sbi.bam")}
     # no .sbi: its 4096-record granularity would leave most 16 KiB splits
     # empty; the record guesser cuts the BAM at every split
-    reads_df = _frame(spark, _reads_rows(reads), READS_SCHEMA).coalesce(1)
+    reads_df = frame(spark, reads_rows(reads), READS_SCHEMA).coalesce(1)
     BamSink().write(reads_df, header, paths["bam"], write_sbi=False, write_bai=True)
     # with the .sbi, a split owns the records from its first entry on
     BamSink().write(reads_df, header, paths["bam_sbi"], write_sbi=True, write_bai=True)
 
     # CRAM: the first 300 mapped reads moved onto a 20 kb contig of a
     # seeded FASTA (mismatches against it are stored, not lost)
-    small = reads[(reads["flag"] & 4) == 0].head(300).copy()
-    small["pos"] = small["pos"] - int(small["pos"].min()) + 1
-    small["pnext"] = 0
-    small["rnext"] = None
-    small["tlen"] = 0
-    small["rname"] = "c1"
-    fasta = d / "c1.fa"
-    bases = np.random.default_rng(7).choice(list(b"ACGT"), 20_000).astype(np.uint8).tobytes()
-    fasta.write_bytes(b">c1\n" + b"".join(bases[i : i + 60] + b"\n" for i in range(0, 20_000, 60)))
-    Path(str(fasta) + ".fai").write_text("c1\t20000\t4\t60\t61\n")
+    fasta = seeded_fasta(d)
     paths["cram"] = str(d / "r.cram")
-    ReadsStorage(spark, reference_path=str(fasta)).write(
-        _frame(spark, _reads_rows(small), READS_SCHEMA).coalesce(1), paths["cram"],
-        SamHeader.parse("@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:c1\tLN:20000\n"),
+    ReadsStorage(spark, reference_path=fasta).write(
+        frame(spark, reads_rows(cram_reads(reads)), READS_SCHEMA).coalesce(1), paths["cram"],
+        SamHeader.parse(CRAM_HEADER),
         write_index=True,
     )
 
-    variants, vheader = _variants()
-    vdf = _frame(spark, variants, _variants_schema()).coalesce(1)
+    vrows, vheader = variants()
+    vdf = frame(spark, vrows, _variants_schema()).coalesce(1)
     for fmt, name in (("vcf", "v.vcf.bgz"), ("text", "v.vcf"), ("bcf", "v.bcf")):
         paths[fmt] = str(d / name)
         VariantsStorage(spark).write(vdf, paths[fmt], vheader, write_index=True)
     for p, idx in (("bam", ".bai"), ("bam_sbi", ".sbi"), ("cram", ".crai"), ("vcf", ".tbi"), ("text", ".idx"),
                    ("bcf", ".csi")):
         assert Path(paths[p] + idx).is_file(), (p, idx)
-    return {"paths": paths, "fasta": str(fasta)}
+    return {"paths": paths, "fasta": fasta}
 
 
 def _key(v):
@@ -308,6 +249,33 @@ def test_region_read_evaluates_interval_frame_once(spark, inputs, fmt):
     assert "LocalTableScan [_i_contig" in plan
     assert df.collect()
     assert seen.value == len(ivs)
+
+
+def test_datasource_bam_plans_with_the_bam_planner(spark, inputs, tmp_path):
+    """``format("bam")`` plans with ``BamSource``'s planner: the ``.sbi``
+    path reads every record once, an interval set that meets no ``.bai``
+    range (here it names no header contig) reads no row, and a truncated
+    BAM whose intact ``.bai`` points past its end is refused."""
+    import json
+    import shutil
+
+    from disq_original_spark.sources.datasource import register_datasources
+
+    register_datasources(spark)
+
+    def read(path, ivs):
+        return spark.read.format("bam").option("intervals", json.dumps(ivs)).load(path)
+
+    sbi = spark.read.format("bam").option("splitSize", 16 * 1024).load(inputs["paths"]["bam_sbi"])
+    assert sbi.count() == 4917
+    path = inputs["paths"]["bam"]
+    assert read(path, [["nosuch", 1, 100]]).count() == 0
+    assert 0 < read(path, [["1", 24_800_000, 24_810_000]]).count() < 4917
+    cut = tmp_path / "cut.bam"
+    cut.write_bytes(Path(path).read_bytes()[: Path(path).stat().st_size // 2])
+    shutil.copy(path + ".bai", str(cut) + ".bai")
+    with pytest.raises(Exception, match="past end-of-file"):
+        read(str(cut), [["1", 1, 100_000_000]]).count()
 
 
 def test_clip_ranges_is_the_intersection():
