@@ -379,9 +379,11 @@ def _io_benchmarks(spark) -> dict:
     """Format-layer read throughput over the reference's own fixtures — the
     reference IS an IO library, so the headline measures its core function:
     splittable BAM (guesser path), CRAM (full decode), BGZF VCF."""
-    out: dict = {}
     if not RES.exists():
-        return out
+        # fail loudly: an empty result would drop all of _IO_ENTRIES from
+        # the line without a trace
+        raise FileNotFoundError(f"io benchmark fixtures not found: {RES}")
+    out: dict = {}
     from disq_original_spark.sources.bam import BamSource
     from disq_original_spark.sources.cram import CramSource
     from disq_original_spark.sources.vcf import VcfSource

@@ -21,12 +21,11 @@ within ~2.5× of the raw single-core codec speed.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -68,12 +67,7 @@ from .fsio import (
 )
 from .headers import SamHeader, read_bam_header
 from .merger import PartFormat, commit, commit_sharded, part_bases
-from .sam import (
-    READS_COLUMNS,
-    schema_ordered,
-    validate_columns,
-    with_alignment_span,
-)
+from .sam import READS_COLUMNS, schema_ordered, validate_columns
 from .tabix import clip_ranges
 
 READS_SCHEMA = StructType(
@@ -388,32 +382,65 @@ def records_for_split(
         yield from _read_records_in_chunk(path, lo, hi, ref_names, fs, fields=fields)
 
 
-def _decode_splits_arrow(
-    spark: SparkSession,
-    split_rows: list[tuple[int, int, int]],
-    file_params: list[tuple],
+def plan_read(
+    spark: SparkSession | None,
+    path: str,
+    iv_rows: list[tuple[str, int, int]] | None = None,
+    include_unplaced: bool = False,
+    split_size: int = 128 * 1024 * 1024,
+    use_sbi: bool = True,
     fields: frozenset[str] | None = None,
-) -> DataFrame:
-    """Decode splits via the Arrow transfer plane (``arrow_xfer``): the
-    decode is unchanged (``records_for_split``); tasks hand the JVM columnar
-    Arrow batches instead of pickled rows.  ``fields`` prunes the decoded
-    columns (the custom-source analog of a parquet scan's ReadSchema)."""
-    from .arrow_xfer import rows_to_dataframe
+) -> tuple[list[tuple[int, int, int]], Callable[[tuple], Iterator[dict]]]:
+    """The BAM read plan, ``(tasks, task_rows)`` for the read plane
+    (``arrow_xfer``): one ``(file index, start, end)`` task per byte-range
+    split, in file order; ``task_rows(task)`` decodes one split
+    (``records_for_split``) to rows with ``fields``.  ``BamSource.read``
+    and ``format("bam")`` both read through it (``spark=None`` plans
+    serially).
 
-    def split_records(task):
+    ``iv_rows`` ((contig, start, end) rows) push down to the ``.bai``/``.csi``;
+    a file no index range meets gets no task.  A queryname-sorted header
+    switches record ownership to qname groups, so paired reads never
+    straddle partitions (the reference's README.md:155-159 guarantee); the
+    group test decodes ``qname`` even when ``fields`` leaves it out."""
+    fs = get_fs(path)
+    files = _expand_files(path, fs)
+    # ONE driver header read per input — directory files share a header
+    # by contract (`HtsjdkReadsRddStorage.java:150-156`); per-file
+    # metadata (size, indexes) is collected in a Spark job when the file
+    # count is large, so driver planning stays O(1) in files.
+    header, refs, first_voffset0 = read_bam_header(files[0])
+    ref_names = [r[0] for r in refs]
+    n_ref = len(refs)
+    ivs = None
+    if iv_rows is not None and not include_unplaced:
+        # .bai pushdown: unplaced reads sit outside every bin, so
+        # include_unplaced scans the whole file
+        name_to_id = {nm: i for i, nm in enumerate(ref_names)}
+        ivs = [(name_to_id[c], s, e) for c, s, e in iv_rows if c in name_to_id]
+    by_qname = header.sort_order == "queryname"
+    if by_qname and fields is not None:
+        fields = fields | {"qname"}
+    tasks: list[tuple[int, int, int]] = []
+    file_params: list[tuple] = []
+    for i, (f, flen, sbi_offsets, bai_ranges) in enumerate(
+        _collect_file_metadata(spark, files, fs, use_sbi, ivs)
+    ):
+        if bai_ranges is not None and not bai_ranges:
+            continue  # no index range meets the intervals: nothing to read
+        first_voffset = first_voffset0 if i == 0 else LAZY_FIRST_VOFFSET
+        fi = len(file_params)
+        file_params.append((f, first_voffset, sbi_offsets, bai_ranges))
+        tasks.extend((fi, s, min(s + split_size, flen)) for s in range(0, flen, split_size))
+
+    def task_rows(task):
         fi, s, e = task
-        f, refs, nref, fv, sbi, bai, fs, by_qname = file_params[fi]
+        f, fv, sbi, bai = file_params[fi]
         return records_for_split(
-            f, s, e, refs, nref, fv, sbi, bai, fs, group_by_qname=by_qname,
-            fields=fields,
+            f, s, e, ref_names, n_ref, fv, sbi, bai, fs, group_by_qname=by_qname, fields=fields
         )
 
-    if fields is None:
-        cols, schema = READS_COLUMNS, READS_SCHEMA
-    else:
-        cols = schema_ordered(READS_COLUMNS, fields)
-        schema = StructType([f for f in READS_SCHEMA.fields if f.name in fields])
-    return rows_to_dataframe(spark, split_rows, split_records, cols, schema)
+    return tasks, task_rows
 
 
 class BamSource:
@@ -442,54 +469,25 @@ class BamSource:
         carries exactly ``columns`` (schema order); internal needs
         (qname grouping, interval residual filtering) are decoded
         transparently and dropped before return."""
+        from .arrow_xfer import pruned_schema, to_dataframe
+
         if columns is not None:
             validate_columns(columns, READS_COLUMNS, "reads")
-        fs = get_fs(path)
-        files = _expand_files(path, fs)
-        # ONE driver header read per input — directory files share a header
-        # by contract (`HtsjdkReadsRddStorage.java:150-156`); per-file
-        # metadata (size, indexes) is collected in a Spark job when the file
-        # count is large, so driver planning stays O(1) in files.
-        header, refs, first_voffset0 = read_bam_header(files[0])
-        ref_names = [r[0] for r in refs]
-        n_ref = len(refs)
         # Collect the (tiny) interval list once — not once per input file,
         # and not again for the residual filter, which gets these rows
         iv_rows = collect_intervals(intervals) if intervals is not None else None
-        ivs = None
-        if iv_rows is not None and not include_unplaced:
-            # .bai pushdown: unplaced reads sit outside every bin, so
-            # include_unplaced scans the whole file
-            name_to_id = {nm: i for i, nm in enumerate(ref_names)}
-            ivs = [
-                (name_to_id[c], s, e) for c, s, e in iv_rows if c in name_to_id
-            ]
-        metas = _collect_file_metadata(spark, files, fs, use_sbi, ivs)
-        # queryname-sorted input: enforce the pair-integrity guarantee
-        # (README.md:155-159) by switching record ownership to qname groups
-        by_qname = header.sort_order == "queryname"
-        split_rows: list[tuple[int, int, int]] = []
-        file_params: list[tuple] = []
-        for i, (f, flen, sbi_offsets, bai_ranges) in enumerate(metas):
-            first_voffset = first_voffset0 if i == 0 else LAZY_FIRST_VOFFSET
-            splits = [(s, min(s + split_size, flen)) for s in range(0, flen, split_size)]
-            fi = len(file_params)
-            file_params.append(
-                (f, ref_names, n_ref, first_voffset, sbi_offsets, bai_ranges, fs, by_qname)
-            )
-            split_rows.extend((fi, s, e) for s, e in splits)
-
         fields = None
         if columns is not None:
             internal = set(columns)
-            if by_qname:
-                internal.add("qname")  # group ownership needs the name
             if intervals is not None or include_unplaced:
                 # residual_traversal computes alignment spans + the
                 # unplaced predicate from these
                 internal |= {"flag", "rname", "pos", "cigar"}
             fields = frozenset(internal)
-        reads = _decode_splits_arrow(spark, split_rows, file_params, fields)
+        tasks, task_rows = plan_read(
+            spark, path, iv_rows, include_unplaced, split_size, use_sbi, fields
+        )
+        reads = to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
         iv_frame = intervals_frame(spark, iv_rows) if iv_rows is not None else None
         out = residual_traversal(reads, iv_frame, include_unplaced)
         if columns is not None:

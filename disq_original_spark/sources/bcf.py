@@ -50,7 +50,6 @@ import struct
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from .fsio import get_fs
 from .headers import read_vcf_header_text  # noqa: F401  (re-exported convenience)
@@ -863,7 +862,7 @@ class BcfSource:
         walk (ID/alleles/FILTER/INFO) skips when no site string is.  The
         returned frame carries exactly ``columns``; interval residual
         filtering decodes its own needs transparently."""
-        from .arrow_xfer import rows_to_dataframe
+        from .arrow_xfer import pruned_schema, to_dataframe
         from .fsio import collect_metadata, list_data_files
         from .vcf import VARIANTS_COLUMNS
 
@@ -883,9 +882,6 @@ class BcfSource:
                 # info END) and filters on contig
                 internal |= {"contig", "pos", "ref", "info"}
             fields = frozenset(internal)
-        schema = _variants_schema()
-        if fields is not None:
-            schema = StructType([f for f in schema.fields if f.name in fields])
 
         def meta_for(f: str):
             """(file, csi-task-chunk-groups | None) — None = whole file."""
@@ -943,8 +939,6 @@ class BcfSource:
                 tasks.append((f, None))
             else:
                 tasks.extend((f, g) for g in groups)
-        if not tasks:
-            tasks = [(files[0], [])]
 
         def read_task(task):
             f, group = task
@@ -958,8 +952,6 @@ class BcfSource:
                 r = _Reader(data, 9 + l_text)
                 while r.o < len(data):
                     yield decode_record_loud(r, ctx, fields, f)
-                return
-            if not group:
                 return
             from .bgzf import BgzfReader
 
@@ -977,14 +969,7 @@ class BcfSource:
                         r = _Reader(head + payload, 0)
                         yield decode_record_loud(r, ctx, fields, f)
 
-        from .sam import schema_ordered
-
-        cols = (
-            VARIANTS_COLUMNS
-            if fields is None
-            else schema_ordered(VARIANTS_COLUMNS, fields)
-        )
-        df = rows_to_dataframe(spark, tasks, read_task, cols, schema)
+        df = to_dataframe(spark, tasks, read_task, pruned_schema(_variants_schema(), fields))
         if intervals is not None:
             # residual overlap filter: index-chunk pruning alone returns a
             # candidate SUPERSET; the shared residual_variant_overlap is the
@@ -993,6 +978,8 @@ class BcfSource:
 
             df = residual_variant_overlap(df, intervals_frame(spark, list(intervals)))
         if columns is not None:
+            from .sam import schema_ordered
+
             df = df.select(*schema_ordered(VARIANTS_COLUMNS, columns))
         return df
 

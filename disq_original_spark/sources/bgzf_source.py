@@ -9,8 +9,19 @@ exactly once."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from .arrow_xfer import to_dataframe
 from .fsio import get_fs
+
+BLOCKS_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("pos", LongType()),
+        StructField("c_size", IntegerType()),
+        StructField("u_size", IntegerType()),
+    ]
+)
 
 
 class BgzfBlockSource:
@@ -19,17 +30,14 @@ class BgzfBlockSource:
     ) -> DataFrame:
         fs = get_fs(path)
         flen = fs.size(path)
-        ranges = [(s, min(s + split_size, flen)) for s in range(0, flen, split_size)] or [(0, 0)]
+        ranges = [(s, min(s + split_size, flen)) for s in range(0, flen, split_size)]
 
-        def scan(it):
+        def scan(task):
             from .bgzf import enumerate_blocks
 
-            for s, e in it:
-                with fs.open_input(path) as fh:
-                    for b in enumerate_blocks(fh, s, e):
-                        yield (path, b.pos, b.c_size, b.u_size)
+            s, e = task
+            with fs.open_input(path) as fh:
+                for b in enumerate_blocks(fh, s, e):
+                    yield {"path": path, "pos": b.pos, "c_size": b.c_size, "u_size": b.u_size}
 
-        rdd = spark.sparkContext.parallelize(ranges, len(ranges)).mapPartitions(scan)
-        return spark.createDataFrame(
-            rdd, "path string, pos long, c_size int, u_size int"
-        )
+        return to_dataframe(spark, ranges, scan, BLOCKS_SCHEMA)

@@ -16,7 +16,7 @@ fixed EOF container.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import gzip
 import struct
@@ -387,10 +387,8 @@ class CramSource:
             intervals_frame,
             residual_traversal,
         )
+        from .arrow_xfer import pruned_schema, to_dataframe
         from .bam import READS_SCHEMA
-        from .cram_codec import IndexedFasta, decode_container, read_cram_meta_file
-        from .fsio import collect_metadata, list_data_files
-        from .headers import header_ref_and_rg_names
         from .sam import READS_COLUMNS, schema_ordered, validate_columns
 
         if columns is not None:
@@ -401,132 +399,133 @@ class CramSource:
             if intervals is not None or include_unplaced:
                 internal |= {"flag", "rname", "pos", "cigar"}
             fields = frozenset(internal)
-
-        fs = get_fs(str(path))
-        files = list_data_files(fs, str(path))
         iv_rows = collect_intervals(intervals) if intervals is not None else None
-
-        def meta_for(f: str):
-            """(file, flen, ((start, end), ...), first_container_offset)."""
-            flen = fs.size(f)
-            crai = f + ".crai"
-            if iv_rows is not None and fs_exists(crai):
-                entries = read_crai_entries(crai)
-                offsets = sorted({off for _sid, _s, _sp, off in entries})
-                if offsets and offsets[-1] >= flen:
-                    # same contract as plan_splits: an index entry past
-                    # EOF means truncated data or a stale index — raise
-                    # even if the pruned interval set would not touch the
-                    # missing tail (the file as a whole is not trustworthy)
-                    raise ValueError(
-                        f"{f}: .crai references a container at offset "
-                        f"{offsets[-1]} but the file ends at {flen} — "
-                        "truncated CRAM or stale index"
-                    )
-                if not offsets:
-                    return (f, flen, (), 0)
-                meta, _ = read_cram_meta_file(f)
-                ref_names, _rg = header_ref_and_rg_names(meta.header_text)
-                ref_ids = {n: i for i, n in enumerate(ref_names)}
-                want: set[int] = set()
-                for sid, s0, sp, off in entries:
-                    if sid == -1:
-                        if include_unplaced:
-                            want.add(off)
-                    elif sp > 0 and any(
-                        ref_ids.get(c) == sid and s0 <= hi and s0 + sp - 1 >= lo
-                        for c, lo, hi in iv_rows
-                    ):
-                        want.add(off)
-                # contiguous runs of selected containers, cut at container
-                # starts once a task reaches ~split_size (record-aligned:
-                # every container body stays whole inside one task)
-                bounds = offsets + [flen]
-                rngs: list[list[int]] = []
-                for i, off in enumerate(offsets):
-                    if off not in want:
-                        continue
-                    end = bounds[i + 1]
-                    if (
-                        rngs
-                        and rngs[-1][1] == off
-                        and rngs[-1][1] - rngs[-1][0] < split_size
-                    ):
-                        rngs[-1][1] = end
-                    else:
-                        rngs.append([off, end])
-                return (f, flen, tuple((s, e) for s, e in rngs), offsets[0])
-            chunks = self.plan_splits(f, split_size, file_len=flen)
-            # extend each chunk to the next chunk's start (or EOF) so every
-            # container body is fully inside exactly one task's range
-            bounds = [c[0] for c in chunks] + [flen]
-            return (
-                f,
-                flen,
-                tuple((bounds[i], bounds[i + 1]) for i in range(len(chunks))),
-                bounds[0] if chunks else 0,
-            )
-
-        ranges: list[tuple[str, int, int, int, int]] = []
-        single_meta = None
-        for f, flen, rngs, first_off in collect_metadata(spark, files, meta_for):
-            ranges.extend((f, s, e, flen, first_off) for s, e in rngs)
-        from pyspark.sql.types import StructType
-
-        if fields is None:
-            out_cols, out_schema = READS_COLUMNS, READS_SCHEMA
-        else:
-            out_cols = schema_ordered(READS_COLUMNS, fields)
-            out_schema = StructType(
-                [f for f in READS_SCHEMA.fields if f.name in fields]
-            )
-        if not ranges:
-            # empty result must still carry the USER's schema, not the
-            # internal decode fields (interval-residual internals)
-            empty_schema = (
-                out_schema
-                if columns is None
-                else StructType(
-                    [f for f in READS_SCHEMA.fields if f.name in set(columns)]
-                )
-            )
-            return spark.createDataFrame([], empty_schema)
-        if len(files) == 1:
-            # single file: one driver meta read shipped via closure (the
-            # historical shape); directories read meta per task instead
-            single_meta, _ = read_cram_meta_file(files[0])
-
-        def decode_range(
-            task, _meta=single_meta, _ref=reference_path, _fs=fs, _fields=fields
-        ):
-            f, s, e, flen, first_off = task
-            meta = _meta
-            if meta is None:
-                # directory read: per-file meta, cached per (reused) worker
-                # so a file's header container is parsed once per worker,
-                # not once per split
-                meta = _worker_cached_meta(f, flen, first_off)
-            fasta = IndexedFasta(_ref) if _ref else None
-            getter = fasta.get if fasta else None
-            with _fs.open_input(f) as fh:
-                fh.seek(s)
-                data = fh.read(e - s)
-            pos = 0
-            while pos < len(data):
-                rows, pos = decode_container(data, pos, meta, getter, fields=_fields)
-                yield from rows
-
-        from .arrow_xfer import rows_to_dataframe
-
-        df = rows_to_dataframe(
-            spark, ranges, decode_range, out_cols, out_schema
+        tasks, task_rows = plan_read(
+            spark, path, reference_path, split_size, iv_rows, include_unplaced, fields
         )
+        df = to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
         if intervals is not None or include_unplaced:
             iv_frame = intervals_frame(spark, iv_rows) if iv_rows is not None else None
             df = residual_traversal(df, iv_frame, include_unplaced)
         if columns is not None:
             df = df.select(*schema_ordered(READS_COLUMNS, columns))
         return df
+
+
+def plan_read(
+    spark: SparkSession | None,
+    path: str,
+    reference_path: str | None = None,
+    split_size: int = 1 << 20,
+    iv_rows: list[tuple[str, int, int]] | None = None,
+    include_unplaced: bool = False,
+    fields: frozenset[str] | None = None,
+) -> tuple[list[tuple[str, int, int, int, int]], Callable[[tuple], Iterator[dict]]]:
+    """The CRAM read plan, ``(tasks, task_rows)`` for the read plane
+    (``arrow_xfer``): one ``(file, start, end, file length, first container
+    offset)`` task per run of whole containers, in file order;
+    ``task_rows(task)`` decodes the task's containers to rows with
+    ``fields``.  ``CramSource.read`` and ``format("cram")`` both read
+    through it (``spark=None`` plans serially).
+
+    Without ``iv_rows`` the splits are ``CramSource.plan_splits``'s, each
+    extended to the next split's start.  With them and a ``.crai`` beside a
+    file, only the containers whose entries overlap an interval (and, with
+    ``include_unplaced``, the unmapped ones) are read, in runs of about
+    ``split_size`` bytes; a plan that keeps no container seeds no task."""
+    from .cram_codec import IndexedFasta, decode_container, read_cram_meta_file
+    from .fsio import collect_metadata, list_data_files
+    from .headers import header_ref_and_rg_names
+
+    fs = get_fs(str(path))
+    files = list_data_files(fs, str(path))
+
+    def meta_for(f: str):
+        """(file, flen, ((start, end), ...), first_container_offset)."""
+        flen = fs.size(f)
+        crai = f + ".crai"
+        if iv_rows is not None and fs_exists(crai):
+            entries = read_crai_entries(crai)
+            offsets = sorted({off for _sid, _s, _sp, off in entries})
+            if offsets and offsets[-1] >= flen:
+                # same contract as plan_splits: an index entry past
+                # EOF means truncated data or a stale index — raise
+                # even if the pruned interval set would not touch the
+                # missing tail (the file as a whole is not trustworthy)
+                raise ValueError(
+                    f"{f}: .crai references a container at offset "
+                    f"{offsets[-1]} but the file ends at {flen} — "
+                    "truncated CRAM or stale index"
+                )
+            if not offsets:
+                return (f, flen, (), 0)
+            meta, _ = read_cram_meta_file(f)
+            ref_names, _rg = header_ref_and_rg_names(meta.header_text)
+            ref_ids = {n: i for i, n in enumerate(ref_names)}
+            want: set[int] = set()
+            for sid, s0, sp, off in entries:
+                if sid == -1:
+                    if include_unplaced:
+                        want.add(off)
+                elif sp > 0 and any(
+                    ref_ids.get(c) == sid and s0 <= hi and s0 + sp - 1 >= lo
+                    for c, lo, hi in iv_rows
+                ):
+                    want.add(off)
+            # contiguous runs of selected containers, cut at container
+            # starts once a task reaches ~split_size (record-aligned:
+            # every container body stays whole inside one task)
+            bounds = offsets + [flen]
+            rngs: list[list[int]] = []
+            for i, off in enumerate(offsets):
+                if off not in want:
+                    continue
+                end = bounds[i + 1]
+                if (
+                    rngs
+                    and rngs[-1][1] == off
+                    and rngs[-1][1] - rngs[-1][0] < split_size
+                ):
+                    rngs[-1][1] = end
+                else:
+                    rngs.append([off, end])
+            return (f, flen, tuple((s, e) for s, e in rngs), offsets[0])
+        chunks = CramSource().plan_splits(f, split_size, file_len=flen)
+        # extend each chunk to the next chunk's start (or EOF) so every
+        # container body is fully inside exactly one task's range
+        bounds = [c[0] for c in chunks] + [flen]
+        return (
+            f,
+            flen,
+            tuple((bounds[i], bounds[i + 1]) for i in range(len(chunks))),
+            bounds[0] if chunks else 0,
+        )
+
+    tasks: list[tuple[str, int, int, int, int]] = []
+    for f, flen, rngs, first_off in collect_metadata(spark, files, meta_for):
+        tasks.extend((f, s, e, flen, first_off) for s, e in rngs)
+    # single file: one driver meta read shipped via closure; directories
+    # read meta per task instead
+    single_meta = read_cram_meta_file(files[0])[0] if len(files) == 1 and tasks else None
+
+    def task_rows(task):
+        f, s, e, flen, first_off = task
+        meta = single_meta
+        if meta is None:
+            # directory read: per-file meta, cached per (reused) worker
+            # so a file's header container is parsed once per worker,
+            # not once per split
+            meta = _worker_cached_meta(f, flen, first_off)
+        getter = IndexedFasta(reference_path).get if reference_path else None
+        with fs.open_input(f) as fh:
+            fh.seek(s)
+            data = fh.read(e - s)
+        pos = 0
+        while pos < len(data):
+            rows, pos = decode_container(data, pos, meta, getter, fields=fields)
+            yield from rows
+
+    return tasks, task_rows
 
 
 class CramSink:

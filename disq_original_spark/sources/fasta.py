@@ -11,7 +11,7 @@ window-aligned task ranges sized by ``split_windows``.  Each task then
 RANGE-reads exactly its own byte span from the FASTA through fsio (so
 s3/gs/mock schemes work) and strips newlines positionally — no task reads a
 whole contig, no driver reads any sequence.  Rows cross to the JVM as Arrow
-batches (`arrow_xfer.rows_to_dataframe`).
+batches (`arrow_xfer.to_dataframe`).
 
 Coordinates are 1-based closed (htsjdk Locatable convention, like every
 other source here).  Without a ``.fai`` the reader falls back to
@@ -24,11 +24,19 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .arrow_xfer import rows_to_dataframe
+from .arrow_xfer import to_dataframe
 from .cram_codec import IndexedFasta
 
-FASTA_SCHEMA = "contig string, w_start long, w_end long, seq string"
+FASTA_SCHEMA = StructType(
+    [
+        StructField("contig", StringType()),
+        StructField("w_start", LongType()),
+        StructField("w_end", LongType()),
+        StructField("seq", StringType()),
+    ]
+)
 
 
 @dataclass(frozen=True)
@@ -143,6 +151,4 @@ class FastaSource:
                         in_memory=in_memory,
                     )
                 )
-        return rows_to_dataframe(
-            spark, tasks, _task_rows, ["contig", "w_start", "w_end", "seq"], FASTA_SCHEMA
-        )
+        return to_dataframe(spark, tasks, _task_rows, FASTA_SCHEMA)

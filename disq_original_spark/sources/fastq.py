@@ -156,7 +156,7 @@ class FastqSource:
         path: str,
         split_size: int = _DEFAULT_SPLIT_SIZE,
     ) -> DataFrame:
-        from .arrow_xfer import rows_to_dataframe
+        from .arrow_xfer import to_dataframe
         from .fsio import collect_metadata, list_data_files
 
         fs = get_fs(path)
@@ -180,9 +180,6 @@ class FastqSource:
                     (f, s, min(s + split_size, flen), False)
                     for s in range(0, flen, split_size)
                 )
-        if not ranges:
-            # every file is zero bytes: one empty task keeps the schema
-            ranges = [(files[0], 0, 0, False)]
 
         def read_range(task):
             import gzip as _gzip
@@ -199,7 +196,7 @@ class FastqSource:
                     for rec in _iter_records(fh, s, e, fs.size(p)):
                         yield dict(zip(FASTQ_COLUMNS, rec))
 
-        return rows_to_dataframe(spark, ranges, read_range, FASTQ_COLUMNS, _SCHEMA)
+        return to_dataframe(spark, ranges, read_range, _SCHEMA)
 
 
 def to_fastq_line() -> F.Column:

@@ -423,10 +423,11 @@ def list_data_files(fs: FileSystem, path: str) -> list[str]:
 
 
 def collect_metadata(spark, files: list[str], meta_for, threshold: int = METADATA_JOB_THRESHOLD):
-    """Run ``meta_for`` over every file — serially for a few, as a Spark
-    job for many — returning results in lexicographic file order.
+    """Run ``meta_for`` over every file — serially for a few or without a
+    session (``spark=None``: a DataSource planning worker has none), as a
+    Spark job for many — returning results in lexicographic file order.
     ``meta_for`` must return a tuple whose first element is the path."""
-    if len(files) < threshold:
+    if spark is None or len(files) < threshold:
         return [meta_for(f) for f in files]
     sc = spark.sparkContext
     n_parts = min(len(files), sc.defaultParallelism * 2)

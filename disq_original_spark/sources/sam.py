@@ -158,9 +158,9 @@ def validate_columns(columns, canonical: list[str], kind: str) -> None:
 def schema_ordered(canonical: list[str], wanted) -> list[str]:
     """Intersection of a canonical column list with ``wanted``, ALWAYS in
     canonical-schema order — never the caller's request order.  Every
-    pruned-source site must use this: arrow_xfer.rows_to_dataframe pairs
-    the column list and the filtered StructType by position, so a
-    caller-ordered selection would silently misalign Arrow columns."""
+    pruned source returns its columns in this order, the order of the
+    decoded frame (``arrow_xfer.pruned_schema``), so a pruned read has one
+    schema whatever order the caller lists ``columns`` in."""
     wanted = set(wanted)
     return [c for c in canonical if c in wanted]
 

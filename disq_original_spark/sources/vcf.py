@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..operators.interval import (
     collect_intervals,
@@ -40,6 +41,9 @@ def _null_if_dot(c: Column) -> Column:
 
 
 _GT_STRUCT = "struct<sample:string,gt:string,attrs:map<string,string>>"
+
+# the line readers' schema: one text line per row
+_LINES = StructType([StructField("value", StringType())])
 
 
 def _sql_map_entries_last_wins(entries: str) -> str:
@@ -273,8 +277,6 @@ def _read_bgzf_lines(
     sharded directory with per-shard indexes seeks in every shard; for many
     files the size+index metadata collection runs as a Spark job, keeping
     driver planning O(1) (same policy as BamSource)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from .fsio import collect_metadata, list_data_files
 
     fs = get_fs(path)
@@ -366,15 +368,9 @@ def _read_bgzf_lines(
                 for line in iter_lines_in_range(fh, s, e):
                     yield {"value": line.decode("utf-8", "replace")}
 
-    from .arrow_xfer import rows_to_dataframe
+    from .arrow_xfer import to_dataframe
 
-    return rows_to_dataframe(
-        spark,
-        tasks,
-        read_range,
-        ["value"],
-        StructType([StructField("value", StringType())]),
-    )
+    return to_dataframe(spark, tasks, read_range, _LINES)
 
 
 def _split_tasks(
@@ -436,8 +432,6 @@ def _read_text_lines(
     each remaining task to the ranges inside its split, so a task reads
     only the index blocks it owns, not its whole split
     (``tribble.iter_text_lines_in_range`` per range)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from .fsio import collect_metadata
 
     fs = get_fs(files[0])
@@ -482,15 +476,9 @@ def _read_text_lines(
                 for line in iter_text_lines_in_range(fh, s, e):
                     yield {"value": line.decode("utf-8", "replace")}
 
-    from .arrow_xfer import rows_to_dataframe
+    from .arrow_xfer import to_dataframe
 
-    return rows_to_dataframe(
-        spark,
-        tasks,
-        read_range,
-        ["value"],
-        StructType([StructField("value", StringType())]),
-    )
+    return to_dataframe(spark, tasks, read_range, _LINES)
 
 
 def to_vcf_line(sample_names: list[str]) -> Column:

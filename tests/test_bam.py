@@ -714,18 +714,21 @@ def test_datasource_columns_option(spark):
     )
 
 
-def test_datasource_columns_with_groupbyqname(spark):
-    """option('groupByQname') + a columns option that OMITS qname must
-    still decode the name internally for group ownership (and not leak it
-    into the output) — the facade-level twin of BamSource.read's guard."""
+def test_datasource_columns_with_groupbyqname(spark, tmp_path):
+    """A queryname-sorted BAM (qname group ownership, from its header) read
+    with a columns option that OMITS qname must still decode the name
+    internally for group ownership (and not leak it into the output) —
+    the facade-level twin of BamSource.read's guard."""
     from disq_original_spark.sources.datasource import register_datasources
 
+    from .twins import write_qname_sorted_bam
+
+    path = str(tmp_path / "q.bam")
+    write_qname_sorted_bam(spark, path)
     register_datasources(spark)
-    base = spark.read.format("bam").option("groupByQname", "true")
-    full = base.load(str(RES / "1.bam"))
-    pruned = (
-        base.option("columns", "flag, rname").load(str(RES / "1.bam"))
-    )
+    base = spark.read.format("bam").option("splitSize", 16 * 1024)
+    full = base.load(path)
+    pruned = base.option("columns", "flag, rname").load(path)
     assert pruned.columns == ["flag", "rname"]
     assert sorted(map(str, pruned.collect())) == sorted(
         map(str, full.select("flag", "rname").collect())

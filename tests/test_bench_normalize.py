@@ -187,3 +187,14 @@ def test_final_line_degrades_instead_of_exceeding():
     out = json.loads(line)
     assert "norm_worst" not in out  # shed first
     assert set(out["queries"]) == set(big)  # contract fields survive
+
+
+def test_io_benchmarks_fail_loudly_without_fixtures(tmp_path, monkeypatch):
+    """A missing fixture directory raises, naming it, instead of silently
+    dropping every io entry from the line."""
+    import pytest
+
+    missing = tmp_path / "no-such-resources"
+    monkeypatch.setattr(bench, "RES", missing)
+    with pytest.raises(FileNotFoundError, match=str(missing)):
+        bench._io_benchmarks(None)

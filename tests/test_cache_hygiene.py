@@ -248,3 +248,51 @@ def test_eager_persist_registers_before_materializing(spark):
         materialize(df, -1, eager=True)  # unknown size: the persist branch
     assert tracked_count() == 1  # registered despite the failed count()
     assert release_persists() == 1
+
+
+# The one read plane (sources/arrow_xfer.py) seeds every Python-decoded
+# read; the other sites that start a Python job or build a frame from
+# driver data are not reads: the sinks' write commit, the many-file
+# metadata job, and CRAM's driver-local container listing.
+SEEDING_CALLS = ("parallelize", "mapInPandas", "mapInArrow", "createDataFrame")
+SEEDING_SITES = {
+    "merger.py": {"write_parts"},
+    "fsio.py": {"collect_metadata"},
+    "cram.py": {"CramSource.containers"},
+}
+
+
+def _seeding_offenders(root) -> list[str]:
+    import ast
+
+    offenders: list[str] = []
+    for f in sorted(root.glob("*.py")):
+        if f.name == "arrow_xfer.py":
+            continue
+        allowed = SEEDING_SITES.get(f.name, set())
+
+        def visit(node, scope: str) -> None:
+            for child in ast.iter_child_nodes(node):
+                inner = scope
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    inner = f"{scope}.{child.name}" if scope else child.name
+                if isinstance(child, ast.Attribute) and child.attr in SEEDING_CALLS:
+                    site = next((s for s in allowed if scope == s or scope.startswith(s + ".")), None)
+                    if site is None:
+                        offenders.append(f"{f.name}:{child.lineno} {scope or '<module>'} .{child.attr}")
+                visit(child, inner)
+
+        visit(ast.parse(f.read_text()), "")
+    return offenders
+
+
+def test_sources_seed_reads_only_through_the_read_plane():
+    """Under ``sources/``, only ``arrow_xfer.py`` seeds read tasks
+    (``parallelize``, ``mapInPandas``, ``mapInArrow``, ``createDataFrame``);
+    a second seeder is a second transfer plane to keep in step."""
+    import pathlib
+
+    import disq_original_spark as pkg
+
+    offenders = _seeding_offenders(pathlib.Path(pkg.__file__).parent / "sources")
+    assert offenders == [], offenders

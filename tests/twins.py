@@ -53,6 +53,16 @@ def reads_header() -> SamHeader:
     )
 
 
+def write_qname_sorted_bam(spark, path: str) -> None:
+    """``bam_1_reads`` sorted by name (ties by flag) as a BAM whose header
+    says ``SO:queryname``, written by ``BamSink``."""
+    from disq_original_spark.sources.bam import BamSink
+
+    reads = twin("bam_1_reads").sort_values(["qname", "flag"], kind="stable")
+    header = SamHeader.parse(reads_header().text.replace("SO:coordinate", "SO:queryname"))
+    BamSink().write(frame(spark, reads_rows(reads), READS_SCHEMA).coalesce(1), header, path)
+
+
 def cram_reads(reads, n: int = 300):
     """The first ``n`` mapped reads moved onto contig ``c1`` of
     :func:`seeded_fasta` (mismatches against it are stored, not lost)."""
