@@ -81,14 +81,18 @@ def materialize(df: DataFrame, source_bytes: int, eager: bool = False) -> DataFr
     number for where latency-dominated ends and throughput-dominated
     begins.
     """
-    if 0 <= source_bytes < small_input_threshold():
+    gate = small_input_threshold()
+    below = 0 <= source_bytes < gate
+    mode = "checkpoint" if below else "eager" if eager else "persist"
+    _LOG.debug("materialize: %s (source_bytes=%d, gate=%d)", mode, source_bytes, gate)
+    if below:
         return lineage_cut(df)
     df = df.persist()
     # register BEFORE materializing: if count() dies mid-build (executor
     # failure, missing fixture) the partially-cached frame must still be
     # releasable, or the sweep-long storage leak this module exists to
     # prevent comes back through the error path (r6 review finding)
-    _TRACKED.append((df, "eager" if eager else "persist"))
+    _TRACKED.append((df, mode))
     if eager:
         df.count()
     return df

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming.events import windowed_counts
-from ..tables import normalize_event_ts
+from ..tables import normalize_event_ts, parquet_schema
 from .registry import query
 
 def _drain_to_memory(
@@ -78,7 +78,7 @@ def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     """readStream over the events table with the ts physical-type handling
     shared with tables.load_table (normalize_event_ts)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf}/events.parquet")
     # FileStreamSource insists the source path be a directory; a glob that
     # resolves to the single file satisfies it (basePath = parent).
     return normalize_event_ts(spark.readStream.schema(schema).parquet(f"{sf}/events.*"))
@@ -401,7 +401,7 @@ def st09(spark: SparkSession, sf: str) -> DataFrame:
             os.utime(f, (1_000_000 + 1_000 * i,) * 2)
 
     try:
-        schema = spark.read.parquet(base + "/b1").schema
+        schema = parquet_schema(spark, base + "/b1")
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")

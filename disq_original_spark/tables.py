@@ -1,15 +1,41 @@
 """Loaders for the driver-generated TPC-H-ish testdata (TESTDATA.md).
 
-Tables are plain parquet; ``spark.read.parquet`` gives Catalyst full pushdown
-(PushedFilters + ReadSchema pruning) — the tests in ``tests/test_plans.py``
-assert that.
+Tables are plain parquet, read through ``DataFrameReader.parquet`` so
+Catalyst keeps full pushdown (PushedFilters + ReadSchema pruning); the tests
+in ``tests/test_plans.py`` assert that.
+
+Load contract (:func:`load_table`, :func:`parquet_schema`): a read without a
+schema makes Spark infer one, and for parquet that inference is a one-task
+Spark job reading the footer.  Every table's record type is fixed, so this
+module infers each file's schema once per process and hands Spark its own
+answer on every later load:
+
+- **What is cached**: the ``StructType`` Spark's own first read of the file
+  returned, never one derived from a pyarrow footer, so the NTZ inference and
+  the nanos-as-long mapping stay exactly Spark's.  A cached load is the same
+  reader call with ``.schema(cached)``, and it runs no job.
+- **Key**: the path, the file's ``st_size`` and ``st_mtime_ns``, and the
+  session values of the SQL confs the parquet schema converter reads
+  (:data:`_SCHEMA_CONFS` and ``nanosAsLong``).  A rewritten file or a
+  toggled conf is inferred again, with one exception: Spark refuses a
+  TIMESTAMP(NANOS) column unless ``nanosAsLong`` is on, and the conf changes
+  no other type, so a schema inferred with it off still holds once the
+  ``events`` loader turns it on.  One entry is kept per path and replaced
+  when its key changes, so the cache is bounded by the number of distinct
+  files.
+- **Fallback**: a path that is not a regular local file (a directory, a
+  non-local store, anything ``os.stat`` cannot read) is inferred on every
+  load, exactly as a plain ``spark.read.parquet`` would.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -27,14 +53,53 @@ TABLES = (
 # Small dimension tables that should always be broadcast in joins.
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
+# The SQL confs Spark's parquet-to-Spark schema converter reads: a change to
+# any of them changes the inferred type of some column.
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# path -> (key, nanosAsLong at inference, Spark's inferred schema of the file)
+_SCHEMAS: dict[str, tuple[tuple, str, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, passing the schema Spark inferred for
+    the same file, size, mtime and schema confs earlier in this process."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (st.st_size, st.st_mtime_ns, *(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    nanos = spark.conf.get(_NANOS_AS_LONG)
+    hit = _SCHEMAS.get(path)
+    # a schema inferred with nanosAsLong off holds with it on (see above)
+    if hit is not None and hit[0] == key and hit[1] in (nanos, "false"):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, nanos, df.schema)
+    return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's schema of a parquet path, inferred once per file (see the
+    module docstring for the key and the fallback)."""
+    return _read_parquet(spark, path).schema
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        return normalize_event_ts(_read_parquet(spark, path))
+    return _read_parquet(spark, path)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -73,8 +138,6 @@ def small_input_threshold() -> int:
     the gate every scale-dependent decision keys on (``small_input``,
     ``cache.materialize``) so the knob's name and default can never
     silently diverge between callers."""
-    import os
-
     return int(
         os.environ.get("SPARK_GRAFT_SMALL_INPUT_BYTES", str(256 * 1024 * 1024))
     )
@@ -85,8 +148,6 @@ def path_bytes(path: str) -> int:
     -1 when the path cannot be stat'd locally (non-local store) — callers
     treat unknown as "large" so every scale-gated decision fails safe in
     the direction of cluster scale."""
-    import os
-
     try:
         return os.path.getsize(path)
     except OSError:

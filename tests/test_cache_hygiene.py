@@ -217,6 +217,59 @@ def test_no_raw_materialization_in_query_paths():
     assert offenders == [], offenders
 
 
+def test_no_raw_parquet_reads_in_query_paths():
+    """Query builders and operators load parquet through ``tables``
+    (``load_table``, ``parquet_schema``): a reader call without a schema
+    makes Spark run a one-task schema-inference job at build, once per
+    load, while ``tables`` infers each file once per process.  Any
+    ``.parquet(...)`` call on a ``.read`` chain is an offender, with or
+    without ``.schema(...)``; ``readStream`` and ``write`` are not reads."""
+    import ast
+
+    def on_read_chain(node) -> bool:
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                if node.attr == "read":
+                    return True
+                node = node.value
+            else:
+                node = node.func
+        return False
+
+    offenders: list[str] = []
+    for where, tree in _query_path_modules():
+        if not where.startswith(("queries/", "operators/")):
+            continue
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and on_read_chain(node.func.value)
+            ):
+                offenders.append(f"{where}:{node.lineno} .read...parquet()")
+    assert offenders == [], offenders
+
+
+def test_materialize_logs_the_branch_taken(spark, monkeypatch, caplog):
+    """Each ``materialize`` call logs which side of the scale gate it took,
+    with the source size and the gate, so a run at any scale can say why a
+    frame was checkpointed or persisted."""
+    import logging
+
+    caplog.set_level(logging.DEBUG, logger="disq_original_spark.cache")
+    df = spark.range(4)
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_INPUT_BYTES", raising=False)
+    materialize(df, 1024)
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_INPUT_BYTES", "0")
+    materialize(df, 1024)
+    lines = [r.getMessage() for r in caplog.records if r.name == "disq_original_spark.cache"]
+    assert lines == [
+        f"materialize: checkpoint (source_bytes=1024, gate={256 * 1024 * 1024})",
+        "materialize: persist (source_bytes=1024, gate=0)",
+    ]
+
+
 def test_release_frees_checkpoint_blocks(spark, sf_dir, monkeypatch):
     """Below the gate materialize lazily localCheckpoints; those blocks
     live OUTSIDE the SQL cache, so release_persists must free them
