@@ -20,6 +20,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from disq_original_spark.cache import release_persists  # noqa: E402
 from disq_original_spark.queries import QUERIES  # noqa: E402
 from disq_original_spark.session import get_spark  # noqa: E402
+from disq_original_spark.tables import load_table  # noqa: E402
 
 # Headline set: one per operator family — scans/joins/aggs/windows/sets/
 # strings/intervals + the training-data ops.
@@ -570,7 +571,7 @@ def main() -> None:
     # once (a long-lived cluster runs with warm workers; the bench measures
     # steady-state, not daemon spawn).
     spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    warm = load_table(spark, sf_dir, "nation")
     warm.groupBy("n_regionkey").count().write.format("noop").mode("overwrite").save()
     n_workers = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.range(0, n_workers * 2, 1, n_workers).mapInPandas(

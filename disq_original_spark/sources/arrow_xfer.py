@@ -23,9 +23,11 @@ The ``format("bam")`` / ``format("cram")`` DataSource facade
 (``datasource.py``) runs the same plan and yields the same batches from its
 ``read()``, but Spark plans a Python DataSource in extra Python workers
 (schema, then partitions) before the first task.  A count over 4 tasks
-with no rows takes 0.91 s through a facade and 0.48 s through
-``to_dataframe`` (medians of 11, ``local[4]`` on a 4-core VM), so the
-storage API (``ReadsStorage``, ``BamSource.read``) is the fast path.
+with no rows takes 0.70 s through a facade and 0.27 s through
+``to_dataframe`` on a ``session.get_spark`` session (medians of 11,
+``local[4]`` on a 4-core VM; 0.90 s and 0.46 s under PySpark's stock
+worker daemon, which re-reads its zip directories before every task), so
+the storage API (``ReadsStorage``, ``BamSource.read``) is the fast path.
 """
 
 from __future__ import annotations

@@ -251,6 +251,30 @@ def test_no_raw_parquet_reads_in_query_paths():
     assert offenders == [], offenders
 
 
+def test_sessions_come_only_from_get_spark():
+    """Every session the repo builds (tests, ``bench.py``, ``tools/``,
+    ``perfbench/``) comes from ``session.get_spark``, so each runs its
+    Python tasks under the ``pydaemon`` worker daemon and the shared confs.
+    A ``SparkSession.builder`` outside ``session.py`` is an offender."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    offenders: list[str] = []
+    for f in sorted(repo.rglob("*.py")):
+        rel = f.relative_to(repo)
+        if rel.parts[0].startswith(".") or rel == pathlib.Path("disq_original_spark/session.py"):
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "builder"
+                and "SparkSession" in (getattr(node.value, "id", None), getattr(node.value, "attr", None))
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == [], offenders
+
+
 def test_materialize_logs_the_branch_taken(spark, monkeypatch, caplog):
     """Each ``materialize`` call logs which side of the scale gate it took,
     with the source size and the gate, so a run at any scale can say why a
