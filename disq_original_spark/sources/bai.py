@@ -1,12 +1,11 @@
-"""BAI (BAM index) reader/writer and interval→byte-range pushdown.
+"""BAI (BAM index) reader/writer.
 
 The reference's interval pushdown asks the BAM index for the file span of
 each query and intersects it with the partition's chunk
 (`sam/AbstractBinarySamSource.java:96-113`, `formats/BoundedTraversalUtil.
-java:10-53`).  This module supplies that: ``voffset_ranges_for_intervals``
-maps (contig, start, end) intervals to merged virtual-offset ranges via the
-BAI's R-tree bins + linear index, and the BAM source decodes only the
-intersection of its chunk with those ranges.
+java:10-53`).  ``tabix.index_chunks`` maps (contig, start, end) intervals
+to virtual-offset chunks via the BAI's R-tree bins + linear index, and the
+BAM source decodes only the intersection of its chunk with those chunks.
 
 No ``.bai`` fixture ships with the reference, so ``create_bai`` writes the
 index too (same single-pass shape as ``create_sbi``) — the reader is
@@ -21,7 +20,7 @@ import struct
 from dataclasses import dataclass
 from pathlib import Path
 
-from .tabix import IndexAccumulator
+from .tabix import IndexAccumulator, parse_bins_linear
 
 BAI_MAGIC = b"BAI\x01"
 
@@ -41,46 +40,11 @@ def parse_bai(path: str | Path) -> BaiIndex:
     if data[:4] != BAI_MAGIC:
         raise ValueError(f"not a BAI index: magic {data[:4]!r}")
     (n_ref,) = struct.unpack_from("<i", data, 4)
-    pos = 8
-    bins_all, linear_all = [], []
-    for _ in range(n_ref):
-        (n_bin,) = struct.unpack_from("<i", data, pos)
-        pos += 4
-        bins: dict[int, list[tuple[int, int]]] = {}
-        for _ in range(n_bin):
-            bin_id, n_chunk = struct.unpack_from("<Ii", data, pos)
-            pos += 8
-            chunks = []
-            for _ in range(n_chunk):
-                u, v = struct.unpack_from("<QQ", data, pos)
-                pos += 16
-                chunks.append((u, v))
-            bins[bin_id] = chunks
-        (n_intv,) = struct.unpack_from("<i", data, pos)
-        pos += 4
-        linear = list(struct.unpack_from(f"<{n_intv}Q", data, pos))
-        pos += 8 * n_intv
-        bins_all.append(bins)
-        linear_all.append(linear)
+    bins, linear, pos = parse_bins_linear(data, 8, n_ref)
     n_no_coor = None
     if pos + 8 <= len(data):
         (n_no_coor,) = struct.unpack_from("<Q", data, pos)
-    return BaiIndex(bins_all, linear_all, n_no_coor)
-
-
-def voffset_ranges_for_intervals(
-    idx: BaiIndex, intervals: list[tuple[int, int, int]]
-) -> list[tuple[int, int]]:
-    """Merged virtual-offset ranges that contain every record possibly
-    overlapping any (ref_id, start, end) interval (1-based inclusive)."""
-    from .tabix import bin_query_chunks, merge_ranges
-
-    raw: list[tuple[int, int]] = []
-    for ref_id, start, end in intervals:
-        if not 0 <= ref_id < len(idx.bins):
-            continue
-        raw.extend(bin_query_chunks(idx.bins[ref_id], idx.linear[ref_id], start, end))
-    return merge_ranges(raw)
+    return BaiIndex(bins, linear, n_no_coor)
 
 
 class BaiAccumulator(IndexAccumulator):

@@ -68,7 +68,7 @@ from .fsio import (
 from .headers import SamHeader, read_bam_header
 from .merger import PartFormat, commit, commit_sharded, part_bases
 from .sam import READS_COLUMNS, schema_ordered, validate_columns
-from .tabix import clip_ranges
+from .tabix import clip_ranges, index_chunks, merge_ranges
 
 READS_SCHEMA = StructType(
     [
@@ -416,8 +416,7 @@ def plan_read(
     if iv_rows is not None and not include_unplaced:
         # .bai pushdown: unplaced reads sit outside every bin, so
         # include_unplaced scans the whole file
-        name_to_id = {nm: i for i, nm in enumerate(ref_names)}
-        ivs = [(name_to_id[c], s, e) for c, s, e in iv_rows if c in name_to_id]
+        ivs = (iv_rows, ref_names)
     by_qname = header.sort_order == "queryname"
     if by_qname and fields is not None:
         fields = fields | {"qname"}
@@ -500,72 +499,25 @@ def _collect_file_metadata(
     files: list[str],
     fs: FileSystem,
     use_sbi: bool,
-    ivs: list[tuple[int, int, int]] | None,
+    ivs: tuple[list[tuple[str, int, int]], list[str]] | None,
     job_threshold: int = METADATA_JOB_THRESHOLD,
 ) -> list[tuple[str, int, tuple[int, ...] | None, list[tuple[int, int]] | None]]:
     """(path, size, sbi_offsets, bai_ranges) per file — serially for a few
     files, via a Spark job for many (``fsio.collect_metadata``; a 100 TB
     directory has tens of thousands of shards — minutes of serial driver IO
-    otherwise).  ``ivs`` are (ref_id, start, end) intervals for `.bai`
-    interval pushdown (reference `AbstractBinarySamSource.java:96-113`);
-    disabled when None."""
+    otherwise).  ``ivs`` is ``((contig, start, end) rows, header reference
+    names)`` for ``.bai``/``.csi`` interval pushdown (reference
+    `AbstractBinarySamSource.java:96-113`, ``tabix.index_chunks``, which
+    also refuses a stale index); disabled when None."""
 
     def meta_for(f: str):
         flen = fs.size(f)
         sbi_path = f + ".sbi"
         sbi = SbiIndex.load(sbi_path) if use_sbi and fs.exists(sbi_path) else None
-        bai_ranges = None
-        max_coff = None
-        if ivs is not None and fs.exists(f + ".bai"):
-            from .bai import parse_bai, voffset_ranges_for_intervals
-
-            idx = parse_bai(f + ".bai")
-            bai_ranges = voffset_ranges_for_intervals(idx, ivs)
-            # whole-index max (bin 37450 excluded: the SAM-spec pseudo-bin
-            # carries mapped/unmapped COUNTS as fake chunk values)
-            max_coff = max(
-                (
-                    v >> 16
-                    for b in idx.bins
-                    for bid, ch in b.items()
-                    if bid != 37450
-                    for _u, v in ch
-                ),
-                default=None,
-            )
-        elif ivs is not None and fs.exists(f + ".csi"):
-            # CSI fallback: same R-tree query with parameterized binning —
-            # contigs >2^29 bp can only ship a .csi
-            from .csi import parse_csi
-            from .csi import voffset_ranges_for_intervals as csi_ranges
-
-            idx = parse_csi(f + ".csi")
-            bai_ranges = csi_ranges(idx, ivs)
-            max_real_bin = ((1 << (3 * (idx.depth + 1))) - 1) // 7
-            max_coff = max(
-                (
-                    v >> 16
-                    for b in idx.bins
-                    for bid, (_loff, ch) in b.items()
-                    if bid <= max_real_bin
-                    for _u, v in ch
-                ),
-                default=None,
-            )
-        if max_coff is not None and max_coff > flen:
-            # records_for_split clips every index range to its split's
-            # [vstart, vend), and splits tile [0, flen) — so a range
-            # pointing past end-of-file would be silently dropped and the
-            # requested intervals' missing tail would vanish from the
-            # result.  Same refuse-stale-index contract as the CRAM
-            # .crai and VCF tabix paths: raise at planning time, over the
-            # WHOLE index (the index is authoritative about what the file
-            # must contain, regardless of which intervals this query asks
-            # for).
-            raise ValueError(
-                f"{f}: index references compressed offset {max_coff} past "
-                f"end-of-file ({flen}) — truncated BAM or stale index"
-            )
+        chunks = None if ivs is None else index_chunks(fs, f, flen, *ivs)
+        # records_for_split decodes each range on its own: adjacent chunks
+        # read as one
+        bai_ranges = None if chunks is None else merge_ranges(chunks)
         if (
             sbi is not None
             and sbi.offsets
@@ -577,8 +529,9 @@ def _collect_file_metadata(
                 )
             )
         ):
-            # same contract for the .sbi split index: its last record
-            # voffset must lie inside the file.  The end SENTINEL may sit
+            # index_chunks' stale-index contract for the .sbi split index:
+            # its last record voffset must lie inside the file.  The end
+            # SENTINEL may sit
             # exactly at flen<<16 — htsjdk records BlockCompressedInputStream's
             # position at true EOF, which for a BAM lacking the optional
             # 28-byte EOF terminator block is exactly (flen, 0); samtools

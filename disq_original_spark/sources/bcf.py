@@ -38,6 +38,7 @@ parser produced survives bit-for-bit.
 Reads are splittable WHEN a ``.csi`` sits beside the file (the sink
 writes one at write time with ``write_index=True``, folding the parts'
 index metadata exactly like the .bai/.tbi/.crai paths): the index's chunk list
+(``tabix.index_chunks``, which refuses an index pointing past end-of-file)
 supplies record-aligned virtual-offset ranges grouped into tasks, and
 interval queries prune to overlapping chunks before any decompression.
 Without an index a file is one task — BCF records carry no in-stream
@@ -885,43 +886,19 @@ class BcfSource:
 
         def meta_for(f: str):
             """(file, csi-task-chunk-groups | None) — None = whole file."""
-            if not fs.exists(f + ".csi"):
-                return (f, None)
-            from .csi import csi_query_chunks, parse_csi
+            from .tabix import index_chunks
 
-            idx = parse_csi(f + ".csi")
-            hdr = self.read_header(f)
-            contig_idx = {c: i for i, c in enumerate(BcfContext(hdr).contigs)}
-            chunks: list[tuple[int, int]] = []
-            if intervals is None:
-                for bins in idx.bins:
-                    for _b, (_lo, cl) in bins.items():
-                        chunks.extend(cl)
-            else:
-                for name, start, end in intervals:
-                    r = contig_idx.get(name, -1)
-                    if 0 <= r < len(idx.bins):
-                        chunks.extend(
-                            csi_query_chunks(
-                                idx.bins[r], start, end, idx.min_shift, idx.depth
-                            )
-                        )
-            chunks.sort()
-            # merge only OVERLAPPING ranges (interval queries can emit
-            # duplicates across bins); ADJACENT chunks stay separate —
-            # each chunk start is a record boundary, i.e. a legal task cut
-            merged: list[list[int]] = []
-            for u, v in chunks:
-                if merged and u < merged[-1][1]:
-                    merged[-1][1] = max(merged[-1][1], v)
-                else:
-                    merged.append([u, v])
+            ref_names = None if intervals is None else BcfContext(self.read_header(f)).contigs
+            chunks = index_chunks(fs, f, fs.size(f), intervals, ref_names, (".csi",))
+            if chunks is None:
+                return (f, None)
             # group into ~split_size tasks by compressed extent, cutting
-            # at chunk (= record) boundaries
+            # at chunk starts (record boundaries: only overlapping chunks
+            # merge)
             groups: list[list[tuple[int, int]]] = []
             cur: list[tuple[int, int]] = []
             cur_start = None
-            for u, v in merged:
+            for u, v in chunks:
                 if cur_start is None:
                     cur_start = u >> 16
                 cur.append((u, v))

@@ -207,6 +207,24 @@ def read_crai_offsets(crai_path: str | Path) -> list[int]:
     return sorted({off for _sid, _s, _sp, off in read_crai_entries(crai_path)})
 
 
+def _crai_within(path: str, flen: int) -> tuple[list[tuple[int, int, int, int]], list[int]]:
+    """``(entries, sorted container offsets)`` of ``path``'s ``.crai``,
+    refusing an index with an entry at or past end-of-file: the planners
+    tile only ``[0, flen)`` and would drop such entries silently, so the
+    file's tail would vanish with no error.  Checked over the whole index,
+    whichever containers a read keeps — the index is authoritative about
+    what the file must contain."""
+    entries = read_crai_entries(path + ".crai")
+    offsets = sorted({off for _sid, _s, _sp, off in entries})
+    if offsets and offsets[-1] >= flen:
+        raise ValueError(
+            f"{path}: .crai references a container at offset "
+            f"{offsets[-1]} but the file ends at {flen} — "
+            "truncated CRAM or stale index"
+        )
+    return entries, offsets
+
+
 def crai_entries_for_reads(reads, ref_index: dict[str, int]) -> list[tuple[int, int, int]]:
     """``(seq_id, aln_start, aln_span)`` CRAI triples for the reads of one
     (multi-reference) slice — one entry per distinct reference like htsjdk's
@@ -320,27 +338,13 @@ class CramSource:
     ) -> list[tuple[int, int]]:
         """``file_len`` lets directory planners that already stat'd the file
         skip a second size round-trip (one HEAD per shard on object stores)."""
-        crai = path + ".crai"
-        if fs_exists(crai):
-            offsets = read_crai_offsets(crai)
-            if file_len is None:
-                file_len = fs_size(path)
-            if offsets and max(offsets) >= file_len:
-                # snap_splits_to_containers iterates [0, file_len) and
-                # would silently DROP index entries past EOF — a
-                # truncated CRAM with an intact .crai would lose its
-                # tail with no error (the index is authoritative about
-                # what the file must contain)
-                raise ValueError(
-                    f"{path}: .crai references a container at offset "
-                    f"{max(offsets)} but the file ends at {file_len} — "
-                    "truncated CRAM or stale index"
-                )
+        if file_len is None:
+            file_len = fs_size(path)
+        if fs_exists(path + ".crai"):
+            _entries, offsets = _crai_within(path, file_len)
         else:
             with fs_open(path) as fh:
                 offsets = [c.offset for c in enumerate_containers(fh) if not c.is_eof and c.n_records > 0]
-            if file_len is None:
-                file_len = fs_size(path)
         return snap_splits_to_containers(offsets, file_len, split_size)
 
     def read(
@@ -443,20 +447,8 @@ def plan_read(
     def meta_for(f: str):
         """(file, flen, ((start, end), ...), first_container_offset)."""
         flen = fs.size(f)
-        crai = f + ".crai"
-        if iv_rows is not None and fs_exists(crai):
-            entries = read_crai_entries(crai)
-            offsets = sorted({off for _sid, _s, _sp, off in entries})
-            if offsets and offsets[-1] >= flen:
-                # same contract as plan_splits: an index entry past
-                # EOF means truncated data or a stale index — raise
-                # even if the pruned interval set would not touch the
-                # missing tail (the file as a whole is not trustworthy)
-                raise ValueError(
-                    f"{f}: .crai references a container at offset "
-                    f"{offsets[-1]} but the file ends at {flen} — "
-                    "truncated CRAM or stale index"
-                )
+        if iv_rows is not None and fs_exists(f + ".crai"):
+            entries, offsets = _crai_within(f, flen)
             if not offsets:
                 return (f, flen, (), 0)
             meta, _ = read_cram_meta_file(f)

@@ -6,9 +6,10 @@ classic scheme caps at 512 Mbp, which many plant/amphibian assemblies
 exceed.  htsjdk transparently opens ``.csi`` for both BAM and
 tabix-flavored text files, so the reference's index-driven query path
 (`sam/AbstractBinarySamSource.java:92-113`) works on CSI-indexed inputs;
-this module gives our sources the same reach: BAM interval pushdown and
-BGZF-VCF split pruning fall back to ``path + ".csi"`` when no ``.bai`` /
-``.tbi`` exists.
+this module gives our sources the same reach: ``tabix.index_chunks``,
+the lookup behind BAM interval pushdown and BGZF-VCF split pruning, falls
+back to ``path + ".csi"`` when no ``.bai`` / ``.tbi`` exists, and BCF
+reads plan from the ``.csi`` alone.
 
 Layout (CSI spec; the file is itself BGZF/gzip-compressed): magic
 ``CSI\\x01``, ``min_shift`` i32, ``depth`` i32, ``l_aux`` i32 + aux bytes,
@@ -60,12 +61,6 @@ class CsiIndex:
     # per ref: {bin: (loffset, [(start_voffset, end_voffset), ...])}
     bins: list[dict[int, tuple[int, list[tuple[int, int]]]]]
     names: list[str] = field(default_factory=list)  # tabix-flavored aux only
-
-    def ref_index(self, name: str) -> int:
-        try:
-            return self.names.index(name)
-        except ValueError:
-            return -1
 
 
 def _parse_tabix_aux(aux: bytes) -> list[str]:
@@ -150,46 +145,6 @@ def csi_query_chunks(
             if v > min_voff:
                 out.append((max(u, min_voff), v))
     return out
-
-
-def voffset_ranges_for_intervals(
-    idx: CsiIndex, intervals: list[tuple[int, int, int]]
-) -> list[tuple[int, int]]:
-    """Merged virtual-offset ranges for (ref_id, start, end) intervals —
-    drop-in for :func:`bai.voffset_ranges_for_intervals` when the BAM ships
-    a ``.csi`` instead of a ``.bai``."""
-    from .tabix import merge_ranges
-
-    raw: list[tuple[int, int]] = []
-    for ref_id, start, end in intervals:
-        if not 0 <= ref_id < len(idx.bins):
-            continue
-        raw.extend(
-            csi_query_chunks(idx.bins[ref_id], start, end, idx.min_shift, idx.depth)
-        )
-    return merge_ranges(raw)
-
-
-def file_ranges_for_intervals(
-    idx: CsiIndex, intervals: list[tuple[str, int, int]]
-) -> list[tuple[int, int]]:
-    """Merged compressed-byte ranges for (contig, start, end) intervals —
-    drop-in for :func:`tabix.file_ranges_for_intervals` when the VCF ships
-    a tabix-flavored ``.csi`` instead of a ``.tbi``."""
-    from .tabix import merge_ranges
-
-    raw: list[tuple[int, int]] = []
-    for contig, start, end in intervals:
-        ri = idx.ref_index(contig)
-        if ri < 0:
-            continue
-        raw.extend(
-            ((u >> 16), (v >> 16) + 1)
-            for u, v in csi_query_chunks(
-                idx.bins[ri], start, end, idx.min_shift, idx.depth
-            )
-        )
-    return merge_ranges(raw)
 
 
 class CsiAccumulator(IndexAccumulator):

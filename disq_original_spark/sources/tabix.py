@@ -1,14 +1,17 @@
-"""Tabix (.tbi) index reader and split pruning.
+"""Tabix (.tbi) index reader, and the one index lookup of every
+BGZF-indexed source.
 
-The reference prunes whole Hadoop splits that no query interval overlaps by
-consulting the Tabix/Tribble index at ``getSplits`` time
-(`tribble/TribbleIndexIntervalFilteringTextInputFormat.java:20-74`,
-`vcf/VcfSource.java:143-168`).  This module is the Spark-side equivalent:
-``file_ranges_for_intervals`` maps query intervals to compressed-byte ranges
-via the index's R-tree bins, and the VCF source drops byte-range splits that
-intersect none of them — partition pruning, before any task launches.  It
-also goes one step past the reference: ``clip_ranges`` cuts the ranges to
-each surviving split, and the task decodes only those, not its whole split.
+The reference pushes interval predicates down to the index at
+``getSplits`` time: the ``.bai`` for BAM
+(`sam/AbstractBinarySamSource.java:96-113`) and tabix for VCF
+(`vcf/VcfSource.java:143-168`).  ``index_chunks`` is the Spark-side
+equivalent for BAM, VCF and BCF alike: it opens the file's ``.bai``,
+``.tbi`` or ``.csi``, refuses an index that points past end-of-file, and
+maps query intervals to virtual-offset chunks via the R-tree bins.  The
+sources drop byte-range splits no chunk reaches — partition pruning,
+before any task launches — and go one step past the reference:
+``clip_ranges`` cuts the chunks to each surviving split, and the task
+decodes only those, not its whole split.
 
 Format: SAM/tabix spec §5 (the .tbi layout is the BAI layout plus column
 metadata); the file is itself BGZF-compressed.
@@ -41,12 +44,6 @@ class TabixIndex:
     # per reference: 16kb-window linear index of virtual offsets
     linear: list[list[int]]
 
-    def ref_index(self, name: str) -> int:
-        try:
-            return self.names.index(name)
-        except ValueError:
-            return -1
-
 
 def reg2bins(beg: int, end: int) -> list[int]:
     """All bins overlapping [beg, end) (0-based), BAI/tabix binning scheme."""
@@ -68,7 +65,13 @@ def parse_tabix(path: str | Path) -> TabixIndex:
     )
     pos = 4 + 32
     names = [n.decode() for n in data[pos : pos + l_nm].split(b"\x00")[:-1]]
-    pos += l_nm
+    bins, linear, _ = parse_bins_linear(data, pos + l_nm, n_ref)
+    return TabixIndex(fmt, col_seq, col_beg, col_end, chr(meta), skip, names, bins, linear)
+
+
+def parse_bins_linear(data: bytes, pos: int, n_ref: int):
+    """The per-reference bins and linear index of the BAI/tabix layout
+    (SAM spec §5), read from ``pos``: ``(bins, linear, end position)``."""
     bins: list[dict[int, list[tuple[int, int]]]] = []
     linear: list[list[int]] = []
     for _ in range(n_ref):
@@ -90,25 +93,91 @@ def parse_tabix(path: str | Path) -> TabixIndex:
         pos += 8 * n_intv
         bins.append(b)
         linear.append(ioff)
-    return TabixIndex(fmt, col_seq, col_beg, col_end, chr(meta), skip, names, bins, linear)
+    return bins, linear, pos
 
 
-def file_ranges_for_intervals(
-    idx: TabixIndex, intervals: list[tuple[str, int, int]]
-) -> list[tuple[int, int]]:
-    """Merged compressed-byte ranges containing every record that may overlap
-    any (contig, start, end) interval (1-based inclusive, like the
-    reference's htsjdk Interval)."""
-    raw: list[tuple[int, int]] = []
-    for contig, start, end in intervals:
-        ri = idx.ref_index(contig)
-        if ri < 0:
-            continue
-        raw.extend(
-            ((u >> 16), (v >> 16) + 1)
-            for u, v in bin_query_chunks(idx.bins[ri], idx.linear[ri], start, end)
+def index_chunks(
+    fs,
+    path: str,
+    flen: int,
+    intervals: list[tuple[str, int, int]] | None,
+    ref_names: list[str] | None = None,
+    sidecars: tuple[str, ...] = (".bai", ".csi"),
+) -> list[tuple[int, int]] | None:
+    """The index lookup of every BGZF-indexed source: the sorted
+    virtual-offset chunks of ``path``'s index that may hold a record
+    overlapping any ``(contig, start, end)`` interval (1-based inclusive,
+    like the reference's htsjdk Interval), or every chunk when
+    ``intervals`` is None; None when no index is present.
+
+    The index is the first ``path + ext`` present for ``ext`` in
+    ``sidecars``, the format's order: BAM ``(".bai", ".csi")``, VCF
+    ``(".tbi", ".csi")``, BCF ``(".csi",)``.  Contig names come from the
+    index (``.tbi``, tabix-flavored ``.csi``), else from ``ref_names``
+    (the file header's references, by id).  Only overlapping chunks merge:
+    each chunk start stays a record start, a legal task cut.
+
+    An index whose largest chunk end lies past ``flen`` is refused, over
+    the whole index, whichever intervals are asked for: the index is
+    authoritative about what the file must contain, and the splits tile
+    only ``[0, flen)``, so chunks past end-of-file would drop out silently.
+    Pseudo-bins are not chunks: htslib adds a metadata bin at
+    ``bin_limit + 1`` (37450 in ``.bai``/``.tbi``) whose second chunk
+    holds record COUNTS, not offsets, so every bin from the scheme's
+    ``bin_limit`` on is skipped."""
+    from .csi import bin_limit, csi_query_chunks, parse_csi
+
+    ext = next((e for e in sidecars if fs.exists(path + e)), None)
+    if ext is None:
+        return None
+    if ext == ".csi":
+        idx = parse_csi(path + ext)
+        refs = [{b: ch for b, (_loff, ch) in bins.items()} for bins in idx.bins]
+        limit = bin_limit(idx.min_shift, idx.depth)
+
+        def query(r: int, start: int, end: int) -> list[tuple[int, int]]:
+            return csi_query_chunks(idx.bins[r], start, end, idx.min_shift, idx.depth)
+
+    else:
+        if ext == ".bai":
+            from .bai import parse_bai
+
+            idx = parse_bai(path + ext)
+        else:
+            idx = parse_tabix(path + ext)
+        refs = idx.bins
+        limit = bin_limit(14, 5)
+
+        def query(r: int, start: int, end: int) -> list[tuple[int, int]]:
+            return bin_query_chunks(idx.bins[r], idx.linear[r], start, end)
+
+    real = [c for bins in refs for b, ch in bins.items() if b < limit for c in ch]
+    max_coff = max((v >> 16 for _u, v in real), default=0)
+    if max_coff > flen:
+        raise ValueError(
+            f"{path}: {ext} index references compressed offset {max_coff} past "
+            f"end-of-file ({flen}) — truncated file or stale index"
         )
-    return merge_ranges(raw)
+    if intervals is None:
+        chunks = real
+    else:
+        ids: dict[str, int] = {}
+        # a .bai, and a BAM-flavored .csi, name no contigs
+        for i, name in enumerate(getattr(idx, "names", None) or ref_names or ()):
+            ids.setdefault(name, i)
+        chunks = []
+        for contig, start, end in intervals:
+            r = ids.get(contig)
+            if r is not None and r < len(refs):
+                chunks.extend(query(r, start, end))
+    chunks.sort()
+    merged: list[tuple[int, int]] = []
+    for u, v in chunks:
+        if merged and u < merged[-1][1]:
+            merged[-1] = (merged[-1][0], max(merged[-1][1], v))
+        else:
+            merged.append((u, v))
+    return merged
 
 
 def clip_ranges(

@@ -204,7 +204,7 @@ def text_ranges_for_intervals(
 ) -> list[tuple[int, int]]:
     """Merged raw byte ranges covering every feature possibly overlapping
     any (contig, start, end) interval — the plain-text analog of
-    ``tabix.file_ranges_for_intervals``."""
+    ``tabix.index_chunks``."""
     raw: list[tuple[int, int]] = []
     for contig, start, end in intervals:
         raw.extend(idx.blocks(contig, start, end))

@@ -32,6 +32,7 @@ from ..operators.interval import (
 from .fsio import fs_basename, fs_open, fs_write_bytes, get_fs, list_data_files
 from .headers import read_vcf_header_text, vcf_sample_names
 from .merger import PartFormat, commit, commit_sharded, text_format
+from .tabix import index_chunks, merge_ranges
 
 VARIANTS_COLUMNS = ["contig", "pos", "id", "ref", "alts", "qual", "filters", "info", "genotypes"]
 
@@ -270,7 +271,8 @@ def _read_bgzf_lines(
     ranges); each task re-opens the file locally — at cluster scale `path`
     is on a shared store and the open goes through the cluster filesystem.
     With ``ivs`` (interval list), each file's own tabix ``.tbi`` (or
-    tabix-flavored ``.csi``) maps the intervals to compressed byte ranges:
+    tabix-flavored ``.csi``) maps the intervals to compressed byte ranges
+    (``tabix.index_chunks``, which also refuses a stale index):
     splits none of them reaches get no task, and each other task inflates
     only the BGZF blocks of the ranges inside its split (``_split_tasks``),
     where the reference decodes a surviving split whole.  Per-file, so a
@@ -295,64 +297,12 @@ def _read_bgzf_lines(
                     "VCF directory inputs must be compression-homogeneous"
                 )
         flen = fs.size(f)
-        franges = None
-        max_coff = None
-        if ivs is not None:
-            tbi, csi = f + ".tbi", f + ".csi"
-            if fs.exists(tbi):
-                from .tabix import file_ranges_for_intervals, parse_tabix
-
-                idx = parse_tabix(tbi)
-                franges = file_ranges_for_intervals(idx, ivs)
-                # bin 37450 is the SAM-spec pseudo-bin: its "chunks" are
-                # (span voffsets) + (mapped, unmapped COUNTS) — the counts
-                # are not offsets and must not feed the max
-                max_coff = max(
-                    (
-                        v >> 16
-                        for b in idx.bins
-                        for bid, ch in b.items()
-                        if bid != 37450
-                        for _u, v in ch
-                    ),
-                    default=None,
-                )
-            elif fs.exists(csi):
-                # tabix-flavored CSI fallback (contigs >2^29 bp can only
-                # ship a .csi; `tabix -C` output)
-                from .csi import file_ranges_for_intervals as csi_ranges
-                from .csi import parse_csi
-
-                idx = parse_csi(csi)
-                franges = csi_ranges(idx, ivs)
-                # CSI pseudo-bins sit above the deepest real bin for the
-                # index's depth; their "chunks" are counts, not offsets
-                max_real_bin = ((1 << (3 * (idx.depth + 1))) - 1) // 7
-                max_coff = max(
-                    (
-                        v >> 16
-                        for b in idx.bins
-                        for bid, (_loff, ch) in b.items()
-                        if bid <= max_real_bin
-                        for _u, v in ch
-                    ),
-                    default=None,
-                )
-        if max_coff is not None and max_coff > flen:
-            # split tiles only cover [0, flen), so index ranges past EOF
-            # would be silently pruned away and the requested intervals'
-            # missing tail would vanish from the result — same refuse-
-            # stale-index contract as the CRAM .crai and BAM .bai paths.
-            # The check is over the WHOLE index (its max chunk end), not
-            # just the ranges the requested intervals touch: the index is
-            # authoritative about what the file must contain, so a file
-            # shorter than the index promises is untrustworthy regardless
-            # of which intervals this particular query asks for.
-            raise ValueError(
-                f"{f}: index references compressed offset {max_coff} past "
-                f"end-of-file ({flen}) — truncated VCF or stale index"
-            )
-        return (f, flen, franges)
+        chunks = None if ivs is None else index_chunks(fs, f, flen, ivs, sidecars=(".tbi", ".csi"))
+        if chunks is None:
+            return (f, flen, None)
+        # a chunk's last records may start in the block its end points
+        # into: the byte range keeps that block
+        return (f, flen, merge_ranges([(u >> 16, (v >> 16) + 1) for u, v in chunks]))
 
     tasks = _split_tasks(collect_metadata(spark, files, meta_for), split_size)
 

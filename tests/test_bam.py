@@ -226,14 +226,21 @@ def test_bai_interval_pushdown_matches_full_scan(spark, bam_with_bai):
 
 def test_bai_ranges_prune_bytes(bam_with_bai):
     import os
-    from disq_original_spark.sources.bai import parse_bai, voffset_ranges_for_intervals
+    from disq_original_spark.sources.fsio import get_fs
+    from disq_original_spark.sources.headers import read_bam_header
+    from disq_original_spark.sources.tabix import index_chunks, merge_ranges
 
-    idx = parse_bai(bam_with_bai + ".bai")
-    ranges = voffset_ranges_for_intervals(idx, [(0, 24_800_000, 24_810_000)])
+    names = [r[0] for r in read_bam_header(bam_with_bai)[1]]
+    flen = os.path.getsize(bam_with_bai)
+
+    def ranges_for(ivs):
+        return merge_ranges(index_chunks(get_fs(bam_with_bai), bam_with_bai, flen, ivs, names, (".bai",)))
+
+    ranges = ranges_for([(names[0], 24_800_000, 24_810_000)])
     spanned = sum((v >> 16) - (u >> 16) for u, v in ranges)
     assert 0 < spanned < os.path.getsize(bam_with_bai) // 2
     # an interval over an empty region prunes everything
-    assert voffset_ranges_for_intervals(idx, [(0, 1, 300)]) == []
+    assert ranges_for([(names[0], 1, 300)]) == []
 
 
 def test_datasource_interval_option(spark, bam_with_bai):

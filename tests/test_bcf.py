@@ -575,3 +575,49 @@ def test_corrupt_bcf_records_never_escape_valueerror(spark, tmp_path):
             drain(data[:cut])
         except ValueError:
             pass
+
+
+def _write_csi(path: str, idx) -> None:
+    """Serialize a parsed ``CsiIndex`` back to a ``.csi``."""
+    import struct
+
+    from disq_original_spark.sources.bgzf import EMPTY_GZIP_BLOCK, compress_blocks
+    from disq_original_spark.sources.csi import CSI_MAGIC
+
+    out = bytearray(CSI_MAGIC)
+    out += struct.pack("<3i", idx.min_shift, idx.depth, len(idx.aux)) + idx.aux
+    out += struct.pack("<i", len(idx.bins))
+    for bins in idx.bins:
+        out += struct.pack("<i", len(bins))
+        for b, (loff, chunks) in sorted(bins.items()):
+            out += struct.pack("<IQi", b, loff, len(chunks))
+            for u, v in chunks:
+                out += struct.pack("<QQ", u, v)
+    with open(path, "wb") as fh:
+        fh.write(compress_blocks(bytes(out)) + EMPTY_GZIP_BLOCK)
+
+
+def test_whole_file_read_skips_htslib_pseudo_bin(spark, tmp_path):
+    """htslib adds a metadata pseudo-bin (``bin_limit + 1``) to each
+    reference of a ``.csi``: its chunks are the reference's span and then
+    ``(n_mapped, n_unmapped)`` — record COUNTS, not offsets.  A read with no
+    intervals walks every chunk of the index and must skip that bin; read
+    as an offset, 70000 mapped records point into byte 1 of the file."""
+    from disq_original_spark.sources.bcf import _variants_schema
+    from disq_original_spark.sources.csi import bin_limit, parse_csi
+    from disq_original_spark.storage import VariantsStorage
+
+    from .twins import frame, variants
+
+    rows, header = variants()
+    path = str(tmp_path / "v.bcf")
+    VariantsStorage(spark).write(
+        frame(spark, rows, _variants_schema()).coalesce(1), path, header, write_index=True
+    )
+    idx = parse_csi(path + ".csi")
+    chunks = [c for _loff, ch in idx.bins[0].values() for c in ch]
+    span = (min(u for u, _v in chunks), max(v for _u, v in chunks))
+    idx.bins[0][bin_limit(idx.min_shift, idx.depth) + 1] = (0, [span, (70_000, 0)])
+    _write_csi(path + ".csi", idx)
+    assert BcfSource().read(spark, path).count() == len(rows)
+    assert BcfSource().read(spark, path, split_size=16 * 1024).count() == len(rows)

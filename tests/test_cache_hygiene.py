@@ -275,6 +275,34 @@ def test_sessions_come_only_from_get_spark():
     assert offenders == [], offenders
 
 
+def test_indexes_are_opened_only_by_the_index_lookup():
+    """BAM, VCF and BCF planners look their ``.bai``/``.tbi``/``.csi`` up
+    through ``tabix.index_chunks``, the one place that picks the sidecar,
+    maps intervals to chunks and refuses a stale index.  A call of an index
+    parser anywhere else under the package is a second lookup to keep in
+    step."""
+    import ast
+    import pathlib
+
+    import disq_original_spark as pkg
+
+    parsers = {"parse_bai", "parse_tabix", "parse_csi"}
+    allowed = {"sources/tabix.py", "sources/bai.py", "sources/csi.py"}
+    root = pathlib.Path(pkg.__file__).parent
+    offenders: list[str] = []
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        if rel in allowed:
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name in parsers:
+                    offenders.append(f"{rel}:{node.lineno} {name}()")
+    assert offenders == [], offenders
+
+
 def test_materialize_logs_the_branch_taken(spark, monkeypatch, caplog):
     """Each ``materialize`` call logs which side of the scale gate it took,
     with the source size and the gate, so a run at any scale can say why a

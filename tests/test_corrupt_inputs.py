@@ -269,6 +269,91 @@ def _block_boundary_cut(path: str, frac: float = 0.6) -> int:
     return best
 
 
+@pytest.fixture(scope="module")
+def indexed_twins(spark, tmp_path_factory):
+    """BAM, BGZF VCF and BCF written from the committed twins through the
+    repo's sinks, each beside one index: ``.bai``, ``.tbi`` and ``.csi``
+    from the sinks, a BAM ``.csi`` and a tabix ``.csi`` from the builders."""
+    import shutil
+
+    from disq_original_spark.sources.bam import READS_SCHEMA, BamSink
+    from disq_original_spark.sources.bcf import _variants_schema
+    from disq_original_spark.sources.csi import create_csi_for_bam, create_csi_for_vcf
+    from disq_original_spark.storage import VariantsStorage
+
+    from .twins import frame, reads_header, reads_rows, sorted_reads, variants
+
+    d = tmp_path_factory.mktemp("indexed")
+    reads = frame(spark, reads_rows(sorted_reads()), READS_SCHEMA).coalesce(1)
+    BamSink().write(reads, reads_header(), str(d / "r.bam"), write_sbi=False, write_bai=True)
+    rows, header = variants()
+    vdf = frame(spark, rows, _variants_schema()).coalesce(1)
+    for name in ("v.vcf.bgz", "v.bcf"):
+        VariantsStorage(spark).write(vdf, str(d / name), header, write_index=True)
+    for src, dst, build in (("r.bam", "rc.bam", create_csi_for_bam), ("v.vcf.bgz", "vc.vcf.bgz", create_csi_for_vcf)):
+        shutil.copy(d / src, d / dst)
+        build(str(d / dst))
+    return {
+        "bam.bai": (d / "r.bam", ".bai"),
+        "bam.csi": (d / "rc.bam", ".csi"),
+        "vcf.tbi": (d / "v.vcf.bgz", ".tbi"),
+        "vcf.csi": (d / "vc.vcf.bgz", ".csi"),
+        "bcf.csi": (d / "v.bcf", ".csi"),
+    }
+
+
+@pytest.mark.parametrize("case", ["bam.bai", "bam.csi", "vcf.tbi", "vcf.csi", "bcf.csi"])
+def test_block_boundary_cut_beside_intact_index_raises_at_planning(spark, tmp_path, indexed_twins, case):
+    """Every BGZF index (one lookup, ``tabix.index_chunks``) refuses a file
+    cut exactly on a block boundary beside its intact index: the read
+    raises while it plans, before any task runs."""
+    import shutil
+
+    from disq_original_spark.sources.bcf import BcfSource
+    from disq_original_spark.storage import ReadsStorage, VariantsStorage
+
+    src, ext = indexed_twins[case]
+    cut = tmp_path / src.name
+    cut.write_bytes(src.read_bytes()[: _block_boundary_cut(str(src))])
+    shutil.copy(str(src) + ext, str(cut) + ext)
+    contig = "1" if case.startswith("bam") else "chr1"
+    ivs = spark.createDataFrame([(contig, 1, 300_000_000)], "contig string, start long, end long")
+    with pytest.raises(ValueError, match="stale index|truncated"):
+        if case.startswith("bam"):
+            ReadsStorage(spark).read(str(cut), intervals=ivs)
+        elif case.startswith("vcf"):
+            VariantsStorage(spark).read(str(cut), intervals=ivs)
+        else:
+            BcfSource().read(spark, str(cut))
+
+
+def test_cut_cram_beside_intact_crai_raises_in_both_planners(spark, tmp_path):
+    """Both CRAM planners (``plan_splits`` for whole-file reads, and the
+    interval planner) refuse a CRAM cut at its last container's start
+    beside its intact ``.crai``."""
+    import shutil
+
+    from disq_original_spark.sources.bam import READS_SCHEMA
+    from disq_original_spark.sources.cram import CramSource, read_crai_offsets
+    from disq_original_spark.sources.headers import SamHeader
+    from disq_original_spark.storage import ReadsStorage
+
+    from .twins import CRAM_HEADER, cram_reads, frame, reads_rows, seeded_fasta, sorted_reads
+
+    fasta = seeded_fasta(tmp_path)
+    full = str(tmp_path / "r.cram")
+    reads = frame(spark, reads_rows(cram_reads(sorted_reads())), READS_SCHEMA).coalesce(1)
+    ReadsStorage(spark, reference_path=fasta).write(reads, full, SamHeader.parse(CRAM_HEADER), write_index=True)
+    cut = tmp_path / "cut.cram"
+    cut.write_bytes(Path(full).read_bytes()[: read_crai_offsets(full + ".crai")[-1]])
+    shutil.copy(full + ".crai", str(cut) + ".crai")
+    with pytest.raises(ValueError, match="stale index"):
+        CramSource().plan_splits(str(cut), 1024)
+    ivs = spark.createDataFrame([("c1", 1, 20_000)], "contig string, start long, end long")
+    with pytest.raises(ValueError, match="stale index"):
+        ReadsStorage(spark, reference_path=fasta).read(str(cut), intervals=ivs)
+
+
 def test_block_boundary_truncated_bam_with_bai_raises_at_planning(spark, tmp_path):
     """Truncation EXACTLY at a block boundary defeats every decode-level
     check (no partial block exists) — the .bai planning validation is the

@@ -89,23 +89,23 @@ def test_bam_interval_read_via_csi_matches_full_scan(spark, tmp_path, geometry):
 def test_csi_agrees_with_bai_ranges_at_classic_geometry(tmp_path):
     """At (14, 5) the chunk query through CSI must admit the same records
     as BAI — and actually prune bytes."""
-    from disq_original_spark.sources.bai import (
-        create_bai,
-        parse_bai,
-        voffset_ranges_for_intervals as bai_ranges,
-    )
-    from disq_original_spark.sources.csi import (
-        voffset_ranges_for_intervals as csi_ranges,
-    )
-    from disq_original_spark.sources.fsio import fs_size
+    from disq_original_spark.sources.bai import create_bai
+    from disq_original_spark.sources.fsio import fs_size, get_fs
+    from disq_original_spark.sources.headers import read_bam_header
+    from disq_original_spark.sources.tabix import index_chunks, merge_ranges
 
     staged = str(tmp_path / "1.bam")
     shutil.copy(BAM, staged)
     create_bai(staged)
     create_csi_for_bam(staged)
-    ivs = [(0, 24_800_000, 24_860_000)]
-    rb = bai_ranges(parse_bai(staged + ".bai"), ivs)
-    rc = csi_ranges(parse_csi(staged + ".csi"), ivs)
+    names = [r[0] for r in read_bam_header(staged)[1]]
+    ivs = [(names[0], 24_800_000, 24_860_000)]
+
+    def ranges(sidecar):
+        return merge_ranges(index_chunks(get_fs(staged), staged, fs_size(staged), ivs, names, (sidecar,)))
+
+    rb = ranges(".bai")
+    rc = ranges(".csi")
     assert rb and rc
     # same chunk set modulo the linear clamp (CSI's folded loffset may be a
     # weaker lower bound): every BAI range is contained in some CSI range

@@ -1,8 +1,9 @@
 """Indexed region reads, hermetic: every input is built here from the
 committed twins in ``fixtures/oracle/`` through the repo's own sinks.
 
-- A region read (BGZF VCF + ``.tbi``, plain VCF + Tribble ``.idx``, BAM +
-  ``.bai``, with and without a ``.sbi``) equals a brute-force overlap over the full read of the same
+- A region read (BGZF VCF + ``.tbi`` or tabix ``.csi``, plain VCF +
+  Tribble ``.idx``, BAM + ``.bai`` or ``.csi``, with and without a
+  ``.sbi``) equals a brute-force overlap over the full read of the same
   file, as exact multisets, with no row duplicated, under 16 KiB, 64 KiB
   and the default split size, including a window that straddles a split
   boundary.  Reading every window at every split size takes ~6 min on 4
@@ -18,6 +19,7 @@ committed twins in ``fixtures/oracle/`` through the repo's own sinks.
 from __future__ import annotations
 
 import re
+import shutil
 from collections import Counter
 from pathlib import Path
 
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 
 from disq_original_spark.sources.bam import READS_SCHEMA, BamSink
 from disq_original_spark.sources.bcf import _variants_schema
+from disq_original_spark.sources.csi import create_csi_for_bam, create_csi_for_vcf
 from disq_original_spark.sources.headers import SamHeader
 from disq_original_spark.sources.tabix import clip_ranges, merge_ranges
 from disq_original_spark.storage import ReadsStorage, VariantsStorage
@@ -55,7 +58,9 @@ def _ref_len(cigar: str) -> int:
 @pytest.fixture(scope="module")
 def inputs(spark, tmp_path_factory):
     """BAM + .bai, BGZF VCF + .tbi, plain VCF + .idx, BCF + .csi,
-    and a CRAM + .crai over a small FASTA, all written by the repo's sinks."""
+    and a CRAM + .crai over a small FASTA, all written by the repo's sinks;
+    and copies of the BAM and the BGZF VCF beside a ``.csi`` alone, from
+    the ``.csi`` builders."""
     d = tmp_path_factory.mktemp("region")
     reads = sorted_reads()
     header = reads_header()
@@ -82,9 +87,14 @@ def inputs(spark, tmp_path_factory):
     for fmt, name in (("vcf", "v.vcf.bgz"), ("text", "v.vcf"), ("bcf", "v.bcf")):
         paths[fmt] = str(d / name)
         VariantsStorage(spark).write(vdf, paths[fmt], vheader, write_index=True)
+    for src, name, build in (("bam", "r_csi.bam", create_csi_for_bam), ("vcf", "v_csi.vcf.bgz", create_csi_for_vcf)):
+        paths[f"{src}_csi"] = str(d / name)
+        shutil.copy(paths[src], paths[f"{src}_csi"])
+        build(paths[f"{src}_csi"])
     for p, idx in (("bam", ".bai"), ("bam_sbi", ".sbi"), ("cram", ".crai"), ("vcf", ".tbi"), ("text", ".idx"),
-                   ("bcf", ".csi")):
+                   ("bcf", ".csi"), ("bam_csi", ".csi"), ("vcf_csi", ".csi")):
         assert Path(paths[p] + idx).is_file(), (p, idx)
+    assert not Path(paths["bam_csi"] + ".bai").exists() and not Path(paths["vcf_csi"] + ".tbi").exists()
     return {"paths": paths, "fasta": fasta}
 
 
@@ -176,9 +186,9 @@ def _differential(spark, path, fmt, every_window):
         assert got == want, f"{fmt} split={split} {ws}: {len(rows)} vs {sum(want.values())}"
 
 
-@pytest.mark.parametrize("fmt", ["bam", "vcf", "text"])
-def test_region_read_equals_brute_force_overlap(spark, inputs, fmt):
-    _differential(spark, inputs["paths"][fmt], fmt, every_window=False)
+@pytest.mark.parametrize("name", ["bam", "bam_csi", "vcf", "vcf_csi", "text"])
+def test_region_read_equals_brute_force_overlap(spark, inputs, name):
+    _differential(spark, inputs["paths"][name], name.split("_")[0], every_window=False)
 
 
 @pytest.mark.slow

@@ -115,14 +115,18 @@ def test_roundtrip_bgzf(spark, tmp_path):
 def test_tabix_split_pruning_partition_counts(spark):
     """BASELINE.md row: HiSeq.10000.vcf.bgz at 128 KB splits -> 4 partitions;
     with interval chr1:2,700,000-2,800,000 the tabix index prunes to 1."""
-    from disq_original_spark.sources.tabix import file_ranges_for_intervals, parse_tabix
+    import os
+
+    from disq_original_spark.sources.fsio import get_fs
+    from disq_original_spark.sources.tabix import index_chunks, merge_ranges
     from disq_original_spark.sources.vcf import _read_bgzf_lines, _split_tasks
 
     full = _read_bgzf_lines(spark, HISEQ, 128 * 1024)
     assert full.rdd.getNumPartitions() == 4
-    idx = parse_tabix(HISEQ + ".tbi")
-    ranges = file_ranges_for_intervals(idx, [("chr1", 2_700_000, 2_800_000)])
-    import os
+    chunks = index_chunks(
+        get_fs(HISEQ), HISEQ, os.path.getsize(HISEQ), [("chr1", 2_700_000, 2_800_000)], sidecars=(".tbi",)
+    )
+    ranges = merge_ranges([(u >> 16, (v >> 16) + 1) for u, v in chunks])
 
     # splits no index range reaches get no task
     tasks = _split_tasks([(HISEQ, os.path.getsize(HISEQ), ranges)], 128 * 1024)
