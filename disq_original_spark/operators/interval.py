@@ -8,21 +8,30 @@ Reference semantics (tomwhite/disq-original):
   (`HtsjdkReadsTraversalParameters.java:13-30`,
   `sam/AbstractBinarySamSource.java:115-132`).
 
-Here the interval list is a (small) DataFrame broadcast into an overlap join —
-the relational form of the reference's index pushdown.  Byte-level pushdown
-(only *reading* overlapping file regions) lives in the sources package; this
-module is the post-scan residual filter, which Catalyst pushes into the scan
-when the source supports it (parquet min/max row-group pruning does the same
-job the genomics indexes do).
+Two forms of the same test live here.  The indexed sources (BAM, CRAM,
+VCF, BCF) collect the caller's small interval list once
+(:func:`collect_intervals`), plan their index reads from it, and drop the
+records no interval overlaps inside each decode task
+(:func:`overlap_test` with the span rules :func:`read_end` and
+:func:`variant_end`, which mirror the JVM expressions
+``sam.with_alignment_span`` and ``vcf.variant_end``).  Frames that are
+already in Spark — SAM text scans, query operators — keep the relational
+form: a broadcast left-semi join (:func:`interval_filter`,
+:func:`residual_traversal`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import re
+from bisect import bisect_right
+from collections.abc import Callable, Iterable
+from itertools import accumulate
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..cache import materialize
+from ..sources.bam_codec import cigar_ref_length
 
 
 def overlaps(
@@ -174,60 +183,117 @@ def interval_join(
     return ab.join(bb, cond).drop("_bin")
 
 
-_INTERVALS_SCHEMA = StructType(
-    [
-        StructField("contig", StringType()),
-        StructField("start", LongType()),
-        StructField("end", LongType()),
-    ]
-)
-
-
 def collect_intervals(intervals: DataFrame) -> list[tuple[str, int, int]]:
     """The one action an indexed source runs on a caller's (contig, start,
-    end) interval frame: its rows as tuples, for index planning and, through
-    :func:`intervals_frame`, for the residual filter."""
+    end) interval frame: its rows as tuples, for index planning and for the
+    in-task :func:`overlap_test`."""
     return [
         (r["contig"], int(r["start"]), int(r["end"]))
         for r in intervals.select("contig", "start", "end").collect()
     ]
 
 
-def intervals_frame(spark: SparkSession, rows: list[tuple[str, int, int]]) -> DataFrame:
-    """A JVM-local (contig string, start long, end long) frame of already
-    collected interval rows, for the residual filter.
+def overlap_test(
+    rows: Iterable[tuple[str, int, int]],
+) -> Callable[[str | None, int | None, int | None], bool]:
+    """``hit(contig, start, end)``: does the closed span overlap any of the
+    1-based closed ``rows`` on its contig (:func:`overlaps`, with SQL's
+    NULL rule — a None contig or bound matches nothing)?
 
-    A caller's ``createDataFrame(list)`` frame is a Python RDD: every action
-    that reads it, the residual's broadcast included, re-runs Python tasks
-    over it.  This frame ships the rows once as an Arrow table, so reading
-    it starts no Python worker.  A ``pyarrow.Table`` takes Spark's Arrow
-    path whatever ``spark.sql.execution.arrow.pyspark.enabled`` says; a
-    pandas frame would not on a session that leaves it off."""
-    import pyarrow as pa
+    Built once per read from the collected rows: per contig the interval
+    starts sorted, with the running max of their ends, so one ``bisect``
+    finds the intervals starting at or before ``end`` and the running max
+    says whether any of them reaches ``start``."""
+    by_contig: dict[str, list[tuple[int, int]]] = {}
+    for c, s, e in rows:
+        by_contig.setdefault(c, []).append((s, e))
+    table: dict[str, tuple[list[int], list[int]]] = {}
+    for c, ivs in by_contig.items():
+        ivs.sort()
+        table[c] = ([s for s, _e in ivs], list(accumulate((e for _s, e in ivs), max)))
 
-    contigs, starts, ends = zip(*rows) if rows else ((), (), ())
-    table = pa.table(
-        {
-            "contig": pa.array(contigs, pa.string()),
-            "start": pa.array(starts, pa.int64()),
-            "end": pa.array(ends, pa.int64()),
-        }
-    )
-    return spark.createDataFrame(table, _INTERVALS_SCHEMA)
+    def hit(contig: str | None, start: int | None, end: int | None) -> bool:
+        t = table.get(contig)
+        if t is None or start is None or end is None:
+            return False
+        k = bisect_right(t[0], end)
+        return k > 0 and t[1][k - 1] >= start
+
+    return hit
+
+
+# Spark's string -> bigint ``try_cast`` trims bytes <= 0x20 and 0x7F from
+# both ends, then accepts an optional sign and ASCII digits, within int64
+_TRIM = "".join(map(chr, range(0x21))) + "\x7f"
+_LONG = re.compile(r"[+-]?[0-9]+")
+
+
+def try_long(s: str | None) -> int | None:
+    """Spark's ``try_cast(s AS bigint)`` of a string: None where Spark
+    returns NULL (``"12.0"``, ``"1e2"``, ``"1_000"``, non-ASCII digits,
+    overflow)."""
+    if s is None:
+        return None
+    s = s.strip(_TRIM)
+    if not _LONG.fullmatch(s):
+        return None
+    v = int(s)
+    return v if -(1 << 63) <= v < (1 << 63) else None
+
+
+def read_end(pos: int | None, cigar: str | None) -> int | None:
+    """1-based inclusive alignment end, as ``sam.with_alignment_span``:
+    ``pos`` for a ``*``/None CIGAR or one consuming no reference, else
+    ``pos`` + the M/D/N/=/X length - 1."""
+    if pos is None or cigar is None or cigar == "*":
+        return pos
+    n = cigar_ref_length(cigar)
+    return pos if n == 0 else pos + n - 1
+
+
+def variant_end(pos: int | None, ref: str | None, info_end: str | None) -> int | None:
+    """1-based inclusive variant end, as ``vcf.variant_end``: the INFO
+    ``END`` value (the last one on the line) when it casts to a long, else
+    ``pos + len(ref) - 1``."""
+    end = try_long(info_end)
+    if end is not None or pos is None or ref is None:
+        return end
+    return pos + len(ref) - 1
+
+
+def read_keeper(
+    iv_rows: list[tuple[str, int, int]] | None, include_unplaced: bool
+) -> Callable[[dict], bool] | None:
+    """The traversal a reads decode task applies to each decoded row (it
+    needs ``flag``, ``rname``, ``pos`` and ``cigar``): placed reads whose
+    span overlaps an interval, and with ``include_unplaced`` the
+    unplaced-unmapped reads (unmapped flag and no ``rname`` or ``pos`` 0).
+    None when there is nothing to drop."""
+    if iv_rows is None and not include_unplaced:
+        return None
+    hit = overlap_test(iv_rows or ())
+
+    def keep(row: dict) -> bool:
+        pos = row["pos"]
+        if row["flag"] & 4 and (row["rname"] is None or pos == 0):
+            return include_unplaced
+        return hit(row["rname"], pos, read_end(pos, row["cigar"]))
+
+    return keep
+
+
+#: what :func:`read_keeper` reads from a decoded row
+READ_SPAN_FIELDS = frozenset({"flag", "rname", "pos", "cigar"})
 
 
 def residual_traversal(
     reads: DataFrame, intervals: DataFrame | None, include_unplaced: bool
 ) -> DataFrame:
-    """Shared residual-selection step of every reads source (BAM/SAM/CRAM
-    and the storage facade): interval overlap filter over placed reads,
-    optionally unioned with unplaced-unmapped records — the reference's
-    `TraversalOverlapDetector` semantics in one place.
-
-    The indexed sources (BAM, CRAM) pass an :func:`intervals_frame` of the
-    rows they collected for index planning, not the caller's frame, so the
-    caller's frame is evaluated once per read; SAM, which has no index to
-    plan, passes the caller's frame."""
+    """Residual selection of a SAM text scan, which the JVM decodes and
+    which has no index: interval overlap filter over placed reads,
+    optionally unioned with unplaced-unmapped records — the relational
+    twin of :func:`read_keeper`, which the Python-decoded reads sources
+    apply inside their tasks."""
     # runtime import: sources.sam imports this module at load time
     from ..sources.sam import (
         FLAG_UNMAPPED,
@@ -265,31 +331,6 @@ def residual_traversal(
     # intersection, not READS_COLUMNS verbatim: a column-pruned source
     # frame (BamSource.read(columns=...)) carries a schema subset
     return selected.select(*schema_ordered(READS_COLUMNS, reads.columns))
-
-
-def residual_variant_overlap(variants: DataFrame, intervals: DataFrame) -> DataFrame:
-    """Exact interval-overlap residual for a VARIANTS frame: span each
-    record to [pos, variant_end(info, pos, ref)] and keep overlaps with any
-    interval — the one exact-match contract shared by VcfSource.read and
-    BcfSource.read (so the two sources cannot drift).  Both pass an
-    :func:`intervals_frame` of the rows they already collected for index
-    planning, so the caller's interval frame is evaluated once per read."""
-    from ..sources.vcf import VARIANTS_COLUMNS, variant_end
-
-    spanned = variants.withColumn(
-        "end_", variant_end(F.col("info"), F.col("pos"), F.col("ref"))
-    )
-    out = interval_filter(
-        spanned.withColumnRenamed("pos", "start").withColumnRenamed("end_", "end"),
-        intervals,
-    )
-    # intersection, not VARIANTS_COLUMNS verbatim: a column-pruned source
-    # frame (BcfSource.read(columns=...)) carries a schema subset
-    from ..sources.sam import schema_ordered
-
-    return out.withColumnRenamed("start", "pos").select(
-        *schema_ordered(VARIANTS_COLUMNS, variants.columns)
-    )
 
 
 def merge_intervals(

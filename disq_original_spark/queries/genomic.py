@@ -4,8 +4,9 @@ The reference's core query capability is "records overlapping a list of
 genomic intervals" (interval pushdown + residual overlap filter,
 `sam/AbstractBinarySamSource.java:96-113`, `TraversalOverlapDetector.java`).
 These queries exercise the same semantics on the driver's testdata so the
-DuckDB oracle can hash-check them; the genomics sources reuse the same
-operators on real SAM/BAM/VCF DataFrames (tests/test_sam.py etc.).
+DuckDB oracle can hash-check them; the SAM source reuses the same
+operators on its DataFrames (tests/test_sam.py), and the indexed sources
+apply the same overlap test inside their decode tasks.
 
 The "contig" is event_type and the position axis is the event timestamp.
 Interval bounds are compared as timestamps directly (micros precision in both

@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.interval import collect_intervals, intervals_frame, residual_traversal
+from ..operators.interval import READ_SPAN_FIELDS, collect_intervals, read_keeper
 from .bam_codec import (
     BamRecordGuesser,
     MAX_READ_SIZE,
@@ -53,6 +53,7 @@ from .bgzf import (
     find_next_block,
     make_virtual_offset,
     read_block_header,
+    warn_if_missing_terminator,
     write_bgzf_part,
 )
 from .fsio import (
@@ -67,7 +68,7 @@ from .fsio import (
 )
 from .headers import SamHeader, read_bam_header
 from .merger import PartFormat, commit, commit_sharded, part_bases
-from .sam import READS_COLUMNS, schema_ordered, validate_columns
+from .sam import READS_COLUMNS, validate_columns
 from .tabix import clip_ranges, index_chunks, merge_ranges
 
 READS_SCHEMA = StructType(
@@ -134,23 +135,6 @@ def _block_at(fh, pos: int) -> BgzfBlock | None:
 
 
 _TRIM_BYTES = 1 << 22  # drop consumed uncompressed prefix past this size
-
-
-def _warn_if_missing_terminator(fh, flen: int, path: str) -> None:
-    """A structurally-clean stop at end-of-file only proves completeness if
-    the file ends with the BGZF EOF block — otherwise a tail truncated at a
-    block boundary would read back silently as complete."""
-    import warnings
-
-    if flen < len(EMPTY_GZIP_BLOCK):
-        return
-    fh.seek(flen - len(EMPTY_GZIP_BLOCK))
-    if fh.read(len(EMPTY_GZIP_BLOCK)) != EMPTY_GZIP_BLOCK:
-        warnings.warn(
-            f"{path}: no BGZF EOF terminator — file may be truncated at a "
-            f"block boundary (htsjdk ParsingUtils would warn here too)",
-            stacklevel=2,
-        )
 
 
 def _read_records_in_chunk(
@@ -227,7 +211,7 @@ def _read_records_in_chunk(
                         # 28-byte BGZF EOF terminator (htsjdk warns/errors on
                         # a missing terminator; lenient here: warn)
                         if next_cpos >= flen:
-                            _warn_if_missing_terminator(fh, flen, path)
+                            warn_if_missing_terminator(fh, flen, path)
                         return
                     raise ValueError(
                         f"{path}: truncated BAM record header at EOF "
@@ -399,10 +383,15 @@ def plan_read(
     serially).
 
     ``iv_rows`` ((contig, start, end) rows) push down to the ``.bai``/``.csi``;
-    a file no index range meets gets no task.  A queryname-sorted header
-    switches record ownership to qname groups, so paired reads never
-    straddle partitions (the reference's README.md:155-159 guarantee); the
-    group test decodes ``qname`` even when ``fields`` leaves it out."""
+    a file no index range meets gets no task.  With ``iv_rows`` or
+    ``include_unplaced`` each task keeps only the reads the traversal
+    selects (``interval.read_keeper``: exact overlap, plus the
+    unplaced-unmapped reads), decoding the span fields for the test even
+    when ``fields`` leaves them out.  A queryname-sorted header switches
+    record ownership to qname groups, so paired reads never straddle
+    partitions (the reference's README.md:155-159 guarantee); the group
+    test decodes ``qname`` even when ``fields`` leaves it out.  Rows may
+    carry such internal fields; the read plane's schema leaves them out."""
     fs = get_fs(path)
     files = _expand_files(path, fs)
     # ONE driver header read per input — directory files share a header
@@ -420,6 +409,9 @@ def plan_read(
     by_qname = header.sort_order == "queryname"
     if by_qname and fields is not None:
         fields = fields | {"qname"}
+    keep = read_keeper(iv_rows, include_unplaced)
+    if keep is not None and fields is not None:
+        fields = fields | READ_SPAN_FIELDS
     tasks: list[tuple[int, int, int]] = []
     file_params: list[tuple] = []
     for i, (f, flen, sbi_offsets, bai_ranges) in enumerate(
@@ -435,9 +427,10 @@ def plan_read(
     def task_rows(task):
         fi, s, e = task
         f, fv, sbi, bai = file_params[fi]
-        return records_for_split(
+        rows = records_for_split(
             f, s, e, ref_names, n_ref, fv, sbi, bai, fs, group_by_qname=by_qname, fields=fields
         )
+        return rows if keep is None else filter(keep, rows)
 
     return tasks, task_rows
 
@@ -459,39 +452,32 @@ class BamSource:
         use_sbi: bool = True,
         columns: Sequence[str] | None = None,
     ) -> DataFrame:
-        """``columns`` prunes the DECODE, not just the projection: Python
+        """``intervals`` (a (contig, start, end) frame, 1-based inclusive)
+        returns the reads overlapping any interval, exactly: the frame is
+        collected once, its rows plan the ``.bai``/``.csi`` reads and each
+        task drops the reads no interval overlaps (``plan_read``).
+        ``include_unplaced`` adds the unplaced-unmapped reads; alone, it
+        returns only those.
+
+        ``columns`` prunes the DECODE, not just the projection: Python
         data sources have no ReadSchema pushdown, so without it every scan
         pays the full per-record materialization (CIGAR string join, seq
         nibble translate, qual translate, aux-tag dict walk) even for a
         3-column aggregate — the custom-source analog of a parquet scan
         reading all columns for a 2-column projection.  The returned frame
         carries exactly ``columns`` (schema order); internal needs
-        (qname grouping, interval residual filtering) are decoded
-        transparently and dropped before return."""
+        (qname grouping, the overlap test's spans) are decoded in the task
+        and never leave it."""
         from .arrow_xfer import pruned_schema, to_dataframe
 
         if columns is not None:
             validate_columns(columns, READS_COLUMNS, "reads")
-        # Collect the (tiny) interval list once — not once per input file,
-        # and not again for the residual filter, which gets these rows
+        fields = None if columns is None else frozenset(columns)
         iv_rows = collect_intervals(intervals) if intervals is not None else None
-        fields = None
-        if columns is not None:
-            internal = set(columns)
-            if intervals is not None or include_unplaced:
-                # residual_traversal computes alignment spans + the
-                # unplaced predicate from these
-                internal |= {"flag", "rname", "pos", "cigar"}
-            fields = frozenset(internal)
         tasks, task_rows = plan_read(
             spark, path, iv_rows, include_unplaced, split_size, use_sbi, fields
         )
-        reads = to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
-        iv_frame = intervals_frame(spark, iv_rows) if iv_rows is not None else None
-        out = residual_traversal(reads, iv_frame, include_unplaced)
-        if columns is not None:
-            out = out.select(*schema_ordered(READS_COLUMNS, columns))
-        return out
+        return to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
 
 
 def _collect_file_metadata(

@@ -861,8 +861,14 @@ class BcfSource:
         spec's l_shared/l_indiv framing lets the per-sample genotype block
         skip in O(1) when 'genotypes' is not requested, and the site-string
         walk (ID/alleles/FILTER/INFO) skips when no site string is.  The
-        returned frame carries exactly ``columns``; interval residual
-        filtering decodes its own needs transparently."""
+        returned frame carries exactly ``columns``.
+
+        ``intervals`` (collected (contig, start, end) rows) returns the
+        records overlapping any interval, exactly: the ``.csi`` prunes the
+        chunks read, and each task drops the records no interval overlaps
+        (span: ``interval.variant_end``), decoding the span fields for the
+        test even when ``columns`` leaves them out."""
+        from ..operators.interval import overlap_test, variant_end
         from .arrow_xfer import pruned_schema, to_dataframe
         from .fsio import collect_metadata, list_data_files
         from .vcf import VARIANTS_COLUMNS
@@ -875,14 +881,18 @@ class BcfSource:
         files = list_data_files(fs, str(path))
         if not files:
             raise FileNotFoundError(f"no BCF data files under {path}")
-        fields = None
-        if columns is not None:
-            internal = set(columns)
-            if intervals is not None:
-                # residual_variant_overlap spans records via (pos, ref,
-                # info END) and filters on contig
-                internal |= {"contig", "pos", "ref", "info"}
-            fields = frozenset(internal)
+        fields = None if columns is None else frozenset(columns)
+        schema = pruned_schema(_variants_schema(), fields)
+        hit = None
+        if intervals is not None:
+            hit = overlap_test(intervals)
+            if fields is not None:
+                fields = fields | {"contig", "pos", "ref", "info"}
+
+        def keep(row: dict) -> bool:
+            pos = row["pos"]
+            end = variant_end(pos, row["ref"], (row["info"] or {}).get("END"))
+            return hit(row["contig"], pos, end)
 
         def meta_for(f: str):
             """(file, csi-task-chunk-groups | None) — None = whole file."""
@@ -918,6 +928,10 @@ class BcfSource:
                 tasks.extend((f, g) for g in groups)
 
         def read_task(task):
+            rows = decode_task(task)
+            return rows if hit is None else filter(keep, rows)
+
+        def decode_task(task):
             f, group = task
             if group is None:
                 data = _decompress(f)
@@ -946,19 +960,7 @@ class BcfSource:
                         r = _Reader(head + payload, 0)
                         yield decode_record_loud(r, ctx, fields, f)
 
-        df = to_dataframe(spark, tasks, read_task, pruned_schema(_variants_schema(), fields))
-        if intervals is not None:
-            # residual overlap filter: index-chunk pruning alone returns a
-            # candidate SUPERSET; the shared residual_variant_overlap is the
-            # same exact-match contract VcfSource.read applies
-            from ..operators.interval import intervals_frame, residual_variant_overlap
-
-            df = residual_variant_overlap(df, intervals_frame(spark, list(intervals)))
-        if columns is not None:
-            from .sam import schema_ordered
-
-            df = df.select(*schema_ordered(VARIANTS_COLUMNS, columns))
-        return df
+        return to_dataframe(spark, tasks, read_task, schema)
 
 
 def _decompress(path: str) -> bytes:

@@ -478,3 +478,21 @@ def is_bgzf(fh: BinaryIO) -> bool:
     head = fh.read(HEADER_SIZE + 64)
     fh.seek(pos)
     return len(head) >= HEADER_SIZE and _parse_block_at(head, 0) is not None
+
+
+def warn_if_missing_terminator(fh: BinaryIO, flen: int, path: str) -> None:
+    """A structurally-clean stop at end-of-file only proves completeness if
+    the file ends with the BGZF EOF block — otherwise a tail truncated at a
+    block boundary would read back silently as complete.  Warn-only, as
+    samtools and htsjdk treat the terminator as optional."""
+    import warnings
+
+    if flen < len(EMPTY_GZIP_BLOCK):
+        return
+    fh.seek(flen - len(EMPTY_GZIP_BLOCK))
+    if fh.read(len(EMPTY_GZIP_BLOCK)) != EMPTY_GZIP_BLOCK:
+        warnings.warn(
+            f"{path}: no BGZF EOF terminator — file may be truncated at a "
+            f"block boundary (htsjdk ParsingUtils would warn here too)",
+            stacklevel=2,
+        )

@@ -373,47 +373,31 @@ class CramSource:
         returns EXACT overlap matches, same contract as BamSource.read:
         when a ``.crai`` sits beside a file its (seqid, start, span,
         container-offset) entries prune planning to overlapping containers
-        before any IO, then the shared residual filter
-        (``operators/interval.residual_traversal``) exacts the result;
-        without an index the full scan is residual-filtered.
-        ``include_unplaced`` additionally keeps unmapped reads (crai
-        seq_id -1 containers are retained by the pruner).
+        before any IO, and each task drops the reads no interval overlaps
+        (``plan_read``); without an index every container is decoded and
+        tested.  ``include_unplaced`` additionally keeps unplaced-unmapped
+        reads (crai seq_id -1 containers are retained by the pruner).
 
         ``columns`` prunes the DECODE (as BamSource.read): per-base series
         the request does not need skip instead of reading — and because
         CRAM is columnar within a slice, an external block whose series
         are entirely skipped (e.g. the QS quality block, typically the
         largest) is never DECOMPRESSED at all; pruning 'seq' also skips
-        the reference-based reconstruction.  Internal needs (interval
-        residual spans) are decoded transparently and dropped."""
-        from ..operators.interval import (
-            collect_intervals,
-            intervals_frame,
-            residual_traversal,
-        )
+        the reference-based reconstruction.  Internal needs (the overlap
+        test's spans) are decoded in the task and never leave it."""
+        from ..operators.interval import collect_intervals
         from .arrow_xfer import pruned_schema, to_dataframe
         from .bam import READS_SCHEMA
-        from .sam import READS_COLUMNS, schema_ordered, validate_columns
+        from .sam import READS_COLUMNS, validate_columns
 
         if columns is not None:
             validate_columns(columns, READS_COLUMNS, "reads")
-        fields = None
-        if columns is not None:
-            internal = set(columns)
-            if intervals is not None or include_unplaced:
-                internal |= {"flag", "rname", "pos", "cigar"}
-            fields = frozenset(internal)
+        fields = None if columns is None else frozenset(columns)
         iv_rows = collect_intervals(intervals) if intervals is not None else None
         tasks, task_rows = plan_read(
             spark, path, reference_path, split_size, iv_rows, include_unplaced, fields
         )
-        df = to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
-        if intervals is not None or include_unplaced:
-            iv_frame = intervals_frame(spark, iv_rows) if iv_rows is not None else None
-            df = residual_traversal(df, iv_frame, include_unplaced)
-        if columns is not None:
-            df = df.select(*schema_ordered(READS_COLUMNS, columns))
-        return df
+        return to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
 
 
 def plan_read(
@@ -436,13 +420,20 @@ def plan_read(
     extended to the next split's start.  With them and a ``.crai`` beside a
     file, only the containers whose entries overlap an interval (and, with
     ``include_unplaced``, the unmapped ones) are read, in runs of about
-    ``split_size`` bytes; a plan that keeps no container seeds no task."""
+    ``split_size`` bytes; a plan that keeps no container seeds no task.
+    With ``iv_rows`` or ``include_unplaced`` each task keeps only the reads
+    the traversal selects (``interval.read_keeper``), decoding the span
+    fields for the test even when ``fields`` leaves them out."""
+    from ..operators.interval import READ_SPAN_FIELDS, read_keeper
     from .cram_codec import IndexedFasta, decode_container, read_cram_meta_file
     from .fsio import collect_metadata, list_data_files
     from .headers import header_ref_and_rg_names
 
     fs = get_fs(str(path))
     files = list_data_files(fs, str(path))
+    keep = read_keeper(iv_rows, include_unplaced)
+    if keep is not None and fields is not None:
+        fields = fields | READ_SPAN_FIELDS
 
     def meta_for(f: str):
         """(file, flen, ((start, end), ...), first_container_offset)."""
@@ -515,7 +506,7 @@ def plan_read(
         pos = 0
         while pos < len(data):
             rows, pos = decode_container(data, pos, meta, getter, fields=fields)
-            yield from rows
+            yield from rows if keep is None else filter(keep, rows)
 
     return tasks, task_rows
 

@@ -20,10 +20,11 @@ Options:
   reference's ``splitSize`` knob (`HtsjdkReadsRddStorage.java:84-90`).
 - ``useSbi`` (BAM, default true) — consult ``path + ".sbi"`` for
   record-aligned chunking; without it the record guesser runs per split.
-- ``intervals`` (BAM, JSON ``[["chr1", 100, 200], ...]``) — ``.bai``/``.csi``
-  byte-range pushdown.  The index yields a superset (bin granularity); pair
-  it with an interval filter for exact overlap semantics, as the reference
-  does with its residual query (`AbstractBinarySamSource.java:96-113`).
+- ``intervals`` (BAM, JSON ``[["chr1", 100, 200], ...]``) — the reads
+  overlapping any interval, exactly: ``.bai``/``.csi`` byte-range pushdown
+  picks the chunks (a superset, bin granularity) and each task drops the
+  reads no interval overlaps, the reference's residual query
+  (`AbstractBinarySamSource.java:96-113`) run in the decode task.
 - ``columns`` (``"flag,rname,pos"``) — decode-level pruning, the same
   contract as ``BamSource.read(columns=...)``.
 - ``reference`` (CRAM) — the .fai-indexed FASTA required for mapped slices.

@@ -20,7 +20,6 @@ metadata); the file is itself BGZF-compressed.
 from __future__ import annotations
 
 import gzip
-import re
 import struct
 from dataclasses import dataclass
 from pathlib import Path
@@ -418,24 +417,22 @@ def _iter_bgzf_lines_with_voffsets(fh):
         pos = next_pos
 
 
-_END_RE = re.compile(r"(?:^|;)END=(\d+)")
-
-
 def vcf_feature_span(line: str) -> tuple[str, int, int]:
     """``(contig, beg0, end0)`` of one VCF data line, 0-based half-open.
     END-aware like htsjdk's indexers (symbolic/structural alleles span to
     ``INFO END=``); otherwise the REF-allele span of the classic
-    ``tabix -p vcf`` preset.  The read side's residual filter is END-aware
-    (``vcf.variant_end``), so the index must cover the same span or pruning
-    could drop a split the filter would keep."""
+    ``tabix -p vcf`` preset.  The read side's overlap test is END-aware
+    (``vcf.variant_end``: the line's last ``END``, cast as Spark's
+    ``try_cast``), so the index must cover the same span or pruning could
+    drop a split the test would keep."""
+    from ..operators.interval import try_long
+    from .vcf import info_end
+
     f = line.split("\t", 8)
     beg0 = int(f[1]) - 1
     end0 = beg0 + max(1, len(f[3]))
-    if len(f) > 7:
-        m = _END_RE.search(f[7])
-        if m:
-            end0 = max(end0, int(m.group(1)))
-    return f[0], beg0, end0
+    end = try_long(info_end(f[7])) if len(f) > 7 else None
+    return f[0], beg0, end0 if end is None else max(end0, end)
 
 
 def create_tabix_index(path: str, out: str | None = None) -> None:

@@ -1,17 +1,22 @@
 r"""VCF source and sink, Spark-first.
 
 Source paths (reference parity: `vcf/VcfSource.java:45-186`):
-- plain ``.vcf`` (and true-gzip ``.vcf.gz``): ``spark.read.text`` — Spark's
-  text source is splittable for plain text and handles gzip (one partition
-  per gzip file, exactly like the reference's non-BGZF path).
+- plain ``.vcf`` (and true-gzip ``.vcf.gz``) without intervals:
+  ``spark.read.text`` — Spark's text source is splittable for plain text
+  and handles gzip (one partition per gzip file, exactly like the
+  reference's non-BGZF path).
 - BGZF (``.bgz``, or a ``.gz`` that sniffs as BGZF — the reference's
   BGZFEnhancedGzipCodec distinction): custom splittable read — byte ranges
   are planned on the driver and each task yields the lines *owned* by its
   range via ``bgzf.iter_lines_in_range`` (exactly-once tiling).
+- with intervals, every read takes Python line tasks (BGZF as above,
+  plain text by byte range, true gzip one task per file), and each task
+  keeps only the lines whose record overlaps an interval (``_line_keeper``).
 
 Parsing is 100% native column expressions (split / transform /
-map_from_entries) — the whole decode stays in Tungsten codegen; the only
-Python-per-row path is BGZF block decompression, which is IO-bound zlib.
+map_from_entries) — the whole decode stays in Tungsten codegen; the
+Python-per-line work is block decompression and, for interval reads, the
+overlap test.
 
 Variants schema (SURVEY §1.3): contig pos id ref alts qual filters info
 genotypes.  Conventions: ``id``/``qual`` NULL for '.'; ``filters`` NULL for
@@ -20,15 +25,13 @@ genotypes.  Conventions: ``id``/``qual`` NULL for '.'; ``filters`` NULL for
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..operators.interval import (
-    collect_intervals,
-    intervals_frame,
-    residual_variant_overlap,
-)
+from ..operators.interval import collect_intervals, overlap_test, try_long
 from .fsio import fs_basename, fs_open, fs_write_bytes, get_fs, list_data_files
 from .headers import read_vcf_header_text, vcf_sample_names
 from .merger import PartFormat, commit, commit_sharded, text_format
@@ -151,11 +154,56 @@ def parse_vcf_lines(lines: DataFrame, sample_names: list[str], value_col: str = 
 
 def variant_end(info: Column, pos: Column, ref: Column) -> Column:
     """1-based inclusive end: INFO/END when present (symbolic alleles), else
-    pos + len(ref) - 1 — htsjdk VariantContext.getEnd semantics."""
+    pos + len(ref) - 1 — htsjdk VariantContext.getEnd semantics.  Its
+    Python twin, for decode tasks, is ``interval.variant_end``."""
     return F.coalesce(
         F.try_element_at(info, F.lit("END")).try_cast("long"),
         pos + F.length(ref) - 1,
     )
+
+
+def info_end(info: str) -> str | None:
+    """The value ``parse_vcf_lines`` gives INFO key ``END`` on a line with
+    this INFO field: the text after the first '=' of the LAST ``END``
+    entry ('' for a bare ``END`` flag), None without one or for '.'."""
+    if "END" not in info or info == ".":
+        return None
+    end = None
+    for kv in info.split(";"):
+        k, _, v = kv.partition("=")
+        if k == "END":
+            end = v
+    return end
+
+
+def _line_keeper(
+    ivs: list[tuple[str, int, int]] | None, stringency: str
+) -> Callable[[str], bool] | None:
+    """The test a VCF decode task applies to each line of an interval read:
+    keep a body line whose record overlaps an interval, with the span
+    ``parse_vcf_lines`` and ``variant_end`` give it, and under ``strict``
+    a malformed one (< 8 fields or POS not a long), on which
+    ``apply_stringency`` then raises.  The rows are those of filtering the
+    full read, in every stringency mode.  None without intervals."""
+    from ..operators.interval import variant_end as end_of
+
+    if ivs is None:
+        return None
+    hit = overlap_test(ivs)
+    strict = stringency.lower() == "strict"
+
+    def keep(line: str) -> bool:
+        if line.startswith("#"):
+            return False
+        f = line.split("\t", 8)
+        pos = try_long(f[1]) if len(f) > 1 else None
+        if strict and (len(f) < 8 or pos is None):
+            return True
+        ref = f[3] if len(f) > 3 else None
+        end = info_end(f[7]) if len(f) > 7 else None
+        return hit(f[0], pos, end_of(pos, ref, end))
+
+    return keep
 
 
 # Default split size, defined ONCE: it is both read()'s parameter default
@@ -188,13 +236,13 @@ class VcfSource:
         stringency: str = "lenient",
     ) -> DataFrame:
         """``intervals`` (a (contig, start, end) frame, 1-based inclusive)
-        returns the records overlapping any interval.  The frame is
-        collected once; its rows plan the index reads and, as a JVM-local
-        frame (``operators.interval.intervals_frame``), drive the exact
-        residual overlap filter.  With a ``.tbi``/``.csi`` (BGZF) or a
-        Tribble ``.idx`` (plain text) beside a file, splits no index range
-        reaches get no task, and each remaining task decodes only the index
-        ranges inside its split — past the reference's split-only pruning
+        returns the records overlapping any interval, exactly.  The frame
+        is collected once; its rows plan the index reads, and each line
+        task drops the lines no interval overlaps (``_line_keeper``).  With
+        a ``.tbi``/``.csi`` (BGZF) or a Tribble ``.idx`` (plain text)
+        beside a file, splits no index range reaches get no task, and each
+        remaining task decodes only the index ranges inside its split —
+        past the reference's split-only pruning
         (`vcf/VcfSource.java:143-168`), where the surviving split decodes
         in full."""
         from .bgzf import is_bgzf
@@ -205,40 +253,41 @@ class VcfSource:
         with fs_open(_first(path)) as fh:
             bgzf = is_bgzf(fh)
         ivs = collect_intervals(intervals) if intervals is not None else None
+        files = plan = None
         if bgzf:
             # tabix pushdown: with intervals + a .tbi, drop byte-range
             # splits the index proves contain no overlapping record and
             # seek the index chunks inside the others
-            lines = _read_bgzf_lines(spark, path, split_size, ivs=ivs)
+            plan = _bgzf_line_plan(spark, path, split_size, ivs)
         else:
+            # the explicit file list keeps index sidecars out of a
+            # directory read
             fs = get_fs(str(path))
             files = list_data_files(fs, str(path))
-            if any(f.endswith(".gz") for f in files):
-                # non-BGZF gzip: native whole-file gunzip stream
-                # (non-splittable, one partition per file — reference
-                # `vcf/VcfSource.java:80-86`).  The explicit file list keeps
-                # index sidecars out of a directory read.
-                lines = spark.read.text(files)
-            elif ivs is None and _native_text_ok(fs, split_size):
-                # no intervals → nothing to prune: the native JVM text scan
-                # (whole-stage codegen) beats any Python range reader; the
-                # explicit file list keeps index sidecars out of a
-                # directory read.  Only taken when the scheme is JVM-visible
-                # (a registered mock:// / Arrow-only scheme must stay on the
-                # wrapper) and the caller did not tune split_size (the
-                # native scan partitions by spark.sql.files.maxPartitionBytes,
-                # not our knob).
-                lines = spark.read.text(files)
-            else:
+            gz = any(f.endswith(".gz") for f in files)
+            if ivs is not None and gz:
+                # non-BGZF gzip is not splittable: one task per file, the
+                # partitioning of Spark's gzip text scan
+                plan = _gzip_line_plan(files)
+            elif ivs is not None or not (gz or _native_text_ok(fs, split_size)):
                 # Plain text: per-file byte-range splits, pruned (and
                 # seeked) per file by that file's Tribble `.idx` when
                 # intervals are given
                 # (reference picks the index per format: tabix for .bgz/.gz,
                 # Tribble for .vcf — `vcf/VcfSource.java:143-168`,
                 # `tribble/TribbleIndexIntervalFilteringTextInputFormat.java:33-67`).
-                # Falls back to the native scan when nothing was pruned and
-                # the native path is available.
-                lines = _read_text_lines(spark, files, split_size, ivs)
+                plan = _text_line_plan(spark, files, split_size, ivs)
+        if plan is None:
+            # no intervals → nothing to test per line: the native JVM text
+            # scan (whole-stage codegen) beats any Python reader — gzip
+            # whole-file (reference `vcf/VcfSource.java:80-86`), or plain
+            # text when the scheme is JVM-visible (a registered mock:// /
+            # Arrow-only scheme must stay on the wrapper) and the caller did
+            # not tune split_size (the native scan partitions by
+            # spark.sql.files.maxPartitionBytes, not our knob).
+            lines = spark.read.text(files)
+        else:
+            lines = _lines_frame(spark, plan, _line_keeper(ivs, stringency))
         body = lines.filter(~F.col("value").startswith("#"))
         from .sam import apply_stringency
 
@@ -247,10 +296,7 @@ class VcfSource:
             "long"
         ).isNull()
         body = apply_stringency(body, malformed, stringency)
-        variants = parse_vcf_lines(body, samples)
-        if ivs is None:
-            return variants
-        return residual_variant_overlap(variants, intervals_frame(spark, ivs))
+        return parse_vcf_lines(body, samples)
 
 
 def _first(path: str):
@@ -259,13 +305,31 @@ def _first(path: str):
     return first_file_in(path)
 
 
-def _read_bgzf_lines(
-    spark: SparkSession,
+def _lines_frame(
+    spark: SparkSession, plan: tuple[list, Callable], keep: Callable[[str], bool] | None
+) -> DataFrame:
+    """One-column ``value`` frame of a line plan ``(tasks, task_lines)``:
+    each task keeps the lines ``keep`` passes (all when None)."""
+    from .arrow_xfer import to_dataframe
+
+    tasks, task_lines = plan
+
+    def task_rows(task):
+        lines = task_lines(task)
+        return ({"value": v} for v in (lines if keep is None else filter(keep, lines)))
+
+    return to_dataframe(spark, tasks, task_rows, _LINES)
+
+
+def _bgzf_line_plan(
+    spark: SparkSession | None,
     path: str,
     split_size: int,
     ivs: list[tuple[str, int, int]] | None = None,
-) -> DataFrame:
-    """Plan byte ranges on the driver; tasks decode their ranges' lines.
+) -> tuple[list, Callable]:
+    """The BGZF line plan ``(tasks, task_lines)``: byte ranges planned on
+    the driver (serially when ``spark`` is None); ``task_lines(task)``
+    decodes its ranges' lines to ``str``.
 
     Partition planning matches the reference's split model (splitSize →
     ranges); each task re-opens the file locally — at cluster scale `path`
@@ -278,7 +342,9 @@ def _read_bgzf_lines(
     where the reference decodes a surviving split whole.  Per-file, so a
     sharded directory with per-shard indexes seeks in every shard; for many
     files the size+index metadata collection runs as a Spark job, keeping
-    driver planning O(1) (same policy as BamSource)."""
+    driver planning O(1) (same policy as BamSource).  A file read whole
+    (no intervals, or no index) that lacks the BGZF EOF terminator draws
+    a warning, as a BAM does."""
     from .fsio import collect_metadata, list_data_files
 
     fs = get_fs(path)
@@ -288,16 +354,18 @@ def _read_bgzf_lines(
         # compression homogeneity: the directory was sniffed BGZF from its
         # first file — a plain-text shard here would decode as garbage rows,
         # so fail fast with the offending file named
-        from .bgzf import is_bgzf
+        from .bgzf import is_bgzf, warn_if_missing_terminator
 
+        flen = fs.size(f)
+        chunks = None if ivs is None else index_chunks(fs, f, flen, ivs, sidecars=(".tbi", ".csi"))
         with fs.open_input(f) as fh:
             if not is_bgzf(fh):
                 raise ValueError(
                     f"{f}: not BGZF, but the first file of this input is — "
                     "VCF directory inputs must be compression-homogeneous"
                 )
-        flen = fs.size(f)
-        chunks = None if ivs is None else index_chunks(fs, f, flen, ivs, sidecars=(".tbi", ".csi"))
+            if chunks is None:
+                warn_if_missing_terminator(fh, flen, f)
         if chunks is None:
             return (f, flen, None)
         # a chunk's last records may start in the block its end points
@@ -306,7 +374,7 @@ def _read_bgzf_lines(
 
     tasks = _split_tasks(collect_metadata(spark, files, meta_for), split_size)
 
-    def read_range(task):
+    def task_lines(task):
         from .bgzf import iter_lines_in_range
         from .fsio import open_prefetched
 
@@ -316,11 +384,9 @@ def _read_bgzf_lines(
         with open_prefetched(fs, f) as fh:
             for s, e in parts:
                 for line in iter_lines_in_range(fh, s, e):
-                    yield {"value": line.decode("utf-8", "replace")}
+                    yield line.decode("utf-8", "replace")
 
-    from .arrow_xfer import to_dataframe
-
-    return to_dataframe(spark, tasks, read_range, _LINES)
+    return tasks, task_lines
 
 
 def _split_tasks(
@@ -370,13 +436,13 @@ def _native_text_ok(fs, split_size: int) -> bool:
     return isinstance(fs, LocalFileSystem) and split_size == _DEFAULT_SPLIT_SIZE
 
 
-def _read_text_lines(
-    spark: SparkSession,
+def _text_line_plan(
+    spark: SparkSession | None,
     files: list[str],
     split_size: int,
     ivs: list[tuple[str, int, int]] | None,
-) -> DataFrame:
-    """Plain-text analog of ``_read_bgzf_lines``: per-file byte-range splits
+) -> tuple[list, Callable]:
+    """Plain-text analog of ``_bgzf_line_plan``: per-file byte-range splits
     planned driver-side (as a Spark job for many files); with ``ivs``, each
     file's own Tribble ``.idx`` raw byte ranges prune its splits and clip
     each remaining task to the ranges inside its split, so a task reads
@@ -406,29 +472,33 @@ def _read_text_lines(
             franges = text_ranges_for_intervals(parse_tribble(f + ".idx"), ivs)
         return (f, flen, franges)
 
-    metas = collect_metadata(spark, files, meta_for)
-    if all(franges is None for _f, _l, franges in metas) and _native_text_ok(
-        fs, split_size
-    ):
-        # no file has an index → no split can be pruned; the native JVM
-        # text scan beats the Python range reader (residual filtering
-        # happens downstream either way); same scheme/split_size guard as
-        # the caller's fallback
-        return spark.read.text(files)
-    tasks = _split_tasks(metas, split_size)
+    tasks = _split_tasks(collect_metadata(spark, files, meta_for), split_size)
 
-    def read_range(task):
+    def task_lines(task):
         from .tribble import iter_text_lines_in_range
 
         p, parts = task
         with fs.open_input(p) as fh:
             for s, e in parts:
                 for line in iter_text_lines_in_range(fh, s, e):
-                    yield {"value": line.decode("utf-8", "replace")}
+                    yield line.decode("utf-8", "replace")
 
-    from .arrow_xfer import to_dataframe
+    return tasks, task_lines
 
-    return to_dataframe(spark, tasks, read_range, _LINES)
+
+def _gzip_line_plan(files: list[str]) -> tuple[list, Callable]:
+    """True-gzip line plan: one task per file, gunzipped whole (gzip is not
+    splittable); lines split on ``\n`` with trailing ``\r``/``\n``
+    stripped, as the plain-text reader does."""
+
+    def task_lines(f: str):
+        import gzip
+
+        with fs_open(f) as raw, gzip.open(raw) as fh:
+            for line in fh:
+                yield line.rstrip(b"\r\n").decode("utf-8", "replace")
+
+    return list(files), task_lines
 
 
 def to_vcf_line(sample_names: list[str]) -> Column:

@@ -96,8 +96,8 @@ class ReadsStorage:
                 df = project_columns(df, READS_COLUMNS, columns, "reads")
             return df
         kw = {"split_size": self.split_size} if self.split_size else {}
-        # CramSource prunes planning via the .crai and applies the shared
-        # residual itself — same exact-match contract as the BAM/SAM paths
+        # CramSource prunes planning via the .crai and applies the overlap
+        # test in its tasks — same exact-match contract as the BAM/SAM paths
         return CramSource().read(
             self.spark, path, reference_path=self.reference_path,
             intervals=intervals, include_unplaced=include_unplaced,
@@ -178,15 +178,15 @@ class VariantsStorage:
         BcfSource.read — site-only scans skip the whole per-sample
         genotype block); VCF is a native text scan where Catalyst prunes,
         so the request becomes a plain projection there."""
+        kw = {"split_size": self.split_size} if self.split_size else {}
         if self._is_bcf(path):
             from .operators.interval import collect_intervals
             from .sources.bcf import BcfSource
 
             ivs = collect_intervals(intervals) if intervals is not None else None
-            # BcfSource.read applies the residual overlap filter itself —
-            # same exact-match contract as VcfSource.read(intervals=...)
-            return BcfSource().read(self.spark, path, intervals=ivs, columns=columns)
-        kw = {"split_size": self.split_size} if self.split_size else {}
+            # BcfSource.read applies the overlap test in its tasks — same
+            # exact-match contract as VcfSource.read(intervals=...)
+            return BcfSource().read(self.spark, path, intervals=ivs, columns=columns, **kw)
         df = VcfSource().read(
             self.spark, path, intervals=intervals, stringency=self.stringency, **kw
         )

@@ -252,7 +252,7 @@ def test_datasource_interval_option(spark, bam_with_bai):
         .option("intervals", '[["1", 24800000, 24860000]]')
         .load(bam_with_bai)
     )
-    # index pushdown yields a superset; exact residual via DataFrame filter
+    # index pushdown, then each task's overlap test: the overlapping reads
     full = BamSource().read(spark, bam_with_bai)
     assert 0 < df.count() < full.count()
 

@@ -215,7 +215,7 @@ def test_write_time_csi_and_splittable_read(spark, tmp_path):
         assert sorted(r["pos"] for r in df.collect()) == truth, split
     # small splits genuinely parallelize
     assert BcfSource().read(spark, out, split_size=16 * 1024).rdd.getNumPartitions() > 5
-    # interval read: chunk pruning + residual overlap filter = EXACT
+    # interval read: chunk pruning + the tasks' overlap test = EXACT
     # matches, same contract as VcfSource.read(intervals=...)
     pruned = BcfSource().read(spark, out, intervals=[("chr1", 1, 100000)])
     got = {r["pos"] for r in pruned.collect()}

@@ -303,6 +303,30 @@ def test_indexes_are_opened_only_by_the_index_lookup():
     assert offenders == [], offenders
 
 
+def test_indexed_sources_filter_intervals_in_their_tasks():
+    """The Python-decoded interval sources (BAM, CRAM, VCF, BCF) apply the
+    overlap test inside their decode tasks (``interval.overlap_test``); an
+    import of the join-based residual (``interval_filter``,
+    ``residual_traversal``, kept for SAM text scans) is a second plan per
+    region read, and the interval-table builders are gone."""
+    import ast
+    import pathlib
+
+    import disq_original_spark as pkg
+    from disq_original_spark.operators import interval
+
+    joins = {"interval_filter", "residual_traversal"}
+    root = pathlib.Path(pkg.__file__).parent / "sources"
+    offenders: list[str] = []
+    for name in ("bam.py", "cram.py", "vcf.py", "bcf.py"):
+        for node in ast.walk(ast.parse((root / name).read_text())):
+            if isinstance(node, ast.ImportFrom):
+                offenders += [f"{name}:{node.lineno} {a.name}" for a in node.names if a.name in joins]
+    assert offenders == [], offenders
+    assert not hasattr(interval, "intervals_frame")
+    assert not hasattr(interval, "residual_variant_overlap")
+
+
 def test_materialize_logs_the_branch_taken(spark, monkeypatch, caplog):
     """Each ``materialize`` call logs which side of the scale gate it took,
     with the source size and the gate, so a run at any scale can say why a

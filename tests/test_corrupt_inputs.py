@@ -327,6 +327,27 @@ def test_block_boundary_cut_beside_intact_index_raises_at_planning(spark, tmp_pa
             BcfSource().read(spark, str(cut))
 
 
+def test_block_boundary_cut_bgzf_vcf_read_whole_warns(spark, tmp_path, indexed_twins):
+    """A BGZF VCF cut exactly on a block boundary and read whole (no
+    interval, so no index to refuse it) reads short: the planner warns
+    that the BGZF EOF terminator is missing, as the BAM reader does; the
+    intact file draws no warning."""
+    import warnings
+
+    from disq_original_spark.storage import VariantsStorage
+
+    src, _ext = indexed_twins["vcf.tbi"]
+    cut = tmp_path / src.name
+    cut.write_bytes(src.read_bytes()[: _block_boundary_cut(str(src))])
+    with pytest.warns(UserWarning, match="no BGZF EOF terminator"):
+        short = VariantsStorage(spark).read(str(cut)).count()
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        full = VariantsStorage(spark).read(str(src)).count()
+    assert not [w for w in seen if "no BGZF EOF terminator" in str(w.message)]
+    assert 0 < short < full
+
+
 def test_cut_cram_beside_intact_crai_raises_in_both_planners(spark, tmp_path):
     """Both CRAM planners (``plan_splits`` for whole-file reads, and the
     interval planner) refuse a CRAM cut at its last container's start

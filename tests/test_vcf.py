@@ -119,10 +119,10 @@ def test_tabix_split_pruning_partition_counts(spark):
 
     from disq_original_spark.sources.fsio import get_fs
     from disq_original_spark.sources.tabix import index_chunks, merge_ranges
-    from disq_original_spark.sources.vcf import _read_bgzf_lines, _split_tasks
+    from disq_original_spark.sources.vcf import _bgzf_line_plan, _split_tasks
 
-    full = _read_bgzf_lines(spark, HISEQ, 128 * 1024)
-    assert full.rdd.getNumPartitions() == 4
+    full, _task_lines = _bgzf_line_plan(spark, HISEQ, 128 * 1024)
+    assert len(full) == 4
     chunks = index_chunks(
         get_fs(HISEQ), HISEQ, os.path.getsize(HISEQ), [("chr1", 2_700_000, 2_800_000)], sidecars=(".tbi",)
     )
@@ -414,6 +414,10 @@ def test_vcf_feature_span_end_aware():
     assert vcf_feature_span(line) == ("chr2", 999, 5000)
     # SVLEN-less END in first position
     assert vcf_feature_span("1\t5\t.\tG\t<DUP>\t.\t.\tEND=42\tGT\t0/1") == ("1", 4, 42)
+    # the read side takes a line's LAST END (cast as Spark's try_cast); an
+    # empty END= falls back to the REF span
+    assert vcf_feature_span("1\t5\t.\tG\t<DEL>\t.\t.\tEND=42;DP=3;END=+90") == ("1", 4, 90)
+    assert vcf_feature_span("1\t5\t.\tG\t<DEL>\t.\t.\tEND=42;END=") == ("1", 4, 5)
 
 
 def test_variants_storage_write_index_option(spark, tmp_path):
