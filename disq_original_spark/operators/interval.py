@@ -234,11 +234,54 @@ def try_long(s: str | None) -> int | None:
     overflow)."""
     if s is None:
         return None
+    if s.isascii() and s.isdigit() and len(s) < 19:
+        return int(s)  # the common case: unsigned, within int64
     s = s.strip(_TRIM)
     if not _LONG.fullmatch(s):
         return None
     v = int(s)
     return v if -(1 << 63) <= v < (1 << 63) else None
+
+
+# Spark's string -> double ``try_cast`` is Java's ``Double.parseDouble``
+# (trims chars <= 0x20; ASCII digits; an optional trailing f/F/d/D; hex
+# significands with a binary exponent; exact-case ``NaN``/``Infinity``),
+# then, where that throws, the literals below after the same trim, any case
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
+_JAVA_DEC = re.compile(r"([+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?)[fFdD]?")
+_JAVA_HEX = re.compile(
+    r"([+-]?0[xX](?:[0-9a-fA-F]+\.?|[0-9a-fA-F]*\.[0-9a-fA-F]+)[pP][+-]?[0-9]+)[fFdD]?"
+)
+_SPARK_FLOAT_LITERALS = {
+    "inf": float("inf"), "+inf": float("inf"), "infinity": float("inf"),
+    "+infinity": float("inf"), "-inf": float("-inf"), "-infinity": float("-inf"),
+    "nan": float("nan"),
+}
+
+
+def try_double(s: str | None) -> float | None:
+    """Spark's ``try_cast(s AS double)`` of a string: None where Spark
+    returns NULL.  Not Python's ``float()``, which differs both ways:
+    Spark takes ``1d`` and ``0x1p3``, Python ``1_0``, non-ASCII digits and
+    Unicode whitespace."""
+    if s is None:
+        return None
+    t = s.strip(_JAVA_TRIM)
+    m = _JAVA_DEC.fullmatch(t)
+    if m:
+        return float(m.group(1))
+    m = _JAVA_HEX.fullmatch(t)
+    if m:
+        try:
+            return float.fromhex(m.group(1))
+        except OverflowError:
+            return float("-inf") if t[0] == "-" else float("inf")
+    body = t[1:] if t[:1] in ("+", "-") else t
+    if body == "NaN":
+        return float("nan")
+    if body == "Infinity":
+        return float(t)
+    return _SPARK_FLOAT_LITERALS.get(t.lower())
 
 
 def read_end(pos: int | None, cigar: str | None) -> int | None:

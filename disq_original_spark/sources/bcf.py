@@ -871,7 +871,7 @@ class BcfSource:
         from ..operators.interval import overlap_test, variant_end
         from .arrow_xfer import pruned_schema, to_dataframe
         from .fsio import collect_metadata, list_data_files
-        from .vcf import VARIANTS_COLUMNS
+        from .vcf import VARIANTS_COLUMNS, VARIANTS_SCHEMA
 
         if columns is not None:
             from .sam import validate_columns
@@ -882,7 +882,7 @@ class BcfSource:
         if not files:
             raise FileNotFoundError(f"no BCF data files under {path}")
         fields = None if columns is None else frozenset(columns)
-        schema = pruned_schema(_variants_schema(), fields)
+        schema = pruned_schema(VARIANTS_SCHEMA, fields)
         hit = None
         if intervals is not None:
             hit = overlap_test(intervals)
@@ -969,39 +969,6 @@ def _decompress(path: str) -> bytes:
     fs = get_fs(path)
     with fs.open_input(path) as fh:
         return gzip.decompress(fh.read())
-
-
-def _variants_schema():
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    gt = StructType(
-        [
-            StructField("sample", StringType()),
-            StructField("gt", StringType()),
-            StructField("attrs", MapType(StringType(), StringType())),
-        ]
-    )
-    return StructType(
-        [
-            StructField("contig", StringType()),
-            StructField("pos", LongType()),
-            StructField("id", StringType()),
-            StructField("ref", StringType()),
-            StructField("alts", ArrayType(StringType())),
-            StructField("qual", DoubleType()),
-            StructField("filters", ArrayType(StringType())),
-            StructField("info", MapType(StringType(), StringType())),
-            StructField("genotypes", ArrayType(gt)),
-        ]
-    )
 
 
 class BcfSink:

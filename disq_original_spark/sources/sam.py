@@ -62,7 +62,7 @@ def apply_stringency(body: DataFrame, malformed: Column, stringency: str) -> Dat
     htsjdk STRICT/LENIENT/SILENT through all readers,
     `HtsjdkReadsRddStorage.java:66,97-100`): STRICT fails the job, SILENT
     drops the record, LENIENT (default) keeps it with nulled-out fields."""
-    s = stringency.lower()
+    s = stringency_mode(stringency)
     if s == "silent":
         return body.filter(~malformed)
     if s == "strict":
@@ -80,9 +80,16 @@ def apply_stringency(body: DataFrame, malformed: Column, stringency: str) -> Dat
                 F.concat(F.lit("malformed record: "), F.col("value")),
             ).isNull()
         )
-    if s == "lenient":
-        return body
-    raise ValueError(f"unknown stringency {stringency!r} (strict/lenient/silent)")
+    return body
+
+
+def stringency_mode(stringency: str) -> str:
+    """``stringency`` lower-cased: strict, lenient or silent; anything else
+    is refused."""
+    s = stringency.lower()
+    if s not in ("strict", "lenient", "silent"):
+        raise ValueError(f"unknown stringency {stringency!r} (strict/lenient/silent)")
+    return s
 
 
 def parse_sam_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
@@ -168,11 +175,11 @@ def schema_ordered(canonical: list[str], wanted) -> list[str]:
 def project_columns(
     df: DataFrame, canonical: list[str], columns, kind: str
 ) -> DataFrame:
-    """The validate-then-project step every TEXT-format pruned facade
-    shares (SAM, VCF, GFF — formats whose sources decode the full record
-    anyway, so pruning is a post-parse ``select`` that still lets
-    Catalyst drop the dead parse expressions).  Binary sources (BAM/
-    CRAM/BCF) instead take ``columns=`` natively and skip decode work.
+    """The validate-then-project step of a TEXT-format pruned facade
+    whose source decodes the full record anyway (SAM), so pruning is a
+    post-parse ``select`` that still lets Catalyst drop the dead parse
+    expressions.  Python-decoded sources (BAM/CRAM/BCF, VCF line tasks)
+    instead take ``columns=`` natively and skip decode work.
     Keeping the contract in one helper stops the validation/ordering
     pair drifting apart as more text facades grow pruning."""
     validate_columns(columns, canonical, kind)

@@ -174,10 +174,11 @@ class VariantsStorage:
         intervals: DataFrame | None = None,
         columns: list[str] | None = None,
     ) -> DataFrame:
-        """``columns`` prunes the BCF decode at block granularity (see
+        """``columns`` prunes the decode: BCF at block granularity (see
         BcfSource.read — site-only scans skip the whole per-sample
-        genotype block); VCF is a native text scan where Catalyst prunes,
-        so the request becomes a plain projection there."""
+        genotype block), VCF line tasks per field (see VcfSource.read —
+        site-only reads never split INFO or FORMAT).  The frame carries
+        exactly ``columns``, in schema order."""
         kw = {"split_size": self.split_size} if self.split_size else {}
         if self._is_bcf(path):
             from .operators.interval import collect_intervals
@@ -187,15 +188,9 @@ class VariantsStorage:
             # BcfSource.read applies the overlap test in its tasks — same
             # exact-match contract as VcfSource.read(intervals=...)
             return BcfSource().read(self.spark, path, intervals=ivs, columns=columns, **kw)
-        df = VcfSource().read(
-            self.spark, path, intervals=intervals, stringency=self.stringency, **kw
+        return VcfSource().read(
+            self.spark, path, intervals=intervals, stringency=self.stringency, columns=columns, **kw
         )
-        if columns is not None:
-            from .sources.sam import project_columns
-            from .sources.vcf import VARIANTS_COLUMNS
-
-            df = project_columns(df, VARIANTS_COLUMNS, columns, "variants")
-        return df
 
     def write(
         self, df: DataFrame, path: str, header_text: str, *, write_index: bool = False

@@ -603,7 +603,7 @@ def test_whole_file_read_skips_htslib_pseudo_bin(spark, tmp_path):
     ``(n_mapped, n_unmapped)`` — record COUNTS, not offsets.  A read with no
     intervals walks every chunk of the index and must skip that bin; read
     as an offset, 70000 mapped records point into byte 1 of the file."""
-    from disq_original_spark.sources.bcf import _variants_schema
+    from disq_original_spark.sources.vcf import VARIANTS_SCHEMA
     from disq_original_spark.sources.csi import bin_limit, parse_csi
     from disq_original_spark.storage import VariantsStorage
 
@@ -612,7 +612,7 @@ def test_whole_file_read_skips_htslib_pseudo_bin(spark, tmp_path):
     rows, header = variants()
     path = str(tmp_path / "v.bcf")
     VariantsStorage(spark).write(
-        frame(spark, rows, _variants_schema()).coalesce(1), path, header, write_index=True
+        frame(spark, rows, VARIANTS_SCHEMA).coalesce(1), path, header, write_index=True
     )
     idx = parse_csi(path + ".csi")
     chunks = [c for _loff, ch in idx.bins[0].values() for c in ch]

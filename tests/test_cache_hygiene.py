@@ -327,6 +327,30 @@ def test_indexed_sources_filter_intervals_in_their_tasks():
     assert not hasattr(interval, "residual_variant_overlap")
 
 
+def test_vcf_has_one_native_parse_path():
+    """VCF lines are parsed by ``parse_vcf_line`` in the decode tasks, or
+    by ``parse_vcf_lines`` in the one native text-scan branch of
+    ``VcfSource.read``: a second call of the native parser anywhere under
+    the package is a second parse path to keep in step, and ``vcf.py``
+    reads no environment switch."""
+    import ast
+    import pathlib
+
+    import disq_original_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    calls: list[str] = []
+    for f in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                if (fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)) == "parse_vcf_lines":
+                    calls.append(f"{f.relative_to(root).as_posix()}:{node.lineno}")
+    assert len(calls) == 1 and calls[0].startswith("sources/vcf.py:"), calls
+    vcf = (root / "sources" / "vcf.py").read_text()
+    assert "environ" not in vcf and "getenv" not in vcf
+
+
 def test_materialize_logs_the_branch_taken(spark, monkeypatch, caplog):
     """Each ``materialize`` call logs which side of the scale gate it took,
     with the source size and the gate, so a run at any scale can say why a

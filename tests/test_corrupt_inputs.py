@@ -277,7 +277,7 @@ def indexed_twins(spark, tmp_path_factory):
     import shutil
 
     from disq_original_spark.sources.bam import READS_SCHEMA, BamSink
-    from disq_original_spark.sources.bcf import _variants_schema
+    from disq_original_spark.sources.vcf import VARIANTS_SCHEMA
     from disq_original_spark.sources.csi import create_csi_for_bam, create_csi_for_vcf
     from disq_original_spark.storage import VariantsStorage
 
@@ -287,7 +287,7 @@ def indexed_twins(spark, tmp_path_factory):
     reads = frame(spark, reads_rows(sorted_reads()), READS_SCHEMA).coalesce(1)
     BamSink().write(reads, reads_header(), str(d / "r.bam"), write_sbi=False, write_bai=True)
     rows, header = variants()
-    vdf = frame(spark, rows, _variants_schema()).coalesce(1)
+    vdf = frame(spark, rows, VARIANTS_SCHEMA).coalesce(1)
     for name in ("v.vcf.bgz", "v.bcf"):
         VariantsStorage(spark).write(vdf, str(d / name), header, write_index=True)
     for src, dst, build in (("r.bam", "rc.bam", create_csi_for_bam), ("v.vcf.bgz", "vc.vcf.bgz", create_csi_for_vcf)):

@@ -28,13 +28,14 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from disq_original_spark.sources import cram
 from disq_original_spark.sources.arrow_xfer import pruned_schema, to_dataframe
 from disq_original_spark.sources.bam import READS_SCHEMA, BamSink, BamSource
-from disq_original_spark.sources.bcf import BcfSource, _variants_schema
+from disq_original_spark.sources.bcf import BcfSource
 from disq_original_spark.sources.bgzf import enumerate_blocks
 from disq_original_spark.sources.bgzf_source import BgzfBlockSource
 from disq_original_spark.sources.cram import CramSource
 from disq_original_spark.sources.datasource import register_datasources
 from disq_original_spark.sources.fasta import FastaSource
 from disq_original_spark.sources.headers import SamHeader
+from disq_original_spark.sources.vcf import VARIANTS_SCHEMA
 from disq_original_spark.storage import ReadsStorage, VariantsStorage
 
 from .twins import (
@@ -80,7 +81,7 @@ def inputs(spark, tmp_path_factory):
         write_index=True,
     )
     vrows, vheader = variants()
-    vdf = frame(spark, vrows, _variants_schema()).coalesce(1)
+    vdf = frame(spark, vrows, VARIANTS_SCHEMA).coalesce(1)
     for fmt, name in (("vcf", "v.vcf.bgz"), ("bcf", "v.bcf")):
         paths[fmt] = str(d / name)
         VariantsStorage(spark).write(vdf, paths[fmt], vheader, write_index=True)
@@ -158,7 +159,7 @@ def test_bcf_nested_values(spark, inputs):
     as_dicts = lambda df: [r.asDict(recursive=True) for r in df.collect()]  # noqa: E731
     assert _f32(as_dicts(BcfSource().read(spark, path))) == _f32(as_dicts(written))
     pruned = BcfSource().read(spark, path, columns=["info", "genotypes"])
-    assert pruned.schema == pruned_schema(_variants_schema(), {"info", "genotypes"})
+    assert pruned.schema == pruned_schema(VARIANTS_SCHEMA, {"info", "genotypes"})
     assert _f32(as_dicts(pruned)) == _f32(as_dicts(written.select("info", "genotypes")))
     assert any(g["attrs"] for r in as_dicts(pruned) for g in r["genotypes"])
 
@@ -224,10 +225,43 @@ def test_split_sweep_keeps_file_order(spark, inputs, fmt):
         assert _rows(df) == whole, split
 
 
+@pytest.mark.parametrize("columns", [["pos", "contig"], ["genotypes", "qual", "info"], ["alts", "filters", "id"]])
+def test_vcf_columns_prune_the_decode(spark, inputs, tmp_path, columns):
+    """``columns`` gives exactly those columns, in schema order, with the
+    rows of the projected full read: BGZF line tasks, whole-file and
+    region (the pruned ``VARIANTS_SCHEMA``), and the native plain-text
+    scan (whose parse marks some nested fields non-nullable).  The
+    whole-file line tasks give the native scan's rows of the same text.  A
+    line task parses INFO and FORMAT only when they are requested."""
+    import gzip
+
+    from disq_original_spark.sources.vcf import parse_vcf_line
+
+    bgz = inputs["paths"]["vcf"]
+    text = tmp_path / "v.vcf"
+    text.write_bytes(gzip.decompress(Path(bgz).read_bytes()))
+    iv = spark.createDataFrame([("chr1", 100_000, 2_000_000)], "contig string, start long, end long")
+    ordered = [c for c in VARIANTS_SCHEMA.names if c in columns]
+    got = {}
+    for path, ivs in ((bgz, None), (bgz, iv), (str(text), None)):
+        storage = VariantsStorage(spark, split_size=SPLIT if path == bgz else None)
+        full = storage.read(path, intervals=ivs).select(*ordered)
+        df = storage.read(path, intervals=ivs, columns=columns)
+        assert df.columns == ordered and df.schema == full.schema
+        if path == bgz:
+            assert df.schema == pruned_schema(VARIANTS_SCHEMA, columns)
+        got[path, ivs is None] = _rows(df)
+        assert got[path, ivs is None] == _rows(full) != []
+    assert got[bgz, True] == got[str(text), True]
+    line = "chr1\t5\t.\tG\tT\t9\tPASS\tDP=3\tGT\t0/1"
+    site = {"contig", "pos", "id", "ref", "alts", "qual", "filters"}
+    assert set(parse_vcf_line(line, ["s"], frozenset(columns))) == site | set(columns)
+
+
 @pytest.mark.parametrize("columns", [None, ["pos", "ref"]])
 def test_bcf_region_pruned_to_nothing(spark, inputs, columns):
     df = BcfSource().read(spark, inputs["paths"]["bcf"], intervals=[("nosuch", 1, 100)], columns=columns)
-    assert df.schema == pruned_schema(_variants_schema(), columns)
+    assert df.schema == pruned_schema(VARIANTS_SCHEMA, columns)
     assert df.collect() == []
 
 

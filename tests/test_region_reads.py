@@ -20,7 +20,10 @@ committed twins in ``fixtures/oracle/`` through the repo's own sinks.
 - Under ``strict`` a malformed line the index chunks hold outside the
   window still raises; ``lenient`` and ``silent`` return the rows of
   filtering their full read.  ``interval.try_long`` is Spark's
-  ``try_cast(... AS bigint)``.
+  ``try_cast(... AS bigint)`` and ``interval.try_double`` its
+  ``try_cast(... AS double)``.
+- BGZF VCF reads, whole-file and region, parse their lines in the decode
+  task: no ``parse_vcf_lines``, no ``Filter``/``Project`` in the plan.
 - ``clip_ranges`` is the intersection of sorted disjoint ranges with a
   split; a VCF task reads index ranges closer than ``_SEEK_GAP`` as one,
   and the BGZF block scan finds a block however short the range it scans.
@@ -40,12 +43,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from disq_original_spark.sources.bam import READS_SCHEMA, BamSink
-from disq_original_spark.sources.bcf import _variants_schema
 from disq_original_spark.sources.bgzf import EMPTY_GZIP_BLOCK, compress_blocks
 from disq_original_spark.sources.csi import create_csi_for_bam, create_csi_for_vcf
 from disq_original_spark.sources.headers import SamHeader
 from disq_original_spark.sources.tabix import clip_ranges, create_tabix_index, merge_ranges
 from disq_original_spark.sources.tribble import create_tribble_index
+from disq_original_spark.sources.vcf import VARIANTS_SCHEMA
 from disq_original_spark.storage import ReadsStorage, VariantsStorage
 
 from .twins import (
@@ -153,7 +156,7 @@ def inputs(spark, tmp_path_factory):
     )
 
     vrows, vheader = variants()
-    vdf = frame(spark, vrows, _variants_schema()).coalesce(1)
+    vdf = frame(spark, vrows, VARIANTS_SCHEMA).coalesce(1)
     for fmt, name in (("vcf", "v.vcf.bgz"), ("text", "v.vcf"), ("bcf", "v.bcf")):
         paths[fmt] = str(d / name)
         VariantsStorage(spark).write(vdf, paths[fmt], vheader, write_index=True)
@@ -424,6 +427,29 @@ def test_region_read_runs_two_jobs(spark, inputs, name):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
+def test_vcf_line_reads_build_rows_in_the_task(spark, inputs, monkeypatch):
+    """A whole-file BGZF VCF read and a region read parse their lines in
+    the decode task: neither calls ``parse_vcf_lines``, and the executed
+    plan is the ``MapInArrow`` over the seed range, with no ``Filter`` or
+    ``Project`` over a line column.  The native plain-text scan, which
+    keeps ``parse_vcf_lines``, shows the count sees its calls."""
+    from disq_original_spark.sources import vcf
+
+    calls = []
+    native = vcf.parse_vcf_lines
+    monkeypatch.setattr(vcf, "parse_vcf_lines", lambda *a, **kw: calls.append(1) or native(*a, **kw))
+    iv = spark.createDataFrame(_FRAME_ONCE_IVS["vcf"], IV_SCHEMA)
+    for ivs in (None, iv):
+        df = _read(spark, inputs, "vcf", None, ivs)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "value#" not in plan, plan
+        assert "Filter" not in plan and "Project" not in plan, plan
+        assert df.collect()
+    assert calls == []
+    assert _read(spark, inputs, "text_noidx", None).count() > 0
+    assert calls == [1]
+
+
 def test_region_read_stringency_on_malformed_line_in_chunk(spark, inputs, tmp_path):
     """A 5-field line sits in the index chunk a window reads but outside
     the window: ``strict`` raises on it, ``lenient`` and ``silent`` return
@@ -470,6 +496,34 @@ def test_try_long_is_sparks_try_cast(spark):
     df = spark.createDataFrame([(v,) for v in values], "s string")
     got = {r.s: r.v for r in df.selectExpr("s", "try_cast(s AS bigint) AS v").collect()}
     assert {v: try_long(v) for v in values} == got
+
+
+def test_try_double_is_sparks_try_cast(spark):
+    """``interval.try_double`` is Spark's ``try_cast(s AS double)``: Java's
+    ``parseDouble`` (type suffixes, hex significands, exact-case
+    ``NaN``/``Infinity``, trims only chars <= 0x20) plus Spark's
+    any-case ``inf``/``nan`` literals, not Python's ``float()``."""
+    import math
+
+    from disq_original_spark.operators.interval import try_double
+
+    values = ["1", " 1", "1d", "1D", "1.5F", "1e5f", "1dd", "0x1p3", "0X1.8P-2d", "-0x.8p1", "0x1p", "0x1",
+              "0x", "1_0", "\u0661", "\u0661.5", "1\u3000", "\u20031", "\x7f1", "1\x7f", "\x0b1", "\x001",
+              "inf", "INF", "+inf", "-inf", "Infinity", "-Infinity", "+Infinity", "infinity", "-infinity",
+              "+infinity", "Infinityd", "infd", "NaN", "nan", "NAN", "-NaN", "+NaN", "-nan", " nan ", "NaNd",
+              ".", "", " ", "5.", ".5", "-.5e-3", "1e", "e5", "+1", "++1", "1.2.3", "1 2", "-0", "-0.0",
+              "1e400", "-1e400", "1e-400", "4.9e-324", "0x1.fffffffffffff8p1023", "0x1p99999999999999999999",
+              "-0x1p99999999999999999999", "0x0p99999999999999999999", "1e99999999999999999999",
+              "123456789012345678901234567890", "0.1"]
+    df = spark.createDataFrame([(v,) for v in values], "s string")
+    got = {r.s: r.v for r in df.selectExpr("s", "try_cast(s AS double) AS v").collect()}
+
+    def same(a, b) -> bool:
+        if a is None or b is None:
+            return a is b
+        return (a == b or math.isnan(a) and math.isnan(b)) and math.copysign(1, a) == math.copysign(1, b)
+
+    assert [v for v in values if not same(try_double(v), got[v])] == []
 
 
 def test_datasource_bam_plans_with_the_bam_planner(spark, inputs, tmp_path):

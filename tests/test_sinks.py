@@ -26,13 +26,12 @@ from pyspark.sql import functions as F
 
 from disq_original_spark.sources.bai import create_bai
 from disq_original_spark.sources.bam import READS_SCHEMA, BamSink, BamSource, create_sbi
-from disq_original_spark.sources.bcf import _variants_schema
 from disq_original_spark.sources.cram import create_crai
 from disq_original_spark.sources.fsio import MappedFileSystem, register_filesystem, unregister_filesystem
 from disq_original_spark.sources.headers import SamHeader
 from disq_original_spark.sources.tabix import create_tabix_index
 from disq_original_spark.sources.tribble import create_tribble_index
-from disq_original_spark.sources.vcf import VcfSink, VcfSource
+from disq_original_spark.sources.vcf import VARIANTS_SCHEMA, VcfSink, VcfSource
 from disq_original_spark.storage import ReadsStorage, VariantsStorage
 
 from .twins import CRAM_HEADER, cram_reads, frame, reads_header, reads_rows, seeded_fasta, sorted_reads, variants
@@ -59,7 +58,7 @@ def data(spark, tmp_path_factory):
         "rows": {
             "reads": (reads_rows(reads), READS_SCHEMA),
             "cram": (reads_rows(cram_reads(reads)), READS_SCHEMA),
-            "variants": (vrows, _variants_schema()),
+            "variants": (vrows, VARIANTS_SCHEMA),
         },
         "headers": {"reads": reads_header(), "cram": SamHeader.parse(CRAM_HEADER), "variants": vheader},
     }

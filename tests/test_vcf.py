@@ -350,6 +350,70 @@ def test_vcf_line_sample_values_follow_format_keys(spark):
 
 
 
+# adversarial body lines: duplicated INFO and FORMAT keys, flag keys,
+# every FILTER and ALT form, 1/5/7/8-field lines, samples with more and
+# fewer sub-fields than FORMAT keys, an empty line, a trailing tab, and
+# QUAL strings on which Spark's double cast and Python's float() differ
+_ADVERSARIAL = [
+    "",
+    "chr1",
+    "chr1\t100\t.\tA\tT",
+    "chr1\t100\trs7\tA\tT\t50\tPASS",
+    "chr1\t100\t.\tA\tT\t50\tq10;s50\tDP=1",
+    "chr1\t100\t.\tA\t.\t.\t.\t.",
+    "chr1\t100\t.\tA\tT\t50\tPASS\tDP=1\t",
+    "chr1\t100\t.\tA\tT\t50\tPASS\tDP=1\tGT:DP\t0/1:3\t",
+    "chr1\t100\trs1\tA\tT,G\t1d\tq10;q10\tDP=5;AF=0.1;DP=9;DB;X=;=v;;Y=a=b\t"
+    "GT:DP:DP:GQ\t0/1:3:7:9\t1|1:2\t./.:1:2:3:4:5",
+    "chr1\t100\t.\tA\tA,,C\t 1\tPASS;q10\tDB;DP=5;DB;AF=1;DP=7\tDP:GT:DP\t3:0/1\t.\t:",
+    "chr1\t100\t.\tA\tT\tinf\tPASS\tEND=7;END=\tGT\t0|1\t1|1\t0|0",
+    "chr1\t100\t.\tA\tT\tNaN\t.\tDP=1;DP\t.\t.",
+    "chr1\t100\t.\tA\tT\t1_0\tPASS\t.\tGT:GT\t0/1:1/1\t0/0",
+    "chr1\t100\t.\tA\tT\t0x1p3\tPASS\tDP=1\tGQ\t5\t6\t7\t8",
+    "chr1\t100\t.\tA\tT\t\u0661\tPASS\tDP=1\t\t\t\t",
+    "chr1\t100\t.\tA\tT\t1\u3000\tPASS\tDP=1\tGT\t",
+    "chr1\tx100\t.\tA\tT\t-0\tPASS\tDP=1",
+    "chr1\t 100 \t.\tA\tT\t.5e1\tPASS\tDP=1",
+    "\t\t\t\t\t\t\t",
+]
+
+
+def test_parse_vcf_line_equals_parse_vcf_lines(spark, tmp_path):
+    """The decode tasks' ``parse_vcf_line`` gives the rows of the native
+    ``parse_vcf_lines`` on the same lines, map entry order included
+    (compared as ``to_json`` of each row): the twins VCF and the
+    adversarial lines, with 0, 1 and 3 samples."""
+    from pyspark.sql import functions as F
+
+    from disq_original_spark.sources.arrow_xfer import to_dataframe
+    from disq_original_spark.sources.vcf import VARIANTS_SCHEMA, parse_vcf_line, parse_vcf_lines
+
+    from .twins import frame, variants
+
+    rows, header = variants()
+    twin = tmp_path / "twins.vcf"
+    VcfSink().write(frame(spark, rows, VARIANTS_SCHEMA).coalesce(1), header, str(twin))
+    body = [line for line in twin.read_text().split("\n") if line and not line.startswith("#")]
+    assert len(body) == len(rows)
+
+    def as_json(df) -> list[str]:
+        return [r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect()]
+
+    for samples, lines in (
+        (["NA12878"], body + _ADVERSARIAL),
+        ([], _ADVERSARIAL),
+        (["S1", "S2", "S3"], _ADVERSARIAL),
+    ):
+        native = parse_vcf_lines(spark.createDataFrame([(v,) for v in lines], "value string"), samples)
+        chunks = [lines[i : i + 1000] for i in range(0, len(lines), 1000)]
+        in_task = to_dataframe(
+            spark, chunks, lambda chunk: (parse_vcf_line(v, samples) for v in chunk), VARIANTS_SCHEMA
+        )
+        want, got = as_json(native), as_json(in_task)
+        assert len(got) == len(lines)
+        diff = [(v, w, g) for v, w, g in zip(lines, want, got) if w != g]
+        assert diff == [], diff[:3]
+
 
 # ---------------------------------------------------- write-time index creation
 
