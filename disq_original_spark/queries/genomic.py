@@ -230,7 +230,12 @@ def g03(spark: SparkSession, sf: str) -> DataFrame:
 def g04(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.vcf import VcfSource
 
-    v = VcfSource().read(spark, f"{_FIXTURES}/HiSeq.10000.vcf.bgz", split_size=128 * 1024)
+    v = VcfSource().read(
+        spark,
+        f"{_FIXTURES}/HiSeq.10000.vcf.bgz",
+        split_size=128 * 1024,
+        columns=["contig", "ref", "alts", "qual", "filters"],
+    )
     snv = (F.length("ref") == 1) & (F.size("alts") == 1) & (
         F.length(F.element_at("alts", 1)) == 1
     )
@@ -759,7 +764,9 @@ def g11(spark: SparkSession, sf: str) -> DataFrame:
 def g12(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.vcf import VcfSource
 
-    v = VcfSource().read(spark, f"{_FIXTURES}/HiSeq.10000.vcf.bgz", split_size=256 * 1024)
+    v = VcfSource().read(
+        spark, f"{_FIXTURES}/HiSeq.10000.vcf.bgz", split_size=256 * 1024, columns=["ref", "alts"]
+    )
     snv = (
         (F.length("ref") == 1)
         & (F.size("alts") == 1)
@@ -1413,7 +1420,8 @@ def g22(spark: SparkSession, sf: str) -> DataFrame:
 
     path = f"{_FIXTURES}/HiSeq.10000.vcf.bgz"
     hdr = read_vcf_header_text(path)
-    g = explode_genotypes(VcfSource().read(spark, path), hdr).select(
+    v = VcfSource().read(spark, path, columns=["contig", "pos", "ref", "alts", "genotypes"])
+    g = explode_genotypes(v, hdr).select(
         "contig", "pos", "sample", "gt"
     )
     alleles = F.split("gt", r"[/|]")
@@ -1804,8 +1812,8 @@ def g26(spark: SparkSession, sf: str) -> DataFrame:
     genes, exons = gene_features(gff)
     bounds = read_sequence_regions(spark, _GFF_HISEQ_PATH)
     v = VcfSource().read(
-        spark, f"{_FIXTURES}/HiSeq.10000.vcf.bgz", split_size=256 * 1024
-    ).select("contig", "pos")
+        spark, f"{_FIXTURES}/HiSeq.10000.vcf.bgz", split_size=256 * 1024, columns=["contig", "pos"]
+    )
     return annotate_variants(v, genes, exons, bounds).orderBy("contig", "pos")
 
 

@@ -35,10 +35,11 @@ them in Python inside the source would be *slower* than letting Catalyst run
 them natively after the scan, so ``pushFilters`` intentionally keeps every
 filter in Spark.
 
-SAM and VCF intentionally have no Python DataSource: their read paths are
-native DataFrame text scans + JVM-side parsing expressions
-(`sources/sam.py` / `sources/vcf.py`), which stay inside whole-stage
-codegen — strictly faster than yielding rows from Python.
+SAM and VCF have no Python DataSource.  SAM's read path is a native
+DataFrame text scan + JVM-side parsing expressions (`sources/sam.py`),
+which stays inside whole-stage codegen — strictly faster than yielding
+rows from Python.  VCF reads are planned by `VcfSource.read`
+(`sources/vcf.py`), whose line tasks parse each record in the task.
 """
 
 from __future__ import annotations

@@ -1,29 +1,28 @@
 r"""VCF source and sink, Spark-first.
 
-Source paths (reference parity: `vcf/VcfSource.java:45-186`):
-- plain ``.vcf`` (and true-gzip ``.vcf.gz``) without intervals:
-  ``spark.read.text`` — Spark's text source is splittable for plain text
-  and handles gzip (one partition per gzip file, exactly like the
-  reference's non-BGZF path).
+Source paths (reference parity: `vcf/VcfSource.java:45-186`), each a plan
+of Python line tasks:
 - BGZF (``.bgz``, or a ``.gz`` that sniffs as BGZF — the reference's
-  BGZFEnhancedGzipCodec distinction): custom splittable read — byte ranges
-  are planned on the driver and each task yields the lines *owned* by its
-  range via ``bgzf.iter_lines_in_range`` (exactly-once tiling).
-- with intervals, every read takes Python line tasks (BGZF as above,
-  plain text by byte range, true gzip one task per file), and each task
-  keeps only the lines whose record overlaps an interval (``_line_keeper``).
+  BGZFEnhancedGzipCodec distinction): byte ranges are planned on the
+  driver and each task yields the lines *owned* by its range via
+  ``bgzf.iter_lines_in_range`` (exactly-once tiling).
+- plain ``.vcf``: the same per-file byte-range splits over the text.
+- true-gzip ``.vcf.gz``: one task per file (gzip is not splittable,
+  exactly like the reference's non-BGZF path).
+- with intervals, each task keeps only the lines whose record overlaps an
+  interval (``_line_keeper``), and a ``.tbi``/``.csi`` or Tribble ``.idx``
+  beside a file prunes its splits and seeks its chunks.
 
-Parsing: a Python line task parses each line it keeps into a variants row
-itself (``parse_vcf_line``) and applies the stringency mode, so its plan is
-one ``MapInArrow`` — no per-read ``selectExpr`` analysis and no interpreted
-higher-order map projection (Spark runs higher-order functions without
-codegen).  On a 29,895-record BGZF VCF (``perfbench`` ``io``, ``local[4]``
-on a 4-core VM) that took a full scan from 0.85 to 0.48 s and a region
-read from 0.47 to 0.26 s, medians over ten seeds.  The native text scan
-keeps ``parse_vcf_lines``, native column expressions (split / transform /
-map_from_entries), which Catalyst prunes for site-only projections;
-``parse_vcf_line`` reproduces it row for row, map entry order included
-(``tests/test_vcf.py`` pins the two together).
+Parsing: each task parses the lines it keeps into variants rows itself
+(``parse_vcf_line``) and applies the stringency mode, so every read has
+one schema (``VARIANTS_SCHEMA``) and one plan, a ``MapInArrow`` — no
+per-read ``selectExpr`` analysis and no interpreted higher-order map
+projection (Spark runs higher-order functions without codegen).  On a
+29,895-record BGZF VCF (``perfbench`` ``io``, ``local[4]`` on a 4-core VM)
+that took a full scan from 0.85 to 0.48 s and a region read from 0.47 to
+0.26 s, medians over ten seeds.  Spark cannot prune columns out of those
+rows, so ``VcfSource.read(columns=...)`` does it in the task.  The Spark
+SQL parse the rows are checked against is ``tests/vcf_reference.py``.
 
 Variants schema (SURVEY §1.3): contig pos id ref alts qual filters info
 genotypes.  Conventions: ``id``/``qual`` NULL for '.'; ``filters`` NULL for
@@ -76,110 +75,9 @@ VARIANTS_SCHEMA = StructType(
 VARIANTS_COLUMNS = VARIANTS_SCHEMA.names
 
 
-def _sql_map_entries_last_wins(entries: str) -> str:
-    """SQL-text twin of ``functions.map_from_entries_last_wins`` (same
-    guard-then-dedup shape; see that docstring for the semantics)."""
-    keys = f"transform({entries}, e -> e.key)"
-    deduped = (
-        f"filter({entries}, (e, i) -> NOT exists("
-        f"slice({entries}, i + 2, size({entries})), later -> later.key = e.key))"
-    )
-    return (
-        f"CASE WHEN size(array_distinct({keys})) = size({entries}) "
-        f"THEN map_from_entries({entries}) ELSE map_from_entries({deduped}) END"
-    )
-
-
-def _sql_map_arrays_last_wins(keys: str, values: str) -> str:
-    """SQL-text twin of ``functions.map_from_arrays_last_wins``."""
-    entries = f"zip_with({keys}, {values}, (k, v) -> named_struct('key', k, 'value', v))"
-    return (
-        f"CASE WHEN size(array_distinct({keys})) = size({keys}) "
-        f"THEN map_from_arrays({keys}, {values}) "
-        f"ELSE {_sql_map_entries_last_wins(entries)} END"
-    )
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def parse_vcf_lines(lines: DataFrame, sample_names: list[str], value_col: str = "value") -> DataFrame:
-    """Parse raw VCF body lines into the variants schema.
-
-    The projection is rendered as SQL TEXT and handed to ``selectExpr`` —
-    one JVM parse — rather than composed through the Column API: building
-    the higher-order map/dedup expressions op-by-op costs thousands of py4j
-    round trips (~0.4 s of driver time per plan, growing with sample count),
-    which dominated small reads.  The expression tree is identical; only the
-    construction path changed.
-    """
-    v = f"`{value_col}`"
-
-    def at(i: int) -> str:
-        return f"try_element_at(split({v}, '\\t'), {i})"
-
-    key = "substring_index(kv, '=', 1)"
-    info_entries = (
-        f"transform(split({at(8)}, ';'), kv -> named_struct("
-        f"'key', {key}, "
-        f"'value', CASE WHEN length({key}) < length(kv) "
-        f"THEN substr(kv, length({key}) + 2, length(kv)) ELSE '' END))"
-    )
-    info = (
-        f"CASE WHEN {at(8)} = '.' THEN map() "
-        f"ELSE {_sql_map_entries_last_wins(info_entries)} END"
-    )
-
-    format_keys = f"split({at(9)}, ':')"
-
-    def _sample_map(i: int) -> str:
-        # clamp BOTH arrays to the shorter length: a sample with more (or
-        # fewer) ':'-subfields than FORMAT keys must degrade per lenient
-        # semantics, not crash map_from_arrays with a length mismatch
-        vals = f"split({at(10 + i)}, ':')"
-        n = f"least(size({format_keys}), size({vals}))"
-        return _sql_map_arrays_last_wins(
-            f"slice({format_keys}, 1, {n})", f"slice({vals}, 1, {n})"
-        )
-
-    if sample_names:
-        # two-stage projection: materialize each sample's attrs map once,
-        # then reference it twice (gt lookup + attrs) — keeps the rendered
-        # text linear in sample count
-        lines = lines.selectExpr(
-            v, *[f"{_sample_map(i)} AS __sm{i}" for i in range(len(sample_names))]
-        )
-        genotypes = (
-            "array("
-            + ", ".join(
-                f"named_struct('sample', {_sql_str(s)}, "
-                f"'gt', try_element_at(__sm{i}, 'GT'), 'attrs', __sm{i})"
-                for i, s in enumerate(sample_names)
-            )
-            + ")"
-        )
-    else:
-        genotypes = f"cast(array() AS array<{_GENOTYPE.simpleString()}>)"
-
-    return lines.selectExpr(
-        f"{at(1)} AS contig",
-        f"try_cast({at(2)} AS bigint) AS pos",
-        f"nullif({at(3)}, '.') AS id",
-        f"{at(4)} AS ref",
-        f"CASE WHEN {at(5)} = '.' THEN cast(array() AS array<string>) "
-        f"ELSE split({at(5)}, ',') END AS alts",
-        f"try_cast(nullif({at(6)}, '.') AS double) AS qual",
-        f"CASE WHEN {at(7)} = '.' THEN cast(NULL AS array<string>) "
-        f"WHEN {at(7)} = 'PASS' THEN cast(array() AS array<string>) "
-        f"ELSE split({at(7)}, ';') END AS filters",
-        f"{info} AS info",
-        f"{genotypes} AS genotypes",
-    )
-
-
 def _last_wins(entries: list[tuple[str, str]]) -> dict[str, str]:
-    """Python twin of ``_sql_map_entries_last_wins``: one entry per key,
+    """Spark's last-wins map of ``entries`` (``map_from_entries`` after
+    ``functions.map_from_entries_last_wins``' dedup): one entry per key,
     holding its last value at the position of its last occurrence."""
     m = dict(entries)
     if len(m) < len(entries):
@@ -193,10 +91,12 @@ def _last_wins(entries: list[tuple[str, str]]) -> dict[str, str]:
 def parse_vcf_line(
     line: str, sample_names: Sequence[str], fields: Collection[str] | None = None
 ) -> dict:
-    """The row ``parse_vcf_lines`` gives one body line, as a dict whose
-    maps keep its entry order: the decode tasks' parser.  The site fields
-    are always built; INFO and FORMAT are parsed only when ``fields`` (None:
-    all) names ``info`` / ``genotypes``."""
+    """The variants row of one body line, as a dict whose maps keep their
+    entry order: the decode tasks' parser.  Its rows are those of the Spark
+    SQL parse of the same line (``try_element_at`` NULLs on short lines,
+    ``try_cast`` for POS and QUAL; ``tests/vcf_reference.py``).  The site
+    fields are always built; INFO and FORMAT are parsed only when
+    ``fields`` (None: all) names ``info`` / ``genotypes``."""
     f = line.split("\t")
     short = 9 + len(sample_names) - len(f)
     if short > 0:
@@ -242,7 +142,7 @@ def variant_end(info: Column, pos: Column, ref: Column) -> Column:
 
 
 def info_end(info: str) -> str | None:
-    """The value ``parse_vcf_lines`` gives INFO key ``END`` on a line with
+    """The value ``parse_vcf_line`` gives INFO key ``END`` on a line with
     this INFO field: the text after the first '=' of the LAST ``END``
     entry ('' for a bare ``END`` flag), None without one or for '.'."""
     if "END" not in info or info == ".":
@@ -283,11 +183,9 @@ def _line_keeper(ivs: list[tuple[str, int, int]] | None, stringency: str) -> Cal
     return keep
 
 
-# Default split size, defined ONCE: it is both read()'s parameter default
-# and _native_text_ok's "caller did not tune split_size" sentinel — two
-# copies of the literal could drift and silently route reads to the wrong
-# scan path.
-_DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
+# Spark's spark.sql.files.maxPartitionBytes and openCostInBytes defaults
+_MAX_SPLIT = 128 * 1024 * 1024
+_OPEN_COST = 4 * 1024 * 1024
 # one maximal BGZF block: index ranges closer than this are read as one
 _SEEK_GAP = 64 * 1024
 
@@ -309,7 +207,7 @@ class VcfSource:
         spark: SparkSession,
         path: str,
         intervals: DataFrame | None = None,
-        split_size: int = _DEFAULT_SPLIT_SIZE,
+        split_size: int | None = None,
         stringency: str = "lenient",
         columns: list[str] | None = None,
     ) -> DataFrame:
@@ -324,11 +222,17 @@ class VcfSource:
         (`vcf/VcfSource.java:143-168`), where the surviving split decodes
         in full.
 
-        ``columns`` returns exactly those columns, in schema order; a line
-        task parses INFO and FORMAT only when they are asked for, and the
-        native text scan leaves the pruning to Catalyst."""
+        ``split_size`` caps the bytes of each task's split; left None,
+        the files split as Spark's file scan splits them (``_scan_split``),
+        so a plain-text read keeps the parallelism of Spark's text scan.
+
+        ``columns`` returns exactly those columns, in schema order, and
+        the tasks parse INFO and FORMAT only when they are asked for.
+        Spark cannot prune the rows a task builds, so a caller that reads
+        some columns should name them here rather than select them after
+        the read."""
         from .bgzf import is_bgzf
-        from .sam import apply_stringency, schema_ordered, stringency_mode, validate_columns
+        from .sam import stringency_mode, validate_columns
 
         if columns is not None:
             validate_columns(columns, VARIANTS_COLUMNS, "variants")
@@ -339,7 +243,6 @@ class VcfSource:
         with fs_open(_first(path)) as fh:
             bgzf = is_bgzf(fh)
         ivs = collect_intervals(intervals) if intervals is not None else None
-        files = plan = None
         if bgzf:
             # tabix pushdown: with intervals + a .tbi, drop byte-range
             # splits the index proves contain no overlapping record and
@@ -348,14 +251,12 @@ class VcfSource:
         else:
             # the explicit file list keeps index sidecars out of a
             # directory read
-            fs = get_fs(str(path))
-            files = list_data_files(fs, str(path))
-            gz = any(f.endswith(".gz") for f in files)
-            if ivs is not None and gz:
-                # non-BGZF gzip is not splittable: one task per file, the
-                # partitioning of Spark's gzip text scan
+            files = list_data_files(get_fs(str(path)), str(path))
+            if any(f.endswith(".gz") for f in files):
+                # non-BGZF gzip is not splittable: one task per file, as
+                # the reference's non-BGZF path (`vcf/VcfSource.java:80-86`)
                 plan = _gzip_line_plan(files)
-            elif ivs is not None or not (gz or _native_text_ok(fs, split_size)):
+            else:
                 # Plain text: per-file byte-range splits, pruned (and
                 # seeked) per file by that file's Tribble `.idx` when
                 # intervals are given
@@ -363,26 +264,7 @@ class VcfSource:
                 # Tribble for .vcf — `vcf/VcfSource.java:143-168`,
                 # `tribble/TribbleIndexIntervalFilteringTextInputFormat.java:33-67`).
                 plan = _text_line_plan(spark, files, split_size, ivs)
-        if plan is not None:
-            return _variants_frame(spark, plan, samples, _line_keeper(ivs, mode), mode, columns)
-        # No intervals and no BGZF: the native JVM text scan — gzip
-        # whole-file (reference `vcf/VcfSource.java:80-86`), or plain text
-        # when the scheme is JVM-visible (a registered mock:// / Arrow-only
-        # scheme must stay on the wrapper) and the caller did not tune
-        # split_size (the native scan partitions by
-        # spark.sql.files.maxPartitionBytes, not our knob) — parsed by
-        # native expressions, which Catalyst prunes to what the plan uses.
-        # On a 298,950-record true-gzip VCF (one task, local[4] on a 4-core
-        # VM, medians of 3) a contig+pos scan took 0.90 s this way and
-        # 1.85 s through ``_variants_frame``; a full-row scan 5.06 s and
-        # 4.54 s.
-        body = spark.read.text(files).filter(~F.col("value").startswith("#"))
-        f = F.split(F.col("value"), "\t")
-        malformed = (F.size(f) < 8) | F.try_element_at(f, F.lit(2)).try_cast(
-            "long"
-        ).isNull()
-        df = parse_vcf_lines(apply_stringency(body, malformed, mode), samples)
-        return df if columns is None else df.select(*schema_ordered(VARIANTS_COLUMNS, columns))
+        return _variants_frame(spark, plan, samples, _line_keeper(ivs, mode), mode, columns)
 
 
 def _first(path: str):
@@ -424,7 +306,7 @@ def _variants_frame(
 def _bgzf_line_plan(
     spark: SparkSession | None,
     path: str,
-    split_size: int,
+    split_size: int | None,
     ivs: list[tuple[str, int, int]] | None = None,
 ) -> tuple[list, Callable]:
     """The BGZF line plan ``(tasks, task_lines)``: byte ranges planned on
@@ -472,7 +354,8 @@ def _bgzf_line_plan(
         # into: the byte range keeps that block
         return (f, flen, merge_ranges([(u >> 16, (v >> 16) + 1) for u, v in chunks]))
 
-    tasks = _split_tasks(collect_metadata(spark, files, meta_for), split_size)
+    metas = collect_metadata(spark, files, meta_for)
+    tasks = _split_tasks(metas, split_size or _scan_split(spark, metas))
 
     def task_lines(task):
         from .bgzf import iter_lines_in_range
@@ -487,6 +370,15 @@ def _bgzf_line_plan(
                     yield line.decode("utf-8", "replace")
 
     return tasks, task_lines
+
+
+def _scan_split(spark: SparkSession | None, metas: list[tuple[str, int, object]]) -> int:
+    """The split size of Spark's file scan (``FilePartition.maxSplitBytes``)
+    at its default confs: the files' bytes, each plus a 4 MB open cost,
+    spread over the default parallelism, between 4 MB and 128 MB."""
+    cores = spark.sparkContext.defaultParallelism if spark is not None else 1
+    total = sum(flen + _OPEN_COST for _f, flen, _r in metas)
+    return min(_MAX_SPLIT, max(_OPEN_COST, -(-total // cores)))
 
 
 def _split_tasks(
@@ -524,22 +416,10 @@ def _split_tasks(
     return tasks
 
 
-def _native_text_ok(fs, split_size: int) -> bool:
-    """True when the native JVM text scan may replace the wrapper-routed
-    Python range reader: the files live on the plain local filesystem (a
-    registered mock:// or Arrow-only scheme is invisible to the JVM) and
-    the caller left ``split_size`` at its default (the native scan
-    partitions by spark.sql.files.maxPartitionBytes, so a tuned
-    ``split_size`` must go through the range reader to be honored)."""
-    from .fsio import LocalFileSystem
-
-    return isinstance(fs, LocalFileSystem) and split_size == _DEFAULT_SPLIT_SIZE
-
-
 def _text_line_plan(
     spark: SparkSession | None,
     files: list[str],
-    split_size: int,
+    split_size: int | None,
     ivs: list[tuple[str, int, int]] | None,
 ) -> tuple[list, Callable]:
     """Plain-text analog of ``_bgzf_line_plan``: per-file byte-range splits
@@ -572,7 +452,8 @@ def _text_line_plan(
             franges = text_ranges_for_intervals(parse_tribble(f + ".idx"), ivs)
         return (f, flen, franges)
 
-    tasks = _split_tasks(collect_metadata(spark, files, meta_for), split_size)
+    metas = collect_metadata(spark, files, meta_for)
+    tasks = _split_tasks(metas, split_size or _scan_split(spark, metas))
 
     def task_lines(task):
         from .tribble import iter_text_lines_in_range

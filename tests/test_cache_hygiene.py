@@ -327,28 +327,26 @@ def test_indexed_sources_filter_intervals_in_their_tasks():
     assert not hasattr(interval, "residual_variant_overlap")
 
 
-def test_vcf_has_one_native_parse_path():
-    """VCF lines are parsed by ``parse_vcf_line`` in the decode tasks, or
-    by ``parse_vcf_lines`` in the one native text-scan branch of
-    ``VcfSource.read``: a second call of the native parser anywhere under
-    the package is a second parse path to keep in step, and ``vcf.py``
-    reads no environment switch."""
+def test_vcf_has_one_parse_path():
+    """VCF lines are parsed by ``parse_vcf_line`` in the decode tasks and
+    nowhere else: ``vcf.py`` runs no Spark text scan and no SQL-text
+    projection, no module under the package defines or calls a
+    ``parse_vcf_lines``, and ``vcf.py`` reads no environment switch."""
     import ast
     import pathlib
 
     import disq_original_spark as pkg
 
+    def names(tree):
+        for node in ast.walk(tree):
+            yield getattr(node, "name", None) or getattr(node, "attr", None) or getattr(node, "id", None)
+
     root = pathlib.Path(pkg.__file__).parent
-    calls: list[str] = []
-    for f in sorted(root.rglob("*.py")):
-        for node in ast.walk(ast.parse(f.read_text())):
-            if isinstance(node, ast.Call):
-                fn = node.func
-                if (fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)) == "parse_vcf_lines":
-                    calls.append(f"{f.relative_to(root).as_posix()}:{node.lineno}")
-    assert len(calls) == 1 and calls[0].startswith("sources/vcf.py:"), calls
+    named = [f for f in sorted(root.rglob("*.py")) if "parse_vcf_lines" in names(ast.parse(f.read_text()))]
+    assert named == []
     vcf = (root / "sources" / "vcf.py").read_text()
-    assert "environ" not in vcf and "getenv" not in vcf
+    used = set(names(ast.parse(vcf)))
+    assert not used & {"selectExpr", "text", "environ", "getenv"}, used & {"selectExpr", "text", "environ", "getenv"}
 
 
 def test_materialize_logs_the_branch_taken(spark, monkeypatch, caplog):

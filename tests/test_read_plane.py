@@ -225,34 +225,47 @@ def test_split_sweep_keeps_file_order(spark, inputs, fmt):
         assert _rows(df) == whole, split
 
 
-@pytest.mark.parametrize("columns", [["pos", "contig"], ["genotypes", "qual", "info"], ["alts", "filters", "id"]])
-def test_vcf_columns_prune_the_decode(spark, inputs, tmp_path, columns):
-    """``columns`` gives exactly those columns, in schema order, with the
-    rows of the projected full read: BGZF line tasks, whole-file and
-    region (the pruned ``VARIANTS_SCHEMA``), and the native plain-text
-    scan (whose parse marks some nested fields non-nullable).  The
-    whole-file line tasks give the native scan's rows of the same text.  A
-    line task parses INFO and FORMAT only when they are requested."""
+def _vcf_encodings(bgz: str, d: Path) -> dict[str, str]:
+    """The BGZF VCF and its plain-text and true-gzip twins in ``d``."""
     import gzip
 
+    text = gzip.decompress(Path(bgz).read_bytes())
+    (d / "v.vcf").write_bytes(text)
+    (d / "v.vcf.gz").write_bytes(gzip.compress(text))
+    return {"bgzf": bgz, "text": str(d / "v.vcf"), "gzip": str(d / "v.vcf.gz")}
+
+
+def test_vcf_encodings_read_one_schema(spark, inputs, tmp_path):
+    """The same VCF text reads with ``VARIANTS_SCHEMA`` and the same rows
+    whether it is BGZF, plain text or true gzip."""
+    got = {}
+    for enc, path in _vcf_encodings(inputs["paths"]["vcf"], tmp_path).items():
+        df = VariantsStorage(spark).read(path)
+        assert df.schema == VARIANTS_SCHEMA, enc
+        got[enc] = sorted(_rows(df))
+    assert got["bgzf"] == got["text"] == got["gzip"] != []
+
+
+@pytest.mark.parametrize("columns", [["pos", "contig"], ["genotypes", "qual", "info"], ["alts", "filters", "id"]])
+def test_vcf_columns_prune_the_decode(spark, inputs, tmp_path, columns):
+    """``columns`` gives exactly those columns, in schema order (the
+    pruned ``VARIANTS_SCHEMA``), with the rows of the projected full read:
+    BGZF whole-file and region, plain text and true gzip.  A line task
+    parses INFO and FORMAT only when they are requested."""
     from disq_original_spark.sources.vcf import parse_vcf_line
 
-    bgz = inputs["paths"]["vcf"]
-    text = tmp_path / "v.vcf"
-    text.write_bytes(gzip.decompress(Path(bgz).read_bytes()))
+    paths = _vcf_encodings(inputs["paths"]["vcf"], tmp_path)
     iv = spark.createDataFrame([("chr1", 100_000, 2_000_000)], "contig string, start long, end long")
     ordered = [c for c in VARIANTS_SCHEMA.names if c in columns]
     got = {}
-    for path, ivs in ((bgz, None), (bgz, iv), (str(text), None)):
-        storage = VariantsStorage(spark, split_size=SPLIT if path == bgz else None)
-        full = storage.read(path, intervals=ivs).select(*ordered)
-        df = storage.read(path, intervals=ivs, columns=columns)
-        assert df.columns == ordered and df.schema == full.schema
-        if path == bgz:
-            assert df.schema == pruned_schema(VARIANTS_SCHEMA, columns)
-        got[path, ivs is None] = _rows(df)
-        assert got[path, ivs is None] == _rows(full) != []
-    assert got[bgz, True] == got[str(text), True]
+    for enc, ivs in (("bgzf", None), ("bgzf", iv), ("text", None), ("gzip", None)):
+        storage = VariantsStorage(spark, split_size=SPLIT if enc == "bgzf" else None)
+        full = storage.read(paths[enc], intervals=ivs).select(*ordered)
+        df = storage.read(paths[enc], intervals=ivs, columns=columns)
+        assert df.columns == ordered and df.schema == pruned_schema(VARIANTS_SCHEMA, columns)
+        got[enc, ivs is None] = _rows(df)
+        assert got[enc, ivs is None] == _rows(full) != []
+    assert got["bgzf", True] == got["text", True] == got["gzip", True]
     line = "chr1\t5\t.\tG\tT\t9\tPASS\tDP=3\tGT\t0/1"
     site = {"contig", "pos", "id", "ref", "alts", "qual", "filters"}
     assert set(parse_vcf_line(line, ["s"], frozenset(columns))) == site | set(columns)

@@ -22,8 +22,8 @@ committed twins in ``fixtures/oracle/`` through the repo's own sinks.
   filtering their full read.  ``interval.try_long`` is Spark's
   ``try_cast(... AS bigint)`` and ``interval.try_double`` its
   ``try_cast(... AS double)``.
-- BGZF VCF reads, whole-file and region, parse their lines in the decode
-  task: no ``parse_vcf_lines``, no ``Filter``/``Project`` in the plan.
+- VCF reads of every encoding, whole-file and region, parse their lines
+  in the decode task: no text scan, no ``Filter``/``Project`` in the plan.
 - ``clip_ranges`` is the intersection of sorted disjoint ranges with a
   split; a VCF task reads index ranges closer than ``_SEEK_GAP`` as one,
   and the BGZF block scan finds a block however short the range it scans.
@@ -427,27 +427,21 @@ def test_region_read_runs_two_jobs(spark, inputs, name):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
-def test_vcf_line_reads_build_rows_in_the_task(spark, inputs, monkeypatch):
-    """A whole-file BGZF VCF read and a region read parse their lines in
-    the decode task: neither calls ``parse_vcf_lines``, and the executed
-    plan is the ``MapInArrow`` over the seed range, with no ``Filter`` or
-    ``Project`` over a line column.  The native plain-text scan, which
-    keeps ``parse_vcf_lines``, shows the count sees its calls."""
-    from disq_original_spark.sources import vcf
-
-    calls = []
-    native = vcf.parse_vcf_lines
-    monkeypatch.setattr(vcf, "parse_vcf_lines", lambda *a, **kw: calls.append(1) or native(*a, **kw))
+@pytest.mark.parametrize("name", ["vcf", "text_noidx", "gz"])
+def test_vcf_line_reads_build_rows_in_the_task(spark, inputs, name):
+    """Every VCF read, whole-file and region, over BGZF, plain text and
+    true gzip, parses its lines in the decode task: the executed plan is
+    the ``MapInArrow`` over the seed range, with no ``Filter`` or
+    ``Project`` over a line column and no text scan, and its schema is
+    ``VARIANTS_SCHEMA``."""
     iv = spark.createDataFrame(_FRAME_ONCE_IVS["vcf"], IV_SCHEMA)
     for ivs in (None, iv):
-        df = _read(spark, inputs, "vcf", None, ivs)
+        df = _read(spark, inputs, name, None, ivs)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInArrow" in plan and "value#" not in plan, plan
+        assert "MapInArrow" in plan and "value#" not in plan and "FileScan" not in plan, plan
         assert "Filter" not in plan and "Project" not in plan, plan
+        assert df.schema == VARIANTS_SCHEMA
         assert df.collect()
-    assert calls == []
-    assert _read(spark, inputs, "text_noidx", None).count() > 0
-    assert calls == [1]
 
 
 def test_region_read_stringency_on_malformed_line_in_chunk(spark, inputs, tmp_path):
@@ -594,6 +588,24 @@ def test_split_tasks_read_close_ranges_as_one():
         # splits no range reaches get no task
         assert len(tasks) == len({x // split for u, v in ranges for x in range(u, v)})
     assert _split_tasks([("f", 100, None)], 40) == [("f", [(0, 40)]), ("f", [(40, 80)]), ("f", [(80, 100)])]
+
+
+def test_scan_split_is_sparks_file_split():
+    """Left at None, a VCF read's split size is Spark's file-scan split at
+    its default confs: min(128 MB, max(4 MB, (bytes + 4 MB per file) /
+    cores)), so a plain-text read keeps the parallelism of Spark's text
+    scan."""
+    from types import SimpleNamespace
+
+    from disq_original_spark.sources.vcf import _scan_split
+
+    mb = 1 << 20
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    assert _scan_split(spark, [("a", 20 * mb, None)]) == 6 * mb
+    assert _scan_split(spark, [("a", 10 * mb, None), ("b", 10 * mb, None)]) == 7 * mb
+    assert _scan_split(spark, [("a", mb, None)]) == 4 * mb
+    assert _scan_split(spark, [("a", 4096 * mb, None)]) == 128 * mb
+    assert _scan_split(None, [("a", 20 * mb, None)]) == 24 * mb
 
 
 def test_find_next_block_on_short_ranges(tmp_path):

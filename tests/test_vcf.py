@@ -379,16 +379,17 @@ _ADVERSARIAL = [
 
 
 def test_parse_vcf_line_equals_parse_vcf_lines(spark, tmp_path):
-    """The decode tasks' ``parse_vcf_line`` gives the rows of the native
-    ``parse_vcf_lines`` on the same lines, map entry order included
-    (compared as ``to_json`` of each row): the twins VCF and the
-    adversarial lines, with 0, 1 and 3 samples."""
+    """The decode tasks' ``parse_vcf_line`` gives the rows of the Spark
+    SQL reference parse (``vcf_reference.parse_vcf_lines``) on the same
+    lines, map entry order included (compared as ``to_json`` of each row):
+    the twins VCF and the adversarial lines, with 0, 1 and 3 samples."""
     from pyspark.sql import functions as F
 
     from disq_original_spark.sources.arrow_xfer import to_dataframe
-    from disq_original_spark.sources.vcf import VARIANTS_SCHEMA, parse_vcf_line, parse_vcf_lines
+    from disq_original_spark.sources.vcf import VARIANTS_SCHEMA, parse_vcf_line
 
     from .twins import frame, variants
+    from .vcf_reference import parse_vcf_lines
 
     rows, header = variants()
     twin = tmp_path / "twins.vcf"
@@ -592,9 +593,9 @@ def test_vcf_sharded_plain_interval_read_covers_all_shards(spark, tmp_path):
     assert sorted(map(key, back.collect())) == sorted(map(key, df.collect()))
 
 
-def test_plain_vcf_without_intervals_uses_native_text_scan(spark):
-    """No intervals → nothing to prune → the read must stay on the native
-    JVM text scan (whole-stage codegen), not the Python range reader."""
+def test_plain_vcf_without_intervals_builds_rows_in_the_task(spark):
+    """A plain-text read without intervals takes the line tasks of every
+    other VCF read: its plan is one ``MapInArrow``, not a text scan."""
     df = VcfSource().read(spark, TEST_VCF)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan text" in plan
+    assert "MapInArrow" in plan and "FileScan" not in plan
