@@ -593,9 +593,15 @@ def test_vcf_sharded_plain_interval_read_covers_all_shards(spark, tmp_path):
     assert sorted(map(key, back.collect())) == sorted(map(key, df.collect()))
 
 
-def test_plain_vcf_without_intervals_builds_rows_in_the_task(spark):
+def test_plain_vcf_without_intervals_builds_rows_in_the_task(spark, tmp_path):
     """A plain-text read without intervals takes the line tasks of every
     other VCF read: its plan is one ``MapInArrow``, not a text scan."""
-    df = VcfSource().read(spark, TEST_VCF)
+    path = tmp_path / "t.vcf"
+    path.write_text(
+        "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+        "chr1\t5\t.\tG\tT\t9\tPASS\tDP=3\n"
+    )
+    df = VcfSource().read(spark, str(path))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan and "FileScan" not in plan
+    assert [(r.contig, r.pos, r.info) for r in df.collect()] == [("chr1", 5, {"DP": "3"})]
