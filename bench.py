@@ -534,14 +534,10 @@ def _io_benchmarks(spark) -> dict:
         "io_fasta_read": lambda: FastaSource()
         .read(spark, str(RES / "test.fa"), window=1000)
         .count(),
-        # SamSource.read(split_size=...) sets files.maxPartitionBytes
-        # SESSION-WIDE (the reference's job-conf semantics) — it runs
-        # LAST in this dict and the conf is restored right after the loop
         "io_sam_read": lambda: SamSource()
         .read(spark, sam_path, split_size=256 * 1024)
         .count(),
     }
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
     for name, job in jobs2.items():
         job()  # warm pass
         best = None
@@ -551,7 +547,6 @@ def _io_benchmarks(spark) -> dict:
             el = time.perf_counter() - t0
             best = el if best is None else min(best, el)
         out[name] = round(best, 3)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
     # keep the module-level name list (what the line-budget test measures)
     # in lockstep with what this function actually emits
     assert set(out) == set(_IO_ENTRIES), sorted(set(out) ^ set(_IO_ENTRIES))

@@ -8,16 +8,15 @@ Reference semantics (tomwhite/disq-original):
   (`HtsjdkReadsTraversalParameters.java:13-30`,
   `sam/AbstractBinarySamSource.java:115-132`).
 
-Two forms of the same test live here.  The indexed sources (BAM, CRAM,
-VCF, BCF) collect the caller's small interval list once
+Two forms of the same test live here.  The reads and variants sources
+(BAM, CRAM, SAM, VCF, BCF) collect the caller's small interval list once
 (:func:`collect_intervals`), plan their index reads from it, and drop the
-records no interval overlaps inside each decode task
-(:func:`overlap_test` with the span rules :func:`read_end` and
-:func:`variant_end`, which mirror the JVM expressions
-``sam.with_alignment_span`` and ``vcf.variant_end``).  Frames that are
-already in Spark — SAM text scans, query operators — keep the relational
-form: a broadcast left-semi join (:func:`interval_filter`,
-:func:`residual_traversal`).
+records no interval overlaps inside each decode task (:func:`overlap_test`
+with the span rules :func:`read_end` and :func:`variant_end`, which mirror
+the JVM expressions ``sam.cigar_reference_length`` and
+``vcf.variant_end``).  Frames that are already in Spark — query operators
+— keep the relational form: a broadcast left-semi join
+(:func:`interval_filter`).
 """
 
 from __future__ import annotations
@@ -31,7 +30,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import materialize
-from ..sources.bam_codec import cigar_ref_length
 
 
 def overlaps(
@@ -284,13 +282,19 @@ def try_double(s: str | None) -> float | None:
     return _SPARK_FLOAT_LITERALS.get(t.lower())
 
 
+# ``sam.cigar_reference_length``'s operations (Java's ``\d`` is ASCII only)
+_CIGAR_OP = re.compile(r"([0-9]+)([MIDNSHP=X])")
+
+
 def read_end(pos: int | None, cigar: str | None) -> int | None:
-    """1-based inclusive alignment end, as ``sam.with_alignment_span``:
-    ``pos`` for a ``*``/None CIGAR or one consuming no reference, else
-    ``pos`` + the M/D/N/=/X length - 1."""
+    """1-based inclusive alignment end, as the JVM span of
+    ``sam.cigar_reference_length``: ``pos`` for a ``*``/None CIGAR or one
+    consuming no reference, else ``pos`` + the M/D/N/=/X length - 1.  A
+    CIGAR from SAM text may hold anything: only its well-formed
+    operations count, as in the JVM expression."""
     if pos is None or cigar is None or cigar == "*":
         return pos
-    n = cigar_ref_length(cigar)
+    n = sum(int(k) for k, op in _CIGAR_OP.findall(cigar) if op in "MDN=X")
     return pos if n == 0 else pos + n - 1
 
 
@@ -311,14 +315,21 @@ def read_keeper(
     needs ``flag``, ``rname``, ``pos`` and ``cigar``): placed reads whose
     span overlaps an interval, and with ``include_unplaced`` the
     unplaced-unmapped reads (unmapped flag and no ``rname`` or ``pos`` 0).
-    None when there is nothing to drop."""
+    None when there is nothing to drop.
+
+    A None ``flag`` (a lenient-kept SAM line) gets SQL's answer: the
+    unplaced test is NULL, never true, and the row is placed only when it
+    has an ``rname`` and a ``pos`` other than 0."""
     if iv_rows is None and not include_unplaced:
         return None
     hit = overlap_test(iv_rows or ())
 
     def keep(row: dict) -> bool:
-        pos = row["pos"]
-        if row["flag"] & 4 and (row["rname"] is None or pos == 0):
+        pos, flag = row["pos"], row["flag"]
+        if flag is None:
+            if pos == 0:
+                return False
+        elif flag & 4 and (row["rname"] is None or pos == 0):
             return include_unplaced
         return hit(row["rname"], pos, read_end(pos, row["cigar"]))
 
@@ -327,53 +338,6 @@ def read_keeper(
 
 #: what :func:`read_keeper` reads from a decoded row
 READ_SPAN_FIELDS = frozenset({"flag", "rname", "pos", "cigar"})
-
-
-def residual_traversal(
-    reads: DataFrame, intervals: DataFrame | None, include_unplaced: bool
-) -> DataFrame:
-    """Residual selection of a SAM text scan, which the JVM decodes and
-    which has no index: interval overlap filter over placed reads,
-    optionally unioned with unplaced-unmapped records — the relational
-    twin of :func:`read_keeper`, which the Python-decoded reads sources
-    apply inside their tasks."""
-    # runtime import: sources.sam imports this module at load time
-    from ..sources.sam import (
-        FLAG_UNMAPPED,
-        READS_COLUMNS,
-        schema_ordered,
-        with_alignment_span,
-    )
-
-    if intervals is None and not include_unplaced:
-        return reads
-    spanned = with_alignment_span(reads)
-    # Unplaced-unmapped: unmapped flag AND no position (rname NULL, pos 0) —
-    # admitted only when the traversal flag is set
-    # (`sam/TraversalOverlapDetector.java:22-33`).
-    unplaced_pred = (F.col("flag").bitwiseAND(FLAG_UNMAPPED) != 0) & (
-        F.col("rname").isNull() | (F.col("pos") == 0)
-    )
-    selected = None
-    if intervals is not None:
-        placed = spanned.filter(~unplaced_pred)
-        selected = interval_filter(
-            placed.withColumnRenamed("rname", "contig")
-            .withColumnRenamed("pos", "start")
-            .withColumnRenamed("end_pos", "end"),
-            intervals,
-        )
-        selected = (
-            selected.withColumnRenamed("contig", "rname")
-            .withColumnRenamed("start", "pos")
-            .withColumnRenamed("end", "end_pos")
-        )
-    if include_unplaced:
-        unplaced = spanned.filter(unplaced_pred)
-        selected = unplaced if selected is None else selected.unionByName(unplaced)
-    # intersection, not READS_COLUMNS verbatim: a column-pruned source
-    # frame (BamSource.read(columns=...)) carries a schema subset
-    return selected.select(*schema_ordered(READS_COLUMNS, reads.columns))
 
 
 def merge_intervals(

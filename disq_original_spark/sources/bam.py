@@ -26,14 +26,6 @@ from collections.abc import Callable, Iterator, Sequence
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..operators.interval import READ_SPAN_FIELDS, collect_intervals, read_keeper
 from .bam_codec import (
@@ -68,25 +60,8 @@ from .fsio import (
 )
 from .headers import SamHeader, read_bam_header
 from .merger import PartFormat, commit, commit_sharded, part_bases
-from .sam import READS_COLUMNS, validate_columns
+from .sam import READS_COLUMNS, READS_SCHEMA, validate_columns
 from .tabix import clip_ranges, index_chunks, merge_ranges
-
-READS_SCHEMA = StructType(
-    [
-        StructField("qname", StringType()),
-        StructField("flag", IntegerType()),
-        StructField("rname", StringType()),
-        StructField("pos", LongType()),
-        StructField("mapq", IntegerType()),
-        StructField("cigar", StringType()),
-        StructField("rnext", StringType()),
-        StructField("pnext", LongType()),
-        StructField("tlen", LongType()),
-        StructField("seq", StringType()),
-        StructField("qual", StringType()),
-        StructField("attributes", MapType(StringType(), StringType())),
-    ]
-)
 
 
 def _find_first_record_voffset(fh, start: int, end: int, n_ref: int) -> int | None:

@@ -35,11 +35,9 @@ them in Python inside the source would be *slower* than letting Catalyst run
 them natively after the scan, so ``pushFilters`` intentionally keeps every
 filter in Spark.
 
-SAM and VCF have no Python DataSource.  SAM's read path is a native
-DataFrame text scan + JVM-side parsing expressions (`sources/sam.py`),
-which stays inside whole-stage codegen — strictly faster than yielding
-rows from Python.  VCF reads are planned by `VcfSource.read`
-(`sources/vcf.py`), whose line tasks parse each record in the task.
+SAM and VCF have no Python DataSource.  Their reads are planned by
+`SamSource.read` and `VcfSource.read` over the shared text line plans
+(`sources/tribble.py`), whose tasks parse each record in the task.
 """
 
 from __future__ import annotations

@@ -1,9 +1,16 @@
 r"""SAM text source and sink, Spark-first.
 
-Source: ``spark.read.text`` (splittable, locality-aware, handles dirs and
-.gz) → drop '@' header lines → parse columns with native functions only
-(split / element_at / map_from_entries — zero Python UDFs, whole plan stays
-in Tungsten codegen).  Reference parity: `sam/SamSource.java:24-88`.
+Source: the text line plans VCF reads through (``tribble.line_plan``):
+byte-range splits of plain files and directories, one task per true-gzip
+file.  Each task drops the '@' header lines, parses every other line into
+a reads row (``parse_sam_line``), applies the stringency mode and then the
+traversal (``interval.read_keeper``: the interval list plus the
+unplaced-unmapped flag), as the reference's ``SamSource`` filters each
+parsed record in its partition (`sam/SamSource.java:24-88`,
+`TraversalOverlapDetector`).  A read is one ``MapInArrow`` of
+``READS_SCHEMA``, the schema BAM and CRAM return, whole-file or region,
+plain or gzip.  The Spark SQL parse the rows are checked against is
+``tests/sam_reference.py``.
 
 Sink: native reverse expression → ``write.text`` part files → the shared
 single-file commit (``merger``: header + parts concat).  Reference parity:
@@ -16,45 +23,34 @@ map tag → "TYPE:VALUE" preserving order, so write(read(x)) is lossless.
 
 from __future__ import annotations
 
+from collections.abc import Collection
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, MapType, StringType, StructField, StructType
 
-from ..functions import map_from_entries_last_wins
-from ..operators.interval import interval_filter
+from ..operators.interval import collect_intervals, read_keeper, try_long
 from .headers import SamHeader, read_sam_header_text
 from .merger import PartFormat, commit, commit_sharded, text_format
 
-READS_COLUMNS = [
-    "qname",
-    "flag",
-    "rname",
-    "pos",
-    "mapq",
-    "cigar",
-    "rnext",
-    "pnext",
-    "tlen",
-    "seq",
-    "qual",
-    "attributes",
-]
-
-FLAG_UNMAPPED = 0x4
-
-
-def _null_if_star(c: Column) -> Column:
-    return F.when(c == "*", F.lit(None)).otherwise(c)
-
-
-def _sam_malformed(value_col: str = "value") -> Column:
-    """A body line that cannot be a SAM record: fewer than 11 tab-separated
-    fields, or a non-integer flag/pos."""
-    f = F.split(F.col(value_col), "\t")
-    return (
-        (F.size(f) < 11)
-        | F.try_element_at(f, F.lit(2)).try_cast("int").isNull()
-        | F.try_element_at(f, F.lit(4)).try_cast("long").isNull()
-    )
+#: the reads schema every BAM, CRAM and SAM read returns (SURVEY §1.3)
+READS_SCHEMA = StructType(
+    [
+        StructField("qname", StringType()),
+        StructField("flag", IntegerType()),
+        StructField("rname", StringType()),
+        StructField("pos", LongType()),
+        StructField("mapq", IntegerType()),
+        StructField("cigar", StringType()),
+        StructField("rnext", StringType()),
+        StructField("pnext", LongType()),
+        StructField("tlen", LongType()),
+        StructField("seq", StringType()),
+        StructField("qual", StringType()),
+        StructField("attributes", MapType(StringType(), StringType())),
+    ]
+)
+READS_COLUMNS = READS_SCHEMA.names
 
 
 def apply_stringency(body: DataFrame, malformed: Column, stringency: str) -> DataFrame:
@@ -92,46 +88,55 @@ def stringency_mode(stringency: str) -> str:
     return s
 
 
-def parse_sam_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
-    """Native-expression SAM line parser: one ``split`` + projections.
+def last_wins(entries: list[tuple[str, str]]) -> dict[str, str]:
+    """Spark's last-wins map of ``entries`` (``map_from_entries`` after
+    ``functions.map_from_entries_last_wins``' dedup): one entry per key,
+    holding its last value at the position of its last occurrence."""
+    m = dict(entries)
+    if len(m) < len(entries):
+        m = {}
+        for k, v in entries:
+            m.pop(k, None)
+            m[k] = v
+    return m
 
-    try_element_at/try_cast (not element_at/cast) for two reasons: Catalyst
-    may reorder pushed predicates before the header-line filter (ANSI
-    element_at would throw on '@' lines), and malformed records should
-    null-out, not fail the job — the analog of htsjdk LENIENT stringency
-    (`HtsjdkReadsRddStorage.java:97-100`).
-    """
-    f = F.split(F.col(value_col), "\t")
-    tags = F.slice(f, 12, F.greatest(F.size(f) - 11, F.lit(0)))
 
-    def at(i: int) -> Column:
-        return F.try_element_at(f, F.lit(i))
+def try_int(s: str | None) -> int | None:
+    """Spark's ``try_cast(s AS int)`` of a string: ``interval.try_long``
+    within the int32 range."""
+    v = try_long(s)
+    return v if v is not None and -(1 << 31) <= v < (1 << 31) else None
 
-    def at_int(i: int, typ: str) -> Column:
-        return F.try_element_at(f, F.lit(i)).try_cast(typ)
 
-    return lines.select(
-        at(1).alias("qname"),
-        at_int(2, "int").alias("flag"),
-        _null_if_star(at(3)).alias("rname"),
-        at_int(4, "long").alias("pos"),
-        at_int(5, "int").alias("mapq"),
-        at(6).alias("cigar"),
-        _null_if_star(at(7)).alias("rnext"),
-        at_int(8, "long").alias("pnext"),
-        at_int(9, "long").alias("tlen"),
-        at(10).alias("seq"),
-        at(11).alias("qual"),
-        map_from_entries_last_wins(
-            F.transform(
-                tags,
-                lambda t: F.struct(
-                    F.substring(t, 1, 2).alias("key"),
-                    F.substr(t, F.lit(4), F.length(t)).alias("value"),
-                ),
-            )
-        ).alias("attributes"),
-    )
+def parse_sam_line(line: str, fields: Collection[str] | None = None) -> dict:
+    """The reads row of one body line, as a dict whose ``attributes`` map
+    keeps its entry order: the line tasks' parser.  Its rows are those of
+    the Spark SQL parse of the same line (``try_element_at`` NULLs past
+    the end of a short line, ``try_cast`` for the numbers, '*' as NULL
+    for ``rname``/``rnext``, last-wins tags; ``tests/sam_reference.py``).
+    The scalar fields are always built; the tags are parsed only when
+    ``fields`` (None: all) names ``attributes``."""
+    f = line.split("\t")
+    if len(f) < 11:
+        # a missing field parses as NULL, as try_element_at gives it
+        f += [None] * (11 - len(f))
+    qname, flag, rname, pos, mapq, cigar, rnext, pnext, tlen, seq, qual = f[:11]
+    row = {
+        "qname": qname,
+        "flag": try_int(flag),
+        "rname": None if rname == "*" else rname,
+        "pos": try_long(pos),
+        "mapq": try_int(mapq),
+        "cigar": cigar,
+        "rnext": None if rnext == "*" else rnext,
+        "pnext": try_long(pnext),
+        "tlen": try_long(tlen),
+        "seq": seq,
+        "qual": qual,
+    }
+    if fields is None or "attributes" in fields:
+        row["attributes"] = last_wins([(t[:2], t[3:]) for t in f[11:]])
+    return row
 
 
 def cigar_reference_length(cigar: Column) -> Column:
@@ -162,40 +167,6 @@ def validate_columns(columns, canonical: list[str], kind: str) -> None:
         raise ValueError(f"unknown {kind} columns {bad}; valid: {canonical}")
 
 
-def schema_ordered(canonical: list[str], wanted) -> list[str]:
-    """Intersection of a canonical column list with ``wanted``, ALWAYS in
-    canonical-schema order — never the caller's request order.  Every
-    pruned source returns its columns in this order, the order of the
-    decoded frame (``arrow_xfer.pruned_schema``), so a pruned read has one
-    schema whatever order the caller lists ``columns`` in."""
-    wanted = set(wanted)
-    return [c for c in canonical if c in wanted]
-
-
-def project_columns(
-    df: DataFrame, canonical: list[str], columns, kind: str
-) -> DataFrame:
-    """The validate-then-project step of a TEXT-format pruned facade
-    whose source decodes the full record anyway (SAM), so pruning is a
-    post-parse ``select`` that still lets Catalyst drop the dead parse
-    expressions.  Python-decoded sources (BAM/CRAM/BCF, VCF line tasks)
-    instead take ``columns=`` natively and skip decode work.
-    Keeping the contract in one helper stops the validation/ordering
-    pair drifting apart as more text facades grow pruning."""
-    validate_columns(columns, canonical, kind)
-    return df.select(*schema_ordered(canonical, columns))
-
-
-def with_alignment_span(reads: DataFrame) -> DataFrame:
-    """Add end_pos (1-based inclusive alignment end; = pos for unmapped/'*'
-    cigar) — the overlap axis for interval queries."""
-    ref_len = cigar_reference_length(F.col("cigar"))
-    end = F.when(
-        (F.col("cigar") == "*") | F.col("cigar").isNull() | (ref_len == 0), F.col("pos")
-    ).otherwise(F.col("pos") + ref_len - 1)
-    return reads.withColumn("end_pos", end)
-
-
 class SamSource:
     """Read SAM files/directories into a reads DataFrame."""
 
@@ -210,20 +181,51 @@ class SamSource:
         include_unplaced: bool = False,
         split_size: int | None = None,
         stringency: str = "lenient",
+        columns: list[str] | None = None,
     ) -> DataFrame:
-        if split_size is not None:
-            # splitSize option ≈ spark.sql.files.maxPartitionBytes
-            # (reference: FileInputFormat.SPLIT_MAXSIZE, PathSplitSource.java:56-58).
-            # NOTE: session-wide, exactly like the reference's job-conf knob —
-            # later scans in the same session inherit it unless reset.
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split_size))
-        lines = spark.read.text(path)
-        body = lines.filter(~F.col("value").startswith("@"))
-        body = apply_stringency(body, _sam_malformed(), stringency)
-        reads = parse_sam_lines(body)
-        from ..operators.interval import residual_traversal
+        """``intervals`` (a (contig, start, end) frame, 1-based inclusive)
+        returns the reads overlapping any interval, exactly: the frame is
+        collected once and each line task drops the reads no interval
+        overlaps.  ``include_unplaced`` adds the unplaced-unmapped reads;
+        alone, it returns only those.
 
-        return residual_traversal(reads, intervals, include_unplaced)
+        ``split_size`` caps the bytes of each task's split; left None, the
+        files split as Spark's file scan splits them.  It is a property of
+        this read only: the session's confs are left as they are.
+
+        ``stringency`` decides what becomes of a malformed line (fewer
+        than 11 fields, or a flag or pos that does not cast), before the
+        traversal: ``strict`` raises ``malformed record: <line>``, wherever
+        the line lies, ``silent`` drops it, ``lenient`` keeps its row.
+
+        ``columns`` returns exactly those columns, in schema order, and
+        the tasks parse the tags only when ``attributes`` is asked for."""
+        from .arrow_xfer import pruned_schema, to_dataframe
+        from .tribble import line_plan
+
+        if columns is not None:
+            validate_columns(columns, READS_COLUMNS, "reads")
+        mode = stringency_mode(stringency)
+        fields = None if columns is None else frozenset(columns)
+        ivs = collect_intervals(intervals) if intervals is not None else None
+        keep = read_keeper(ivs, include_unplaced)
+        tasks, task_lines = line_plan(spark, path, split_size)
+
+        def task_rows(task):
+            for line in task_lines(task):
+                if line.startswith("@"):
+                    continue
+                row = parse_sam_line(line, fields)
+                # a NULL qual: fewer than 11 fields
+                if row["flag"] is None or row["pos"] is None or row["qual"] is None:
+                    if mode == "strict":
+                        raise ValueError(f"malformed record: {line}")
+                    if mode == "silent":
+                        continue
+                if keep is None or keep(row):
+                    yield row
+
+        return to_dataframe(spark, tasks, task_rows, pruned_schema(READS_SCHEMA, fields))
 
 
 def to_sam_line(df: DataFrame) -> Column:

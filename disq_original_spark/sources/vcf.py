@@ -46,10 +46,12 @@ from pyspark.sql.types import (
 )
 
 from ..operators.interval import collect_intervals, overlap_test, try_double, try_long
-from .fsio import fs_basename, fs_open, fs_write_bytes, get_fs, list_data_files
+from .fsio import fs_basename, fs_open, fs_write_bytes, get_fs
 from .headers import read_vcf_header_text, vcf_sample_names
 from .merger import PartFormat, commit, commit_sharded, text_format
+from .sam import last_wins, stringency_mode, validate_columns
 from .tabix import index_chunks, merge_ranges
+from .tribble import LinePlan, line_plan, scan_split, split_tasks
 
 _GENOTYPE = StructType(
     [
@@ -73,19 +75,6 @@ VARIANTS_SCHEMA = StructType(
     ]
 )
 VARIANTS_COLUMNS = VARIANTS_SCHEMA.names
-
-
-def _last_wins(entries: list[tuple[str, str]]) -> dict[str, str]:
-    """Spark's last-wins map of ``entries`` (``map_from_entries`` after
-    ``functions.map_from_entries_last_wins``' dedup): one entry per key,
-    holding its last value at the position of its last occurrence."""
-    m = dict(entries)
-    if len(m) < len(entries):
-        m = {}
-        for k, v in entries:
-            m.pop(k, None)
-            m[k] = v
-    return m
 
 
 def parse_vcf_line(
@@ -118,14 +107,14 @@ def parse_vcf_line(
         elif info == ".":
             row["info"] = {}
         else:
-            row["info"] = _last_wins([kv.partition("=")[::2] for kv in info.split(";")])
+            row["info"] = last_wins([kv.partition("=")[::2] for kv in info.split(";")])
     if fields is None or "genotypes" in fields:
         # each sample's FORMAT map is clamped to the shorter of the keys
         # and its values (zip); a missing sample column gives a NULL map
         keys = None if keys is None else keys.split(":")
         gts = []
         for sample, values in zip(sample_names, f[9:]):
-            attrs = None if values is None else _last_wins(list(zip(keys, values.split(":"))))
+            attrs = None if values is None else last_wins(list(zip(keys, values.split(":"))))
             gts.append({"sample": sample, "gt": None if attrs is None else attrs.get("GT"), "attrs": attrs})
         row["genotypes"] = gts
     return row
@@ -183,13 +172,6 @@ def _line_keeper(ivs: list[tuple[str, int, int]] | None, stringency: str) -> Cal
     return keep
 
 
-# Spark's spark.sql.files.maxPartitionBytes and openCostInBytes defaults
-_MAX_SPLIT = 128 * 1024 * 1024
-_OPEN_COST = 4 * 1024 * 1024
-# one maximal BGZF block: index ranges closer than this are read as one
-_SEEK_GAP = 64 * 1024
-
-
 class VcfSource:
     """Read VCF (plain / gzip / BGZF) into a variants DataFrame.
 
@@ -223,8 +205,9 @@ class VcfSource:
         in full.
 
         ``split_size`` caps the bytes of each task's split; left None,
-        the files split as Spark's file scan splits them (``_scan_split``),
-        so a plain-text read keeps the parallelism of Spark's text scan.
+        the files split as Spark's file scan splits them
+        (``tribble.scan_split``), so a plain-text read keeps the
+        parallelism of Spark's text scan.
 
         ``columns`` returns exactly those columns, in schema order, and
         the tasks parse INFO and FORMAT only when they are asked for.
@@ -232,7 +215,6 @@ class VcfSource:
         some columns should name them here rather than select them after
         the read."""
         from .bgzf import is_bgzf
-        from .sam import stringency_mode, validate_columns
 
         if columns is not None:
             validate_columns(columns, VARIANTS_COLUMNS, "variants")
@@ -249,21 +231,13 @@ class VcfSource:
             # seek the index chunks inside the others
             plan = _bgzf_line_plan(spark, path, split_size, ivs)
         else:
-            # the explicit file list keeps index sidecars out of a
-            # directory read
-            files = list_data_files(get_fs(str(path)), str(path))
-            if any(f.endswith(".gz") for f in files):
-                # non-BGZF gzip is not splittable: one task per file, as
-                # the reference's non-BGZF path (`vcf/VcfSource.java:80-86`)
-                plan = _gzip_line_plan(files)
-            else:
-                # Plain text: per-file byte-range splits, pruned (and
-                # seeked) per file by that file's Tribble `.idx` when
-                # intervals are given
-                # (reference picks the index per format: tabix for .bgz/.gz,
-                # Tribble for .vcf — `vcf/VcfSource.java:143-168`,
-                # `tribble/TribbleIndexIntervalFilteringTextInputFormat.java:33-67`).
-                plan = _text_line_plan(spark, files, split_size, ivs)
+            # true gzip: one task per file; plain text: per-file
+            # byte-range splits, pruned (and seeked) per file by that
+            # file's Tribble `.idx` when intervals are given (reference
+            # picks the index per format: tabix for
+            # .bgz/.gz, Tribble for .vcf — `vcf/VcfSource.java:143-168`,
+            # `tribble/TribbleIndexIntervalFilteringTextInputFormat.java:33-67`)
+            plan = line_plan(spark, path, split_size, ivs)
         return _variants_frame(spark, plan, samples, _line_keeper(ivs, mode), mode, columns)
 
 
@@ -275,7 +249,7 @@ def _first(path: str):
 
 def _variants_frame(
     spark: SparkSession,
-    plan: tuple[list, Callable],
+    plan: LinePlan,
     samples: list[str],
     keep: Callable[[str], bool],
     stringency: str,
@@ -308,7 +282,7 @@ def _bgzf_line_plan(
     path: str,
     split_size: int | None,
     ivs: list[tuple[str, int, int]] | None = None,
-) -> tuple[list, Callable]:
+) -> LinePlan:
     """The BGZF line plan ``(tasks, task_lines)``: byte ranges planned on
     the driver (serially when ``spark`` is None); ``task_lines(task)``
     decodes its ranges' lines to ``str``.
@@ -320,7 +294,7 @@ def _bgzf_line_plan(
     tabix-flavored ``.csi``) maps the intervals to compressed byte ranges
     (``tabix.index_chunks``, which also refuses a stale index):
     splits none of them reaches get no task, and each other task inflates
-    only the BGZF blocks of the ranges inside its split (``_split_tasks``),
+    only the BGZF blocks of the ranges inside its split (``tribble.split_tasks``),
     where the reference decodes a surviving split whole.  Per-file, so a
     sharded directory with per-shard indexes seeks in every shard; for many
     files the size+index metadata collection runs as a Spark job, keeping
@@ -355,7 +329,7 @@ def _bgzf_line_plan(
         return (f, flen, merge_ranges([(u >> 16, (v >> 16) + 1) for u, v in chunks]))
 
     metas = collect_metadata(spark, files, meta_for)
-    tasks = _split_tasks(metas, split_size or _scan_split(spark, metas))
+    tasks = split_tasks(metas, split_size or scan_split(spark, metas))
 
     def task_lines(task):
         from .bgzf import iter_lines_in_range
@@ -370,116 +344,6 @@ def _bgzf_line_plan(
                     yield line.decode("utf-8", "replace")
 
     return tasks, task_lines
-
-
-def _scan_split(spark: SparkSession | None, metas: list[tuple[str, int, object]]) -> int:
-    """The split size of Spark's file scan (``FilePartition.maxSplitBytes``)
-    at its default confs: the files' bytes, each plus a 4 MB open cost,
-    spread over the default parallelism, between 4 MB and 128 MB."""
-    cores = spark.sparkContext.defaultParallelism if spark is not None else 1
-    total = sum(flen + _OPEN_COST for _f, flen, _r in metas)
-    return min(_MAX_SPLIT, max(_OPEN_COST, -(-total // cores)))
-
-
-def _split_tasks(
-    metas: list[tuple[str, int, list[tuple[int, int]] | None]], split_size: int
-) -> list[tuple[str, list[tuple[int, int]]]]:
-    """One task per ``split_size`` byte-range split of each file: ``(file,
-    parts)``, where ``parts`` is the whole split, or with an index
-    (``franges`` not None) the index ranges clipped to the split.  Splits
-    no index range reaches get no task.  Each split still owns the lines
-    starting in it, so the clipped parts of all splits tile the index
-    ranges exactly once.
-
-    Parts less than ``_SEEK_GAP`` apart are read as one: each part start
-    reads up to that much beyond its own bytes (a BGZF part probes the
-    block before it; a text part reads at least a 64 KiB chunk), so
-    seeking past a smaller gap would read more than decoding it.  A task
-    thus never reads much more than its whole split, however many
-    intervals it serves."""
-    from .tabix import clip_ranges
-
-    tasks = []
-    for f, flen, franges in metas:
-        for s in range(0, flen, split_size):
-            e = min(s + split_size, flen)
-            parts = [(s, e)] if franges is None else clip_ranges(s, e, franges)
-            if not parts:
-                continue
-            merged = [parts[0]]
-            for u, v in parts[1:]:
-                if u - merged[-1][1] < _SEEK_GAP:
-                    merged[-1] = (merged[-1][0], v)
-                else:
-                    merged.append((u, v))
-            tasks.append((f, merged))
-    return tasks
-
-
-def _text_line_plan(
-    spark: SparkSession | None,
-    files: list[str],
-    split_size: int | None,
-    ivs: list[tuple[str, int, int]] | None,
-) -> tuple[list, Callable]:
-    """Plain-text analog of ``_bgzf_line_plan``: per-file byte-range splits
-    planned driver-side (as a Spark job for many files); with ``ivs``, each
-    file's own Tribble ``.idx`` raw byte ranges prune its splits and clip
-    each remaining task to the ranges inside its split, so a task reads
-    only the index blocks it owns, not its whole split
-    (``tribble.iter_text_lines_in_range`` per range)."""
-    from .fsio import collect_metadata
-
-    fs = get_fs(files[0])
-
-    def meta_for(f: str):
-        # compression homogeneity (mirror of the BGZF path's check): this
-        # directory was sniffed plain-text — a BGZF/gzip shard fed to a
-        # byte-range text reader would yield binary garbage
-        from .bgzf import is_bgzf
-
-        with fs.open_input(f) as fh:
-            if is_bgzf(fh):
-                raise ValueError(
-                    f"{f}: BGZF, but the first file of this input is plain "
-                    "text — VCF directory inputs must be compression-homogeneous"
-                )
-        flen = fs.size(f)
-        franges = None
-        if ivs is not None and fs.exists(f + ".idx"):
-            from .tribble import parse_tribble, text_ranges_for_intervals
-
-            franges = text_ranges_for_intervals(parse_tribble(f + ".idx"), ivs)
-        return (f, flen, franges)
-
-    metas = collect_metadata(spark, files, meta_for)
-    tasks = _split_tasks(metas, split_size or _scan_split(spark, metas))
-
-    def task_lines(task):
-        from .tribble import iter_text_lines_in_range
-
-        p, parts = task
-        with fs.open_input(p) as fh:
-            for s, e in parts:
-                for line in iter_text_lines_in_range(fh, s, e):
-                    yield line.decode("utf-8", "replace")
-
-    return tasks, task_lines
-
-
-def _gzip_line_plan(files: list[str]) -> tuple[list, Callable]:
-    """True-gzip line plan: one task per file, gunzipped whole (gzip is not
-    splittable); lines split on ``\n`` with trailing ``\r``/``\n``
-    stripped, as the plain-text reader does."""
-
-    def task_lines(f: str):
-        import gzip
-
-        with fs_open(f) as raw, gzip.open(raw) as fh:
-            for line in fh:
-                yield line.rstrip(b"\r\n").decode("utf-8", "replace")
-
-    return list(files), task_lines
 
 
 def to_vcf_line(sample_names: list[str]) -> Column:

@@ -71,12 +71,12 @@ class ReadsStorage:
         include_unplaced: bool = False,
         columns: list[str] | None = None,
     ) -> DataFrame:
-        """``columns`` prunes the DECODE on the binary formats (see
-        BamSource.read / CramSource.read) — a few-column aggregate over a
+        """``columns`` prunes the DECODE (see BamSource.read /
+        CramSource.read / SamSource.read) — a few-column aggregate over a
         100 TB BAM/CRAM skips the per-record seq/qual/tag materialization
-        (and for CRAM, whole compressed blocks).  SAM is a native text
-        scan where Catalyst's own column pruning already applies, so the
-        request becomes a plain projection there."""
+        (and for CRAM, whole compressed blocks), and a SAM line task skips
+        its tag parse.  Every format returns exactly ``columns``, in schema
+        order."""
         fmt = _reads_format(path)
         if fmt == "bam":
             kw = {"split_size": self.split_size} if self.split_size else {}
@@ -85,16 +85,11 @@ class ReadsStorage:
                 include_unplaced=include_unplaced, columns=columns, **kw,
             )
         if fmt == "sam":
-            df = SamSource().read(
+            return SamSource().read(
                 self.spark, path, intervals=intervals,
                 include_unplaced=include_unplaced, split_size=self.split_size,
-                stringency=self.stringency,
+                stringency=self.stringency, columns=columns,
             )
-            if columns is not None:
-                from .sources.sam import READS_COLUMNS, project_columns
-
-                df = project_columns(df, READS_COLUMNS, columns, "reads")
-            return df
         kw = {"split_size": self.split_size} if self.split_size else {}
         # CramSource prunes planning via the .crai and applies the overlap
         # test in its tasks — same exact-match contract as the BAM/SAM paths

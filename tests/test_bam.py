@@ -84,7 +84,7 @@ def test_interval_filter(spark, bam_df):
     )
     got = BamSource().read(spark, BAM, intervals=intervals, split_size=128 * 1024)
     # python oracle over the full read
-    from disq_original_spark.sources.sam import with_alignment_span
+    from .sam_reference import with_alignment_span
 
     expected = 0
     for r in with_alignment_span(bam_df).collect():

@@ -304,11 +304,12 @@ def test_indexes_are_opened_only_by_the_index_lookup():
 
 
 def test_indexed_sources_filter_intervals_in_their_tasks():
-    """The Python-decoded interval sources (BAM, CRAM, VCF, BCF) apply the
-    overlap test inside their decode tasks (``interval.overlap_test``); an
-    import of the join-based residual (``interval_filter``,
-    ``residual_traversal``, kept for SAM text scans) is a second plan per
-    region read, and the interval-table builders are gone."""
+    """The Python-decoded interval sources (BAM, CRAM, SAM, VCF, BCF)
+    apply the overlap test inside their decode tasks
+    (``interval.overlap_test``); an import of the join-based
+    ``interval_filter``, the query operator, would be a second plan per
+    region read.  The interval-table builders and the SAM text scan's
+    join residual (``residual_traversal``) are gone."""
     import ast
     import pathlib
 
@@ -318,13 +319,37 @@ def test_indexed_sources_filter_intervals_in_their_tasks():
     joins = {"interval_filter", "residual_traversal"}
     root = pathlib.Path(pkg.__file__).parent / "sources"
     offenders: list[str] = []
-    for name in ("bam.py", "cram.py", "vcf.py", "bcf.py"):
+    for name in ("bam.py", "cram.py", "sam.py", "vcf.py", "bcf.py"):
         for node in ast.walk(ast.parse((root / name).read_text())):
             if isinstance(node, ast.ImportFrom):
                 offenders += [f"{name}:{node.lineno} {a.name}" for a in node.names if a.name in joins]
     assert offenders == [], offenders
     assert not hasattr(interval, "intervals_frame")
     assert not hasattr(interval, "residual_variant_overlap")
+    assert not hasattr(interval, "residual_traversal")
+
+
+def test_sources_set_no_session_conf():
+    """No source writes the caller's session confs (``spark.conf.set``):
+    a lazy plan reads a conf when it runs, so a read that sets one changes
+    every later query of the session.  A read's options ride in its own
+    plan."""
+    import ast
+    import pathlib
+
+    import disq_original_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent / "sources"
+    offenders: list[str] = []
+    for f in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            fn = node.func if isinstance(node, ast.Call) else None
+            if (
+                isinstance(fn, ast.Attribute) and fn.attr in ("set", "unset")
+                and isinstance(fn.value, ast.Attribute) and fn.value.attr == "conf"
+            ):
+                offenders.append(f"{f.name}:{node.lineno}")
+    assert offenders == [], offenders
 
 
 def test_vcf_has_one_parse_path():

@@ -470,7 +470,7 @@ def test_interval_read_exact_and_pruned(spark):
     same rows."""
     from pyspark.sql import functions as F
 
-    from disq_original_spark.sources.sam import with_alignment_span
+    from .sam_reference import with_alignment_span
 
     full = CramSource().read(spark, CRAM, reference_path=FASTA)
     spanned = with_alignment_span(full)

@@ -11,6 +11,8 @@ through the repo's own sinks.
   ``CramSource.read``, with and without ``option("columns", ...)``; a
   queryname-sorted BAM keeps every qname in one partition.
 - BAM and VCF split sweeps return rows in file order.
+- The same reads read with ``READS_SCHEMA`` as SAM, BAM and CRAM, and the
+  same VCF text with ``VARIANTS_SCHEMA`` as BGZF, plain text and gzip.
 - Region reads the index prunes completely (BCF + ``.csi``, CRAM +
   ``.crai``) return no row, with exactly the requested schema.
 """
@@ -35,6 +37,7 @@ from disq_original_spark.sources.cram import CramSource
 from disq_original_spark.sources.datasource import register_datasources
 from disq_original_spark.sources.fasta import FastaSource
 from disq_original_spark.sources.headers import SamHeader
+from disq_original_spark.sources.sam import SamSink
 from disq_original_spark.sources.vcf import VARIANTS_SCHEMA
 from disq_original_spark.storage import ReadsStorage, VariantsStorage
 
@@ -244,6 +247,19 @@ def test_vcf_encodings_read_one_schema(spark, inputs, tmp_path):
         assert df.schema == VARIANTS_SCHEMA, enc
         got[enc] = sorted(_rows(df))
     assert got["bgzf"] == got["text"] == got["gzip"] != []
+
+
+def test_reads_formats_read_one_schema(spark, inputs, tmp_path):
+    """The twins read with ``READS_SCHEMA`` as SAM, BAM and CRAM, and the
+    SAM the BAM's reads are written to reads back the BAM's rows."""
+    storage = ReadsStorage(spark, reference_path=inputs["fasta"])
+    bam = storage.read(inputs["paths"]["bam"])
+    sam = str(tmp_path / "r.sam")
+    SamSink().write(bam, reads_header(), sam)
+    schemas = {fmt: storage.read(p).schema for fmt, p in (("sam", sam), ("bam", inputs["paths"]["bam"]),
+                                                          ("cram", inputs["paths"]["cram"]))}
+    assert schemas == {"sam": READS_SCHEMA, "bam": READS_SCHEMA, "cram": READS_SCHEMA}
+    assert sorted(_rows(storage.read(sam))) == sorted(_rows(bam)) != []
 
 
 @pytest.mark.parametrize("columns", [["pos", "contig"], ["genotypes", "qual", "info"], ["alts", "filters", "id"]])

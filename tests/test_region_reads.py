@@ -3,7 +3,8 @@ committed twins in ``fixtures/oracle/`` through the repo's own sinks.
 
 - A region read (BGZF VCF + ``.tbi`` or tabix ``.csi``, plain VCF with and
   without a Tribble ``.idx``, true-gzip VCF, BCF + ``.csi``, BAM + ``.bai``
-  or ``.csi``, with and without a ``.sbi``, CRAM + ``.crai``) equals a
+  or ``.csi``, with and without a ``.sbi``, CRAM + ``.crai``, plain and
+  true-gzip SAM) equals a
   brute-force overlap over the full read of the same file, as exact
   multisets, with no row duplicated, under 16 KiB, 64 KiB and the default
   split size (CRAM: 1 KiB and 4 KiB, one container a task), including a
@@ -11,6 +12,9 @@ committed twins in ``fixtures/oracle/`` through the repo's own sinks.
   beside records' first and last bases.  Symbolic alleles span to their
   INFO ``END`` (the last one on a line; an empty ``END=`` falls back to
   the REF span); ``include_unplaced`` adds the unplaced-unmapped reads.
+  The SAM holds two lenient-kept malformed lines (a flag that does not
+  cast): a NULL flag is never unplaced, and the line is placed only with
+  an ``rname`` and a ``pos`` other than 0, as the SQL traversal has it.
   Reading every window at every split size takes ~6 min on 4 cores, so
   that sweep is opt-in (``-m slow``); the default run reads all windows in
   one read per split size, plus one single window per size.
@@ -22,10 +26,11 @@ committed twins in ``fixtures/oracle/`` through the repo's own sinks.
   filtering their full read.  ``interval.try_long`` is Spark's
   ``try_cast(... AS bigint)`` and ``interval.try_double`` its
   ``try_cast(... AS double)``.
-- VCF reads of every encoding, whole-file and region, parse their lines
-  in the decode task: no text scan, no ``Filter``/``Project`` in the plan.
+- VCF and SAM reads of every encoding, whole-file and region, parse their
+  lines in the decode task: no text scan, no join, no ``Filter``/``Project``
+  in the plan.
 - ``clip_ranges`` is the intersection of sorted disjoint ranges with a
-  split; a VCF task reads index ranges closer than ``_SEEK_GAP`` as one,
+  split; a VCF task reads index ranges closer than ``SEEK_GAP`` as one,
   and the BGZF block scan finds a block however short the range it scans.
 """
 
@@ -43,6 +48,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from disq_original_spark.sources.bam import READS_SCHEMA, BamSink
+from disq_original_spark.sources.sam import SamSink, SamSource
 from disq_original_spark.sources.bgzf import EMPTY_GZIP_BLOCK, compress_blocks
 from disq_original_spark.sources.csi import create_csi_for_bam, create_csi_for_vcf
 from disq_original_spark.sources.headers import SamHeader
@@ -59,6 +65,7 @@ from .twins import (
     reads_rows,
     seeded_fasta,
     sorted_reads,
+    unplaced_reads,
     variants,
 )
 
@@ -66,23 +73,13 @@ SPLITS = (16 * 1024, 64 * 1024, None)  # None: the source's default
 CRAM_SPLITS = (1024, 4 * 1024, None)
 N_WINDOWS = 20
 N_UNPLACED = 6
-READS = ("bam", "cram")
+READS = ("bam", "cram", "sam")
 _CIGAR_OP = re.compile(r"(\d+)([MIDNSHP=X])")
 IV_SCHEMA = "contig string, start long, end long"
 
 
 def _ref_len(cigar: str) -> int:
     return sum(int(n) for n, op in _CIGAR_OP.findall(cigar or "") if op in "MDN=X")
-
-
-def _unplaced(reads):
-    """``N_UNPLACED`` unmapped reads with no position (no ``rname``, ``pos``
-    0): the reads only ``include_unplaced`` returns."""
-    u = reads[(reads["flag"] & 4) != 0].head(N_UNPLACED).copy()
-    u["qname"] = [f"unplaced{i}" for i in range(N_UNPLACED)]
-    u["flag"], u["rname"], u["pos"], u["mapq"], u["cigar"] = 4, None, 0, 0, "*"
-    u["rnext"], u["pnext"], u["tlen"] = None, 0, 0
-    return u
 
 
 def _bgzip(text: str, path: Path) -> None:
@@ -116,6 +113,20 @@ def _symbolic_ends(text: str) -> str:
     return "".join(out)
 
 
+def _with_malformed(text: str) -> str:
+    """The SAM ``text`` with two lines mid-file whose flag does not cast,
+    which ``lenient`` keeps with a NULL flag: one at the position of the
+    read before it, one at ``pos`` 0."""
+    lines = text.splitlines(keepends=True)
+    mid = len(lines) // 2
+    f = lines[mid].split("\t")
+    bad = [
+        "\t".join([name, "0x10", f[2], pos, "60", "50M", "*", "0", "0", "*", "*"]) + "\n"
+        for name, pos in (("malformed_placed", f[3]), ("malformed_pos0", "0"))
+    ]
+    return "".join(lines[: mid + 1] + bad + lines[mid + 1 :])
+
+
 @pytest.fixture(scope="module")
 def inputs(spark, tmp_path_factory):
     """BAM + .bai (its reads plus ``N_UNPLACED`` unplaced ones), BGZF VCF +
@@ -124,7 +135,8 @@ def inputs(spark, tmp_path_factory):
     VCF beside a ``.csi`` alone, from the ``.csi`` builders; the plain VCF
     without its ``.idx`` and as true gzip; and the VCF with symbolic
     alleles (:func:`_symbolic_ends`) as BGZF + .tbi and plain text + .idx,
-    from the post-hoc index builders."""
+    from the post-hoc index builders; the BAM's reads as SAM, plain and
+    true gzip, with two malformed lines (:func:`_with_malformed`)."""
     d = tmp_path_factory.mktemp("region")
     reads = sorted_reads()
     header = reads_header()
@@ -132,7 +144,7 @@ def inputs(spark, tmp_path_factory):
     # no .sbi: its 4096-record granularity would leave most 16 KiB splits
     # empty; the record guesser cuts the BAM at every split.  Unplaced
     # reads sort last, as in a coordinate-sorted BAM.
-    placed_and_unplaced = reads_rows(pd.concat([reads, _unplaced(reads)]))
+    placed_and_unplaced = reads_rows(pd.concat([reads, unplaced_reads(reads, N_UNPLACED)]))
     BamSink().write(
         frame(spark, placed_and_unplaced, READS_SCHEMA).coalesce(1), header, paths["bam"],
         write_sbi=False, write_bai=True,
@@ -140,6 +152,12 @@ def inputs(spark, tmp_path_factory):
     # with the .sbi, a split owns the records from its first entry on
     reads_df = frame(spark, reads_rows(reads), READS_SCHEMA).coalesce(1)
     BamSink().write(reads_df, header, paths["bam_sbi"], write_sbi=True, write_bai=True)
+
+    sam = d / "r.sam"
+    SamSink().write(frame(spark, placed_and_unplaced, READS_SCHEMA).coalesce(1), header, str(sam))
+    sam.write_text(_with_malformed(sam.read_text()))
+    paths["sam"], paths["sam_gz"] = str(sam), str(d / "r.sam.gz")
+    Path(paths["sam_gz"]).write_bytes(gzip.compress(sam.read_bytes()))
 
     # CRAM: the first 300 mapped reads moved onto a 20 kb contig of a
     # seeded FASTA (mismatches against it are stored, not lost), spread
@@ -149,7 +167,7 @@ def inputs(spark, tmp_path_factory):
     paths["cram"] = str(d / "r.cram")
     spread = cram_reads(reads)
     spread["pos"] = (spread["pos"] - 1) * 60 + 1
-    rows = reads_rows(pd.concat([spread, _unplaced(reads)]))
+    rows = reads_rows(pd.concat([spread, unplaced_reads(reads, N_UNPLACED)]))
     ReadsStorage(spark, reference_path=fasta).write(
         spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), READS_SCHEMA),
         paths["cram"], SamHeader.parse(CRAM_HEADER), write_index=True,
@@ -184,7 +202,8 @@ def inputs(spark, tmp_path_factory):
 
 
 def _kind(name: str) -> str:
-    """``bam``/``cram`` for a reads input, ``vcf`` for a variants one."""
+    """``bam``/``cram``/``sam`` for a reads input, ``vcf`` for a variants
+    one."""
     kind = name.split("_")[0]
     return kind if kind in READS else "vcf"
 
@@ -200,6 +219,9 @@ def _key(v):
 
 def _read(spark, inputs, name, split, intervals=None, include_unplaced=False, **kw):
     path = inputs["paths"][name]
+    if _kind(name) == "sam":
+        # ReadsStorage takes a SAM by its extension: not a .sam.gz
+        return SamSource().read(spark, path, intervals, include_unplaced, split_size=split, **kw)
     if _kind(name) in READS:
         storage = ReadsStorage(spark, reference_path=inputs["fasta"], split_size=split)
         return storage.read(path, intervals=intervals, include_unplaced=include_unplaced, **kw)
@@ -210,13 +232,19 @@ def _span(kind, row) -> tuple[str | None, int, int] | None:
     """(contig, start, end) a region read matches on; None for a read the
     region read returns only with ``include_unplaced`` (unplaced-unmapped).
     A variant ends at its INFO ``END`` when that is a number (the parsed
-    map holds the line's last ``END``), else at its REF allele's end."""
+    map holds the line's last ``END``), else at its REF allele's end.  A
+    read with a NULL flag (a lenient-kept SAM line) is never unplaced, and
+    without an ``rname`` or at ``pos`` 0 or NULL it matches no window
+    (contig None)."""
     if kind not in READS:
         end = (row["info"] or {}).get("END")
         if end and re.fullmatch(r"-?\d+", end):
             return row["contig"], row["pos"], int(end)
         return row["contig"], row["pos"], row["pos"] + len(row["ref"]) - 1
-    if row["flag"] & 4 and (row["rname"] is None or row["pos"] == 0):
+    if row["flag"] is None:
+        if row["rname"] is None or not row["pos"]:
+            return None, 0, 0
+    elif row["flag"] & 4 and (row["rname"] is None or row["pos"] == 0):
         return None
     n = 0 if row["cigar"] in (None, "*") else _ref_len(row["cigar"])
     return row["rname"], row["pos"], row["pos"] + max(n, 1) - 1
@@ -233,11 +261,25 @@ def _brute(kind, full, windows, include_unplaced=False):
     return Counter(out)
 
 
+def _placed_spans(kind, rows):
+    return [sp for sp in (_span(kind, r) for r in rows) if sp is not None and sp[0] is not None]
+
+
+def _malformed_windows(kind, rows):
+    """For SAM, one-base windows on the lenient-kept reads with a NULL
+    flag, an ``rname`` and a ``pos``, ``pos`` 0 included; else none."""
+    if kind != "sam":
+        return []
+    out = [(r["rname"], max(r["pos"], 1), max(r["pos"], 1)) for r in rows if r["flag"] is None and r["rname"]]
+    assert len(out) == 2
+    return out
+
+
 def _windows(rows, kind, n, seed, decades=(3, 5)):
     """``n`` windows of log-uniform length ``10**decades[0]``–
     ``10**decades[1]`` bases, each centred on a seeded placed record."""
     rng = np.random.default_rng(seed)
-    spans = [sp for sp in (_span(kind, r) for r in rows) if sp is not None]
+    spans = _placed_spans(kind, rows)
     out = []
     for i in rng.integers(0, len(spans), n):
         c, p, _ = spans[i]
@@ -251,7 +293,7 @@ def _edge_windows(rows, kind, n, seed):
     records (of those spanning more than one base, if any), and on the
     bases just outside them."""
     rng = np.random.default_rng(seed)
-    spans = [sp for sp in (_span(kind, r) for r in rows) if sp is not None]
+    spans = _placed_spans(kind, rows)
     spans = [sp for sp in spans if sp[2] > sp[1]] or spans
     out = []
     for i in rng.integers(0, len(spans), n):
@@ -279,6 +321,7 @@ def _differential(spark, inputs, name, every_window, tiled=True):
     windows = _windows(full, kind, N_WINDOWS, seed=404, decades=decades)
     checks = [(split, windows) for split in splits]
     checks += [(split, _edge_windows(full, kind, 5, seed=408)) for split in splits]
+    checks += [(split, _malformed_windows(kind, full)) for split in splits if kind == "sam"]
     if tiled:
         part = [r["_part"] for r in by_part]
         assert len(set(part)) >= 4, "the smallest split must cut the file into many tasks"
@@ -303,10 +346,13 @@ def _differential(spark, inputs, name, every_window, tiled=True):
 
 
 @pytest.mark.parametrize(
-    "name", ["bam", "bam_csi", "cram", "vcf", "vcf_csi", "text", "text_noidx", "bcf", "sv", "sv_text"]
+    "name",
+    ["bam", "bam_csi", "cram", "vcf", "vcf_csi", "text", "text_noidx", "bcf", "sv", "sv_text", "sam", "sam_gz"],
 )
 def test_region_read_equals_brute_force_overlap(spark, inputs, name):
-    _differential(spark, inputs, name, every_window=False)
+    """True gzip (``sam_gz``) is one task per file, with no split boundary
+    to straddle."""
+    _differential(spark, inputs, name, every_window=False, tiled=name != "sam_gz")
 
 
 def test_gzip_region_read_equals_brute_force_overlap(spark, inputs):
@@ -321,26 +367,28 @@ def test_region_read_equals_brute_force_overlap_every_window(spark, inputs, name
     _differential(spark, inputs, name, every_window=True)
 
 
-@pytest.mark.parametrize("name", READS)
+@pytest.mark.parametrize("name", [*READS, "sam_gz"])
 def test_region_read_with_unplaced_equals_brute_force(spark, inputs, name):
     """``include_unplaced`` adds the unplaced-unmapped reads to the
     overlapping ones, and alone returns only them, at every split size;
     a column-pruned read returns exactly the requested columns, though the
-    task decodes the span fields for its test."""
+    task decodes the span fields for its test.  For SAM the windows
+    include the lenient-kept malformed lines."""
+    kind = _kind(name)
     splits = CRAM_SPLITS if name == "cram" else SPLITS
     full = [r.asDict(recursive=True) for r in _read(spark, inputs, name, splits[0]).collect()]
-    assert sum(_span(name, r) is None for r in full) == N_UNPLACED
+    assert sum(_span(kind, r) is None for r in full) == N_UNPLACED
     decades = (1, 3.5) if name == "cram" else (3, 5)
-    windows = _windows(full, name, 6, seed=407, decades=decades)
+    windows = _windows(full, kind, 6, seed=407, decades=decades) + _malformed_windows(kind, full)
     iv = spark.createDataFrame(windows, IV_SCHEMA)
     for split in splits:
         for ivs, ws in ((iv, windows), (None, [])):
             rows = _read(spark, inputs, name, split, ivs, include_unplaced=True).collect()
             got = Counter(_key(r.asDict(recursive=True)) for r in rows)
-            assert got == _brute(name, full, ws, include_unplaced=True), f"{name} split={split} {ws}"
+            assert got == _brute(kind, full, ws, include_unplaced=True), f"{name} split={split} {ws}"
     pruned = _read(spark, inputs, name, None, iv, include_unplaced=True, columns=["qname", "seq"])
     assert pruned.columns == ["qname", "seq"]
-    want = Counter((dict(k)["qname"], dict(k)["seq"]) for k in _brute(name, full, windows, True).elements())
+    want = Counter((dict(k)["qname"], dict(k)["seq"]) for k in _brute(kind, full, windows, True).elements())
     assert Counter(map(tuple, pruned.collect())) == want
 
 
@@ -363,7 +411,8 @@ def test_region_read_seeks_index_chunks(inputs):
     window it decodes only the index chunks, not every line of its split
     (BGZF + .tbi, and plain text + Tribble .idx).  Counted in the lines
     the task decodes, before its overlap test drops any."""
-    from disq_original_spark.sources.vcf import _bgzf_line_plan, _text_line_plan
+    from disq_original_spark.sources.tribble import text_line_plan
+    from disq_original_spark.sources.vcf import _bgzf_line_plan
 
     split = 128 * 1024 * 1024
     ivs = [("chr1", 100_000, 101_000)]
@@ -375,7 +424,7 @@ def test_region_read_seeks_index_chunks(inputs):
 
     for plan in (
         lambda ivs: _bgzf_line_plan(None, bgz, split, ivs),
-        lambda ivs: _text_line_plan(None, [text], split, ivs),
+        lambda ivs: text_line_plan(None, [text], split, ivs),
     ):
         every, seeked = decoded(*plan(None)), decoded(*plan(ivs))
         assert 0 < seeked < every // 4
@@ -386,13 +435,14 @@ _FRAME_ONCE_IVS = {
     "cram": [("c1", 100, 2_000), ("c1", 5_000, 6_000)],
     "vcf": [("chr1", 100_000, 120_000), ("chr1", 2_000_000, 2_001_000)],
     "bcf": [("chr1", 100_000, 120_000), ("chr1", 2_000_000, 2_001_000)],
+    "sam": [("1", 24_800_000, 24_810_000), ("1", 24_900_000, 24_901_000)],
 }
 
 
-@pytest.mark.parametrize("name", ["bam", "cram", "vcf", "bcf"])
+@pytest.mark.parametrize("name", ["bam", "cram", "vcf", "bcf", "sam"])
 def test_region_read_evaluates_interval_frame_once(spark, inputs, name):
     """The caller's interval frame is evaluated once per region read: the
-    indexed source collects it for planning, and its decode tasks apply
+    source collects it for planning, and its decode tasks apply
     the overlap test to those rows, so the plan has no join."""
     sc = spark.sparkContext
     seen = sc.accumulator(0)
@@ -427,20 +477,23 @@ def test_region_read_runs_two_jobs(spark, inputs, name):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
-@pytest.mark.parametrize("name", ["vcf", "text_noidx", "gz"])
+@pytest.mark.parametrize("name", ["vcf", "text_noidx", "gz", "sam", "sam_gz"])
 def test_vcf_line_reads_build_rows_in_the_task(spark, inputs, name):
-    """Every VCF read, whole-file and region, over BGZF, plain text and
-    true gzip, parses its lines in the decode task: the executed plan is
-    the ``MapInArrow`` over the seed range, with no ``Filter`` or
-    ``Project`` over a line column and no text scan, and its schema is
-    ``VARIANTS_SCHEMA``."""
-    iv = spark.createDataFrame(_FRAME_ONCE_IVS["vcf"], IV_SCHEMA)
+    """Every VCF read, over BGZF, plain text and true gzip, and every SAM
+    read, plain and true gzip, whole-file and region, parses its lines in
+    the decode task: the executed plan is the one ``MapInArrow`` over the
+    seed range, with no ``Filter`` or ``Project`` over a line column, no
+    text scan and no join, and its schema is ``VARIANTS_SCHEMA`` or
+    ``READS_SCHEMA``."""
+    kind = _kind(name)
+    iv = spark.createDataFrame(_FRAME_ONCE_IVS[kind], IV_SCHEMA)
     for ivs in (None, iv):
         df = _read(spark, inputs, name, None, ivs)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInArrow" in plan and "value#" not in plan and "FileScan" not in plan, plan
+        assert plan.count("MapInArrow") == 1 and "value#" not in plan and "FileScan" not in plan, plan
         assert "Filter" not in plan and "Project" not in plan, plan
-        assert df.schema == VARIANTS_SCHEMA
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+        assert df.schema == (READS_SCHEMA if kind == "sam" else VARIANTS_SCHEMA)
         assert df.collect()
 
 
@@ -566,19 +619,19 @@ def test_clip_ranges_is_the_intersection():
 
 
 def test_split_tasks_read_close_ranges_as_one():
-    from disq_original_spark.sources.vcf import _SEEK_GAP, _split_tasks
+    from disq_original_spark.sources.tribble import SEEK_GAP, split_tasks
 
     rng = np.random.default_rng(12)
-    split, flen = 3 * _SEEK_GAP, 20 * _SEEK_GAP
+    split, flen = 3 * SEEK_GAP, 20 * SEEK_GAP
     for _ in range(200):
         cuts = sorted({int(x) for x in rng.integers(0, flen, 2 * rng.integers(0, 12))})
         ranges = list(zip(cuts[::2], cuts[1::2]))
-        tasks = _split_tasks([("f", flen, ranges)], split)
+        tasks = split_tasks([("f", flen, ranges)], split)
         covered = set()
         for f, parts in tasks:
             s = parts[0][0] // split * split
             assert f == "f" and all(s <= a < b <= s + split for a, b in parts)
-            assert all(a2 - b1 >= _SEEK_GAP for (_a1, b1), (a2, _b2) in zip(parts, parts[1:]))
+            assert all(a2 - b1 >= SEEK_GAP for (_a1, b1), (a2, _b2) in zip(parts, parts[1:]))
             assert all(clip_ranges(a, b, ranges) for a, b in parts)
             covered |= {(a, b) for a, b in parts}
         # every range byte lies in exactly one task's parts
@@ -587,7 +640,7 @@ def test_split_tasks_read_close_ranges_as_one():
                 assert sum(a <= x < b for a, b in covered) == 1
         # splits no range reaches get no task
         assert len(tasks) == len({x // split for u, v in ranges for x in range(u, v)})
-    assert _split_tasks([("f", 100, None)], 40) == [("f", [(0, 40)]), ("f", [(40, 80)]), ("f", [(80, 100)])]
+    assert split_tasks([("f", 100, None)], 40) == [("f", [(0, 40)]), ("f", [(40, 80)]), ("f", [(80, 100)])]
 
 
 def test_scan_split_is_sparks_file_split():
@@ -597,15 +650,15 @@ def test_scan_split_is_sparks_file_split():
     scan."""
     from types import SimpleNamespace
 
-    from disq_original_spark.sources.vcf import _scan_split
+    from disq_original_spark.sources.tribble import scan_split
 
     mb = 1 << 20
     spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
-    assert _scan_split(spark, [("a", 20 * mb, None)]) == 6 * mb
-    assert _scan_split(spark, [("a", 10 * mb, None), ("b", 10 * mb, None)]) == 7 * mb
-    assert _scan_split(spark, [("a", mb, None)]) == 4 * mb
-    assert _scan_split(spark, [("a", 4096 * mb, None)]) == 128 * mb
-    assert _scan_split(None, [("a", 20 * mb, None)]) == 24 * mb
+    assert scan_split(spark, [("a", 20 * mb, None)]) == 6 * mb
+    assert scan_split(spark, [("a", 10 * mb, None), ("b", 10 * mb, None)]) == 7 * mb
+    assert scan_split(spark, [("a", mb, None)]) == 4 * mb
+    assert scan_split(spark, [("a", 4096 * mb, None)]) == 128 * mb
+    assert scan_split(None, [("a", 20 * mb, None)]) == 24 * mb
 
 
 def test_find_next_block_on_short_ranges(tmp_path):

@@ -119,7 +119,8 @@ def test_tabix_split_pruning_partition_counts(spark):
 
     from disq_original_spark.sources.fsio import get_fs
     from disq_original_spark.sources.tabix import index_chunks, merge_ranges
-    from disq_original_spark.sources.vcf import _bgzf_line_plan, _split_tasks
+    from disq_original_spark.sources.tribble import split_tasks
+    from disq_original_spark.sources.vcf import _bgzf_line_plan
 
     full, _task_lines = _bgzf_line_plan(spark, HISEQ, 128 * 1024)
     assert len(full) == 4
@@ -129,7 +130,7 @@ def test_tabix_split_pruning_partition_counts(spark):
     ranges = merge_ranges([(u >> 16, (v >> 16) + 1) for u, v in chunks])
 
     # splits no index range reaches get no task
-    tasks = _split_tasks([(HISEQ, os.path.getsize(HISEQ), ranges)], 128 * 1024)
+    tasks = split_tasks([(HISEQ, os.path.getsize(HISEQ), ranges)], 128 * 1024)
     assert len(tasks) == 1
 
 
@@ -261,7 +262,7 @@ def test_tribble_split_pruning_partition_counts(spark, plain_hiseq):
         parse_tribble,
         text_ranges_for_intervals,
     )
-    from disq_original_spark.sources.vcf import _split_tasks
+    from disq_original_spark.sources.tribble import split_tasks
 
     idx = parse_tribble(plain_hiseq + ".idx")
     ranges = text_ranges_for_intervals(idx, [("chr1", 2_700_000, 2_800_000)])
@@ -269,7 +270,7 @@ def test_tribble_split_pruning_partition_counts(spark, plain_hiseq):
     flen = os.path.getsize(plain_hiseq)
     split = 256 * 1024
     # splits no index range reaches get no task
-    kept = _split_tasks([(plain_hiseq, flen, ranges)], split)
+    kept = split_tasks([(plain_hiseq, flen, ranges)], split)
     assert 0 < len(kept) < len(range(0, flen, split))
 
 
@@ -304,22 +305,29 @@ def test_tribble_pruned_read_matches_filtered_full_read(spark, plain_hiseq):
     assert len(got) > 0
 
 
-def test_text_line_range_tiling_exactly_once(plain_hiseq):
+def test_text_line_range_tiling_exactly_once(request, tmp_path):
     """Any tiling of the file yields each line exactly once (the Hadoop
-    first-byte ownership rule)."""
+    first-byte ownership rule): a file with CRLF endings, a line longer
+    than a read chunk and no trailing newline, then the HiSeq VCF."""
     import os
 
-    from disq_original_spark.sources.tribble import iter_text_lines_in_range
+    from disq_original_spark.sources.tribble import _MIN_CHUNK, iter_text_lines_in_range
 
-    flen = os.path.getsize(plain_hiseq)
-    with open(plain_hiseq, "rb") as fh:
-        whole = [ln for ln in fh.read().split(b"\n") if ln]
-    for split in (7_777, 64 * 1024, flen):
-        got = []
-        with open(plain_hiseq, "rb") as fh:
-            for s in range(0, flen, split):
-                got.extend(iter_text_lines_in_range(fh, s, min(s + split, flen)))
-        assert got == [w.rstrip(b"\r") for w in whole], f"tiling {split} differs"
+    edges = tmp_path / "edges.txt"
+    long_line = b"x" * (3 * _MIN_CHUNK + 17)
+    edges.write_bytes(b"a\r\nbb\r\n" + long_line + b"\r\n\r\nc\nlast")
+    for path in (str(edges), request.getfixturevalue("plain_hiseq")):
+        flen = os.path.getsize(path)
+        with open(path, "rb") as fh:
+            whole = fh.read().split(b"\n")
+        if whole[-1] == b"":
+            whole.pop()  # the file's last newline ends a line, starts none
+        for split in (7_777, 64 * 1024, flen):
+            got = []
+            with open(path, "rb") as fh:
+                for s in range(0, flen, split):
+                    got.extend(iter_text_lines_in_range(fh, s, min(s + split, flen)))
+            assert got == [w.rstrip(b"\r") for w in whole], f"{path}: tiling {split} differs"
 
 
 def test_vcf_line_sample_values_follow_format_keys(spark):

@@ -44,6 +44,17 @@ def sorted_reads():
     return twin("bam_1_reads").sort_values(["pos", "qname", "flag"], kind="stable")
 
 
+def unplaced_reads(reads, n: int):
+    """``n`` unmapped reads of ``reads`` with no position (no ``rname``,
+    ``pos`` 0), renamed ``unplaced0``...: the reads only
+    ``include_unplaced`` returns."""
+    u = reads[(reads["flag"] & 4) != 0].head(n).copy()
+    u["qname"] = [f"unplaced{i}" for i in range(n)]
+    u["flag"], u["rname"], u["pos"], u["mapq"], u["cigar"] = 4, None, 0, 0, "*"
+    u["rnext"], u["pnext"], u["tlen"] = None, 0, 0
+    return u
+
+
 def reads_header() -> SamHeader:
     """Coordinate-sorted header with the @SQ lines of ``bam_1_contigs``."""
     contigs = twin("bam_1_contigs").sort_values("rank")
